@@ -816,6 +816,27 @@ class IndexBuilder:
                     "spark.sql.files.maxPartitionBytes", prev_split
                 )
 
+    def _config(self, prior: dict) -> dict:
+        """The manifest ``config`` this builder writes: every key the
+        resume drift guard checks, plus the Iceberg location."""
+        config = {
+            "chunk_length": self.chunk_length,
+            # None = auto (resolved from stats in the chunks stage; keep
+            # a resumed build's resolved value)
+            "n_salts": (
+                self.n_salts
+                if self.n_salts is not None
+                else prior.get("n_salts")
+            ),
+            "bucket_count": self.bucket_count,
+            "store_positions": self.store_positions,
+            "table_format": self.table_format,
+        }
+        if self.table_format == "iceberg":
+            config["catalog"] = self.catalog
+            config["namespace"] = self.namespace
+        return config
+
     def _build_stages(self, docs: DataFrame, resume: bool) -> dict:
         manifest = self._load_manifest() if resume else {"stages": {}, "config": {}}
         prior = manifest.get("config", {})
@@ -864,22 +885,7 @@ class IndexBuilder:
                     continue
                 prefix_ok = False
                 manifest["stages"].pop(st, None)
-        manifest["config"] = {
-            "chunk_length": self.chunk_length,
-            # None = auto (resolved from stats in the chunks stage; keep
-            # a resumed build's resolved value)
-            "n_salts": (
-                self.n_salts
-                if self.n_salts is not None
-                else prior.get("n_salts")
-            ),
-            "bucket_count": self.bucket_count,
-            "store_positions": self.store_positions,
-            "table_format": self.table_format,
-        }
-        if self.table_format == "iceberg":
-            manifest["config"]["catalog"] = self.catalog
-            manifest["config"]["namespace"] = self.namespace
+        manifest["config"] = self._config(prior)
 
         if not self._stage_done(manifest, "tokens"):
             t0 = time.time()

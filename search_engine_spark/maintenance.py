@@ -625,7 +625,9 @@ def check_index(spark, index_dir: str, deep: bool = True) -> DataFrame:
     lex_cols = ["term", "df", "n_chunks", "min_doc_id", "max_doc_id"]
     if has_bounds:
         lex_cols += ["max_ratio", "min_ratio"]
-    j = lexicon.select(*lex_cols).join(derived, "term", "full_outer")
+    j = lexicon.select(*lex_cols, F.lit(1).alias("_in_lex")).join(
+        derived, "term", "full_outer"
+    )
     ok = (
         F.col("df").isNotNull()
         & F.col("_df").isNotNull()
@@ -643,10 +645,14 @@ def check_index(spark, index_dir: str, deep: bool = True) -> DataFrame:
     r = j.agg(
         F.count(F.lit(1)).alias("ex"),
         F.sum(F.when(ok, 0).otherwise(1)).alias("vi"),
+        F.count("_in_lex").alias("n_lex"),
     ).collect()[0]
     out.append(
         ("lexicon_chunks_consistency", int(r["ex"] or 0), int(r["vi"] or 0))
     )
+    # lexicon rows alone: the join's examined count also holds terms
+    # present only in chunks (orphans), which the bloom never saw
+    n_lex = int(r["n_lex"] or 0)
 
     # --- per-(term, salt) chunk sequence uniqueness (holes allowed:
     # compaction drops fully-deleted chunks without resequencing)
@@ -788,10 +794,6 @@ def check_index(spark, index_dir: str, deep: bool = True) -> DataFrame:
         out.append(("bloom_false_negatives", 0, 0))
     else:
         words, m, k, n_terms = loaded
-        n_lex = next(
-            ex for name, ex, _ in out
-            if name == "lexicon_chunks_consistency"
-        )
         out.append(("bloom_sidecar", 1, 0 if int(n_terms) == n_lex else 1))
         bwords = spark.sparkContext.broadcast(words)
 

@@ -20,22 +20,28 @@ top-k threshold — segments (and therefore chunks) whose bound cannot
 reach the threshold are never decoded. Pruning is margin-safe: results
 stay rank-identical to exhaustive evaluation.
 
-Physical plan (Spark path):
-    lexicon lookup (parquet filter bucket+term — partition pruned)
-    driver-side WAND planning over chunk METADATA only (collected,
-      capped; falls back to interval-only pruning above the cap)
-    phase 1: decode+score the top-bound segments -> threshold theta
-    phase 2: chunks covering segments with bound >= theta
-      (broadcast leftsemi on (term, salt, chunk_seq))
-    mapInPandas decode+score (numpy, Arrow-batched; postings outside
+Physical plan of ``search()``, below METADATA_CAP on the parquet
+layout (planned on the driver):
+    SegmentReader (segment.py): the query terms' chunk metadata in one
+      pyarrow read (bucket-pruned, term filter pushed down) -> lexicon
+      stats + per-term block-max bounds, no lexicon job
+    WAND sweep -> elementary segments; theta from the metadata alone
+      when the chunk bounds separate, else a phase-1 decode of the
+      top-bound segments' chunks by one pyarrow point read
+      (conjunctive: the rare pivot's doc ids point-read instead)
+    ONE Spark job: chunks scan filtered to the surviving
+      (term, salt, chunk_seq) keys by one pushed-down predicate, then
+    mapInArrow decode+score (numpy, Arrow-batched; postings outside
       kept segments masked so partial scores can never surface)
     groupBy(doc_id) agg  [conjunctive adds HAVING count == n_terms]
     ORDER BY score DESC, doc_id LIMIT k   (TakeOrderedAndProject)
+Iceberg, NOT-clause and over-cap-tombstone queries collect the same
+metadata with a Spark job and probe theta with one; above the cap the
+sweep itself runs distributed (``_spark_banded``).
 
-A driver-local fast path (``search_local``) reads the same parquet via
-pyarrow with predicate pushdown and runs the same block-max sweep
-sequentially in numpy — the interactive "REPL" parity path with ~ms
-latency, no Spark job.
+A driver-local fast path (``search_local``) reads the same rows through
+the same reader and runs the block-max sweep sequentially in numpy —
+the interactive "REPL" parity path with ~ms latency, no Spark job.
 """
 
 from __future__ import annotations
@@ -48,7 +54,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import codecs, wand
+from . import codecs, segment, wand
 from .build import term_bucket
 from .runtime import ensure_shipped
 from .tokenizer import tokenize_query
@@ -105,17 +111,7 @@ EMPTY_BATCH = object()
 # 3-4x per batch; the pinned projection removes every re-scan after
 # the first. Disable with SE_META_CACHE=0 (tests compare both paths).
 META_CACHE = os.environ.get("SE_META_CACHE", "1") != "0"
-_META_COLS = [
-    "bucket",
-    "term",
-    "salt",
-    "chunk_seq",
-    "first_doc_id",
-    "last_doc_id",
-    "n",
-    "max_ratio",
-    "min_ratio",
-]
+_META_COLS = ["bucket", *segment.META_COLS]
 
 # driver-local phase-1 theta probe (_theta_local): the probe's chunk
 # set is BOUNDED by the planner (<= 64 top segments per query), so at
@@ -126,9 +122,6 @@ _META_COLS = [
 # batch; the pyarrow point read is tens of ms). SE_LOCAL_THETA=0
 # forces the distributed probe (tests compare both paths).
 LOCAL_THETA = os.environ.get("SE_LOCAL_THETA", "1") != "0"
-
-# shared decoded-chunk LRU size (driver-side paths); epoch flush
-DECODED_CACHE_CAP = 131072
 
 # batch_search: skip the phase-1 threshold job when the batch's terms
 # own fewer total chunks than this — decoding ~4k chunks (~0.5M
@@ -246,6 +239,9 @@ class QueryEngine:
         with open(os.path.join(index_dir, "_manifest.json")) as f:
             self.config = json.load(f)["config"]
         self.bucket_count = int(self.config["bucket_count"])
+        # stage DataFrames, read once: the index is immutable for the
+        # engine's lifetime, and each fresh read re-lists the files
+        self._stages: dict[str, DataFrame] = {}
         row = self._stage_df("stats").collect()[0]
         self.built_n_docs = int(row["n_docs"])
         self.max_doc_id = int(row["max_doc_id"] or 0)
@@ -258,7 +254,8 @@ class QueryEngine:
         self._apply_stats_override(stats_override)
         self.last_plan_stats: dict = {}
         self.last_local_stats: dict = {}
-        self._local_cache: dict | None = None
+        # Spark actions the current query's planning issued
+        self._plan_jobs = 0
         # per-engine lexicon cache: term -> RAW lexicon entry (df
         # pre-override) or None for a term proven absent. The index an
         # engine instance serves is immutable (mutations reopen the
@@ -268,8 +265,8 @@ class QueryEngine:
         # and the prefix/suggest paths seed whole vocabulary slices —
         # the Zipf head that makes the cache pay stays resident under
         # LRU while the tail recycles. Repeated terms skip the lexicon
-        # job entirely, and cached n_chunks lets _collect_meta refuse
-        # the above-cap metadata collect WITHOUT paying for it first.
+        # job entirely, and cached n_chunks lets _term_meta refuse
+        # the above-cap metadata read WITHOUT paying for it first.
         from collections import OrderedDict
 
         self._lex_raw_cache: "OrderedDict[str, dict | None]" = OrderedDict()
@@ -304,6 +301,10 @@ class QueryEngine:
         self.has_deletes = (
             self._deleted is not None or self._deleted_df is not None
         )
+        # driver-side pyarrow view of the chunks (parquet layout only)
+        self._reader = segment.SegmentReader(
+            index_dir, self.bucket_count, self._deleted
+        )
 
     def _alive_df(self, df: DataFrame) -> DataFrame:
         """Anti-join tombstones out of a (doc_id, ...) DataFrame."""
@@ -327,17 +328,23 @@ class QueryEngine:
         return df
 
     def _stage_df(self, stage: str) -> DataFrame:
-        """Read a build stage from either persistence layout (parquet
-        path, or the Iceberg table recorded in the manifest)."""
+        """A build stage from either persistence layout (parquet path, or
+        the Iceberg table recorded in the manifest), read once."""
+        df = self._stages.get(stage)
+        if df is not None:
+            return df
         if self.config.get("table_format") == "iceberg":
-            return self.spark.table(
+            df = self.spark.table(
                 f"{self.config['catalog']}.{self.config['namespace']}.{stage}"
             )
-        from .build import read_stage_parquet
+        else:
+            from .build import read_stage_parquet
 
-        return read_stage_parquet(
-            self.spark, f"{self.index_dir}/{stage}", stage
-        )
+            df = read_stage_parquet(
+                self.spark, f"{self.index_dir}/{stage}", stage
+            )
+        self._stages[stage] = df
+        return df
 
     # ------------------------------------------------------------ helpers
 
@@ -436,10 +443,12 @@ class QueryEngine:
         return out
 
     def _chunks(self, terms: list[str]) -> DataFrame:
-        return (
-            self._stage_df("chunks")
-            .where(F.col("bucket").isin(self._buckets(terms)))
-            .where(F.col("term").isin(terms))
+        """Chunk rows of ``terms``: bucket partitions pruned, term filter
+        pushed to the scan (one ``F.expr``, not a py4j call per term)."""
+        buckets = ", ".join(map(str, self._buckets(terms)))
+        names = ", ".join(segment.sql_string(t) for t in terms)
+        return self._stage_df("chunks").where(
+            F.expr(f"bucket IN ({buckets}) AND term IN ({names})")
         )
 
     def _chunks_meta(self, terms: list[str]) -> DataFrame:
@@ -536,7 +545,8 @@ class QueryEngine:
     @staticmethod
     def _keys_predicate(keys) -> "F.Column":
         """Exact (term, salt, chunk_seq) chunk-key set as a PREDICATE:
-        OR over (term, salt) groups of ``chunk_seq IN (...)``.
+        a balanced OR over (term, salt) groups of ``chunk_seq IN (...)``
+        (segment.keys_sql), parsed by ONE ``F.expr`` call.
 
         Selects exactly the same rows as a leftsemi join against the
         key set, but as a scan filter it reaches the parquet reader
@@ -544,20 +554,8 @@ class QueryEngine:
         term-sorted, so row groups of non-kept terms prune on term
         stats and the In list prunes on chunk_seq ranges — the decode
         reads ~|keys| chunk payloads instead of every queried term's.
-        Callers gate on KEYS_COLLECT_CAP; with ~dozens of query terms
-        the OR fan-out stays far below codegen limits."""
-        pred = None
-        by_ts: dict[tuple, list[int]] = {}
-        for t, s, c in keys:
-            by_ts.setdefault((t, int(s)), []).append(int(c))
-        for (t, s), seqs in sorted(by_ts.items()):
-            p = (
-                (F.col("term") == t)
-                & (F.col("salt") == s)
-                & F.col("chunk_seq").isin(sorted(set(seqs)))
-            )
-            pred = p if pred is None else (pred | p)
-        return pred
+        Callers gate on KEYS_COLLECT_CAP."""
+        return F.expr(segment.keys_sql(keys))
 
     def _keys_result(self, keys: list[tuple]):
         """Planner result for a surviving-key set: the driver-side list
@@ -744,23 +742,36 @@ class QueryEngine:
 
     # --------------------------------------------------- WAND planning
 
-    def _collect_meta(
-        self, terms: list[str]
-    ) -> tuple[dict[str, wand.TermChunks], dict[str, dict]] | None:
-        """One metadata-only collect (NO payloads) serves BOTH the WAND
-        planner and the lexicon stats (df = sum of chunk n, intervals =
-        chunk extremes) — a single-query search needs no separate
-        lexicon job. Returns None when the index predates bound columns
-        or the term set exceeds the planning cap (callers fall back to
-        the lexicon + interval pruner)."""
-        chunks = self._chunks_meta(terms)
-        if "max_ratio" not in chunks.columns:
-            return None
+    def _driver_plans(self) -> bool:
+        """search()/batch_search plan on the driver (SegmentReader) on
+        the parquet layout while every tombstone fits the driver-side
+        mask and no NOT clause is active (the local probes score docs
+        the clause may exclude); Iceberg, over-cap tombstone sets and
+        NOT queries collect metadata and probe theta with Spark jobs."""
+        return (
+            self.config.get("table_format") != "iceberg"
+            and self._deleted_df is None
+            and self._exclude_df is None
+        )
+
+    def _empty(self, schema: str) -> DataFrame:
+        return self.spark.createDataFrame([], schema)
+
+    def _term_meta(self, terms: list[str]) -> segment.ChunkRows | None:
+        """Chunk rows of ``terms`` with their lexicon stats and WAND
+        metadata (segment.ChunkRows): ONE read serves both the planner
+        and the lexicon (df = sum of chunk n), so a query needs no
+        separate lexicon job. Driver-planned layouts read it through
+        the SegmentReader (no Spark job), others collect it with one
+        Spark job; neither reads payloads.
+        Returns None when the index predates bound columns or the term
+        set exceeds METADATA_CAP (callers fall back to the lexicon +
+        banded or interval planners)."""
         if all(t in self._lex_raw_cache for t in terms):
             # cached n_chunks already prove the outcome: skip the
-            # above-cap probe collect (at web scale EVERY query's term
-            # set exceeds the cap, so without this a serving engine
-            # pays a doomed METADATA_CAP-row collect per query)
+            # above-cap read (at web scale EVERY query's term set
+            # exceeds the cap, so without this a serving engine pays a
+            # doomed METADATA_CAP-row read per query)
             total = sum(
                 e["n_chunks"]
                 for e in (self._lex_raw_cache[t] for t in terms)
@@ -768,59 +779,47 @@ class QueryEngine:
             )
             if total > METADATA_CAP:
                 return None
-        rows = (
-            chunks.select(
-                "term",
-                "salt",
-                "chunk_seq",
-                "first_doc_id",
-                "last_doc_id",
-                "n",
-                "max_ratio",
-                "min_ratio",
+        if self._driver_plans():
+            tbl = self._reader.table(terms, keep=False)
+            if tbl is None or "max_ratio" not in tbl.column_names:
+                return None
+        else:
+            import pyarrow as pa
+
+            chunks = self._chunks_meta(terms)
+            if "max_ratio" not in chunks.columns:
+                return None
+            self._plan_jobs += 1
+            rows = (
+                chunks.select(*segment.META_COLS)
+                .limit(METADATA_CAP + 1)
+                .collect()
             )
-            .limit(METADATA_CAP + 1)
-            .collect()
-        )
-        if len(rows) > METADATA_CAP:
+            tbl = pa.table({
+                c: pa.array(
+                    [r[c] for r in rows],
+                    pa.string() if c == "term"
+                    else pa.float64() if c.endswith("_ratio")
+                    else pa.int64(),
+                )
+                for c in segment.META_COLS
+            })
+        if tbl.num_rows > METADATA_CAP:
             return None
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
-        metas: dict[str, wand.TermChunks] = {}
-        lex: dict[str, dict] = {}
-        for t, rs in by_term.items():
-            raw_df = sum(r["n"] for r in rs)
-            df = self._df_of(t, raw_df)
-            lex[t] = {
-                "df": df,
-                "n_chunks": len(rs),
-                "min_doc_id": min(r["first_doc_id"] for r in rs),
-                "max_doc_id": max(r["last_doc_id"] for r in rs),
-            }
-            self._lex_cache_put(t, {**lex[t], "df": raw_df})
-            t_idf = wand.idf(df, self.n_docs)
-            bound = wand.term_chunk_bounds(
-                t_idf,
-                np.array([r["max_ratio"] for r in rs]) * self._scale_max,
-                np.array([r["min_ratio"] for r in rs]) * self._scale_min,
-            )
-            metas[t] = wand.TermChunks(
-                first=[r["first_doc_id"] for r in rs],
-                last=[r["last_doc_id"] for r in rs],
-                n=[r["n"] for r in rs],
-                bound=bound,
-                rows=[(r["salt"], r["chunk_seq"]) for r in rs],
-            )
+        cr = segment.ChunkRows(
+            tbl, self.n_docs, self._df_of, self._scale_max, self._scale_min
+        )
+        for t, e in cr.lex.items():
+            self._lex_cache_put(t, {**e, "df": cr.raw_df[t]})
         for t in terms:
             self._lex_cache_put(t, None, overwrite=False)  # proven absent
-        return metas, lex
+        return cr
 
     def _segments_job(
         self,
         present: list[str],
         lex: dict[str, dict],
-        metas: dict[str, wand.TermChunks],
+        cr: segment.ChunkRows,
         seg_lo: np.ndarray,
         seg_hi: np.ndarray,
         cover: np.ndarray,
@@ -831,13 +830,7 @@ class QueryEngine:
     ) -> DataFrame:
         """Exact scoring restricted to the given segments: decode only
         their covering chunks, mask postings to the segment union."""
-        keys = set()
-        for j, t in enumerate(present):
-            m = metas[t]
-            for ci in np.unique(cover[:, j]):
-                if ci >= 0:
-                    salt, seq = m.rows[ci]
-                    keys.add((t, int(salt), int(seq)))
+        keys = cr.cover_keys(present, cover)
         lo, hi = wand.merge_intervals(seg_lo, seg_hi)
         self.last_plan_stats["chunks_kept"] = len(keys)
         return self._keys_job(
@@ -893,51 +886,81 @@ class QueryEngine:
         # still clear the threshold after rounding
         return theta0 * (1.0 - wand.BOUND_MARGIN)
 
-    def _spark_conjunctive_pivot(
+    def _probe_theta(
         self,
         present: list[str],
         lex: dict[str, dict],
-        metas: dict[str, wand.TermChunks],
+        keys: list[tuple],
+        lo: np.ndarray,
+        hi: np.ndarray,
+        mode: str,
+        k: int,
+        dtype,
+    ) -> float | None:
+        """Phase-1 threshold: the k-th best score over exactly ``keys``'
+        postings masked to the merged segment intervals [lo, hi) (mask
+        => exact scores for the docs inside, so a true lower bound of
+        the k-th best final score); None below k masked results. A
+        driver point read where the layout allows, else one Spark
+        job."""
+        if self._theta_local_ok(len(keys)):
+            return self._theta_local(
+                keys,
+                [(0, int(a), int(b)) for a, b in zip(lo.tolist(), hi.tolist())],
+                lex,
+                mode == "conjunctive" and len(present) > 1,
+                k,
+                {0: present},
+                dtype,
+            ).get(0)
+        self.last_plan_stats["theta_probe"] = "spark"
+        self._plan_jobs += 1
+        rows = self._keys_job(
+            present, lex, keys, (lo, hi), mode, k, dtype=dtype
+        ).collect()
+        return float(rows[-1]["score"]) if len(rows) >= k else None
+
+    def _conjunctive_pivot(
+        self,
+        present: list[str],
+        lex: dict[str, dict],
+        cr: segment.ChunkRows,
         pivot: str,
         k: int,
         explain: bool,
         dtype,
-        empty: DataFrame,
+        schema: str,
     ) -> DataFrame:
-        """Conjunctive nextGEQ at posting granularity: job 1 decodes the
-        (rare) pivot term's chunks and collects its doc ids; the driver
-        picks, per other term, exactly the chunks containing a candidate;
-        job 2 decodes that chunk set with the candidate mask and runs the
-        exact conjunctive aggregation."""
-        pivot_ids = (
-            self._scored_postings(self._chunks([pivot]), lex)
-            .select("doc_id")
-            .collect()
-        )
-        if not pivot_ids:
-            return empty
-        cand = np.array(sorted(r["doc_id"] for r in pivot_ids), dtype=np.int64)
-        keys = {
-            (pivot, int(s), int(q)) for s, q in metas[pivot].rows.tolist()
-        }
+        """Conjunctive nextGEQ at posting granularity: the (rare) pivot
+        term's doc ids — point-read by the driver where it plans, else
+        collected by one Spark job — pick, per other term, exactly the
+        chunks containing a candidate; the final job decodes that chunk
+        set with the candidate mask and runs the exact conjunctive
+        aggregation."""
+        pivot_rows = cr.metas[pivot].rows.tolist()
+        if self._driver_plans():
+            got = self._reader.decode_keys([cr.key(r) for r in pivot_rows])
+            cand = np.sort(np.concatenate([v[0] for v in got.values()]))
+        else:
+            self._plan_jobs += 1
+            ids = (
+                self._scored_postings(self._chunks([pivot]), lex)
+                .select("doc_id")
+                .collect()
+            )
+            cand = np.array(sorted(r["doc_id"] for r in ids), dtype=np.int64)
+        if not len(cand):
+            return self._empty(schema)
+        keys = {cr.key(r) for r in pivot_rows}
         for t in present:
             if t == pivot:
                 continue
-            m = metas[t]
+            m = cr.metas[t]
             idx = np.searchsorted(m.first, cand, side="right") - 1
             safe = np.clip(idx, 0, None)
             hit = (idx >= 0) & (m.last[safe] >= cand)
             for ci in np.unique(idx[hit]).tolist():
-                salt, seq = m.rows[ci]
-                keys.add((t, int(salt), int(seq)))
-        keys_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(keys), "term string, salt int, chunk_seq int"
-            )
-        )
-        kept = self._chunks(present).join(
-            keys_df, ["term", "salt", "chunk_seq"], "leftsemi"
-        )
+                keys.add(cr.key(m.rows[ci]))
         self.last_plan_stats.update(
             {
                 "pruner": "pivot_nextgeq",
@@ -946,6 +969,7 @@ class QueryEngine:
                 "candidates": len(cand),
             }
         )
+        kept = self._apply_keys(self._chunks(present), sorted(keys))
         scored = self._scored_postings(
             kept, lex, with_dl=explain, dtype=dtype, candidates=cand
         )
@@ -1124,7 +1148,7 @@ class QueryEngine:
         k: int,
         explain: bool,
         dtype,
-        empty: DataFrame,
+        schema: str,
     ) -> DataFrame:
         """Block-max WAND above METADATA_CAP, fully distributed.
 
@@ -1167,7 +1191,7 @@ class QueryEngine:
                 .collect()
             )
             if not top:
-                return empty
+                return self._empty(schema)
             self.last_plan_stats.update(
                 {"pruner": "banded_wand", "bands": True}
             )
@@ -1192,25 +1216,9 @@ class QueryEngine:
                         for s in r["_ks"]
                     }
                 )
-                if self._theta_local_ok(len(p1_keys)):
-                    # bounded probe: driver point read, no Spark job
-                    th = self._theta_local(
-                        p1_keys,
-                        [(0, int(a), int(b)) for a, b in zip(lo, hi)],
-                        lex,
-                        conj,
-                        k,
-                        {0: present},
-                        dtype,
-                    )
-                    theta = th.get(0)
-                else:
-                    self.last_plan_stats["theta_probe"] = "spark"
-                    p1_rows = self._keys_job(
-                        present, lex, p1_keys, (lo, hi), mode, k, dtype=dtype
-                    ).collect()
-                    if len(p1_rows) >= k:
-                        theta = float(p1_rows[-1]["score"])
+                theta = self._probe_theta(
+                    present, lex, p1_keys, lo, hi, mode, k, dtype
+                )
             kept = segs
             if theta is not None:
                 kept = segs.where(F.col("bound") >= theta)
@@ -1223,7 +1231,7 @@ class QueryEngine:
             n_keys = keys_df.count()
             self.last_plan_stats["chunks_kept"] = n_keys
             if n_keys == 0:
-                return empty
+                return self._empty(schema)
             # checkpointed + counted already: under the collect cap the
             # key set comes back to the driver so the decode scan does
             # pushdown point reads
@@ -1299,37 +1307,37 @@ class QueryEngine:
                 ", doc_length long, terms array<struct<term:string,"
                 f"score:{'double' if dtype is np.float64 else 'float'},tf:bigint>>"
             )
-        empty = self.spark.createDataFrame([], schema)
         if not terms:
-            return empty
+            return self._empty(schema)
         conj = mode == "conjunctive"
-        # one metadata collect yields lexicon stats AND the WAND plan;
-        # the separate lexicon lookup only runs on the fallback path
-        got = self._collect_meta(terms)
-        if got is not None:
-            metas, lex = got
-        else:
-            metas, lex = None, self.lexicon_lookup(terms)
+        self._plan_jobs = 0
+        # one metadata read yields lexicon stats AND the WAND plan; the
+        # separate lexicon lookup only runs on the fallback path
+        cr = self._term_meta(terms)
+        lex = cr.lex if cr is not None else self.lexicon_lookup(terms)
         present = sorted(lex)
         if not present:
-            return empty
+            return self._empty(schema)
         self.last_plan_stats = {
             "chunks_total": sum(lex[t]["n_chunks"] for t in present),
             "pruner": "none",
         }
 
-        if metas is not None and conj and len(present) > 1:
+        if cr is not None and conj and len(present) > 1:
             # posting-level nextGEQ refinement: with a rare pivot term,
-            # collecting its doc ids (bounded) lets the final job decode
-            # only chunks that CONTAIN a candidate — finer than any
-            # score-bound or interval granularity
+            # its doc ids (bounded) let the final job decode only chunks
+            # that CONTAIN a candidate — finer than any score-bound or
+            # interval granularity
             pivot = min(present, key=lambda t: (lex[t]["df"], t))
             if lex[pivot]["df"] <= PIVOT_DOC_CAP:
-                return self._spark_conjunctive_pivot(
-                    present, lex, metas, pivot, k, explain, dtype, empty
+                out = self._conjunctive_pivot(
+                    present, lex, cr, pivot, k, explain, dtype, schema
                 )
+                self.last_plan_stats["driver_jobs"] = self._plan_jobs + 1
+                return out
 
-        if metas is not None:
+        if cr is not None:
+            metas = cr.metas
             seg_lo, seg_hi, bound, cover = wand.sweep_segments(
                 metas, conj and len(present) > 1
             )
@@ -1337,7 +1345,7 @@ class QueryEngine:
                 {"pruner": "block_max_wand", "segments": len(seg_lo)}
             )
             if len(seg_lo) == 0:
-                return empty
+                return self._empty(schema)
             order = np.argsort(-bound, kind="stable")
             # phase 1: enough top-bound segments to (heuristically)
             # cover >= 4k candidate docs
@@ -1357,8 +1365,8 @@ class QueryEngine:
             theta = None
             # metadata-only threshold (gated: disjunctive semantics,
             # all-nonnegative idf — see _meta_theta); when its bound
-            # distribution separates cleanly, the phase-1 DECODE JOB is
-            # skipped entirely: search() = 1 metadata collect + 1 job
+            # distribution separates cleanly, the phase-1 probe is
+            # skipped entirely
             theta0 = None
             # _meta_theta's validity rests on chunk bounds being
             # ATTAINED — a tombstoned doc may be the attainer, so the
@@ -1391,38 +1399,35 @@ class QueryEngine:
                     theta = theta0
             if run_p1:
                 p1 = order[:n_p1]
-                p1_rows = self._segments_job(
-                    present, lex, metas, seg_lo[p1], seg_hi[p1], cover[p1],
-                    mode, k, dtype=dtype,
-                ).collect()
-                if len(p1_rows) >= k:
-                    theta = float(p1_rows[-1]["score"])
+                lo, hi = wand.merge_intervals(seg_lo[p1], seg_hi[p1])
+                theta = self._probe_theta(
+                    present, lex, sorted(cr.cover_keys(present, cover[p1])),
+                    lo, hi, mode, k, dtype,
+                )
                 if theta0 is not None:
                     theta = theta0 if theta is None else max(theta, theta0)
-            self.last_plan_stats["driver_jobs"] = 3 if run_p1 else 2
             if theta is not None:
                 keep = bound >= theta
                 self.last_plan_stats["theta"] = theta
             else:
                 keep = np.ones(len(seg_lo), dtype=bool)
             self.last_plan_stats["segments_kept"] = int(keep.sum())
-            return self._segments_job(
-                present, lex, metas,
+            out = self._segments_job(
+                present, lex, cr,
                 seg_lo[keep], seg_hi[keep], cover[keep],
                 mode, k, explain=explain, dtype=dtype,
             )
+            # Spark actions this query issues: planning + the final job
+            self.last_plan_stats["driver_jobs"] = self._plan_jobs + 1
+            return out
 
         # above the planning cap with bound metadata present: run the
         # sweep distributed — score-bounded skipping must not turn off
         # for exactly the queries that need it most (a stop word at
         # 10^12 docs owns ~10^8 chunks)
-        if (
-            metas is None
-            and BANDED_PLANNER
-            and "max_ratio" in self._stage_df("chunks").columns
-        ):
+        if BANDED_PLANNER and "max_ratio" in self._stage_df("chunks").columns:
             return self._spark_banded(
-                present, lex, mode, k, explain, dtype, empty
+                present, lex, mode, k, explain, dtype, schema
             )
 
         # fallback: no bound metadata (legacy index) — doc-id interval
@@ -1433,7 +1438,7 @@ class QueryEngine:
             lo = max(e["min_doc_id"] for e in lex.values())
             hi = min(e["max_doc_id"] for e in lex.values())
             if lo > hi:
-                return empty
+                return self._empty(schema)
             chunks = chunks.where(
                 (F.col("last_doc_id") >= lo) & (F.col("first_doc_id") <= hi)
             )
@@ -1448,7 +1453,7 @@ class QueryEngine:
                     .collect()
                 )
                 if not ivals:
-                    return empty
+                    return self._empty(schema)
                 ivals_df = F.broadcast(
                     self.spark.createDataFrame(
                         [(r["lo"], r["hi"]) for r in ivals], "lo long, hi long"
@@ -1564,17 +1569,13 @@ class QueryEngine:
             for t in tokenize_query(text):
                 qterms.append((qid, t))
         all_terms = sorted({t for _, t in qterms})
-        empty = self.spark.createDataFrame(
-            [], "query_id int, doc_id long, score float, rank int"
-        )
-        got = self._collect_meta(all_terms) if prune else None
-        if got is not None:
-            metas, lex = got
-        else:
-            metas, lex = None, self.lexicon_lookup(all_terms)
+        schema = "query_id int, doc_id long, score float, rank int"
+        self._plan_jobs = 0
+        cr = self._term_meta(all_terms) if prune and all_terms else None
+        lex = cr.lex if cr is not None else self.lexicon_lookup(all_terms)
         present = sorted(lex)
         if not present:
-            return empty
+            return self._empty(schema)
         qt = [(qid, t) for qid, t in qterms if t in lex]
         nq = {}
         for qid, _t in qt:
@@ -1594,10 +1595,10 @@ class QueryEngine:
         chunks = self._chunks(present)
         conj = mode == "conjunctive"
         keys_df = None
-        if metas is not None:
+        if cr is not None:
             floor = BATCH_PRUNE_FLOOR if prune_floor is None else prune_floor
             keys_df = self._batch_plan(
-                qt, metas, lex, conj, k, qt_df, nq_df, floor, dtype
+                qt, cr, lex, conj, k, qt_df, nq_df, floor, dtype
             )
         elif prune and BANDED_PLANNER and "max_ratio" in chunks.columns:
             # above METADATA_CAP: the distributed banded batch planner —
@@ -1607,7 +1608,7 @@ class QueryEngine:
                 qt, lex, conj, k, qt_df, nq_df, nq, dtype
             )
         if keys_df is EMPTY_BATCH:
-            return empty
+            return self._empty(schema)
         if keys_df is not None:
             chunks = self._apply_keys(chunks, keys_df)
         scored = self._scored_postings(chunks, lex, dtype=dtype)
@@ -1659,25 +1660,10 @@ class QueryEngine:
             .where(F.col("rank") <= k)
         )
 
-    @staticmethod
-    def _cover_keys(
-        tq: list[str], sub: dict[str, wand.TermChunks], cover: np.ndarray
-    ) -> set[tuple]:
-        """(term, salt, chunk_seq) keys of every chunk covering any of
-        the given segment rows (``cover`` in sorted-term column order)."""
-        keys: set[tuple] = set()
-        for j, t in enumerate(tq):
-            m = sub[t]
-            for ci in np.unique(cover[:, j]):
-                if ci >= 0:
-                    salt, seq = m.rows[ci]
-                    keys.add((t, int(salt), int(seq)))
-        return keys
-
     def _batch_plan(
         self,
         qt: list[tuple[int, str]],
-        metas: dict[str, wand.TermChunks],
+        cr: segment.ChunkRows,
         lex: dict[str, dict],
         conj: bool,
         k: int,
@@ -1713,14 +1699,14 @@ class QueryEngine:
             by_q.setdefault(qid, []).append(t)
         thresholdable = self.last_plan_stats["chunks_total"] >= floor
 
-        plans: dict[int, tuple] = {}  # qid -> (tq, sub, bound, cover)
+        plans: dict[int, tuple] = {}  # qid -> (tq, bound, cover)
         kept_keys: set[tuple] = set()
         p1_keys: set[tuple] = set()
         p1_ivals: list[tuple[int, int, int]] = []
         for qid, terms_q in by_q.items():
             tq = sorted(set(terms_q))
             conj_q = conj and len(tq) > 1
-            sub = {t: metas[t] for t in tq}
+            sub = {t: cr.metas[t] for t in tq}
             seg_lo, seg_hi, bound, cover = wand.sweep_segments(sub, conj_q)
             if len(seg_lo) == 0:
                 continue  # provably no (conjunctive) results
@@ -1740,11 +1726,11 @@ class QueryEngine:
             if not thresholdable or n_p1 >= len(order):
                 # too few segments for a threshold to pay — keep all
                 # (for conjunctive, coverage pruning already applied)
-                kept_keys |= self._cover_keys(tq, sub, cover)
+                kept_keys |= cr.cover_keys(tq, cover)
                 continue
             p1 = order[:n_p1]
-            plans[qid] = (tq, sub, bound, cover)
-            p1_keys |= self._cover_keys(tq, sub, cover[p1])
+            plans[qid] = (tq, bound, cover)
+            p1_keys |= cr.cover_keys(tq, cover[p1])
             lo, hi = wand.merge_intervals(seg_lo[p1], seg_hi[p1])
             p1_ivals += [
                 (qid, int(a), int(b)) for a, b in zip(lo.tolist(), hi.tolist())
@@ -1767,10 +1753,10 @@ class QueryEngine:
             by_q={qid: p[0] for qid, p in plans.items()},
         )
         self._batch_thetas = thetas
-        for qid, (tq, sub, bound, cover) in plans.items():
+        for qid, (tq, bound, cover) in plans.items():
             th = thetas.get(qid)
             rows = cover if th is None else cover[bound >= th]
-            kept_keys |= self._cover_keys(tq, sub, rows)
+            kept_keys |= cr.cover_keys(tq, rows)
         self.last_plan_stats.update(
             {
                 "pruner": "batch_wand",
@@ -1813,6 +1799,7 @@ class QueryEngine:
                 p1_keys, p1_ivals, lex, conj, k, by_q, dtype
             )
         self.last_plan_stats["theta_probe"] = "spark"
+        self._plan_jobs += 1
 
         p1_terms = sorted({t for t, _s, _c in p1_keys})
         kept1 = self._apply_keys(self._chunks(p1_terms), p1_keys)
@@ -2158,130 +2145,15 @@ class QueryEngine:
 
     # ------------------------------------------------- driver-local path
 
-    def _local_listing(self) -> dict:
-        """Lazily-initialized driver-side view of the chunks parquet
-        layout: bucket -> data-file paths plus the byte-capped
-        posting-table LRU, the decoded-chunk cache, and the schema —
-        shared by every driver-local read path (the serving fast path
-        ``search_local`` and the bounded planner probes)."""
-        import glob
-        import re
-        from collections import OrderedDict
-
-        import pyarrow.parquet as pq
-
-        cache = self._local_cache
-        if cache is None:
-            by_bucket: dict[int, list[str]] = {}
-            root = f"{self.index_dir}/chunks"
-            for path in sorted(
-                glob.glob(f"{root}/**/*.parquet", recursive=True)
-            ):
-                m = re.search(r"bucket=(\d+)", path)
-                by_bucket.setdefault(
-                    int(m.group(1)) if m else -1, []
-                ).append(path)
-            schema_names: list[str] = []
-            for paths in by_bucket.values():
-                schema_names = pq.ParquetFile(paths[0]).schema_arrow.names
-                break
-            cache = self._local_cache = {
-                "by_bucket": by_bucket,
-                "data": OrderedDict(),
-                "bytes": 0,
-                "cap": int(os.environ.get("SE_LOCAL_CACHE_MB", "512"))
-                << 20,
-                "schema": schema_names,
-            }
-        return cache
-
-    def _decode_keys_local(
-        self, keys: list[tuple]
-    ) -> dict[tuple, tuple] | None:
-        """Driver-side point read + decode of an exact (term, salt,
-        chunk_seq) key set: one pyarrow dataset scan whose key
-        predicate prunes row groups on term/chunk_seq statistics (the
-        files are term-sorted within each hive bucket), so only
-        ~|keys| payloads are materialized regardless of index size.
-        Decoded postings are tombstone-masked exactly like every other
-        decode path and land in the shared decoded-chunk cache (warm
-        probes and the local serving path reuse each other's work).
-        Returns {key: (doc_ids, tfs, dls)} for the keys found; None
-        when the index has no data files."""
-        import pyarrow.dataset as pa_ds
-
-        cache = self._local_listing()
-        if "term" not in cache["schema"]:
-            return None
-        decoded = cache.setdefault("decoded", {})
-        out: dict[tuple, tuple] = {}
-        missing: list[tuple] = []
-        for key in keys:
-            got = decoded.get(key)
-            if got is not None:
-                out[key] = got
-            else:
-                missing.append(key)
-        if not missing:
-            return out
-        terms = sorted({t for t, _s, _c in missing})
-        paths: list[str] = []
-        for b in self._buckets(terms):
-            paths += cache["by_bucket"].get(b, ())
-        if not paths:
-            return out
-        by_ts: dict[tuple, list[int]] = {}
-        for t, s, c in missing:
-            by_ts.setdefault((t, int(s)), []).append(int(c))
-        expr = None
-        for (t, s), seqs in sorted(by_ts.items()):
-            e = (
-                (pa_ds.field("term") == t)
-                & (pa_ds.field("salt") == s)
-                & pa_ds.field("chunk_seq").isin(sorted(seqs))
-            )
-            expr = e if expr is None else expr | e
-        tbl = pa_ds.dataset(paths, format="parquet").to_table(
-            columns=["term", "salt", "chunk_seq", "codec", "payload", "dls"],
-            filter=expr,
-        )
-        cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-        for i in range(tbl.num_rows):
-            key = (
-                cols["term"][i],
-                int(cols["salt"][i]),
-                int(cols["chunk_seq"][i]),
-            )
-            ids, tfs = codecs.decode_chunk(
-                cols["payload"][i], cols["codec"][i]
-            )
-            dls = codecs.decode_lengths(cols["dls"][i])
-            ids = ids.astype(np.int64)
-            if self._deleted is not None and len(ids):
-                pos = np.searchsorted(self._deleted, ids)
-                safe = np.clip(pos, 0, len(self._deleted) - 1)
-                keep = self._deleted[safe] != ids
-                if not keep.all():
-                    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-            if len(decoded) >= DECODED_CACHE_CAP:
-                decoded.clear()
-            decoded[key] = out[key] = (ids, tfs, dls)
-        return out
-
     def _theta_local_ok(self, n_keys: int) -> bool:
-        """The driver-local theta probe applies when the layout is
-        directly readable (parquet, not Iceberg), tombstones fit the
-        driver (the array path masks in-place; the distributed
-        fallback can't), and the probe set is point-read sized."""
+        """The driver-local theta probe applies where the driver plans
+        (see :meth:`_driver_plans`: the spark probe routes through
+        _agg_topk, where a NOT clause's exclusion applies) and the probe
+        set is point-read sized."""
         return (
             LOCAL_THETA
             and n_keys <= KEYS_COLLECT_CAP
-            and self.config.get("table_format") != "iceberg"
-            and self._deleted_df is None
-            # the local probe scores docs the NOT clause may exclude —
-            # its theta could exceed the surviving k-th best; the spark
-            # probe routes through _agg_topk where exclusion applies
-            and self._exclude_df is None
+            and self._driver_plans()
         )
 
     def _theta_local(
@@ -2295,11 +2167,12 @@ class QueryEngine:
         dtype=np.float32,
     ) -> dict[int, float]:
         """Driver-side twin of :meth:`_batch_theta`: decode exactly
-        ``p1_keys`` via a pyarrow point read, mask each query's
-        postings to its own probe intervals, and return {query_id:
-        k-th best masked score}. Scoring mirrors the distributed job
-        (per-posting ``bm25_scores`` in ``dtype``, float64 doc sums in
-        canonical sorted-term order); theta consumers already shave a
+        ``p1_keys`` via a pyarrow point read, mask each query's postings
+        to its own probe intervals, and return {query_id: k-th best
+        masked score}.
+        Scoring mirrors the distributed job (per-posting
+        ``bm25_scores`` in ``dtype``, float64 doc sums in canonical
+        sorted-term order); theta consumers already shave a
         ``BOUND_MARGIN`` relative slack, which absorbs sum-order
         noise between this and the final aggregation the same way it
         does between two Spark jobs. Validity does not depend on the
@@ -2307,7 +2180,7 @@ class QueryEngine:
         scores, so the k-th best masked score stays a true lower
         bound of the k-th best final score."""
         self.last_plan_stats["theta_probe"] = "local"
-        got = self._decode_keys_local(p1_keys)
+        got = self._reader.decode_keys(p1_keys)
         if not got:
             return {}
         by_t: dict[str, list[tuple]] = {}
@@ -2369,69 +2242,6 @@ class QueryEngine:
             thetas[qid] = float(total[order[k - 1]])
         return thetas
 
-    def _local_scan(
-        self, terms: list[str]
-    ) -> tuple[dict, list[str], bool] | None:
-        """Driver-side chunk-row fetch with a persistent footer cache.
-
-        The round-3 path re-ran ``pyarrow.dataset(...).to_table`` per
-        query: every call re-parsed every fragment footer AND re-read
-        the matching buckets' row groups (~18 ms/query over a 105-file
-        sf0.1 chunks dir to fetch 32 rows — the BENCH_r03 local_path
-        regression: round-3 scan-split balancing made the build write
-        more, smaller chunk files, and the per-file cost scales with
-        file count). A serving engine answering many queries against an
-        IMMUTABLE index does what every IR system does with posting
-        lists: CACHE them. Data files are grouped by hive bucket at
-        first use, and each file's (projected) table is kept in a
-        byte-capped LRU (``SE_LOCAL_CACHE_MB``, default 512) — repeated
-        terms serve from memory, cold terms read through. Per-query
-        work on a warm cache is a vectorized in-memory term filter.
-        At web scale the cap bounds the driver's resident set; the
-        distributed ``search()`` path is the uncached/cold-term story.
-        Returns (columnar data dict, column names, have_bounds), or
-        None for an empty index. Row set is identical to the round-3
-        filtered ``to_table`` (test-asserted)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        cache = self._local_listing()
-        if "term" not in cache["schema"]:  # empty index: no data files
-            return None
-        cols = [
-            "term", "salt", "chunk_seq", "first_doc_id", "last_doc_id",
-            "n", "codec", "payload", "dls",
-        ]
-        have_bounds = "max_ratio" in cache["schema"]
-        if have_bounds:
-            cols += ["max_ratio", "min_ratio"]
-        data_cache: OrderedDict = cache["data"]
-        tabs = []
-        for b in self._buckets(terms):
-            for path in cache["by_bucket"].get(b, ()):
-                tbl = data_cache.get(path)
-                if tbl is None:
-                    tbl = pq.read_table(path, columns=cols)
-                    data_cache[path] = tbl
-                    cache["bytes"] += tbl.nbytes
-                    while (
-                        cache["bytes"] > cache["cap"] and len(data_cache) > 1
-                    ):
-                        _, old = data_cache.popitem(last=False)
-                        cache["bytes"] -= old.nbytes
-                else:
-                    data_cache.move_to_end(path)
-                tabs.append(tbl)
-        if not tabs:
-            return {c: [] for c in cols}, cols, have_bounds
-        tbl = pa.concat_tables(tabs)
-        tbl = tbl.filter(
-            pc.is_in(tbl.column("term"), value_set=pa.array(terms))
-        )
-        data = {c: tbl.column(c).to_pylist() for c in cols}
-        return data, cols, have_bounds
-
     def search_local(
         self, query: str, mode: str = "disjunctive", k: int = 10
     ) -> list[tuple[int, float]]:
@@ -2452,79 +2262,40 @@ class QueryEngine:
         terms = tokenize_query(query)
         if not terms:
             return []
-        got = self._local_scan(terms)
-        if got is None:
+        # a serving engine pins its posting files (SegmentReader LRU):
+        # repeated terms serve from memory, cold terms read through
+        tbl = self._reader.table(terms, keep=True)
+        if tbl is None or not tbl.num_rows:
             return []
-        data, cols, have_bounds = got
-        n_rows = len(data["term"])
-        if n_rows == 0:
-            return []
-        if not have_bounds:
-            return self._search_local_full(data, mode, k)
-
-        by_term: dict[str, list[int]] = {}
-        for i, t in enumerate(data["term"]):
-            by_term.setdefault(t, []).append(i)
-        present = sorted(by_term)
-        metas: dict[str, wand.TermChunks] = {}
-        dfs: dict[str, int] = {}
-        for t in present:
-            idxs = np.array(by_term[t], dtype=np.int64)
-            n_arr = np.array([data["n"][i] for i in idxs])
-            dfs[t] = self._df_of(t, int(n_arr.sum()))
-            t_idf = wand.idf(dfs[t], self.n_docs)
-            bound = wand.term_chunk_bounds(
-                t_idf,
-                np.array([data["max_ratio"][i] for i in idxs])
-                * self._scale_max,
-                np.array([data["min_ratio"][i] for i in idxs])
-                * self._scale_min,
-            )
-            metas[t] = wand.TermChunks(
-                first=[data["first_doc_id"][i] for i in idxs],
-                last=[data["last_doc_id"][i] for i in idxs],
-                n=n_arr,
-                bound=bound,
-                rows=idxs,
+        cr = segment.ChunkRows(
+            tbl, self.n_docs, self._df_of, self._scale_max, self._scale_min
+        )
+        if not cr.has_bounds:
+            return self._search_local_full(
+                {c: tbl.column(c).to_pylist() for c in tbl.column_names},
+                mode,
+                k,
             )
         # terms missing from the index were already dropped by the scan
         # filter (reference openList skip)
+        metas = cr.metas
+        present = sorted(metas)
+        dfs = {t: cr.lex[t]["df"] for t in present}
         conj = mode == "conjunctive" and len(present) > 1
         stats = {
-            "chunks_total": n_rows,
+            "chunks_total": cr.n_rows,
             "chunks_decoded": 0,
             "segments_total": 0,
             "segments_processed": 0,
         }
         self.last_local_stats = stats
-
-        # decoded-postings cache (engine-level LRU, the serving twin of
-        # the posting-file cache in _local_scan): chunks shared across
-        # queries decode once; ~3 KB/chunk, count-capped
-        decoded = self._local_cache.setdefault("decoded", {})
-        decoded_cap = DECODED_CACHE_CAP
+        reader = self._reader
+        n_decoded = reader.n_decoded
 
         def get_chunk(row: int):
-            key = (
-                data["term"][row], data["salt"][row], data["chunk_seq"][row]
-            )
-            got = decoded.get(key)
-            if got is None:
-                ids, tfs = codecs.decode_chunk(
-                    data["payload"][row], data["codec"][row]
-                )
-                dls = codecs.decode_lengths(data["dls"][row])
-                if self._deleted is not None and len(ids):
-                    ids64 = ids.astype(np.int64)
-                    pos = np.searchsorted(self._deleted, ids64)
-                    safe = np.clip(pos, 0, len(self._deleted) - 1)
-                    keep = self._deleted[safe] != ids64
-                    if not keep.all():
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if len(decoded) >= decoded_cap:
-                    decoded.clear()  # simple epoch flush beats per-hit LRU
-                got = decoded[key] = (ids.astype(np.int64), tfs, dls)
-                stats["chunks_decoded"] += 1
+            # decoded-chunk cache hit, else decode (counted)
+            got = reader.chunk(cr, row)
+            stats["chunks_decoded"] = reader.n_decoded - n_decoded
             return got
 
         if conj:

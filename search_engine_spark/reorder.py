@@ -823,10 +823,37 @@ def reorder_bisect(
                 )
                 .localCheckpoint(eager=True)
             )
+    except BaseException:
+        raw_tf.unpersist()
+        raise
     finally:
         tf.unpersist()
+    try:
+        return _leaf_ordered_ids(
+            docs, state, raw_tf, leaf_bits, leaf_refine, leaf_cap,
+            graph_tf_threshold, direct_cap, sample_cap, min_seg,
+        )
+    finally:
+        # the leaf refinement reads raw_tf; assign_doc_ids checkpoints
+        # eagerly, so that action has run it by now
         raw_tf.unpersist()
 
+
+def _leaf_ordered_ids(
+    docs: DataFrame,
+    state: DataFrame,
+    raw_tf: DataFrame,
+    leaf_bits: int,
+    leaf_refine: bool,
+    leaf_cap: int,
+    graph_tf_threshold: float,
+    direct_cap: int,
+    sample_cap: int,
+    min_seg: int,
+) -> DataFrame:
+    """Final ids of :func:`reorder_bisect`: dense ranks over (leaf path,
+    within-leaf order, original id), the within-leaf order being the
+    Prim leaf refinement (``leaf_refine``) or the SimHash-Gray key."""
     ranks = None
     if leaf_refine:
         # Prim-faithful leaf refinement (stretch item): inside leaves

@@ -194,12 +194,10 @@ class StreamingIndexer:
         for stage in ("tokens", "doc_table", "stats", "postings",
                       "chunks", "lexicon"):
             manifest["stages"].pop(stage, None)
-        manifest["config"] = {
-            "chunk_length": b.chunk_length,
-            "n_salts": b.n_salts,
-            "bucket_count": b.bucket_count,
-            "store_positions": b.store_positions,
-        }
+        # the builder's full config, so a later resume's drift guard
+        # still sees every guarded key (table_format included); the
+        # chunks stage reruns below and resolves an auto salt count
+        manifest["config"] = b._config({})
 
         import time as _t
 

@@ -596,11 +596,13 @@ def test_engine_close_releases_metadata_cache(spark, corpus, base_index):
     (META_CACHE) and the context-manager form forwards to it; a
     multi-segment engine closes every per-segment engine. Guards the
     churn case — LSM serving that reopens engines after delete/upsert
-    must not accumulate pinned caches for the session lifetime."""
+    must not accumulate pinned caches for the session lifetime. (A
+    NOT query plans from the Spark-collected metadata, so it pins the
+    projection; plain search() plans on the driver.)"""
     from search_engine_spark.query import MultiIndexQueryEngine
 
     with QueryEngine(spark, base_index) as eng:
-        _topk(eng.search(QUERY, mode="disjunctive", k=10))
+        _topk(eng.search_not(QUERY, "data", mode="disjunctive", k=10))
         cached = eng._meta_df
         if cached is not None:  # META_CACHE path materialized
             assert cached.storageLevel.useMemory
@@ -609,7 +611,7 @@ def test_engine_close_releases_metadata_cache(spark, corpus, base_index):
         assert not cached.storageLevel.useMemory  # actually unpersisted
 
     with MultiIndexQueryEngine(spark, [base_index]) as mqe:
-        _topk(mqe.search(QUERY, "disjunctive"))
+        _topk(mqe.search_not(QUERY, "data", "disjunctive"))
         segs = list(mqe.engines)
     assert all(e._meta_df is None for e in segs)
     # closed engines still re-open lazily on next use (close is not a
@@ -811,6 +813,25 @@ def test_check_index_detects_bloom_false_negative(
     rep = _fsck(spark, idx, deep=False)
     assert rep["bloom_false_negatives"][1] == rep["bloom_false_negatives"][0]
     assert rep["bloom_false_negatives"][0] > 0
+
+
+def test_check_index_chunk_orphan_term_is_not_a_bloom_violation(
+    spark, fsck_index, tmp_path
+):
+    """A term present only in the chunks table (absent from the
+    lexicon) is a lexicon/chunks inconsistency, not a Bloom one: the
+    sidecar's term count must be compared with the lexicon's own row
+    count, not with the full-outer join's examined count."""
+    idx = _copy(fsck_index, tmp_path, "chunkorphan")
+
+    def orphan(pdf):
+        pdf.loc[len(pdf)] = pdf.loc[0]
+        pdf.loc[len(pdf) - 1, "term"] = "zzzorphanterm"
+
+    _tamper(idx, "chunks", orphan)
+    rep = _fsck(spark, idx, deep=False)
+    assert rep["lexicon_chunks_consistency"][1] >= 1
+    assert rep["bloom_sidecar"] == (1, 0), rep
 
 
 def test_fsck_clean_across_lifecycle(spark, fsck_index, tmp_path):

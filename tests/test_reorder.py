@@ -237,6 +237,36 @@ def test_bisect_leaf_refine_invariants_and_payoff(spark, tmp_path_factory):
     assert sorted(r["doc_id"] for r in out) == [0, 1, 2]
 
 
+def test_bisect_leaf_refine_reads_cached_term_weights(spark, monkeypatch):
+    """The corpus tf table is persisted once for the outer levels AND
+    the leaf refinement: it must still be cached when the action that
+    runs the refinement (assign_doc_ids' eager checkpoint) starts, or
+    the refinement recomputes _term_weights from the corpus."""
+    ensure_shipped(spark)
+    made = []
+    term_weights = reorder._term_weights
+
+    def spy_weights(df):
+        out = term_weights(df)
+        made.append(out)
+        return out
+
+    cached_at_assign = []
+    assign = reorder.assign_doc_ids
+
+    def spy_assign(df, *args, **kwargs):
+        cached_at_assign.append([w.is_cached for w in made])
+        return assign(df, *args, **kwargs)
+
+    monkeypatch.setattr(reorder, "_term_weights", spy_weights)
+    monkeypatch.setattr(reorder, "assign_doc_ids", spy_assign)
+    docs = clustered_corpus(spark, per_group=10)
+    out = reorder.reorder_bisect(docs, depth=1, leaf_refine=True)
+    assert sorted(r["doc_id"] for r in out.collect()) == list(range(60))
+    assert len(made) == 1 and cached_at_assign == [[True]], cached_at_assign
+    assert not made[0].is_cached  # released once the refinement ran
+
+
 def _twin_prim_levels(
     doc_ids, tvecs, depth, thr=10.0, direct_cap=500, sample_cap=1000,
     min_seg=21,

@@ -236,6 +236,34 @@ def test_compact_over_prior_batch_build_serves_delta(spark, tmpdir):
     assert qe.n_docs == 20  # stats reflect the delta corpus only
 
 
+def test_compact_keeps_guarded_config(spark, tmpdir):
+    """compact() rewrites the manifest config. Every key the resume
+    drift guard checks must survive, table_format included, or a later
+    resume under a different layout mixes layouts silently. (No Iceberg
+    runtime is available here, so the index is compacted as parquet and
+    the resuming builder is the one configured for Iceberg.)"""
+    from search_engine_spark.corpus import load_documents
+
+    docs = load_documents(spark, SF_DIR).select("doc_id", "url", "text")
+    docs = docs.limit(20)
+    src = os.path.join(tmpdir, "guard_src")
+    docs.coalesce(1).write.mode("append").parquet(src)
+    idx = os.path.join(tmpdir, "guard_idx")
+    indexer = streaming.StreamingIndexer(
+        spark, idx, n_salts=2, bucket_count=4
+    )
+    stream_df = spark.readStream.schema(docs.schema).parquet(src)
+    indexer.start(
+        stream_df, os.path.join(tmpdir, "guard_ckpt")
+    ).awaitTermination()
+    indexer.compact()
+
+    resumed = IndexBuilder(spark, idx, n_salts=2, bucket_count=4)
+    resumed.table_format = "iceberg"
+    with pytest.raises(ValueError, match="table_format"):
+        resumed.build(docs, resume=True)
+
+
 def test_compact_before_any_batch_raises(spark, tmpdir):
     idx = os.path.join(tmpdir, "nobatch_idx")
     indexer = streaming.StreamingIndexer(spark, idx, bucket_count=4)

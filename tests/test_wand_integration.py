@@ -185,9 +185,9 @@ def skewed_engine(spark):
 def test_meta_theta_skips_phase1_decode(skewed_engine, q, monkeypatch):
     """When the chunk-bound distribution separates cleanly, the k-th
     highest chunk bound is a valid theta WITHOUT any decode probe:
-    search() must run exactly 2 driver round-trips (metadata collect +
-    final job), still prune, and stay rank-identical to the exhaustive
-    path."""
+    search() must issue exactly 1 Spark action (the final job; the
+    driver reads the metadata), still prune, and stay rank-identical to
+    the exhaustive path."""
     eng = skewed_engine
     rows = [
         (r["doc_id"], round(r["score"], 4))
@@ -196,7 +196,8 @@ def test_meta_theta_skips_phase1_decode(skewed_engine, q, monkeypatch):
     stats = dict(eng.last_plan_stats)
     assert stats["pruner"] == "block_max_wand", stats
     assert "theta0" in stats, stats
-    assert stats["driver_jobs"] == 2, stats
+    assert stats["driver_jobs"] == 1, stats
+    assert "theta_probe" not in stats, stats
     assert stats["chunks_kept"] < stats["chunks_total"], stats
     assert len(rows) == 5
     assert all(d < 640 for d, _s in rows), rows  # the tf=10 docs win
