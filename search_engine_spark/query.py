@@ -35,9 +35,11 @@ layout (planned on the driver):
       kept segments masked so partial scores can never surface)
     groupBy(doc_id) agg  [conjunctive adds HAVING count == n_terms]
     ORDER BY score DESC, doc_id LIMIT k   (TakeOrderedAndProject)
-Iceberg, NOT-clause and over-cap-tombstone queries collect the same
-metadata with a Spark job and probe theta with one; above the cap the
-sweep itself runs distributed (``_spark_banded``).
+The reader stops at METADATA_CAP rows; above the cap the sweep itself
+runs distributed (``_spark_banded``). NOT-clause and over-cap-tombstone
+queries probe theta with a Spark job (the reader's mask cannot apply
+their exclusions); Iceberg indexes also collect metadata and pivot ids
+with Spark jobs.
 
 A driver-local fast path (``search_local``) reads the same rows through
 the same reader and runs the block-max sweep sequentially in numpy —
@@ -301,9 +303,13 @@ class QueryEngine:
         self.has_deletes = (
             self._deleted is not None or self._deleted_df is not None
         )
-        # driver-side pyarrow view of the chunks (parquet layout only)
-        self._reader = segment.SegmentReader(
-            index_dir, self.bucket_count, self._deleted
+        # driver-side pyarrow view of the chunks; None on Iceberg,
+        # whose planners collect metadata with Spark jobs
+        self._reader = (
+            None if self.config.get("table_format") == "iceberg"
+            else segment.SegmentReader(
+                index_dir, self.bucket_count, self._deleted
+            )
         )
 
     def _alive_df(self, df: DataFrame) -> DataFrame:
@@ -742,18 +748,6 @@ class QueryEngine:
 
     # --------------------------------------------------- WAND planning
 
-    def _driver_plans(self) -> bool:
-        """search()/batch_search plan on the driver (SegmentReader) on
-        the parquet layout while every tombstone fits the driver-side
-        mask and no NOT clause is active (the local probes score docs
-        the clause may exclude); Iceberg, over-cap tombstone sets and
-        NOT queries collect metadata and probe theta with Spark jobs."""
-        return (
-            self.config.get("table_format") != "iceberg"
-            and self._deleted_df is None
-            and self._exclude_df is None
-        )
-
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
@@ -761,9 +755,10 @@ class QueryEngine:
         """Chunk rows of ``terms`` with their lexicon stats and WAND
         metadata (segment.ChunkRows): ONE read serves both the planner
         and the lexicon (df = sum of chunk n), so a query needs no
-        separate lexicon job. Driver-planned layouts read it through
-        the SegmentReader (no Spark job), others collect it with one
-        Spark job; neither reads payloads.
+        separate lexicon job. The parquet layout reads it through the
+        SegmentReader (no Spark job, at most METADATA_CAP rows plus one
+        record batch), Iceberg collects it with one Spark job; neither
+        reads payloads.
         Returns None when the index predates bound columns or the term
         set exceeds METADATA_CAP (callers fall back to the lexicon +
         banded or interval planners)."""
@@ -779,8 +774,8 @@ class QueryEngine:
             )
             if total > METADATA_CAP:
                 return None
-        if self._driver_plans():
-            tbl = self._reader.table(terms, keep=False)
+        if self._reader is not None:
+            tbl = self._reader.table(terms, keep=False, cap=METADATA_CAP)
             if tbl is None or "max_ratio" not in tbl.column_names:
                 return None
         else:
@@ -932,13 +927,14 @@ class QueryEngine:
         schema: str,
     ) -> DataFrame:
         """Conjunctive nextGEQ at posting granularity: the (rare) pivot
-        term's doc ids — point-read by the driver where it plans, else
-        collected by one Spark job — pick, per other term, exactly the
-        chunks containing a candidate; the final job decodes that chunk
-        set with the candidate mask and runs the exact conjunctive
-        aggregation."""
+        term's doc ids — point-read by the driver on the parquet layout,
+        else collected by one Spark job (tombstoned or NOT-excluded ids
+        among them are harmless: the final job drops them) — pick, per
+        other term, exactly the chunks containing a candidate; the
+        final job decodes that chunk set with the candidate mask and
+        runs the exact conjunctive aggregation."""
         pivot_rows = cr.metas[pivot].rows.tolist()
-        if self._driver_plans():
+        if self._reader is not None:
             got = self._reader.decode_keys([cr.key(r) for r in pivot_rows])
             cand = np.sort(np.concatenate([v[0] for v in got.values()]))
         else:
@@ -2146,14 +2142,16 @@ class QueryEngine:
     # ------------------------------------------------- driver-local path
 
     def _theta_local_ok(self, n_keys: int) -> bool:
-        """The driver-local theta probe applies where the driver plans
-        (see :meth:`_driver_plans`: the spark probe routes through
-        _agg_topk, where a NOT clause's exclusion applies) and the probe
-        set is point-read sized."""
+        """The driver-local theta probe applies on the parquet layout
+        while every tombstone fits the reader's mask and no NOT clause
+        is active (the spark probe routes through _agg_topk, where the
+        exclusion applies), for a point-read sized probe set."""
         return (
             LOCAL_THETA
             and n_keys <= KEYS_COLLECT_CAP
-            and self._driver_plans()
+            and self._reader is not None
+            and self._deleted_df is None
+            and self._exclude_df is None
         )
 
     def _theta_local(

@@ -742,188 +742,164 @@ def reorder_bisect(
     # prim outer levels, and the leaf refinement (each used to re-run
     # _term_weights over the whole corpus)
     raw_tf = _term_weights(docs.select("doc_id", "text")).persist()
-    tf = _unit_term_weights(
-        docs.select("doc_id", "text"), raw=raw_tf
-    ).persist()
-    seed_h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
     try:
-        if outer == "prim":
-            state = _prim_outer_levels(
-                docs,
-                state,
-                tf,
-                depth,
-                graph_tf_threshold=graph_tf_threshold,
-                direct_cap=direct_cap,
-                sample_cap=sample_cap,
-                min_seg=min_seg,
-                raw=raw_tf,
-            )
-        for _level in range(depth if outer == "kmeans" else 0):
-            tfp = tf.join(state, "doc_id")
-            seeds = (
-                state.withColumn("_h", seed_h)
-                .groupBy("path")
-                .agg(
-                    F.min_by("doc_id", "_h").alias("d0"),
-                    F.max_by("doc_id", "_h").alias("d1"),
+        tf = _unit_term_weights(
+            docs.select("doc_id", "text"), raw=raw_tf
+        ).persist()
+        seed_h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
+        try:
+            if outer == "prim":
+                state = _prim_outer_levels(
+                    docs,
+                    state,
+                    tf,
+                    depth,
+                    graph_tf_threshold=graph_tf_threshold,
+                    direct_cap=direct_cap,
+                    sample_cap=sample_cap,
+                    min_seg=min_seg,
+                    raw=raw_tf,
                 )
-            )
-            side_seeds = seeds.select(
-                "path", F.explode(F.array(
-                    F.struct(F.lit(0).alias("side"), F.col("d0").alias("doc_id")),
-                    F.struct(F.lit(1).alias("side"), F.col("d1").alias("doc_id")),
-                )).alias("s"),
-            ).select("path", F.col("s.side").alias("side"), F.col("s.doc_id").alias("doc_id"))
-            # unit seed vectors ARE the initial centroids
-            cent = F.broadcast(side_seeds).join(tf, "doc_id").select(
-                "path", "side", "term", F.col("uw").alias("cwn")
-            )
-            choice = None
-            for _it in range(iters):
-                scores = (
-                    tfp.join(cent, ["path", "term"])
-                    .groupBy("doc_id", "path", "side")
-                    .agg(F.sum(F.col("uw") * F.col("cwn")).alias("s"))
+            for _level in range(depth if outer == "kmeans" else 0):
+                tfp = tf.join(state, "doc_id")
+                seeds = (
+                    state.withColumn("_h", seed_h)
+                    .groupBy("path")
+                    .agg(
+                        F.min_by("doc_id", "_h").alias("d0"),
+                        F.max_by("doc_id", "_h").alias("d1"),
+                    )
                 )
-                # higher cosine wins; ties (and no-overlap docs, via the
-                # left join below) deterministically take side 0
-                choice = scores.groupBy("doc_id").agg(
-                    F.max(F.struct(F.col("s"), (-F.col("side")).alias("ns")))
-                    .alias("m")
-                ).select("doc_id", (-F.col("m.ns")).cast("int").alias("side"))
-                if _it == iters - 1:
-                    break
-                assigned = tfp.join(choice, "doc_id")
-                sums = assigned.groupBy("path", "side", "term").agg(
-                    F.sum("uw").alias("sw")
+                side_seeds = seeds.select(
+                    "path", F.explode(F.array(
+                        F.struct(F.lit(0).alias("side"), F.col("d0").alias("doc_id")),
+                        F.struct(F.lit(1).alias("side"), F.col("d1").alias("doc_id")),
+                    )).alias("s"),
+                ).select("path", F.col("s.side").alias("side"), F.col("s.doc_id").alias("doc_id"))
+                # unit seed vectors ARE the initial centroids
+                cent = F.broadcast(side_seeds).join(tf, "doc_id").select(
+                    "path", "side", "term", F.col("uw").alias("cwn")
                 )
-                from pyspark.sql import Window
+                choice = None
+                for _it in range(iters):
+                    scores = (
+                        tfp.join(cent, ["path", "term"])
+                        .groupBy("doc_id", "path", "side")
+                        .agg(F.sum(F.col("uw") * F.col("cwn")).alias("s"))
+                    )
+                    # higher cosine wins; ties (and no-overlap docs, via the
+                    # left join below) deterministically take side 0
+                    choice = scores.groupBy("doc_id").agg(
+                        F.max(F.struct(F.col("s"), (-F.col("side")).alias("ns")))
+                        .alias("m")
+                    ).select("doc_id", (-F.col("m.ns")).cast("int").alias("side"))
+                    if _it == iters - 1:
+                        break
+                    assigned = tfp.join(choice, "doc_id")
+                    sums = assigned.groupBy("path", "side", "term").agg(
+                        F.sum("uw").alias("sw")
+                    )
+                    from pyspark.sql import Window
 
-                w = Window.partitionBy("path", "side").orderBy(
-                    F.desc("sw"), F.asc("term")
+                    w = Window.partitionBy("path", "side").orderBy(
+                        F.desc("sw"), F.asc("term")
+                    )
+                    top = sums.withColumn("_r", F.row_number().over(w)).where(
+                        F.col("_r") <= centroid_terms
+                    )
+                    cn = top.groupBy("path", "side").agg(
+                        F.sqrt(F.sum(F.col("sw") * F.col("sw"))).alias("cn")
+                    )
+                    cent = top.join(cn, ["path", "side"]).select(
+                        "path", "side", "term",
+                        (F.col("sw") / F.col("cn")).alias("cwn"),
+                    )
+                state = (
+                    state.join(choice, "doc_id", "left")
+                    .select(
+                        "doc_id",
+                        (
+                            F.col("path") * 2 + F.coalesce(F.col("side"), F.lit(0))
+                        ).alias("path"),
+                    )
+                    .localCheckpoint(eager=True)
                 )
-                top = sums.withColumn("_r", F.row_number().over(w)).where(
-                    F.col("_r") <= centroid_terms
-                )
-                cn = top.groupBy("path", "side").agg(
-                    F.sqrt(F.sum(F.col("sw") * F.col("sw"))).alias("cn")
-                )
-                cent = top.join(cn, ["path", "side"]).select(
-                    "path", "side", "term",
-                    (F.col("sw") / F.col("cn")).alias("cwn"),
-                )
-            state = (
-                state.join(choice, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    (
-                        F.col("path") * 2 + F.coalesce(F.col("side"), F.lit(0))
-                    ).alias("path"),
-                )
-                .localCheckpoint(eager=True)
+        finally:
+            tf.unpersist()
+        ranks = None
+        if leaf_refine:
+            # Prim-faithful leaf refinement (stretch item): inside leaves
+            # of <= leaf_cap docs, run the reference's ACTUAL sampled
+            # similarity graph + Prim half-growth + oriented recursion
+            # (_bb_leaf_order) — one applyInPandas pass over (path) groups,
+            # keeping the level-synchronous outer loop as the distributed
+            # scaffold. Oversized leaves (wrong depth for the corpus) and
+            # term-less docs fall back to the Gray order below.
+            import pandas as pd  # noqa: F811 (executor-side)
+
+            raw = raw_tf
+            small = (
+                state.groupBy("path")
+                .count()
+                .where(F.col("count") <= leaf_cap)
+                .select("path")
             )
-    except BaseException:
-        raw_tf.unpersist()
-        raise
-    finally:
-        tf.unpersist()
-    try:
-        return _leaf_ordered_ids(
-            docs, state, raw_tf, leaf_bits, leaf_refine, leaf_cap,
-            graph_tf_threshold, direct_cap, sample_cap, min_seg,
+            rows = raw.join(state, "doc_id").join(F.broadcast(small), "path")
+
+            def refine(pdf: "pd.DataFrame") -> "pd.DataFrame":
+                # sort like level_split does: the per-doc term-dict
+                # insertion order (and thus every float accumulation in
+                # _com/_cos) must not depend on shuffle arrival order, or
+                # near-tie splits flip run to run
+                pdf = pdf.sort_values(["doc_id", "term"], kind="mergesort")
+                tvecs: dict[int, dict[str, float]] = {}
+                for d, t, w in zip(pdf["doc_id"], pdf["term"], pdf["w"]):
+                    tvecs.setdefault(int(d), {})[t] = float(w)
+                ids = sorted(tvecs)
+                order = _bb_leaf_order(
+                    ids,
+                    tvecs,
+                    graph_tf_threshold=graph_tf_threshold,
+                    direct_cap=direct_cap,
+                    sample_cap=sample_cap,
+                    min_seg=min_seg,
+                )
+                return pd.DataFrame(
+                    {
+                        "doc_id": order,
+                        "leaf_rank": list(range(len(order))),
+                    }
+                )
+
+            ranks = rows.groupBy("path").applyInPandas(
+                refine, "doc_id long, leaf_rank long"
+            )
+
+        sh = simhash(docs.select("doc_id", "text"), bits=leaf_bits)
+        gray_val = F.expr("coalesce(simhash, 0L) ^ (coalesce(simhash, 0L) >> 1)")
+        keyed = docs.join(state, "doc_id").join(sh, "doc_id", "left")
+        if ranks is not None:
+            # refined docs order by their Prim rank; everything else
+            # (oversized leaves, term-less docs) sorts after them by the
+            # Gray key, offset past any possible rank
+            keyed = keyed.join(ranks, "doc_id", "left")
+            leaf_key = F.coalesce(
+                F.col("leaf_rank"), F.lit(1 << 40) + gray_val
+            ).alias("leaf_key")
+        else:
+            leaf_key = gray_val.alias("leaf_key")
+        keyed = keyed.select(
+            F.col("doc_id").alias("orig_doc_id"),
+            *[c for c in docs.columns if c != "doc_id"],
+            "path",
+            leaf_key,
         )
+        out = assign_doc_ids(keyed, order_col=["path", "leaf_key", "orig_doc_id"])
+        return out.drop("path", "leaf_key")
     finally:
         # the leaf refinement reads raw_tf; assign_doc_ids checkpoints
         # eagerly, so that action has run it by now
         raw_tf.unpersist()
-
-
-def _leaf_ordered_ids(
-    docs: DataFrame,
-    state: DataFrame,
-    raw_tf: DataFrame,
-    leaf_bits: int,
-    leaf_refine: bool,
-    leaf_cap: int,
-    graph_tf_threshold: float,
-    direct_cap: int,
-    sample_cap: int,
-    min_seg: int,
-) -> DataFrame:
-    """Final ids of :func:`reorder_bisect`: dense ranks over (leaf path,
-    within-leaf order, original id), the within-leaf order being the
-    Prim leaf refinement (``leaf_refine``) or the SimHash-Gray key."""
-    ranks = None
-    if leaf_refine:
-        # Prim-faithful leaf refinement (stretch item): inside leaves
-        # of <= leaf_cap docs, run the reference's ACTUAL sampled
-        # similarity graph + Prim half-growth + oriented recursion
-        # (_bb_leaf_order) — one applyInPandas pass over (path) groups,
-        # keeping the level-synchronous outer loop as the distributed
-        # scaffold. Oversized leaves (wrong depth for the corpus) and
-        # term-less docs fall back to the Gray order below.
-        import pandas as pd  # noqa: F811 (executor-side)
-
-        raw = raw_tf
-        small = (
-            state.groupBy("path")
-            .count()
-            .where(F.col("count") <= leaf_cap)
-            .select("path")
-        )
-        rows = raw.join(state, "doc_id").join(F.broadcast(small), "path")
-
-        def refine(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # sort like level_split does: the per-doc term-dict
-            # insertion order (and thus every float accumulation in
-            # _com/_cos) must not depend on shuffle arrival order, or
-            # near-tie splits flip run to run
-            pdf = pdf.sort_values(["doc_id", "term"], kind="mergesort")
-            tvecs: dict[int, dict[str, float]] = {}
-            for d, t, w in zip(pdf["doc_id"], pdf["term"], pdf["w"]):
-                tvecs.setdefault(int(d), {})[t] = float(w)
-            ids = sorted(tvecs)
-            order = _bb_leaf_order(
-                ids,
-                tvecs,
-                graph_tf_threshold=graph_tf_threshold,
-                direct_cap=direct_cap,
-                sample_cap=sample_cap,
-                min_seg=min_seg,
-            )
-            return pd.DataFrame(
-                {
-                    "doc_id": order,
-                    "leaf_rank": list(range(len(order))),
-                }
-            )
-
-        ranks = rows.groupBy("path").applyInPandas(
-            refine, "doc_id long, leaf_rank long"
-        )
-
-    sh = simhash(docs.select("doc_id", "text"), bits=leaf_bits)
-    gray_val = F.expr("coalesce(simhash, 0L) ^ (coalesce(simhash, 0L) >> 1)")
-    keyed = docs.join(state, "doc_id").join(sh, "doc_id", "left")
-    if ranks is not None:
-        # refined docs order by their Prim rank; everything else
-        # (oversized leaves, term-less docs) sorts after them by the
-        # Gray key, offset past any possible rank
-        keyed = keyed.join(ranks, "doc_id", "left")
-        leaf_key = F.coalesce(
-            F.col("leaf_rank"), F.lit(1 << 40) + gray_val
-        ).alias("leaf_key")
-    else:
-        leaf_key = gray_val.alias("leaf_key")
-    keyed = keyed.select(
-        F.col("doc_id").alias("orig_doc_id"),
-        *[c for c in docs.columns if c != "doc_id"],
-        "path",
-        leaf_key,
-    )
-    out = assign_doc_ids(keyed, order_col=["path", "leaf_key", "orig_doc_id"])
-    return out.drop("path", "leaf_key")
 
 
 def compression_stats(spark, index_dir: str) -> dict:

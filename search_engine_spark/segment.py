@@ -236,17 +236,20 @@ class SegmentReader:
             paths += by_bucket.get(b, ())
         return paths
 
-    def table(self, terms: list[str], keep: bool):
+    def table(self, terms: list[str], keep: bool, cap: int | None = None):
         """The chunk rows of ``terms`` as one pyarrow table; None for an
-        index without data files.
+        index without data files, or as soon as more than ``cap`` rows
+        have been read — so an above-cap term set (a stop word owning
+        ~10^8 chunks) costs the driver at most ``cap`` rows plus one
+        record batch, never its whole metadata.
 
         With ``keep`` (the low-latency ``search_local`` path: a serving
         engine pins its posting files) the rows carry payloads and files
         are read whole into the LRU. Without it (the driver-planned
         ``search()``, whose latency is its Spark job) the rows carry
-        metadata only and files outside the LRU are read with the term
-        filter pushed down and dropped after use, so a planning engine
-        pins nothing; the planner point-reads the few payloads it
+        metadata only and files outside the LRU are streamed with the
+        term filter pushed down and dropped after use, so a planning
+        engine pins nothing; the planner point-reads the few payloads it
         decodes (:meth:`decode_keys`)."""
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -259,40 +262,62 @@ class SegmentReader:
             c for c in META_COLS + (PAYLOAD_COLS if keep else [])
             if c in self.schema
         ]
-        tabs, cold = [], []
+        value_set = pa.array(terms, pa.string())
+
+        def of_terms(tbl):
+            return tbl.filter(
+                pc.is_in(tbl.column("term"), value_set=value_set)
+            )
+
+        tabs, n_rows = [], 0
         for path in self._paths(terms):
             tbl = self._tables.get(path)
             if tbl is not None:
                 self._tables.move_to_end(path)
-                tabs.append(tbl.select(cols))
+                parts = [tbl.select(cols)]
             elif keep:
                 tbl = self._tables[path] = pq.read_table(path, columns=cols)
                 self._bytes += tbl.nbytes
                 while self._bytes > self.cap_bytes and len(self._tables) > 1:
                     _, old = self._tables.popitem(last=False)
                     self._bytes -= old.nbytes
-                tabs.append(tbl)
+                parts = [tbl]
             else:
-                cold.append(path)
-        tabs += self._read(cold, cols, pa_ds.field("term").isin(terms))
+                parts = self._read(
+                    [path], cols, pa_ds.field("term").isin(terms)
+                )
+            for part in parts:
+                if cap is not None:
+                    # exact running count; without a cap one filter of
+                    # the concatenation is cheaper than one per file
+                    part = of_terms(part)
+                    n_rows += part.num_rows
+                    if n_rows > cap:
+                        return None
+                tabs.append(part)
         if not tabs:
             return pa.schema(
                 [self._schema.field(c) for c in cols]
             ).empty_table()
         tbl = pa.concat_tables(tabs)
-        return tbl.filter(
-            pc.is_in(tbl.column("term"), value_set=pa.array(terms))
-        )
+        return tbl if cap is not None else of_terms(tbl)
 
     @staticmethod
-    def _read(paths: list[str], cols: list[str], expr) -> list:
-        """Rows of ``paths`` matching the pyarrow filter ``expr``, one
-        file at a time: one multi-file dataset scan of the same 112
-        files left the process ~9 MB more resident memory than per-file
-        reads (pyarrow 16)."""
-        import pyarrow.parquet as pq
+    def _read(paths: list[str], cols: list[str], expr):
+        """Rows of ``paths`` matching the pyarrow filter ``expr``,
+        streamed one file and one record batch at a time (as one-batch
+        tables): a caller may stop early, and one multi-file dataset
+        scan of the same 112 files left the process ~9 MB more resident
+        memory than per-file reads (pyarrow 16)."""
+        import pyarrow as pa
+        import pyarrow.dataset as pa_ds
 
-        return [pq.read_table(p, columns=cols, filters=expr) for p in paths]
+        for path in paths:
+            for batch in pa_ds.dataset(path, format="parquet").to_batches(
+                columns=cols, filter=expr
+            ):
+                if batch.num_rows:
+                    yield pa.Table.from_batches([batch])
 
     def _decode(self, payload, codec, dls_raw) -> tuple:
         ids, tfs = codecs.decode_chunk(payload, int(codec))
@@ -344,11 +369,11 @@ class SegmentReader:
                 missing.append(key)
         if not missing or not self.has_data:
             return out
-        tabs = self._read(
+        tabs = list(self._read(
             self._paths(sorted({t for t, _s, _c in missing})),
             ["term", "salt", "chunk_seq", *PAYLOAD_COLS],
             keys_expression(missing),
-        )
+        ))
         if not tabs:
             return out
         tbl = pa.concat_tables(tabs)

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 
 import search_engine_spark.query as query_mod
-from search_engine_spark import maintenance
+from search_engine_spark import maintenance, segment
 from search_engine_spark.build import IndexBuilder
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import MultiIndexQueryEngine, QueryEngine
@@ -140,6 +140,40 @@ def test_driver_plan_multi_segment(spark, corpus, tmp_path):
             got = rows_of(multi.search(q, mode=mode, k=10))
             assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
         assert all(e.has_stats_override for e in multi.engines)
+
+
+def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
+    """The reader stops at the record batch that crosses METADATA_CAP
+    (the driver never holds an above-cap term set's whole metadata),
+    search() then plans with the distributed banded planner, and the
+    lexicon-cached chunk counts skip the doomed read on a repeat."""
+    idx, _docs, oracle = corpus
+    cap = 5
+    monkeypatch.setattr(query_mod, "METADATA_CAP", cap)
+    meta_rows = []
+    read = segment.SegmentReader._read
+
+    def spy(paths, cols, expr):
+        for part in read(paths, cols, expr):
+            if "payload" not in cols:
+                meta_rows.append(part.num_rows)
+            yield part
+
+    monkeypatch.setattr(segment.SegmentReader, "_read", staticmethod(spy))
+    eng = QueryEngine(spark, idx)
+    q = "w0 w1 w2"
+    terms = q.split()
+    assert eng._reader.table(terms, keep=False, cap=cap) is None
+    assert sum(meta_rows[:-1]) <= cap < sum(meta_rows)
+    stopped_at = sum(meta_rows)
+    assert eng._reader.table(terms, keep=False).num_rows > stopped_at
+
+    meta_rows.clear()
+    for _ in range(2):
+        got = rows_of(eng.search(q, k=10))
+        assert eng.last_plan_stats["pruner"] == "banded_wand"
+        assert_rank_identical(got, oracle.topk(q, k=10))
+    assert sum(meta_rows) == stopped_at  # first query only
 
 
 def test_search_starts_at_most_two_spark_jobs(spark, corpus):

@@ -591,18 +591,23 @@ def test_multi_segment_serving_after_upsert_before_merge(
     assert alpha and all(d >= off1 for d, _ in alpha)
 
 
-def test_engine_close_releases_metadata_cache(spark, corpus, base_index):
+def test_engine_close_releases_metadata_cache(
+    spark, corpus, base_index, monkeypatch
+):
     """close() unpersists the engine-pinned chunks-metadata projection
     (META_CACHE) and the context-manager form forwards to it; a
     multi-segment engine closes every per-segment engine. Guards the
     churn case — LSM serving that reopens engines after delete/upsert
-    must not accumulate pinned caches for the session lifetime. (A
-    NOT query plans from the Spark-collected metadata, so it pins the
-    projection; plain search() plans on the driver.)"""
+    must not accumulate pinned caches for the session lifetime. (On
+    the parquet layout only the above-cap banded planner reads the
+    projection, hence the lowered cap.)"""
+    import search_engine_spark.query as query_mod
     from search_engine_spark.query import MultiIndexQueryEngine
 
+    monkeypatch.setattr(query_mod, "METADATA_CAP", 1)
     with QueryEngine(spark, base_index) as eng:
-        _topk(eng.search_not(QUERY, "data", mode="disjunctive", k=10))
+        _topk(eng.search(QUERY, mode="disjunctive", k=10))
+        assert eng.last_plan_stats["pruner"] == "banded_wand"
         cached = eng._meta_df
         if cached is not None:  # META_CACHE path materialized
             assert cached.storageLevel.useMemory
@@ -611,7 +616,7 @@ def test_engine_close_releases_metadata_cache(spark, corpus, base_index):
         assert not cached.storageLevel.useMemory  # actually unpersisted
 
     with MultiIndexQueryEngine(spark, [base_index]) as mqe:
-        _topk(mqe.search_not(QUERY, "data", "disjunctive"))
+        _topk(mqe.search(QUERY, "disjunctive"))
         segs = list(mqe.engines)
     assert all(e._meta_df is None for e in segs)
     # closed engines still re-open lazily on next use (close is not a
