@@ -21,25 +21,29 @@ reach the threshold are never decoded. Pruning is margin-safe: results
 stay rank-identical to exhaustive evaluation.
 
 Physical plan of ``search()``, below METADATA_CAP on the parquet
-layout (planned on the driver):
+layout — answered on the driver, ZERO Spark jobs:
     SegmentReader (segment.py): the query terms' chunk metadata in one
       pyarrow read (bucket-pruned, term filter pushed down) -> lexicon
       stats + per-term block-max bounds, no lexicon job
     WAND sweep -> elementary segments; theta from the metadata alone
-      when the chunk bounds separate, else a phase-1 decode of the
-      top-bound segments' chunks by one pyarrow point read
-      (conjunctive: the rare pivot's doc ids point-read instead)
-    ONE Spark job: chunks scan filtered to the surviving
-      (term, salt, chunk_seq) keys by one pushed-down predicate, then
-    mapInArrow decode+score (numpy, Arrow-batched; postings outside
-      kept segments masked so partial scores can never surface)
-    groupBy(doc_id) agg  [conjunctive adds HAVING count == n_terms]
-    ORDER BY score DESC, doc_id LIMIT k   (TakeOrderedAndProject)
-The reader stops at METADATA_CAP rows; above the cap the sweep itself
-runs distributed (``_spark_banded``). NOT-clause and over-cap-tombstone
-queries probe theta with a Spark job (the reader's mask cannot apply
-their exclusions); Iceberg indexes also collect metadata and pivot ids
-with Spark jobs.
+      when the chunk bounds separate, else the k-th best score of a
+      phase-1 decode of the top-bound segments' chunks
+      (conjunctive: the rare pivot's doc ids replace the sweep)
+    the surviving (term, salt, chunk_seq) keys, point-read and decoded
+      by the reader (tombstones masked), masked to the kept segments
+      (or the pivot's candidates), scored and cut to the top k in numpy
+      (``_score_local``, the one driver-side scorer; the phase-1 probe
+      is the same call with the probe's keys)
+    result rows -> a DataFrame over a pyarrow table (``local_frame``),
+      whose collect starts no Spark job
+``batch_search`` runs the same plan per query over the batch's shared
+key set. The final decode stays a Spark job — chunks scan filtered to
+the surviving keys by one pushed-down predicate, mapInArrow decode +
+score, groupBy(doc_id) agg, ORDER BY score DESC, doc_id LIMIT k
+(``_keys_job``/``_agg_topk``) — for Iceberg indexes, NOT clauses,
+tombstone sets too large for the driver, kept sets above
+KEYS_COLLECT_CAP and, above METADATA_CAP (where the reader stops), the
+distributed sweep (``_spark_banded``).
 
 A driver-local fast path (``search_local``) reads the same rows through
 the same reader and runs the block-max sweep sequentially in numpy —
@@ -48,6 +52,7 @@ the interactive "REPL" parity path with ~ms latency, no Spark job.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import os
 import sys
@@ -89,14 +94,16 @@ N_BANDS_MIN, N_BANDS_MAX = 32, 65536
 # broadcast the surviving-keys side of the decode join below this count
 KEYS_BROADCAST_CAP = 100_000
 
-# when the surviving chunk-key set is at most this, collect it and turn
-# the decode's leftsemi join into an exact (term, salt, chunk_seq)
-# PREDICATE on the scan — In filters reach the parquet reader
-# (row-group stats + dictionary pruning), so the decode does point
-# reads instead of scanning every queried term's payload bytes and
-# discarding them post-join. Above the cap the predicate would bloat
-# the plan; the leftsemi join (broadcast under KEYS_BROADCAST_CAP)
-# remains the at-scale shape.
+# the largest surviving chunk-key set the driver handles itself: at
+# most this many keys are point-read and scored on the driver
+# (_score_local, no Spark job) where the layout allows, else they
+# become an exact (term, salt, chunk_seq) PREDICATE on the Spark decode
+# scan — In filters reach the parquet reader (row-group stats +
+# dictionary pruning), so the decode does point reads instead of
+# scanning every queried term's payload bytes and discarding them
+# post-join. Above the cap the predicate would bloat the plan; the
+# leftsemi join (broadcast under KEYS_BROADCAST_CAP) remains the
+# at-scale shape.
 KEYS_COLLECT_CAP = 8192
 
 # sentinel: a batch plan proved every query returns no rows
@@ -115,14 +122,15 @@ EMPTY_BATCH = object()
 META_CACHE = os.environ.get("SE_META_CACHE", "1") != "0"
 _META_COLS = ["bucket", *segment.META_COLS]
 
-# driver-local phase-1 theta probe (_theta_local): the probe's chunk
-# set is BOUNDED by the planner (<= 64 top segments per query), so at
-# any corpus scale it is a point read of a few hundred payloads — an
-# IR engine answers its threshold probe from storage directly instead
-# of scheduling a distributed job per serve pass (measured at 4M docs:
-# the Spark probe cost 5.7-7.4 s of fixed scheduling + scan tasks per
-# batch; the pyarrow point read is tens of ms). SE_LOCAL_THETA=0
-# forces the distributed probe (tests compare both paths).
+# driver-side scoring (_score_local) of the phase-1 theta probe and of
+# a final kept set of at most KEYS_COLLECT_CAP chunks: an IR engine
+# answers a point-read sized key set from storage directly instead of
+# scheduling a distributed job per query (measured at 4M docs: the
+# Spark probe cost 5.7-7.4 s of fixed scheduling + scan tasks per
+# batch, the pyarrow point read tens of ms; on a 10k-doc index the
+# Spark final decode cost ~1 s per query, the driver ~0.15 s).
+# SE_LOCAL_THETA=0 forces the Spark probe AND the Spark final job
+# (tests compare both paths).
 LOCAL_THETA = os.environ.get("SE_LOCAL_THETA", "1") != "0"
 
 # batch_search: skip the phase-1 threshold job when the batch's terms
@@ -136,6 +144,42 @@ BATCH_PRUNE_FLOOR = 4096
 # its df is at most this (the candidate list rides to executors in the
 # decode closure — ~0.5 MB at the cap)
 PIVOT_DOC_CAP = 65536
+
+
+@functools.lru_cache(maxsize=64)
+def _frame_schema(schema: str):
+    """(Spark StructType, pyarrow schema) of a DDL schema string."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(schema)
+    return st, to_arrow_schema(st)
+
+
+def local_frame(spark, schema: str, columns: dict | None = None) -> DataFrame:
+    """A DataFrame over driver-resident rows (``columns``: field name ->
+    values for every ``schema`` field; None for no rows), built from a
+    pyarrow table: collecting it starts no Spark job, where a
+    ``createDataFrame(list)`` frame's collect starts one (~0.3-0.5 s)."""
+    import pyarrow as pa
+
+    st, arrow_schema = _frame_schema(schema)
+    if columns is None:
+        tbl = arrow_schema.empty_table()
+    else:
+        tbl = pa.table(
+            [pa.array(columns[f.name], f.type) for f in arrow_schema],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(tbl, st)
+
+
+def kth_score(top: dict | None, k: int) -> float | None:
+    """The k-th best score of one query's :meth:`QueryEngine._score_local`
+    rows, None below k rows."""
+    if top is None or len(top["score"]) < k:
+        return None
+    return float(top["score"][k - 1])
 
 
 def bm25_scores(
@@ -749,7 +793,7 @@ class QueryEngine:
     # --------------------------------------------------- WAND planning
 
     def _empty(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, schema)
 
     def _term_meta(self, terms: list[str]) -> segment.ChunkRows | None:
         """Chunk rows of ``terms`` with their lexicon stats and WAND
@@ -820,16 +864,49 @@ class QueryEngine:
         cover: np.ndarray,
         mode: str,
         k: int,
-        explain: bool = False,
-        dtype=np.float32,
+        explain: bool,
+        dtype,
+        schema: str,
     ) -> DataFrame:
         """Exact scoring restricted to the given segments: decode only
         their covering chunks, mask postings to the segment union."""
         keys = cr.cover_keys(present, cover)
         lo, hi = wand.merge_intervals(seg_lo, seg_hi)
         self.last_plan_stats["chunks_kept"] = len(keys)
+        return self._final_topk(
+            present, lex, sorted(keys), mode, k, explain, dtype, schema,
+            intervals=(lo, hi),
+        )
+
+    def _final_topk(
+        self,
+        present: list[str],
+        lex: dict[str, dict],
+        keys: list[tuple],
+        mode: str,
+        k: int,
+        explain: bool,
+        dtype,
+        schema: str,
+        intervals: tuple[np.ndarray, np.ndarray] | None = None,
+        candidates: np.ndarray | None = None,
+    ) -> DataFrame:
+        """The final top-k over exactly ``keys``: scored on the driver
+        into a job-free frame where :meth:`_local_ok` allows, else the
+        Spark job (:meth:`_keys_job`). Records which ran as
+        ``last_plan_stats["scorer"]``."""
+        if self._local_ok(len(keys)):
+            self.last_plan_stats["scorer"] = "local"
+            top = self._score_local(
+                keys, lex, {0: present}, k, mode == "conjunctive",
+                ivals=None if intervals is None else {0: intervals},
+                candidates=candidates, explain=explain, dtype=dtype,
+            )
+            return local_frame(self.spark, schema, top.get(0))
+        self.last_plan_stats["scorer"] = "spark"
         return self._keys_job(
-            present, lex, sorted(keys), (lo, hi), mode, k, explain, dtype
+            present, lex, keys, intervals, mode, k, explain, dtype,
+            candidates,
         )
 
     def _keys_job(
@@ -842,12 +919,15 @@ class QueryEngine:
         k: int,
         explain: bool = False,
         dtype=np.float32,
+        candidates: np.ndarray | None = None,
     ) -> DataFrame:
-        """Decode+score exactly the given (term, salt, chunk_seq) chunk
-        keys, optionally masking postings to doc-id intervals."""
+        """Spark job: decode+score exactly the given (term, salt,
+        chunk_seq) chunk keys, optionally masking postings to doc-id
+        intervals or a sorted candidate doc-id array."""
         kept = self._apply_keys(self._chunks(present), keys)
         scored = self._scored_postings(
-            kept, lex, intervals=intervals, with_dl=explain, dtype=dtype
+            kept, lex, intervals=intervals, with_dl=explain, dtype=dtype,
+            candidates=candidates,
         )
         return self._agg_topk(scored, mode, len(present), k, explain, dtype)
 
@@ -895,19 +975,17 @@ class QueryEngine:
         """Phase-1 threshold: the k-th best score over exactly ``keys``'
         postings masked to the merged segment intervals [lo, hi) (mask
         => exact scores for the docs inside, so a true lower bound of
-        the k-th best final score); None below k masked results. A
-        driver point read where the layout allows, else one Spark
+        the k-th best final score); None below k masked results.
+        Scored on the driver where the layout allows, else one Spark
         job."""
-        if self._theta_local_ok(len(keys)):
-            return self._theta_local(
-                keys,
-                [(0, int(a), int(b)) for a, b in zip(lo.tolist(), hi.tolist())],
-                lex,
+        if self._local_ok(len(keys)):
+            self.last_plan_stats["theta_probe"] = "local"
+            top = self._score_local(
+                keys, lex, {0: present}, k,
                 mode == "conjunctive" and len(present) > 1,
-                k,
-                {0: present},
-                dtype,
+                ivals={0: (lo, hi)}, dtype=dtype,
             ).get(0)
+            return kth_score(top, k)
         self.last_plan_stats["theta_probe"] = "spark"
         self._plan_jobs += 1
         rows = self._keys_job(
@@ -929,10 +1007,11 @@ class QueryEngine:
         """Conjunctive nextGEQ at posting granularity: the (rare) pivot
         term's doc ids — point-read by the driver on the parquet layout,
         else collected by one Spark job (tombstoned or NOT-excluded ids
-        among them are harmless: the final job drops them) — pick, per
-        other term, exactly the chunks containing a candidate; the
-        final job decodes that chunk set with the candidate mask and
-        runs the exact conjunctive aggregation."""
+        among them are harmless: the final scoring drops them) — pick,
+        per other term, exactly the chunks containing a candidate; the
+        final scoring (:meth:`_final_topk`) decodes that chunk set with
+        the candidate mask and runs the exact conjunctive
+        aggregation."""
         pivot_rows = cr.metas[pivot].rows.tolist()
         if self._reader is not None:
             got = self._reader.decode_keys([cr.key(r) for r in pivot_rows])
@@ -965,12 +1044,9 @@ class QueryEngine:
                 "candidates": len(cand),
             }
         )
-        kept = self._apply_keys(self._chunks(present), sorted(keys))
-        scored = self._scored_postings(
-            kept, lex, with_dl=explain, dtype=dtype, candidates=cand
-        )
-        return self._agg_topk(
-            scored, "conjunctive", len(present), k, explain, dtype
+        return self._final_topk(
+            present, lex, sorted(keys), "conjunctive", k, explain, dtype,
+            schema, candidates=cand,
         )
 
     # ------------------------------------- distributed (banded) planner
@@ -1329,7 +1405,7 @@ class QueryEngine:
                 out = self._conjunctive_pivot(
                     present, lex, cr, pivot, k, explain, dtype, schema
                 )
-                self.last_plan_stats["driver_jobs"] = self._plan_jobs + 1
+                self._count_jobs()
                 return out
 
         if cr is not None:
@@ -1341,6 +1417,7 @@ class QueryEngine:
                 {"pruner": "block_max_wand", "segments": len(seg_lo)}
             )
             if len(seg_lo) == 0:
+                self._count_jobs()
                 return self._empty(schema)
             order = np.argsort(-bound, kind="stable")
             # phase 1: enough top-bound segments to (heuristically)
@@ -1411,10 +1488,9 @@ class QueryEngine:
             out = self._segments_job(
                 present, lex, cr,
                 seg_lo[keep], seg_hi[keep], cover[keep],
-                mode, k, explain=explain, dtype=dtype,
+                mode, k, explain, dtype, schema,
             )
-            # Spark actions this query issues: planning + the final job
-            self.last_plan_stats["driver_jobs"] = self._plan_jobs + 1
+            self._count_jobs()
             return out
 
         # above the planning cap with bound metadata present: run the
@@ -1467,6 +1543,15 @@ class QueryEngine:
             chunks, lex, with_dl=explain, dtype=dtype
         )
         return self._agg_topk(scored, mode, len(present), k, explain, dtype)
+
+    def _count_jobs(self) -> None:
+        """``last_plan_stats["driver_jobs"]``: the Spark jobs a
+        driver-planned query starts — its planning actions plus the
+        final job when Spark scores it (0 on the driver path). A Spark
+        action counts once, though AQE may run it as several jobs."""
+        self.last_plan_stats["driver_jobs"] = self._plan_jobs + int(
+            self.last_plan_stats.get("scorer") == "spark"
+        )
 
     def search_not(
         self,
@@ -1551,11 +1636,16 @@ class QueryEngine:
         only stop paying for chunks NO query needs). Safe by the same
         partial-score argument as ``_spark_banded`` phase 2.
 
-        The phase-1 threshold probe is one extra Spark job (fixed
-        seconds); below ``prune_floor`` total chunks (default
-        ``BATCH_PRUNE_FLOOR``) decoding everything is cheaper than
-        probing, so only the free driver-side pruning (conjunctive
-        segment coverage) applies. At web scale the floor is noise.
+        The phase-1 threshold probe is one extra decode pass; below
+        ``prune_floor`` total chunks (default ``BATCH_PRUNE_FLOOR``)
+        decoding everything is cheaper than probing, so only the free
+        driver-side pruning (conjunctive segment coverage) applies. At
+        web scale the floor is noise.
+
+        Where :meth:`_local_ok` admits the surviving key set (below
+        METADATA_CAP on the parquet layout) the probe and the final
+        scoring both run on the driver (:meth:`_score_local`) and the
+        result frame collects without a Spark job.
         """
         from pyspark.sql import Window
 
@@ -1565,7 +1655,8 @@ class QueryEngine:
             for t in tokenize_query(text):
                 qterms.append((qid, t))
         all_terms = sorted({t for _, t in qterms})
-        schema = "query_id int, doc_id long, score float, rank int"
+        score_t = "double" if dtype is np.float64 else "float"
+        schema = f"query_id int, doc_id long, score {score_t}, rank int"
         self._plan_jobs = 0
         cr = self._term_meta(all_terms) if prune and all_terms else None
         lex = cr.lex if cr is not None else self.lexicon_lookup(all_terms)
@@ -1588,15 +1679,20 @@ class QueryEngine:
             "chunks_total": sum(lex[t]["n_chunks"] for t in present),
             "pruner": "none",
         }
-        chunks = self._chunks(present)
         conj = mode == "conjunctive"
-        keys_df = None
+        keys_df = keys = None
         if cr is not None:
             floor = BATCH_PRUNE_FLOOR if prune_floor is None else prune_floor
             keys_df = self._batch_plan(
                 qt, cr, lex, conj, k, qt_df, nq_df, floor, dtype
             )
-        elif prune and BANDED_PLANNER and "max_ratio" in chunks.columns:
+            keys = keys_df
+            if keys is None and cr.n_rows <= KEYS_COLLECT_CAP:
+                keys = [cr.key(r) for r in range(cr.n_rows)]
+        elif (
+            prune and BANDED_PLANNER
+            and "max_ratio" in self._stage_df("chunks").columns
+        ):
             # above METADATA_CAP: the distributed banded batch planner —
             # score-bounded skipping must not silently turn off for
             # exactly the batches that need it most
@@ -1605,6 +1701,31 @@ class QueryEngine:
             )
         if keys_df is EMPTY_BATCH:
             return self._empty(schema)
+        # phase-1 thetas are exact kth-best lower bounds per query (>= k
+        # docs were proven to reach them), so any doc whose FINAL
+        # aggregated score falls below theta can't make top-k: filter
+        # before the per-query top-k cut — in the Spark job the rank
+        # window's sort input shrinks from every scored doc to the
+        # theta-beating candidates, which is what keeps the final
+        # exchange k-ish-sized instead of corpus-sized at scale. The
+        # margin absorbs float32 sum-order nondeterminism between the
+        # phase-1 and final aggregations (same treatment as
+        # segment-bound pruning, wand.BOUND_MARGIN).
+        floors = {
+            qid: th - wand.BOUND_MARGIN * abs(th) - 1e-9
+            for qid, th in self._batch_thetas.items()
+        }
+        if floors:
+            self.last_plan_stats["theta_filter"] = len(floors)
+        local = isinstance(keys, list) and self._local_ok(len(keys))
+        self.last_plan_stats["scorer"] = "local" if local else "spark"
+        if cr is not None:
+            self._count_jobs()
+        if local:
+            return self._batch_local(
+                qt, keys, lex, conj, k, dtype, schema, floors
+            )
+        chunks = self._chunks(present)
         if keys_df is not None:
             chunks = self._apply_keys(chunks, keys_df)
         scored = self._scored_postings(chunks, lex, dtype=dtype)
@@ -1612,9 +1733,7 @@ class QueryEngine:
             scored.join(qt_df, "term")
             .groupBy("query_id", "doc_id")
             .agg(
-                F.sum("score")
-                .cast("float" if dtype == np.float32 else "double")
-                .alias("score"),
+                F.sum("score").cast(score_t).alias("score"),
                 F.count("*").alias("_nt"),
             )
         )
@@ -1622,31 +1741,16 @@ class QueryEngine:
             per_q = per_q.join(nq_df, "query_id").where(
                 F.col("_nt") == F.col("n_terms")
             ).drop("n_terms")
-        if self._batch_thetas:
-            # phase-1 thetas are exact kth-best lower bounds per query
-            # (>= k docs were proven to reach them), so any doc whose
-            # FINAL aggregated score falls below theta can't make
-            # top-k: filter before the per-query rank window — the
-            # window's sort input shrinks from every scored doc to the
-            # theta-beating candidates, which is what keeps the final
-            # exchange k-ish-sized instead of corpus-sized at scale.
-            # The margin absorbs float32 sum-order nondeterminism
-            # between the phase-1 and final aggregations (same
-            # treatment as segment-bound pruning, wand.BOUND_MARGIN).
-            th_rows = [
-                (qid, th - wand.BOUND_MARGIN * abs(th) - 1e-9)
-                for qid, th in self._batch_thetas.items()
-            ]
+        if floors:
             th_df = F.broadcast(
                 self.spark.createDataFrame(
-                    th_rows, "query_id int, _theta double"
+                    list(floors.items()), "query_id int, _theta double"
                 )
             )
             per_q = per_q.join(th_df, "query_id", "left").where(
                 F.col("_theta").isNull()
                 | (F.col("score") >= F.col("_theta"))
             ).drop("_theta")
-            self.last_plan_stats["theta_filter"] = len(th_rows)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -1667,7 +1771,7 @@ class QueryEngine:
         nq_df: DataFrame,
         floor: int = 0,
         dtype=np.float32,
-    ) -> DataFrame | None:
+    ) -> list[tuple] | None:
         """Per-query block-max WAND plans over the shared decode.
 
         Driver-side (numpy, on the already-collected metadata): one
@@ -1677,7 +1781,8 @@ class QueryEngine:
         query to its own segment intervals (mask => exact scores, so
         each k-th-best is a true theta lower bound even with
         negative-idf terms). Kept chunks per query = segments with
-        bound >= theta_q; returns the broadcast union of kept keys.
+        bound >= theta_q; returns the sorted union of kept keys (None:
+        every chunk; EMPTY_BATCH: no query can match).
 
         Safety of the final (unmasked) job mirrors _spark_banded phase
         2: a doc in a segment pruned for query q aggregates, for q, a
@@ -1741,7 +1846,7 @@ class QueryEngine:
             self.last_plan_stats.update(
                 {"pruner": "batch_wand", "chunks_kept": len(kept_keys)}
             )
-            return self._keys_result(sorted(kept_keys))
+            return sorted(kept_keys)
 
         # ONE shared phase-1 decode for every thresholdable query
         thetas = self._batch_theta(
@@ -1764,7 +1869,7 @@ class QueryEngine:
             return EMPTY_BATCH
         if len(kept_keys) >= total:
             return None
-        return self._keys_result(sorted(kept_keys))
+        return sorted(kept_keys)
 
     def _batch_theta(
         self,
@@ -1786,14 +1891,26 @@ class QueryEngine:
 
         The probe set is planner-bounded, so when the layout permits a
         driver point read the probe skips Spark entirely
-        (:meth:`_theta_local`); the distributed job remains the path
+        (:meth:`_score_local`); the distributed job remains the path
         for Iceberg layouts and above-cap tombstone sets."""
         from pyspark.sql import Window
 
-        if by_q is not None and self._theta_local_ok(len(p1_keys)):
-            return self._theta_local(
-                p1_keys, p1_ivals, lex, conj, k, by_q, dtype
+        if by_q is not None and self._local_ok(len(p1_keys)):
+            self.last_plan_stats["theta_probe"] = "local"
+            ivals: dict[int, tuple[list, list]] = {}
+            for qid, lo, hi in p1_ivals:
+                iv = ivals.setdefault(qid, ([], []))
+                iv[0].append(lo)
+                iv[1].append(hi)
+            tops = self._score_local(
+                p1_keys, lex, by_q, k, conj, dtype=dtype,
+                ivals={
+                    q: (np.array(lo, np.int64), np.array(hi, np.int64))
+                    for q, (lo, hi) in ivals.items()
+                },
             )
+            thetas = {q: kth_score(top, k) for q, top in tops.items()}
+            return {q: th for q, th in thetas.items() if th is not None}
         self.last_plan_stats["theta_probe"] = "spark"
         self._plan_jobs += 1
 
@@ -2141,11 +2258,12 @@ class QueryEngine:
 
     # ------------------------------------------------- driver-local path
 
-    def _theta_local_ok(self, n_keys: int) -> bool:
-        """The driver-local theta probe applies on the parquet layout
-        while every tombstone fits the reader's mask and no NOT clause
-        is active (the spark probe routes through _agg_topk, where the
-        exclusion applies), for a point-read sized probe set."""
+    def _local_ok(self, n_keys: int) -> bool:
+        """Whether ``n_keys`` chunks are scored on the driver
+        (:meth:`_score_local`): on the parquet layout, while every
+        tombstone fits the reader's mask and no NOT clause is active
+        (the Spark jobs apply both exclusions by anti-join), for a
+        point-read sized key set."""
         return (
             LOCAL_THETA
             and n_keys <= KEYS_COLLECT_CAP
@@ -2154,91 +2272,151 @@ class QueryEngine:
             and self._exclude_df is None
         )
 
-    def _theta_local(
+    def _score_local(
         self,
-        p1_keys: list[tuple],
-        p1_ivals: list[tuple[int, int, int]],
+        keys: list[tuple],
         lex: dict[str, dict],
-        conj: bool,
-        k: int,
         by_q: dict[int, list[str]],
+        k: int,
+        conj: bool,
+        ivals: dict[int, tuple[np.ndarray, np.ndarray]] | None = None,
+        candidates: np.ndarray | None = None,
+        floors: dict[int, float] | None = None,
+        explain: bool = False,
         dtype=np.float32,
-    ) -> dict[int, float]:
-        """Driver-side twin of :meth:`_batch_theta`: decode exactly
-        ``p1_keys`` via a pyarrow point read, mask each query's postings
-        to its own probe intervals, and return {query_id: k-th best
-        masked score}.
-        Scoring mirrors the distributed job (per-posting
-        ``bm25_scores`` in ``dtype``, float64 doc sums in canonical
-        sorted-term order); theta consumers already shave a
-        ``BOUND_MARGIN`` relative slack, which absorbs sum-order
-        noise between this and the final aggregation the same way it
-        does between two Spark jobs. Validity does not depend on the
-        probe seeing every posting of a doc: masked sums are <= true
-        scores, so the k-th best masked score stays a true lower
-        bound of the k-th best final score."""
-        self.last_plan_stats["theta_probe"] = "local"
-        got = self._reader.decode_keys(p1_keys)
-        if not got:
-            return {}
-        by_t: dict[str, list[tuple]] = {}
-        for key, v in got.items():
-            by_t.setdefault(key[0], []).append(v)
+    ) -> dict[int, dict]:
+        """The driver-side scorer, twin of the Spark decode + aggregate
+        (:meth:`_keys_job`, ``batch_search``'s final job and
+        :meth:`_batch_theta`): decode exactly ``keys`` via the reader
+        (tombstones masked), score every posting once per term, and per
+        query ``qid`` of ``by_q`` (its sorted term list; a repeated term
+        counts once per occurrence, as the Spark fan-out join does) sum
+        over its terms and cut to the top ``k``.
+
+        ``ivals`` ({qid: (lo, hi)}, sorted disjoint half-open doc-id
+        intervals) masks each query's postings to its own intervals —
+        a query without an entry is skipped; ``candidates`` (sorted doc
+        ids) masks every term's postings; ``conj`` keeps only docs that
+        matched every term of their query; ``floors`` ({qid: score})
+        drops a query's docs scoring below its floor.
+
+        Returns {qid: {"doc_id", "score"[, "doc_length", "terms"]}}
+        ordered score desc, doc_id asc, for every query with a row.
+        Scores follow the Spark job's arithmetic: per-posting
+        ``bm25_scores`` in ``dtype``, float64 doc sums (in sorted-term
+        order) cast to ``dtype``; ``explain`` adds each doc's length and
+        its (term, score, tf) entries sorted like
+        ``sort_array(collect_list(struct(term, score, tf)))``. As the
+        phase-1 probe (k-th best over masked postings) it yields a true
+        lower bound of the k-th best final score: within a mask
+        interval every posting of a doc is decoded, so its masked score
+        is exact."""
         per_term: dict[str, tuple] = {}
+        by_t: dict[str, list[tuple]] = {}
+        for key, v in self._reader.decode_keys(keys).items():
+            by_t.setdefault(key[0], []).append(v)
         for t, parts in by_t.items():
-            ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
+            ids, tfs, dls = (
+                np.concatenate([p[j] for p in parts]) for j in range(3)
+            )
             if len(parts) > 1:
                 o = np.argsort(ids, kind="stable")
                 ids, tfs, dls = ids[o], tfs[o], dls[o]
-            per_term[t] = (ids, tfs, dls)
-        iv_by_q: dict[int, list[tuple[int, int]]] = {}
-        for qid, lo, hi in p1_ivals:
-            iv_by_q.setdefault(qid, []).append((lo, hi))
-        thetas: dict[int, float] = {}
-        for qid, ivs in iv_by_q.items():
-            tq = by_q[qid]
-            # callers emit merge_intervals output in ascending order,
-            # so the per-query interval list is sorted + disjoint
-            mlo = np.array([a for a, _ in ivs], dtype=np.int64)
-            mhi = np.array([b for _, b in ivs], dtype=np.int64)
-            masked: dict[str, tuple] = {}
-            for t in tq:
-                if t not in per_term:
+            if candidates is not None:
+                keep = np.isin(ids, candidates)
+                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+            if len(ids):
+                per_term[t] = (ids, tfs, dls, bm25_scores(
+                    tfs, dls, lex[t]["df"], self.n_docs, self.avgdl, dtype
+                ))
+        out: dict[int, dict] = {}
+        for qid, terms in by_q.items():
+            iv = None
+            if ivals is not None:
+                iv = ivals.get(qid)
+                if iv is None:
                     continue
-                ids, tfs, dls = per_term[t]
-                keep = wand.ids_in_intervals(ids, mlo, mhi)
-                if keep.any():
-                    masked[t] = (ids[keep], tfs[keep], dls[keep])
-            if not masked or (conj and len(masked) < len(tq)):
+            parts = []
+            for t in terms:
+                p = per_term.get(t)
+                if p is not None and iv is not None:
+                    keep = wand.ids_in_intervals(p[0], *iv)
+                    p = tuple(a[keep] for a in p) if keep.any() else None
+                if p is not None:
+                    parts.append((t, p))
+            if not parts or (conj and len(parts) < len(terms)):
                 continue
-            cand = np.unique(
-                np.concatenate([v[0] for v in masked.values()])
-            )
+            cand = np.unique(np.concatenate([p[0] for _t, p in parts]))
             total = np.zeros(len(cand), dtype=np.float64)
             nt = np.zeros(len(cand), dtype=np.int32)
-            for t in sorted(masked):
-                ids_t, tfs_t, dls_t = masked[t]
-                s = bm25_scores(
-                    tfs_t,
-                    dls_t,
-                    lex[t]["df"],
-                    self.n_docs,
-                    self.avgdl,
-                    dtype=dtype,
-                )
-                pos = np.searchsorted(cand, ids_t)
-                total[pos] += s.astype(np.float64)
+            for _t, (ids, _tfs, _dls, sc) in parts:
+                pos = np.searchsorted(cand, ids)
+                total[pos] += sc
                 nt[pos] += 1
-            if conj:
-                sel = nt == len(tq)
-                cand, total = cand[sel], total[sel]
-            if len(cand) < k:
+            score = total.astype(dtype)
+            sel = nt == len(terms) if conj else np.ones(len(cand), bool)
+            if floors is not None and qid in floors:
+                sel &= score >= floors[qid]
+            cand, score = cand[sel], score[sel]
+            top = np.lexsort((cand, -score.astype(np.float64)))[:k]
+            if not len(top):
                 continue
-            order = np.lexsort((cand, -total))
-            thetas[qid] = float(total[order[k - 1]])
-        return thetas
+            row = {"doc_id": cand[top], "score": score[top]}
+            if explain:
+                row.update(self._explain_rows(row["doc_id"], parts))
+            out[qid] = row
+        return out
+
+    @staticmethod
+    def _explain_rows(docs: np.ndarray, parts: list[tuple]) -> dict:
+        """``doc_length`` and ``terms`` (one [{term, score, tf}] list per
+        doc, in term order) of the top ``docs`` over one query's scored
+        per-term postings ``parts`` (sorted by term)."""
+        doc_length = np.zeros(len(docs), dtype=np.int64)
+        terms: list[list[dict]] = [[] for _ in range(len(docs))]
+        for t, (ids, tfs, dls, sc) in parts:
+            pos = np.clip(np.searchsorted(ids, docs), 0, len(ids) - 1)
+            for i in np.flatnonzero(ids[pos] == docs).tolist():
+                j = pos[i]
+                doc_length[i] = dls[j]
+                terms[i].append(
+                    {"term": t, "score": float(sc[j]), "tf": int(tfs[j])}
+                )
+        return {"doc_length": doc_length, "terms": terms}
+
+    def _batch_local(
+        self,
+        qt: list[tuple[int, str]],
+        keys: list[tuple],
+        lex: dict[str, dict],
+        conj: bool,
+        k: int,
+        dtype,
+        schema: str,
+        floors: dict[int, float],
+    ) -> DataFrame:
+        """``batch_search``'s final job on the driver: every query's
+        top-k over the batch's shared key set (no interval mask, like
+        the Spark job) above its theta floor, ranked 1..k."""
+        by_q: dict[int, list[str]] = {}
+        for qid, t in qt:
+            by_q.setdefault(qid, []).append(t)
+        tops = self._score_local(
+            keys, lex, {q: sorted(ts) for q, ts in by_q.items()}, k, conj,
+            floors=floors, dtype=dtype,
+        )
+        if not tops:
+            return self._empty(schema)
+        qids = sorted(tops)
+        n = [len(tops[q]["doc_id"]) for q in qids]
+        return local_frame(self.spark, schema, {
+            "query_id": np.repeat(np.array(qids, np.int32), n),
+            "doc_id": np.concatenate([tops[q]["doc_id"] for q in qids]),
+            "score": np.concatenate([tops[q]["score"] for q in qids]),
+            "rank": np.concatenate(
+                [np.arange(1, m + 1, dtype=np.int32) for m in n]
+            ),
+        })
 
     def search_local(
         self, query: str, mode: str = "disjunctive", k: int = 10
@@ -3630,7 +3808,7 @@ class MultiIndexQueryEngine:
         out_t = "double" if dtype is np.float64 else "float"
         schema = f"doc_id long, score {out_t}"
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         pruned = self._segment_candidates(terms)
         df_map, found = self._set_global_df(terms, pruned)
         flags = self._eligible(terms, mode, df_map, found)
@@ -3844,7 +4022,7 @@ class MultiIndexQueryEngine:
         ]
         self.last_searched_segments = len(targets)
         if not targets:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
 
         def _one(pair):
             e, off = pair
@@ -3857,7 +4035,10 @@ class MultiIndexQueryEngine:
         for part in self._pmap(_one, targets):
             rows += part
         rows.sort(key=lambda x: (-x[1], x[0]))
-        return self.spark.createDataFrame(rows[:k], schema)
+        return local_frame(self.spark, schema, {
+            "doc_id": [d for d, _s in rows[:k]],
+            "score": [s for _d, s in rows[:k]],
+        })
 
     def _positional_flags(self, seq: list[str]) -> list[bool]:
         """Eligibility for the positional trio: every distinct term

@@ -5,7 +5,7 @@ The chunks stage is hive-partitioned by term bucket and term-sorted
 within each bucket. A :class:`SegmentReader` lists the bucket files once,
 keeps projected file tables in a byte-capped LRU, decodes chunk payloads
 (tombstone-masked) into a count-capped cache, and point-reads exact chunk
-keys. :class:`ChunkRows` holds one term set's chunk rows together with
+keys (term filter pushed down, exact keys picked after the read). :class:`ChunkRows` holds one term set's chunk rows together with
 the per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
 that ``search_local``, the driver-planned ``search()``/``batch_search``
 and the Spark-collected metadata fallback all plan from.
@@ -17,7 +17,6 @@ so nothing cached here goes stale.
 from __future__ import annotations
 
 import glob
-import operator
 import os
 import re
 from collections import OrderedDict
@@ -54,8 +53,8 @@ def balanced(items, combine):
 
 def key_groups(keys) -> list[tuple[str, int, list[int]]]:
     """An exact (term, salt, chunk_seq) key set grouped by (term, salt):
-    sorted ``[(term, salt, sorted chunk_seqs)]``. The Spark key predicate
-    and the pyarrow point read both filter by this grouping."""
+    sorted ``[(term, salt, sorted chunk_seqs)]`` — the grouping of the
+    Spark key predicate (:func:`keys_sql`)."""
     by: dict[tuple, set] = {}
     for t, s, c in keys:
         by.setdefault((t, int(s)), set()).add(int(c))
@@ -80,21 +79,6 @@ def keys_sql(keys) -> str:
             for t, s, cs in key_groups(keys)
         ),
         lambda a, b: f"({a} OR {b})",
-    )
-
-
-def keys_expression(keys):
-    """pyarrow twin of :func:`keys_sql` (dataset filter expression)."""
-    import pyarrow.dataset as pa_ds
-
-    return balanced(
-        (
-            (pa_ds.field("term") == t)
-            & (pa_ds.field("salt") == s)
-            & pa_ds.field("chunk_seq").isin(cs)
-            for t, s, cs in key_groups(keys)
-        ),
-        operator.or_,
     )
 
 
@@ -193,6 +177,9 @@ class SegmentReader:
         self.cap_bytes = int(os.environ.get("SE_LOCAL_CACHE_MB", "512")) << 20
         self._by_bucket: dict[int, list[str]] | None = None
         self._schema = None  # pyarrow schema of the data files
+        # one pyarrow dataset per data file, built on first read: a
+        # dataset re-discovers its file and footer when rebuilt
+        self._datasets: dict = {}
         self._tables: OrderedDict = OrderedDict()
         self._bytes = 0
         self.decoded: dict[tuple, tuple] = {}
@@ -302,8 +289,7 @@ class SegmentReader:
         tbl = pa.concat_tables(tabs)
         return tbl if cap is not None else of_terms(tbl)
 
-    @staticmethod
-    def _read(paths: list[str], cols: list[str], expr):
+    def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,
         streamed one file and one record batch at a time (as one-batch
         tables): a caller may stop early, and one multi-file dataset
@@ -313,9 +299,12 @@ class SegmentReader:
         import pyarrow.dataset as pa_ds
 
         for path in paths:
-            for batch in pa_ds.dataset(path, format="parquet").to_batches(
-                columns=cols, filter=expr
-            ):
+            ds = self._datasets.get(path)
+            if ds is None:
+                ds = self._datasets[path] = pa_ds.dataset(
+                    path, format="parquet"
+                )
+            for batch in ds.to_batches(columns=cols, filter=expr):
                 if batch.num_rows:
                     yield pa.Table.from_batches([batch])
 
@@ -354,36 +343,48 @@ class SegmentReader:
 
     def decode_keys(self, keys) -> dict:
         """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
-        found: from the decoded cache, else by a point read whose key
-        predicate prunes row groups on term/chunk_seq statistics, so only
-        ~|keys| payloads are materialized regardless of index size."""
+        found: from the decoded cache, else by a point read of the keys'
+        terms (bucket-pruned, ``term`` filter pushed down to row-group
+        statistics) that decodes only the requested keys; the read is
+        bounded by the terms' chunk count, which the planners hold to
+        METADATA_CAP. Pushing the exact keys down instead (a balanced OR
+        of per-(term, salt) ``chunk_seq`` lists) read 60 keys of a
+        7-file bucket in ~54 ms, the term filter alone in 5–9 ms
+        (pyarrow 16, 10k-doc index)."""
         import pyarrow as pa
+        import pyarrow.dataset as pa_ds
 
         out: dict[tuple, tuple] = {}
-        missing: list[tuple] = []
+        missing: set[tuple] = set()
         for key in keys:
             got = self.decoded.get(key)
             if got is not None:
                 out[key] = got
             else:
-                missing.append(key)
+                missing.add(key)
         if not missing or not self.has_data:
             return out
-        tabs = list(self._read(
-            self._paths(sorted({t for t, _s, _c in missing})),
+        terms = sorted({t for t, _s, _c in missing})
+        for part in self._read(
+            self._paths(terms),
             ["term", "salt", "chunk_seq", *PAYLOAD_COLS],
-            keys_expression(missing),
-        ))
-        if not tabs:
-            return out
-        tbl = pa.concat_tables(tabs)
-        cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-        for i in range(tbl.num_rows):
-            key = (
-                cols["term"][i], int(cols["salt"][i]),
-                int(cols["chunk_seq"][i]),
-            )
-            out[key] = self._remember(key, self._decode(
-                cols["payload"][i], cols["codec"][i], cols["dls"][i]
-            ))
+            pa_ds.field("term").isin(terms),
+        ):
+            found = [
+                (t, int(s), int(c)) for t, s, c in zip(
+                    part.column("term").to_pylist(),
+                    part.column("salt").to_pylist(),
+                    part.column("chunk_seq").to_pylist(),
+                )
+            ]
+            want = [key in missing for key in found]
+            if not any(want):
+                continue
+            part = part.filter(pa.array(want))
+            found = [key for key, w in zip(found, want) if w]
+            cols = {c: part.column(c).to_pylist() for c in PAYLOAD_COLS}
+            for i, key in enumerate(found):
+                out[key] = self._remember(key, self._decode(
+                    cols["payload"][i], cols["codec"][i], cols["dls"][i]
+                ))
         return out

@@ -1,10 +1,12 @@
-"""search() planned on the driver: below METADATA_CAP on the parquet
-layout the chunk metadata, the phase-1 theta probe and the conjunctive
-pivot ids all come from the engine's SegmentReader, and Spark runs only
-the final decode. Answers must stay rank-identical to the pure-Python
-oracle in every mode and option, and the key filter must survive terms
-that need escaping."""
+"""search() and batch_search answered on the driver: below METADATA_CAP
+on the parquet layout the chunk metadata, the phase-1 theta probe, the
+conjunctive pivot ids and the final scoring all come from the engine's
+SegmentReader, and the result frame collects without a Spark job.
+Answers must stay rank-identical to the pure-Python oracle and to the
+Spark final job (``LOCAL_THETA=False``) in every mode and option, and
+the key filters must survive terms that need escaping."""
 
+import itertools
 import shutil
 
 import numpy as np
@@ -32,29 +34,33 @@ QUERIES = [
 ]
 
 
-def zipf_docs(n_docs: int = 3000, seed: int = 11):
-    """Zipf(1.1) text over 300 words: head words in most docs (negative
-    idf), a long positive-idf tail; two backslash terms in a few docs."""
+def zipf_docs(n_docs: int = 3000, seed: int = 11, n_words: int = 300,
+              length=(20, 60)):
+    """Zipf(1.1) text over ``n_words`` words: head words in most docs
+    (negative idf), a long positive-idf tail; two backslash terms in a
+    few docs."""
     rng = np.random.default_rng(seed)
-    p = 1.0 / np.arange(1, 301) ** 1.1
+    p = 1.0 / np.arange(1, n_words + 1) ** 1.1
     p /= p.sum()
     docs = []
     for d in range(n_docs):
-        words = [f"w{i}" for i in rng.choice(300, rng.integers(20, 60), p=p)]
+        words = [
+            f"w{i}" for i in rng.choice(n_words, rng.integers(*length), p=p)
+        ]
         if d % 97 == 5:
             words += [SLASH, TRAIL, "w4"]
         docs.append((d, " ".join(words)))
     return docs
 
 
-def build(spark, path, docs):
+def build(spark, path, docs, n_salts=4, bucket_count=8):
     df = spark.createDataFrame(
         [(d, f"https://t/{d}", t) for d, t in docs],
         "doc_id long, url string, text string",
     )
-    IndexBuilder(spark, path, n_salts=4, bucket_count=8).build(
-        df, resume=False
-    )
+    IndexBuilder(
+        spark, path, n_salts=n_salts, bucket_count=bucket_count
+    ).build(df, resume=False)
     return path
 
 
@@ -63,6 +69,16 @@ def corpus(spark, tmp_path_factory):
     docs = zipf_docs()
     idx = build(spark, str(tmp_path_factory.mktemp("dplan") / "idx"), docs)
     return idx, docs, OracleIndex(docs)
+
+
+@pytest.fixture(scope="module")
+def segments(spark, corpus, tmp_path_factory):
+    """The corpus split into two disjoint segments."""
+    _idx, docs, _oracle = corpus
+    root = tmp_path_factory.mktemp("dplan_segs")
+    a = build(spark, str(root / "a"), [x for x in docs if x[0] < 1800])
+    b = build(spark, str(root / "b"), [x for x in docs if x[0] >= 1800])
+    return a, b
 
 
 def rows_of(df, explain=False):
@@ -74,6 +90,60 @@ def rows_of(df, explain=False):
                 t["term"] for t in r["terms"]
             )
     return [(r["doc_id"], float(r["score"])) for r in rows]
+
+
+def explain_of(df):
+    """{doc_id: (doc_length, [(term, score, tf)])} of an explain frame."""
+    return {
+        r["doc_id"]: (
+            r["doc_length"],
+            [(t["term"], t["score"], t["tf"]) for t in r["terms"]],
+        )
+        for r in df.collect()
+    }
+
+
+def batch_rows(df):
+    """{query_id: [(doc_id, score)] in rank order} of a batch frame."""
+    by_q: dict[int, list] = {}
+    for r in df.collect():
+        by_q.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], float(r["score"]))
+        )
+    return {q: [(d, s) for _r, d, s in sorted(v)] for q, v in by_q.items()}
+
+
+def both_scorers(monkeypatch, eng, fn):
+    """``fn()`` with the driver scorer, then with the Spark probe and
+    final job forced (``LOCAL_THETA=False``); each with the engine's
+    ``last_plan_stats``."""
+    out = []
+    for local in (True, False):
+        monkeypatch.setattr(query_mod, "LOCAL_THETA", local)
+        got = fn()
+        out.append((got, dict(eng.last_plan_stats)))
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", True)
+    return out
+
+
+_groups = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """(fn(), the Spark jobs started while it ran): the jobs of a fresh
+    job group on this thread, plus any started without a group (the
+    scatter-gather pool's threads do not inherit it)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"driver-plan-jobs-{next(_groups)}"
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ungrouped = [j for j in tracker.getJobIdsForGroup(None) if j > before]
+    return out, len(tracker.getJobIdsForGroup(group)) + len(ungrouped)
 
 
 @pytest.mark.parametrize("explain", [False, True])
@@ -90,9 +160,35 @@ def test_driver_plan_rank_identity(spark, corpus, explain, dtype):
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
         st = eng.last_plan_stats
         assert st["pruner"] in ("block_max_wand", "pivot_nextgeq"), st
-        assert st["driver_jobs"] == 1, st  # the final decode only
+        assert st["scorer"] == "local", st
+        assert st["driver_jobs"] == 0, st  # nothing left for Spark
         probes.add(st.get("theta_probe"))
     assert "local" in probes  # the driver-side phase-1 probe ran
+
+
+@pytest.mark.parametrize("explain", [False, True])
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_driver_scorer_matches_spark_job(
+    spark, corpus, explain, dtype, monkeypatch
+):
+    """The driver scorer and the Spark final job return the same rows:
+    doc ids in order, scores to float rounding, and with ``explain``
+    equal doc lengths and ``terms`` arrays."""
+    idx, _docs, oracle = corpus
+    eng = QueryEngine(spark, idx)
+    for q, mode in QUERIES:
+        (local, l_st), (spark_job, s_st) = both_scorers(
+            monkeypatch, eng,
+            lambda: eng.search(q, mode=mode, k=10, explain=explain,
+                               dtype=dtype),
+        )
+        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
+        assert l_st["pruner"] == s_st["pruner"]
+        got = rows_of(local, explain)
+        assert_rank_identical(got, rows_of(spark_job, explain), tol=1e-6)
+        assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
+        if explain:
+            assert explain_of(local) == explain_of(spark_job)
 
 
 def test_driver_plan_conjunctive_without_pivot(spark, corpus, monkeypatch):
@@ -101,14 +197,19 @@ def test_driver_plan_conjunctive_without_pivot(spark, corpus, monkeypatch):
     monkeypatch.setattr(query_mod, "PIVOT_DOC_CAP", 0)
     eng = QueryEngine(spark, idx)
     for q in ("w0 w3 w12", "w1 w2", f"{SLASH} w4"):
-        got = rows_of(eng.search(q, mode="conjunctive", k=10))
-        assert eng.last_plan_stats["pruner"] == "block_max_wand"
-        assert_rank_identical(got, oracle.topk(q, mode="conjunctive", k=10))
+        (local, l_st), (spark_job, s_st) = both_scorers(
+            monkeypatch, eng,
+            lambda: rows_of(eng.search(q, mode="conjunctive", k=10)),
+        )
+        assert l_st["pruner"] == s_st["pruner"] == "block_max_wand"
+        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
+        assert_rank_identical(local, spark_job, tol=1e-6)
+        assert_rank_identical(local, oracle.topk(q, mode="conjunctive", k=10))
 
 
-def test_driver_plan_after_delete_docs(spark, corpus, tmp_path):
-    """Tombstones mask the reader's probe and pivot decodes like the
-    final job's: survivors keep their (stale-stats) scores."""
+def test_driver_plan_after_delete_docs(spark, corpus, tmp_path, monkeypatch):
+    """Tombstones mask the reader's probe, pivot and final decodes like
+    the Spark job's: survivors keep their (stale-stats) scores."""
     idx, _docs, oracle = corpus
     copy = str(tmp_path / "deleted")
     shutil.copytree(idx, copy)
@@ -122,24 +223,73 @@ def test_driver_plan_after_delete_docs(spark, corpus, tmp_path):
             (d, s) for d, s in oracle.topk(q, mode=mode, k=10**6)
             if d not in deleted
         ][:10]
-        got = rows_of(eng.search(q, mode=mode, k=10))
-        assert eng.last_plan_stats["pruner"] in (
-            "block_max_wand", "pivot_nextgeq"
+        (local, l_st), (spark_job, s_st) = both_scorers(
+            monkeypatch, eng, lambda: rows_of(eng.search(q, mode=mode, k=10))
         )
-        assert_rank_identical(got, want)
+        assert l_st["pruner"] in ("block_max_wand", "pivot_nextgeq")
+        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
+        assert_rank_identical(local, want)
+        assert_rank_identical(local, spark_job, tol=1e-6)
 
 
-def test_driver_plan_multi_segment(spark, corpus, tmp_path):
+def test_driver_plan_multi_segment(spark, corpus, segments, monkeypatch):
     """Two disjoint segments served with global stats (each segment
-    engine plans under a stats override) equal one build of the union."""
-    _idx, docs, oracle = corpus
-    a = build(spark, str(tmp_path / "a"), [x for x in docs if x[0] < 1800])
-    b = build(spark, str(tmp_path / "b"), [x for x in docs if x[0] >= 1800])
-    with MultiIndexQueryEngine(spark, [a, b], offsets=[0, 0]) as multi:
+    engine plans under a stats override) equal one build of the union,
+    with either scorer."""
+    _idx, _docs, oracle = corpus
+    with MultiIndexQueryEngine(spark, list(segments), offsets=[0, 0]) as multi:
         for q, mode in QUERIES:
-            got = rows_of(multi.search(q, mode=mode, k=10))
-            assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
+            (local, _), (spark_job, _) = both_scorers(
+                monkeypatch, multi.engines[0],
+                lambda: rows_of(multi.search(q, mode=mode, k=10)),
+            )
+            assert_rank_identical(local, oracle.topk(q, mode=mode, k=10))
+            assert_rank_identical(local, spark_job, tol=1e-6)
         assert all(e.has_stats_override for e in multi.engines)
+
+
+@pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
+def test_batch_search_driver_scorer(spark, corpus, mode, monkeypatch):
+    """batch_search's final scoring runs on the driver below the cap and
+    matches the Spark job and the oracle query by query — with the
+    shared phase-1 probe (prune_floor=0) and without it."""
+    idx, _docs, oracle = corpus
+    eng = QueryEngine(spark, idx)
+    queries = list(enumerate(q for q, _mode in QUERIES))
+    for floor in (0, None):
+        (local, l_st), (spark_job, s_st) = both_scorers(
+            monkeypatch, eng,
+            lambda: batch_rows(
+                eng.batch_search(queries, mode=mode, k=10, prune_floor=floor)
+            ),
+        )
+        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
+        assert l_st["driver_jobs"] == 0, l_st
+        assert l_st.get("thetas") == s_st.get("thetas")
+        for qid, q in queries:
+            want = oracle.topk(q, mode=mode, k=10)
+            assert_rank_identical(local.get(qid, []), want)
+            assert_rank_identical(
+                local.get(qid, []), spark_job.get(qid, []), tol=1e-6
+            )
+
+
+def test_kept_set_above_keys_cap_runs_spark_job(spark, corpus, monkeypatch):
+    """A kept set above KEYS_COLLECT_CAP is not scored on the driver:
+    the Spark final job runs and returns the same ranking."""
+    idx, _docs, oracle = corpus
+    eng = QueryEngine(spark, idx)
+    q = "w0 w2 w9 w33"
+    local = rows_of(eng.search(q, k=10))
+    assert eng.last_plan_stats["scorer"] == "local"
+    kept = eng.last_plan_stats["chunks_kept"]
+    monkeypatch.setattr(query_mod, "KEYS_COLLECT_CAP", kept - 1)
+    over = rows_of(eng.search(q, k=10))
+    st = eng.last_plan_stats
+    assert st["chunks_kept"] == kept and st["scorer"] == "spark", st
+    assert st["driver_jobs"] >= 1, st
+    assert_rank_identical(over, local, tol=1e-6)
+    assert_rank_identical(over, oracle.topk(q, k=10))
 
 
 def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
@@ -153,13 +303,13 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     meta_rows = []
     read = segment.SegmentReader._read
 
-    def spy(paths, cols, expr):
-        for part in read(paths, cols, expr):
+    def spy(self, paths, cols, expr):
+        for part in read(self, paths, cols, expr):
             if "payload" not in cols:
                 meta_rows.append(part.num_rows)
             yield part
 
-    monkeypatch.setattr(segment.SegmentReader, "_read", staticmethod(spy))
+    monkeypatch.setattr(segment.SegmentReader, "_read", spy)
     eng = QueryEngine(spark, idx)
     q = "w0 w1 w2"
     terms = q.split()
@@ -176,22 +326,48 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     assert sum(meta_rows) == stopped_at  # first query only
 
 
-def test_search_starts_at_most_two_spark_jobs(spark, corpus):
+def test_driver_jobs_match_started_jobs(spark, corpus):
+    """``driver_jobs`` counts the Spark jobs search() + collect() really
+    start: none, on a fresh engine too (no schema read of the chunks
+    stage is left on the driver path)."""
     idx, _docs, _oracle = corpus
     eng = QueryEngine(spark, idx)
-    # an engine's first query also reads the chunks stage once (one
-    # schema job per engine lifetime)
-    eng.search("w1", k=10).collect()
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    try:
-        for i, (q, mode) in enumerate(QUERIES):
-            group = f"driver-plan-jobs-{i}"
-            sc.setJobGroup(group, q)
-            eng.search(q, mode=mode, k=10).collect()
-            assert len(tracker.getJobIdsForGroup(group)) <= 2, (q, mode)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    for q, mode in QUERIES:
+        _rows, n = count_jobs(
+            spark, lambda: eng.search(q, mode=mode, k=10).collect()
+        )
+        assert eng.last_plan_stats["driver_jobs"] == n == 0, (q, mode)
+
+
+def test_empty_result_frame_starts_no_job(spark, corpus):
+    idx, _docs, _oracle = corpus
+    eng = QueryEngine(spark, idx)
+    for q, mode in (("nosuchterm", "disjunctive"), ("", "disjunctive"),
+                    ("w7 nosuchterm", "conjunctive")):
+        rows, n = count_jobs(
+            spark, lambda: eng.search(q, mode=mode, k=10).collect()
+        )
+        if q.startswith("w7"):
+            # the absent term drops (reference openList skip)
+            assert rows
+        else:
+            assert rows == []
+        assert n == 0, q
+
+
+def test_multi_segment_search_starts_no_job(spark, corpus, segments):
+    """A warm two-segment engine answers a below-cap search() — the
+    per-segment driver scoring and the merged top-k frame — without a
+    Spark job."""
+    _idx, _docs, oracle = corpus
+    with MultiIndexQueryEngine(spark, list(segments), offsets=[0, 0]) as multi:
+        for q, mode in QUERIES + [("nosuchterm", "disjunctive")]:
+            multi.search(q, mode=mode, k=10).collect()  # lexicon lookups
+            rows, n = count_jobs(
+                spark, lambda: rows_of(multi.search(q, mode=mode, k=10))
+            )
+            assert n == 0, (q, mode)
+            assert_rank_identical(rows, oracle.topk(q, mode=mode, k=10))
 
 
 def test_backslash_terms_round_trip_key_filters(spark, corpus):
@@ -219,3 +395,37 @@ def test_backslash_terms_round_trip_key_filters(spark, corpus):
     arrow_side = eng._reader.decode_keys(want)
     assert sorted(arrow_side) == sorted(want)
     assert all(len(v[0]) for v in arrow_side.values())
+
+
+def test_many_group_key_predicate_batch(spark, tmp_path, monkeypatch):
+    """The Spark key filter of a 50-query batch_search over thousands of
+    (term, salt) groups: a left-deep OR chain of that many branches
+    overflowed the JVM stack (StackOverflowError) at 100k docs; the
+    balanced OR must plan, run and match the oracle."""
+    docs = zipf_docs(n_docs=4000, seed=5, n_words=120, length=(8, 16))
+    idx = build(spark, str(tmp_path / "salted"), docs, n_salts=200,
+                bucket_count=4)
+    oracle = OracleIndex(docs)
+    groups = []
+    keys_sql = segment.keys_sql
+
+    def spy(keys):
+        groups.append(len(segment.key_groups(keys)))
+        return keys_sql(keys)
+
+    monkeypatch.setattr(segment, "keys_sql", spy)
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
+    rng = np.random.default_rng(3)
+    queries = [
+        (i, " ".join(f"w{j}" for j in rng.choice(
+            np.arange(20, 120), 3, replace=False)))
+        for i in range(50)
+    ]
+    eng = QueryEngine(spark, idx)
+    got = batch_rows(eng.batch_search(queries, k=10))
+    st = eng.last_plan_stats
+    assert st["scorer"] == "spark", st
+    assert st["chunks_kept"] <= query_mod.KEYS_COLLECT_CAP, st
+    assert max(groups) >= 2000, (groups, st)
+    for qid, q in queries:
+        assert_rank_identical(got.get(qid, []), oracle.topk(q, k=10))

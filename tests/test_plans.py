@@ -51,7 +51,16 @@ def test_lexicon_scan_projects_only_needed_columns(spark, built):
     assert "df" in read_schema and "max_doc_id" not in read_schema
 
 
-def test_batch_search_broadcasts_query_map(spark, built):
+def spark_scorer(monkeypatch):
+    """Force the Spark final job: below METADATA_CAP search() and
+    batch_search score on the driver and return a local frame."""
+    import search_engine_spark.query as query_mod
+
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
+
+
+def test_batch_search_broadcasts_query_map(spark, built, monkeypatch):
+    spark_scorer(monkeypatch)
     qe = QueryEngine(spark, built)
     df = qe.batch_search([(0, "data spark"), (1, "query row")])
     p = plan_str(df)
@@ -60,7 +69,8 @@ def test_batch_search_broadcasts_query_map(spark, built):
     assert "WindowGroupLimit" in p or "Window" in p
 
 
-def test_search_topk_uses_take_ordered(spark, built):
+def test_search_topk_uses_take_ordered(spark, built, monkeypatch):
+    spark_scorer(monkeypatch)
     qe = QueryEngine(spark, built)
     df = qe.search("data spark", mode="disjunctive", k=10)
     assert "TakeOrderedAndProject" in plan_str(df)
@@ -130,9 +140,10 @@ def test_auto_n_salts_scales_with_corpus():
     assert auto_n_salts(1000 * POSTINGS_PER_SALT, min_salts=8) == 10 * base
 
 
-def test_wholestage_codegen_covers_relational_ops(spark, built):
+def test_wholestage_codegen_covers_relational_ops(spark, built, monkeypatch):
     """The scoring aggregation (relational part) stays inside
     WholeStageCodegen spans — no interpreted row processing."""
+    spark_scorer(monkeypatch)
     qe = QueryEngine(spark, built)
     df = qe.search("data spark", mode="disjunctive", k=10)
     df.collect()  # AQE only materializes codegen spans in the final plan
