@@ -5,8 +5,9 @@ The chunks stage is hive-partitioned by term bucket and term-sorted
 within each bucket. A :class:`SegmentReader` lists the bucket files once,
 keeps projected file tables in a byte-capped LRU, decodes chunk payloads
 (tombstone-masked) into a count-capped cache, and point-reads exact chunk
-keys (term filter pushed down, exact keys picked after the read). :class:`ChunkRows` holds one term set's chunk rows together with
-the per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
+keys (term filter pushed down, exact keys picked after the read).
+:class:`ChunkRows` holds one term set's chunk rows together with the
+per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
 that ``search_local``, the driver-planned ``search()``/``batch_search``
 and the Spark-collected metadata fallback all plan from.
 
@@ -387,4 +388,10 @@ class SegmentReader:
                 out[key] = self._remember(key, self._decode(
                     cols["payload"][i], cols["codec"][i], cols["dls"][i]
                 ))
+        # the read's transient buffers (every payload of the files read)
+        # go back to the OS now: left to jemalloc's lazy decay, their
+        # purge lands in the next Arrow allocations — measured as +11% to
+        # +29% on the search_local ops that follow a driver-scored
+        # search() (perfbench serve, 3 seeds, 4-core host)
+        pa.default_memory_pool().release_unused()
         return out
