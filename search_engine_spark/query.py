@@ -43,7 +43,9 @@ score, groupBy(doc_id) agg, ORDER BY score DESC, doc_id LIMIT k
 (``_keys_job``/``_agg_topk``) — for Iceberg indexes, NOT clauses,
 tombstone sets too large for the driver, kept sets above
 KEYS_COLLECT_CAP and, above METADATA_CAP (where the reader stops), the
-distributed sweep (``_spark_banded``).
+distributed sweep (``_spark_banded``). The first three also probe theta
+with a Spark job, and Iceberg indexes collect metadata and pivot ids
+with Spark jobs.
 
 A driver-local fast path (``search_local``) reads the same rows through
 the same reader and runs the block-max sweep sequentially in numpy —
@@ -127,8 +129,9 @@ _META_COLS = ["bucket", *segment.META_COLS]
 # answers a point-read sized key set from storage directly instead of
 # scheduling a distributed job per query (measured at 4M docs: the
 # Spark probe cost 5.7-7.4 s of fixed scheduling + scan tasks per
-# batch, the pyarrow point read tens of ms; on a 10k-doc index the
-# Spark final decode cost ~1 s per query, the driver ~0.15 s).
+# batch, the pyarrow point read tens of ms; on a 10k-doc index a
+# search() + collect took 1.20 s with the Spark final job, 0.17 s
+# scored on the driver, medians on a 4-core host).
 # SE_LOCAL_THETA=0 forces the Spark probe AND the Spark final job
 # (tests compare both paths).
 LOCAL_THETA = os.environ.get("SE_LOCAL_THETA", "1") != "0"
@@ -1405,7 +1408,7 @@ class QueryEngine:
                 out = self._conjunctive_pivot(
                     present, lex, cr, pivot, k, explain, dtype, schema
                 )
-                self._count_jobs()
+                self._note_driver_jobs()
                 return out
 
         if cr is not None:
@@ -1417,7 +1420,7 @@ class QueryEngine:
                 {"pruner": "block_max_wand", "segments": len(seg_lo)}
             )
             if len(seg_lo) == 0:
-                self._count_jobs()
+                self._note_driver_jobs()
                 return self._empty(schema)
             order = np.argsort(-bound, kind="stable")
             # phase 1: enough top-bound segments to (heuristically)
@@ -1490,7 +1493,7 @@ class QueryEngine:
                 seg_lo[keep], seg_hi[keep], cover[keep],
                 mode, k, explain, dtype, schema,
             )
-            self._count_jobs()
+            self._note_driver_jobs()
             return out
 
         # above the planning cap with bound metadata present: run the
@@ -1544,7 +1547,7 @@ class QueryEngine:
         )
         return self._agg_topk(scored, mode, len(present), k, explain, dtype)
 
-    def _count_jobs(self) -> None:
+    def _note_driver_jobs(self) -> None:
         """``last_plan_stats["driver_jobs"]``: the Spark jobs a
         driver-planned query starts — its planning actions plus the
         final job when Spark scores it (0 on the driver path). A Spark
@@ -1720,7 +1723,7 @@ class QueryEngine:
         local = isinstance(keys, list) and self._local_ok(len(keys))
         self.last_plan_stats["scorer"] = "local" if local else "spark"
         if cr is not None:
-            self._count_jobs()
+            self._note_driver_jobs()
         if local:
             return self._batch_local(
                 qt, keys, lex, conj, k, dtype, schema, floors

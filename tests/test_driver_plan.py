@@ -400,8 +400,9 @@ def test_backslash_terms_round_trip_key_filters(spark, corpus):
 def test_many_group_key_predicate_batch(spark, tmp_path, monkeypatch):
     """The Spark key filter of a 50-query batch_search over thousands of
     (term, salt) groups: a left-deep OR chain of that many branches
-    overflowed the JVM stack (StackOverflowError) at 100k docs; the
-    balanced OR must plan, run and match the oracle."""
+    overflows the JVM stack (StackOverflowError in the SQL parser, here
+    as at 100k docs); the balanced OR must plan, run and match the
+    oracle."""
     docs = zipf_docs(n_docs=4000, seed=5, n_words=120, length=(8, 16))
     idx = build(spark, str(tmp_path / "salted"), docs, n_salts=200,
                 bucket_count=4)
