@@ -733,7 +733,11 @@ class IndexBuilder:
     def _write(self, df: DataFrame, stage: str, partition_by=None, sort_cols=None):
         w = df
         if sort_cols:
-            w = w.sortWithinPartitions(*sort_cols)
+            # the sort key leads with the partition columns: a partitioned
+            # write re-sorts each task's rows by them unless the rows
+            # already arrive in that order, and that re-sort (by bucket
+            # alone) would undo the term order inside every file
+            w = w.sortWithinPartitions(*(partition_by or ()), *sort_cols)
         if self.table_format == "iceberg":
             writer = w.writeTo(self._table_name(stage)).using("iceberg")
             if partition_by:
@@ -1203,7 +1207,8 @@ def build_fuzzy_index(
     )
     (
         fuzzy.repartition("bucket")
-        .sortWithinPartitions("variant")
+        # bucket first, like IndexBuilder._write: keeps the variant order
+        .sortWithinPartitions("bucket", "variant")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "fuzzy"))

@@ -603,11 +603,14 @@ class QueryEngine:
 
         Selects exactly the same rows as a leftsemi join against the
         key set, but as a scan filter it reaches the parquet reader
-        (``PushedFilters``): within a bucket the chunk files are
-        term-sorted, so row groups of non-kept terms prune on term
-        stats and the In list prunes on chunk_seq ranges — the decode
-        reads ~|keys| chunk payloads instead of every queried term's.
-        Callers gate on KEYS_COLLECT_CAP."""
+        (``PushedFilters``): every chunk file is sorted by (term, salt,
+        chunk_seq) — the build sorts by bucket first, so the
+        partitioned write keeps that order (``IndexBuilder._write``) —
+        so row groups of non-kept terms prune on term stats and the In
+        list prunes on chunk_seq ranges: the decode reads ~|keys| chunk
+        payloads instead of every queried term's. (Files of an index
+        written before the build kept this order prune less; the rows
+        selected are the same.) Callers gate on KEYS_COLLECT_CAP."""
         return F.expr(segment.keys_sql(keys))
 
     def _keys_result(self, keys: list[tuple]):
@@ -2424,10 +2427,12 @@ class QueryEngine:
     def search_local(
         self, query: str, mode: str = "disjunctive", k: int = 10
     ) -> list[tuple[int, float]]:
-        """Low-latency driver-side path: pyarrow predicate-pushdown scan
-        of the index parquet, then the sequential block-max WAND sweep —
-        chunks are decoded lazily in descending segment-bound order and
-        skipped entirely once they cannot reach the top-k threshold."""
+        """Low-latency driver-side path: the query terms' chunk rows as
+        slices of the SegmentReader's cached, term-sorted bucket files
+        (cold files are read whole into its LRU), then the sequential
+        block-max WAND sweep — chunks are decoded lazily in descending
+        segment-bound order and skipped entirely once they cannot reach
+        the top-k threshold."""
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(
                 "the driver-local fast path reads the parquet layout "
@@ -2895,11 +2900,12 @@ class QueryEngine:
 
         Scale shape: ONE lexicon scan with a ``StartsWith`` pushed
         filter + TakeOrdered(max_expansions). The lexicon is
-        vocab-sized (orders of magnitude below the corpus), its files
-        are term-sorted within each hash bucket, so parquet row-group
-        min/max stats prune ranges that cannot contain the prefix;
-        hash-bucket partition pruning does not apply (a prefix spans
-        buckets) and is not needed at this table's size. Returned
+        vocab-sized (orders of magnitude below the corpus), and each of
+        its files is sorted by term (the build sorts by bucket, then
+        term, so the partitioned write keeps the order), so parquet
+        row-group min/max stats prune ranges that cannot contain the
+        prefix; hash-bucket partition pruning does not apply (a prefix
+        spans buckets) and is not needed at this table's size. Returned
         entries seed the per-engine lexicon cache, so the follow-up
         search pays no second lexicon job for the expanded terms.
         """

@@ -1,11 +1,16 @@
 """Driver-side reader of one index segment's ``chunks`` stage (parquet
 layout) — the pyarrow view every driver-side query path shares.
 
-The chunks stage is hive-partitioned by term bucket and term-sorted
-within each bucket. A :class:`SegmentReader` lists the bucket files once,
-keeps projected file tables in a byte-capped LRU, decodes chunk payloads
-(tombstone-masked) into a count-capped cache, and point-reads exact chunk
-keys (term filter pushed down, exact keys picked after the read).
+The chunks stage is hive-partitioned by term bucket, and every file is
+sorted by (term, salt, chunk_seq): the build's sort key starts with
+``bucket``, so Spark's partitioned writer keeps the order. A
+:class:`SegmentReader` lists the bucket files once, keeps projected
+files (one record batch each) in a byte-capped LRU, each with a
+:class:`TermRuns` index of where its terms' rows lie (a file written
+before the build sorted this way is sorted once, when it enters the
+LRU), decodes chunk payloads (tombstone-masked) into a count-capped
+cache, and point-reads exact chunk keys (term filter pushed down, exact
+keys picked after the read).
 :class:`ChunkRows` holds one term set's chunk rows together with the
 per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
 that ``search_local``, the driver-planned ``search()``/``batch_search``
@@ -164,10 +169,97 @@ class ChunkRows:
         return keys
 
 
+# width of a TermRuns key: longer terms keep a KEY_BYTES-byte prefix
+# (equal prefixes are told apart by the file's own term column), so one
+# long token cannot widen every key of its file
+KEY_BYTES = 32
+
+
+def term_keys(terms) -> np.ndarray:
+    """Strings (a pyarrow string array or a list of str) as numpy
+    fixed-width bytes: each UTF-8 value followed by one 0xff byte, cut
+    to at most KEY_BYTES bytes. numpy ``S`` drops trailing NULs, so
+    without the terminator "ab" and "ab\\x00" would compare equal; 0xff
+    occurs in no UTF-8 text, so a key that holds it is exact and no cut
+    key equals an exact one. Built from the Arrow buffers, with no
+    Python object per value."""
+    import pyarrow as pa
+
+    if isinstance(terms, list):
+        return np.array(
+            [t.encode() + b"\xff" for t in terms], dtype=f"S{KEY_BYTES}"
+        )
+    arr = terms.cast(pa.large_binary())
+    n = len(arr)
+    offs = np.frombuffer(arr.buffers()[1], np.int64)[
+        arr.offset:arr.offset + n + 1
+    ]
+    lens = np.diff(offs)
+    width = min(int(lens.max(initial=0)) + 1, KEY_BYTES)
+    used = np.minimum(lens, width)
+    out = np.zeros((n, width), np.uint8)
+    row = np.repeat(np.arange(n), used)
+    col = np.arange(len(row)) - np.repeat(np.cumsum(used) - used, used)
+    data = np.frombuffer(arr.buffers()[2], np.uint8)
+    out[row, col] = data[np.repeat(offs[:-1], used) + col]
+    short = lens < width
+    out[short, lens[short]] = 0xFF
+    return out.view(f"S{width}").ravel()
+
+
+class TermRuns:
+    """Term run index of one file's rows, grouped by term: every
+    distinct term's key (:func:`term_keys`, in numpy order) with the
+    first and one-past-last row of its run, so a term's rows are found
+    by ``searchsorted`` and returned as a zero-copy slice instead of a
+    filter over every row. Arrays only: one Python object per term
+    raised the serving driver's resident memory by 8-10%."""
+
+    def __init__(self, term):
+        import pyarrow.compute as pc
+
+        n = len(term)
+        first = np.ones(n, bool)
+        first[1:] = pc.not_equal(term[1:], term[:-1]).to_numpy(
+            zero_copy_only=False
+        )
+        start = np.flatnonzero(first)
+        end = np.append(start[1:], n)[: len(start)]
+        keys = term_keys(term.take(start))
+        order = np.argsort(keys, kind="stable")
+        self.keys = keys[order]
+        self.start = start[order]
+        self.end = end[order]
+        self.nbytes = self.keys.nbytes + self.start.nbytes + self.end.nbytes
+
+    def slices(self, batch, terms: list[str], keys: np.ndarray) -> list:
+        """The runs of the distinct ``terms`` (``keys`` their
+        :func:`term_keys`) in ``batch`` as zero-copy slices, in row
+        order; a term absent from the file has none. A query's terms are
+        spread over buckets, so a file is asked for one or two terms and
+        a scalar lookup per term is the cheapest."""
+        runs = []
+        for t, key in zip(terms, keys):
+            lo = int(self.keys.searchsorted(key))
+            if lo == len(self.keys) or self.keys[lo] != key:
+                continue
+            if key.endswith(b"\xff"):  # exact key: one run
+                runs.append((int(self.start[lo]), int(self.end[lo])))
+                continue
+            hi = int(self.keys.searchsorted(key, side="right"))
+            term = batch.column("term")
+            runs += [
+                (int(self.start[j]), int(self.end[j]))
+                for j in range(lo, hi)
+                if term[int(self.start[j])].as_py() == t
+            ]
+        return [batch.slice(lo, hi - lo) for lo, hi in sorted(runs)]
+
+
 class SegmentReader:
     """The driver's pyarrow reader of one parquet segment's chunks: the
-    bucket file listing, a byte-capped LRU of projected file tables
-    (``SE_LOCAL_CACHE_MB``, default 512), the decoded-chunk cache and
+    bucket file listing, a byte-capped LRU of projected files with
+    their term run indexes (``SE_LOCAL_CACHE_MB``, default 512), the decoded-chunk cache and
     the tombstone mask (``deleted``: sorted int64 doc ids, or None)."""
 
     def __init__(self, index_dir: str, bucket_count: int,
@@ -225,12 +317,15 @@ class SegmentReader:
         return paths
 
     def table(self, terms: list[str], keep: bool, cap: int | None = None):
-        """The chunk rows of ``terms`` as one pyarrow table; None for an
-        index without data files, or as soon as more than ``cap`` rows
-        have been read — so an above-cap term set (a stop word owning
-        ~10^8 chunks) costs the driver at most ``cap`` rows plus one
-        record batch, never its whole metadata.
+        """The chunk rows of ``terms`` as one pyarrow table (bucket by
+        bucket, file by file, each file's rows in (term, salt, chunk_seq)
+        order); None for an index without data files, or as soon as more
+        than ``cap`` rows have been read — so an above-cap term set (a
+        stop word owning ~10^8 chunks) costs the driver at most ``cap``
+        rows plus one record batch, never its whole metadata.
 
+        A file in the LRU serves each term's run as a zero-copy slice
+        (its :class:`TermRuns` index), with no scan of its other rows.
         With ``keep`` (the low-latency ``search_local`` path: a serving
         engine pins its posting files) the rows carry payloads and files
         are read whole into the LRU. Without it (the driver-planned
@@ -240,63 +335,79 @@ class SegmentReader:
         engine pins nothing; the planner point-reads the few payloads it
         decodes (:meth:`decode_keys`)."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.dataset as pa_ds
-        import pyarrow.parquet as pq
 
-        if not self.has_data:
-            return None
+        names = self.schema
+        if "term" not in names:
+            return None  # no data files
         cols = [
             c for c in META_COLS + (PAYLOAD_COLS if keep else [])
-            if c in self.schema
+            if c in names
         ]
-        value_set = pa.array(terms, pa.string())
-
-        def of_terms(tbl):
-            return tbl.filter(
-                pc.is_in(tbl.column("term"), value_set=value_set)
-            )
-
-        tabs, n_rows = [], 0
-        for path in self._paths(terms):
-            tbl = self._tables.get(path)
-            if tbl is not None:
-                self._tables.move_to_end(path)
-                parts = [tbl.select(cols)]
-            elif keep:
-                tbl = self._tables[path] = pq.read_table(path, columns=cols)
-                self._bytes += tbl.nbytes
-                while self._bytes > self.cap_bytes and len(self._tables) > 1:
-                    _, old = self._tables.popitem(last=False)
-                    self._bytes -= old.nbytes
-                parts = [tbl]
-            else:
-                parts = self._read(
-                    [path], cols, pa_ds.field("term").isin(terms)
-                )
-            for part in parts:
-                if cap is not None:
-                    # exact running count; without a cap one filter of
-                    # the concatenation is cheaper than one per file
-                    part = of_terms(part)
+        by_bucket = self._listing()
+        of_bucket: dict[int, list[str]] = {}
+        for t in dict.fromkeys(terms):
+            of_bucket.setdefault(term_bucket(t, self.bucket_count), []).append(t)
+        batches, n_rows = [], 0
+        for b in sorted(of_bucket):
+            bterms = of_bucket[b]
+            keys = term_keys(bterms)
+            for path in by_bucket.get(b, ()):
+                cached = self._tables.get(path)
+                if cached is None and keep:
+                    cached = self._load(path, cols)
+                if cached is not None:
+                    self._tables.move_to_end(path)
+                    batch, runs = cached
+                    parts = runs.slices(
+                        batch if keep else batch.select(cols), bterms, keys
+                    )
+                else:
+                    parts = self._read(
+                        [path], cols, pa_ds.field("term").isin(bterms)
+                    )
+                for part in parts:
                     n_rows += part.num_rows
-                    if n_rows > cap:
+                    if cap is not None and n_rows > cap:
                         return None
-                tabs.append(part)
-        if not tabs:
-            return pa.schema(
-                [self._schema.field(c) for c in cols]
-            ).empty_table()
-        tbl = pa.concat_tables(tabs)
-        return tbl if cap is not None else of_terms(tbl)
+                    batches.append(part)
+        schema = pa.schema([self._schema.field(c) for c in cols])
+        return pa.Table.from_batches(batches, schema)
+
+    def _load(self, path: str, cols: list[str]) -> tuple:
+        """Read one file whole into the LRU as one record batch with its
+        term run index, evicting least recently used files above the
+        byte cap. A file whose rows are not in term order (written
+        before the build kept that order) is sorted by (term, salt,
+        chunk_seq) here, once."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        tbl = pq.read_table(path, columns=cols)
+        term = tbl.column("term")
+        if len(term) > 1 and pc.any(pc.less(term[1:], term[:-1])).as_py():
+            tbl = tbl.sort_by(
+                [(c, "ascending") for c in ("term", "salt", "chunk_seq")]
+            )
+        batches = tbl.combine_chunks().to_batches()
+        batch = batches[0] if batches else pa.RecordBatch.from_pylist(
+            [], schema=tbl.schema
+        )
+        runs = TermRuns(batch.column("term"))
+        self._tables[path] = (batch, runs)
+        self._bytes += batch.nbytes + runs.nbytes
+        while self._bytes > self.cap_bytes and len(self._tables) > 1:
+            _, (old, old_runs) = self._tables.popitem(last=False)
+            self._bytes -= old.nbytes + old_runs.nbytes
+        return batch, runs
 
     def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,
-        streamed one file and one record batch at a time (as one-batch
-        tables): a caller may stop early, and one multi-file dataset
-        scan of the same 112 files left the process ~9 MB more resident
-        memory than per-file reads (pyarrow 16)."""
-        import pyarrow as pa
+        streamed one file and one record batch at a time: a caller may
+        stop early, and one multi-file dataset scan of the same 112
+        files left the process ~9 MB more resident memory than per-file
+        reads (pyarrow 16)."""
         import pyarrow.dataset as pa_ds
 
         for path in paths:
@@ -307,7 +418,7 @@ class SegmentReader:
                 )
             for batch in ds.to_batches(columns=cols, filter=expr):
                 if batch.num_rows:
-                    yield pa.Table.from_batches([batch])
+                    yield batch
 
     def _decode(self, payload, codec, dls_raw) -> tuple:
         ids, tfs = codecs.decode_chunk(payload, int(codec))
@@ -345,8 +456,10 @@ class SegmentReader:
     def decode_keys(self, keys) -> dict:
         """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
         found: from the decoded cache, else by a point read of the keys'
-        terms (bucket-pruned, ``term`` filter pushed down to row-group
-        statistics) that decodes only the requested keys; the read is
+        terms (bucket-pruned; the ``term`` filter is pushed down, and as
+        the files are term-sorted, a row group's term statistics skip
+        it unless its term range holds a wanted term) that decodes only
+        the requested keys; the read is
         bounded by the terms' chunk count, which the planners hold to
         METADATA_CAP. Pushing the exact keys down instead (a balanced OR
         of per-(term, salt) ``chunk_seq`` lists) read 60 keys of a
