@@ -236,14 +236,8 @@ def _rewrite_chunk_frames(
             ids, tfs = codecs.decode_chunk(row.payload, int(row.codec))
             dls = codecs.decode_lengths(row.dls)
             codec_id, payload, dls_payload = int(row.codec), row.payload, row.dls
-            if deleted is not None and len(ids):
-                ids64 = ids.astype(np.int64)
-                pos = np.searchsorted(deleted, ids64)
-                pos_safe = np.clip(pos, 0, len(deleted) - 1)
-                keep = deleted[pos_safe] != ids64
-            else:
-                keep = None
-            if keep is not None and not keep.all():
+            keep = wand.tombstone_mask(ids, deleted)
+            if keep is not None:
                 if not keep.any():
                     continue  # chunk fully deleted
                 ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -609,21 +603,21 @@ def check_index(spark, index_dir: str, deep: bool = True) -> DataFrame:
     out: list[tuple[str, int, int]] = []
 
     # --- lexicon vs chunks (term-level full outer)
-    has_bounds = "max_ratio" in lexicon.columns and "max_ratio" in chunks.columns
+    bounded = "max_ratio" in lexicon.columns and "max_ratio" in chunks.columns
     agg_cols = [
         F.sum("n").cast("long").alias("_df"),
         F.count("*").cast("int").alias("_nc"),
         F.min("first_doc_id").alias("_mn"),
         F.max("last_doc_id").alias("_mx"),
     ]
-    if has_bounds:
+    if bounded:
         agg_cols += [
             F.max("max_ratio").alias("_bmax"),
             F.min("min_ratio").alias("_bmin"),
         ]
     derived = chunks.groupBy("term").agg(*agg_cols)
     lex_cols = ["term", "df", "n_chunks", "min_doc_id", "max_doc_id"]
-    if has_bounds:
+    if bounded:
         lex_cols += ["max_ratio", "min_ratio"]
     j = lexicon.select(*lex_cols, F.lit(1).alias("_in_lex")).join(
         derived, "term", "full_outer"
@@ -636,7 +630,7 @@ def check_index(spark, index_dir: str, deep: bool = True) -> DataFrame:
         & (F.col("min_doc_id") == F.col("_mn"))
         & (F.col("max_doc_id") == F.col("_mx"))
     )
-    if has_bounds:
+    if bounded:
         ok = (
             ok
             & (F.abs(F.col("max_ratio") - F.col("_bmax")) < 1e-9)

@@ -13,12 +13,14 @@ goes negative for df > N/2, reference quirk preserved), float32 outputs.
 
 Chunk skipping (block-max WAND, see wand.py): the reference skips chunks
 via nextGEQ doc-id binary search (QueryExecution.cpp:122-147); we extend
-that with per-chunk score upper bounds stored at build time. Both query
-paths sweep the query terms' chunk intervals into elementary segments
-and process them in descending score-bound order against the running
-top-k threshold — segments (and therefore chunks) whose bound cannot
-reach the threshold are never decoded. Pruning is margin-safe: results
-stay rank-identical to exhaustive evaluation.
+that with per-chunk score upper bounds stored at build time (every
+build, compaction and upsert writes them; an index without them is
+refused when an engine opens it). Both query paths sweep the query
+terms' chunk intervals into elementary segments and process them in
+descending score-bound order against the running top-k threshold —
+segments (and therefore chunks) whose bound cannot reach the threshold
+are never decoded. Pruning is margin-safe: results stay rank-identical
+to exhaustive evaluation.
 
 Physical plan of ``search()``, below METADATA_CAP on the parquet
 layout — answered on the driver, ZERO Spark jobs:
@@ -57,7 +59,6 @@ from __future__ import annotations
 import functools
 import heapq
 import os
-import sys
 
 import numpy as np
 import pandas as pd
@@ -81,9 +82,6 @@ from .wand import B, K1  # noqa: F401  (re-export: historical home)
 # matching nextGEQ semantics (QueryExecution.cpp:122-147) at any scale.
 METADATA_CAP = 262144
 
-# distributed planner: escape hatch (False restores the r2 interval-only
-# fallback above the cap; used by tests to compare paths)
-BANDED_PLANNER = True
 # band sizing: ~this many chunk rows per band task; band count clamped.
 # Each (query, band) group is one Python sweep call, so the target
 # trades per-group fixed overhead against group size: 256 put a 556k-
@@ -120,8 +118,7 @@ EMPTY_BATCH = object()
 # cached batches on the bucket/term filters. Measured at 4M docs /
 # 557k chunks the banded batch planner re-scanned the chunks parquet
 # 3-4x per batch; the pinned projection removes every re-scan after
-# the first. Disable with SE_META_CACHE=0 (tests compare both paths).
-META_CACHE = os.environ.get("SE_META_CACHE", "1") != "0"
+# the first.
 _META_COLS = ["bucket", *segment.META_COLS]
 
 # driver-side scoring (_score_local) of the phase-1 theta probe and of
@@ -131,10 +128,9 @@ _META_COLS = ["bucket", *segment.META_COLS]
 # Spark probe cost 5.7-7.4 s of fixed scheduling + scan tasks per
 # batch, the pyarrow point read tens of ms; on a 10k-doc index a
 # search() + collect took 1.20 s with the Spark final job, 0.17 s
-# scored on the driver, medians on a 4-core host).
-# SE_LOCAL_THETA=0 forces the Spark probe AND the Spark final job
-# (tests compare both paths).
-LOCAL_THETA = os.environ.get("SE_LOCAL_THETA", "1") != "0"
+# scored on the driver, medians on a 4-core host). Tests set it False
+# to force the Spark probe AND the Spark final job.
+LOCAL_THETA = True
 
 # batch_search: skip the phase-1 threshold job when the batch's terms
 # own fewer total chunks than this — decoding ~4k chunks (~0.5M
@@ -323,7 +319,7 @@ class QueryEngine:
             os.environ.get("SE_LEX_CACHE_TERMS", str(1 << 20))
         )
         self._batch_thetas: dict[int, float] = {}
-        # pinned metadata projection (see META_CACHE); built lazily on
+        # pinned metadata projection (see _META_COLS); built lazily on
         # the first planning read, unpersisted by close()
         self._meta_df: DataFrame | None = None
         # transient NOT-clause doc set (search_not): anti-joined in
@@ -358,6 +354,18 @@ class QueryEngine:
                 index_dir, self.bucket_count, self._deleted
             )
         )
+        # every planner reads the chunks' block-max bounds, so an index
+        # written before they were stored is refused here, once: on
+        # parquet from one data file's footer (no Spark job)
+        cols = (
+            self._stage_df("chunks").columns if self._reader is None
+            else self._reader.schema
+        )
+        if "term" in cols and "max_ratio" not in cols:
+            raise ValueError(
+                f"index {index_dir!r} has chunks without block-max score "
+                "bounds (max_ratio/min_ratio); rebuild it with IndexBuilder"
+            )
 
     def _alive_df(self, df: DataFrame) -> DataFrame:
         """Anti-join tombstones out of a (doc_id, ...) DataFrame."""
@@ -507,24 +515,17 @@ class QueryEngine:
     def _chunks_meta(self, terms: list[str]) -> DataFrame:
         """Metadata-only chunk rows (never payload bytes) for WAND
         planning, served from the engine-pinned persisted projection
-        when META_CACHE is on (see the constant's rationale). The index
-        an engine serves is immutable, so the pinned frame never goes
-        stale. Falls through to the parquet scan when disabled."""
-        if not META_CACHE:
-            src = self._stage_df("chunks")
-            cols = [c for c in _META_COLS if c in src.columns]
-            src = src.select(cols)
-        else:
-            if self._meta_df is None:
-                from pyspark import StorageLevel
+        (see the ``_META_COLS`` comment). The index an engine serves is
+        immutable, so the pinned frame never goes stale."""
+        if self._meta_df is None:
+            from pyspark import StorageLevel
 
-                raw = self._stage_df("chunks")
-                cols = [c for c in _META_COLS if c in raw.columns]
-                self._meta_df = raw.select(cols).persist(
-                    StorageLevel.MEMORY_AND_DISK
-                )
-            src = self._meta_df
-        return src.where(
+            self._meta_df = (
+                self._stage_df("chunks")
+                .select(_META_COLS)
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+        return self._meta_df.where(
             F.col("bucket").isin(self._buckets(terms))
         ).where(F.col("term").isin(terms))
 
@@ -737,13 +738,9 @@ class QueryEngine:
                         payloads[i], int(codec_np[i])
                     )
                     dl = codecs.decode_lengths(dls_raw[i])
-                    if deleted is not None and len(ids):
-                        ids64 = ids.astype(np.int64)
-                        pos = np.searchsorted(deleted, ids64)
-                        pos_safe = np.clip(pos, 0, len(deleted) - 1)
-                        keep = deleted[pos_safe] != ids64
-                        if not keep.all():
-                            ids, tfs, dl = ids[keep], tfs[keep], dl[keep]
+                    keep = wand.tombstone_mask(ids, deleted)
+                    if keep is not None:
+                        ids, tfs, dl = ids[keep], tfs[keep], dl[keep]
                     if lo_arr is not None:
                         keep = wand.ids_in_intervals(
                             ids.astype(np.int64), lo_arr, hi_arr
@@ -809,9 +806,8 @@ class QueryEngine:
         SegmentReader (no Spark job, at most METADATA_CAP rows plus one
         record batch), Iceberg collects it with one Spark job; neither
         reads payloads.
-        Returns None when the index predates bound columns or the term
-        set exceeds METADATA_CAP (callers fall back to the lexicon +
-        banded or interval planners)."""
+        Returns None when the term set exceeds METADATA_CAP (callers
+        fall back to the lexicon + the banded planner)."""
         if all(t in self._lex_raw_cache for t in terms):
             # cached n_chunks already prove the outcome: skip the
             # above-cap read (at web scale EVERY query's term set
@@ -826,17 +822,15 @@ class QueryEngine:
                 return None
         if self._reader is not None:
             tbl = self._reader.table(terms, keep=False, cap=METADATA_CAP)
-            if tbl is None or "max_ratio" not in tbl.column_names:
+            if tbl is None:
                 return None
         else:
             import pyarrow as pa
 
-            chunks = self._chunks_meta(terms)
-            if "max_ratio" not in chunks.columns:
-                return None
             self._plan_jobs += 1
             rows = (
-                chunks.select(*segment.META_COLS)
+                self._chunks_meta(terms)
+                .select(*segment.META_COLS)
                 .limit(METADATA_CAP + 1)
                 .collect()
             )
@@ -1390,7 +1384,7 @@ class QueryEngine:
         conj = mode == "conjunctive"
         self._plan_jobs = 0
         # one metadata read yields lexicon stats AND the WAND plan; the
-        # separate lexicon lookup only runs on the fallback path
+        # separate lexicon lookup only runs above METADATA_CAP
         cr = self._term_meta(terms)
         lex = cr.lex if cr is not None else self.lexicon_lookup(terms)
         present = sorted(lex)
@@ -1499,56 +1493,13 @@ class QueryEngine:
             self._note_driver_jobs()
             return out
 
-        # above the planning cap with bound metadata present: run the
-        # sweep distributed — score-bounded skipping must not turn off
-        # for exactly the queries that need it most (a stop word at
-        # 10^12 docs owns ~10^8 chunks)
-        if BANDED_PLANNER and "max_ratio" in self._stage_df("chunks").columns:
-            return self._spark_banded(
-                present, lex, mode, k, explain, dtype, schema
-            )
-
-        # fallback: no bound metadata (legacy index) — doc-id interval
-        # pruning only (nextGEQ analogue)
-        chunks = self._chunks(present)
-        self.last_plan_stats["pruner"] = "intervals"
-        if conj and len(present) > 1:
-            lo = max(e["min_doc_id"] for e in lex.values())
-            hi = min(e["max_doc_id"] for e in lex.values())
-            if lo > hi:
-                return self._empty(schema)
-            chunks = chunks.where(
-                (F.col("last_doc_id") >= lo) & (F.col("first_doc_id") <= hi)
-            )
-            pivot = min(present, key=lambda t: lex[t]["df"])
-            if lex[pivot]["n_chunks"] <= 4096:
-                ivals = (
-                    chunks.where(F.col("term") == pivot)
-                    .select(
-                        F.col("first_doc_id").alias("lo"),
-                        F.col("last_doc_id").alias("hi"),
-                    )
-                    .collect()
-                )
-                if not ivals:
-                    return self._empty(schema)
-                ivals_df = F.broadcast(
-                    self.spark.createDataFrame(
-                        [(r["lo"], r["hi"]) for r in ivals], "lo long, hi long"
-                    )
-                )
-                others = chunks.where(F.col("term") != pivot).join(
-                    ivals_df,
-                    (F.col("last_doc_id") >= F.col("lo"))
-                    & (F.col("first_doc_id") <= F.col("hi")),
-                    "leftsemi",
-                )
-                chunks = chunks.where(F.col("term") == pivot).unionByName(others)
-
-        scored = self._scored_postings(
-            chunks, lex, with_dl=explain, dtype=dtype
+        # above the planning cap: run the sweep distributed —
+        # score-bounded skipping must not turn off for exactly the
+        # queries that need it most (a stop word at 10^12 docs owns
+        # ~10^8 chunks)
+        return self._spark_banded(
+            present, lex, mode, k, explain, dtype, schema
         )
-        return self._agg_topk(scored, mode, len(present), k, explain, dtype)
 
     def _note_driver_jobs(self) -> None:
         """``last_plan_stats["driver_jobs"]``: the Spark jobs a
@@ -1695,10 +1646,7 @@ class QueryEngine:
             keys = keys_df
             if keys is None and cr.n_rows <= KEYS_COLLECT_CAP:
                 keys = [cr.key(r) for r in range(cr.n_rows)]
-        elif (
-            prune and BANDED_PLANNER
-            and "max_ratio" in self._stage_df("chunks").columns
-        ):
+        elif prune:
             # above METADATA_CAP: the distributed banded batch planner —
             # score-bounded skipping must not silently turn off for
             # exactly the batches that need it most
@@ -2102,10 +2050,6 @@ class QueryEngine:
             "query_id int, seg_lo long, seg_hi long, bound double, "
             "est long, loc_r int, term string, salt int, chunk_seq int"
         )
-        import time as _time
-
-        _dbg = os.environ.get("SE_PLAN_DEBUG") == "1"
-        _t0 = _time.time()
         segs = (
             banded.groupBy("query_id", "band")
             .applyInPandas(sweep, schema)
@@ -2133,12 +2077,6 @@ class QueryEngine:
                 .where(F.col("_r") <= 64)
                 .collect()
             )
-            if _dbg:
-                print(
-                    f"[plan] sweep+top: {_time.time()-_t0:.2f}s",
-                    file=sys.stderr,
-                )
-                _t0 = _time.time()
             if not top_rows:
                 return EMPTY_BATCH
             self.last_plan_stats.update(
@@ -2186,13 +2124,6 @@ class QueryEngine:
                     by_q={q: sorted(set(ts)) for q, ts in tq_by_q.items()},
                 )
                 self._batch_thetas = thetas
-            if _dbg:
-                print(
-                    f"[plan] theta ({len(p1_keys) if p1 else 0} keys): "
-                    f"{_time.time()-_t0:.2f}s",
-                    file=sys.stderr,
-                )
-                _t0 = _time.time()
             kept = segs
             if thetas:
                 th_df = F.broadcast(
@@ -2223,13 +2154,6 @@ class QueryEngine:
                         F.count(F.lit(1)).alias("n"),
                         F.count(F.when(survives, 1)).alias("nk"),
                     ).collect()[0]
-                    if _dbg:
-                        print(
-                            f"[plan] survive-agg ({c['nk']}/{c['n']}): "
-                            f"{_time.time()-_t0:.2f}s",
-                            file=sys.stderr,
-                        )
-                        _t0 = _time.time()
                     if c["nk"] == c["n"]:
                         self.last_plan_stats["chunks_kept"] = total_chunks
                         return None
@@ -2245,12 +2169,6 @@ class QueryEngine:
                 .localCheckpoint(eager=True)
             )
             n_keys = keys_df.count()
-            if _dbg:
-                print(
-                    f"[plan] distinct ({n_keys} keys): "
-                    f"{_time.time()-_t0:.2f}s",
-                    file=sys.stderr,
-                )
             self.last_plan_stats["chunks_kept"] = n_keys
             if n_keys == 0:
                 return EMPTY_BATCH
@@ -2454,12 +2372,6 @@ class QueryEngine:
         cr = segment.ChunkRows(
             tbl, self.n_docs, self._df_of, self._scale_max, self._scale_min
         )
-        if not cr.has_bounds:
-            return self._search_local_full(
-                {c: tbl.column(c).to_pylist() for c in tbl.column_names},
-                mode,
-                k,
-            )
         # terms missing from the index were already dropped by the scan
         # filter (reference openList skip)
         metas = cr.metas
@@ -2631,67 +2543,6 @@ class QueryEngine:
             total = (total + s).astype(np.float32)
         order = np.lexsort((cand, -total.astype(np.float64)))[:k]
         return [(int(cand[i]), float(total[i])) for i in order]
-
-    def _search_local_full(self, data: dict, mode: str, k: int):
-        """Exhaustive local scoring (legacy indexes without bound
-        columns)."""
-        rows = sorted(
-            range(len(data["term"])),
-            key=lambda i: (data["term"][i], data["salt"][i], data["chunk_seq"][i]),
-        )
-        per_term: dict[str, list] = {}
-        for i in rows:
-            ids, tfs = codecs.decode_chunk(data["payload"][i], data["codec"][i])
-            dls = codecs.decode_lengths(data["dls"][i])
-            per_term.setdefault(data["term"][i], []).append((ids, tfs, dls))
-        lists = {}
-        for t, parts in per_term.items():
-            lists[t] = tuple(
-                np.concatenate([p[j] for p in parts]) for j in range(3)
-            )
-        present = sorted(lists)
-        # df BEFORE the tombstone mask: stale-stats semantics, matching
-        # the Spark path's lexicon df (maintenance.py module doc)
-        dfs = {t: self._df_of(t, len(lists[t][0])) for t in present}
-        if self._deleted is not None:
-            for t in present:
-                ids, tfs, dls = lists[t]
-                if not len(ids):
-                    continue
-                ids64 = ids.astype(np.int64)
-                pos = np.searchsorted(self._deleted, ids64)
-                safe = np.clip(pos, 0, len(self._deleted) - 1)
-                keep = self._deleted[safe] != ids64
-                if not keep.all():
-                    lists[t] = (ids[keep], tfs[keep], dls[keep])
-        if mode == "conjunctive":
-            cand = lists[present[0]][0]
-            for t in present[1:]:
-                cand = np.intersect1d(cand, lists[t][0], assume_unique=True)
-                if len(cand) == 0:
-                    return []
-            total = np.zeros(len(cand), dtype=np.float32)
-            for t in present:
-                ids, tfs, dls = lists[t]
-                pos = np.searchsorted(ids, cand)
-                total = (
-                    total
-                    + bm25_scores(
-                        tfs[pos], dls[pos], dfs[t], self.n_docs, self.avgdl
-                    )
-                ).astype(np.float32)
-            doc_ids = cand
-        else:
-            all_ids = np.concatenate([lists[t][0] for t in present])
-            doc_ids = np.unique(all_ids)
-            total = np.zeros(len(doc_ids), dtype=np.float32)
-            for t in present:
-                ids, tfs, dls = lists[t]
-                s = bm25_scores(tfs, dls, dfs[t], self.n_docs, self.avgdl)
-                pos = np.searchsorted(doc_ids, ids)
-                total[pos] = (total[pos] + s).astype(np.float32)
-        order = np.lexsort((doc_ids, -total.astype(np.float64)))[:k]
-        return [(int(doc_ids[i]), float(total[i])) for i in order]
 
     # ----------------------------------------------------------- snippets
 

@@ -91,9 +91,9 @@ def keys_sql(keys) -> str:
 class ChunkRows:
     """Chunk rows of one term set (a pyarrow table, one row per chunk)
     plus what the planners read from them: ``metas`` (term ->
-    ``wand.TermChunks`` whose ``rows`` index this table; only when the
-    rows carry bound columns), ``lex`` (term -> df under ``df_of``,
-    n_chunks, doc-id span) and ``raw_df`` (segment-local df).
+    ``wand.TermChunks`` whose ``rows`` index this table), ``lex``
+    (term -> df under ``df_of``, n_chunks, doc-id span) and
+    ``raw_df`` (segment-local df).
 
     ``scale_max``/``scale_min`` rescale the stored ratio bounds under a
     foreign avgdl (see ``QueryEngine.__init__``)."""
@@ -104,7 +104,6 @@ class ChunkRows:
 
         self.table = tbl
         self.n_rows = tbl.num_rows
-        self.has_bounds = "max_ratio" in tbl.column_names
         enc = pc.dictionary_encode(tbl.column("term").combine_chunks())
         codes = enc.indices.to_numpy(zero_copy_only=False)
         self._dict = enc.dictionary.to_pylist()
@@ -117,8 +116,7 @@ class ChunkRows:
         if not self.n_rows:
             return
         col = {c: tbl.column(c).to_numpy() for c in (
-            "first_doc_id", "last_doc_id", "n",
-            *(("max_ratio", "min_ratio") if self.has_bounds else ()),
+            "first_doc_id", "last_doc_id", "n", "max_ratio", "min_ratio",
         )}
         order = np.argsort(codes, kind="stable")
         cuts = np.searchsorted(codes[order], np.arange(len(self._dict) + 1))
@@ -136,18 +134,17 @@ class ChunkRows:
                 "min_doc_id": int(col["first_doc_id"][rows].min()),
                 "max_doc_id": int(col["last_doc_id"][rows].max()),
             }
-            if self.has_bounds:
-                self.metas[t] = wand.TermChunks(
-                    first=col["first_doc_id"][rows],
-                    last=col["last_doc_id"][rows],
-                    n=n,
-                    bound=wand.term_chunk_bounds(
-                        wand.idf(df, n_docs),
-                        col["max_ratio"][rows] * scale_max,
-                        col["min_ratio"][rows] * scale_min,
-                    ),
-                    rows=rows,
-                )
+            self.metas[t] = wand.TermChunks(
+                first=col["first_doc_id"][rows],
+                last=col["last_doc_id"][rows],
+                n=n,
+                bound=wand.term_chunk_bounds(
+                    wand.idf(df, n_docs),
+                    col["max_ratio"][rows] * scale_max,
+                    col["min_ratio"][rows] * scale_min,
+                ),
+                rows=rows,
+            )
 
     def key(self, row: int) -> tuple[str, int, int]:
         """(term, salt, chunk_seq) of one row."""
@@ -259,8 +256,9 @@ class TermRuns:
 class SegmentReader:
     """The driver's pyarrow reader of one parquet segment's chunks: the
     bucket file listing, a byte-capped LRU of projected files with
-    their term run indexes (``SE_LOCAL_CACHE_MB``, default 512), the decoded-chunk cache and
-    the tombstone mask (``deleted``: sorted int64 doc ids, or None)."""
+    their term run indexes (``SE_LOCAL_CACHE_MB``, default 512), the
+    decoded-chunk cache and the tombstone mask (``deleted``: sorted
+    int64 doc ids, or None)."""
 
     def __init__(self, index_dir: str, bucket_count: int,
                  deleted: np.ndarray | None):
@@ -337,13 +335,9 @@ class SegmentReader:
         import pyarrow as pa
         import pyarrow.dataset as pa_ds
 
-        names = self.schema
-        if "term" not in names:
-            return None  # no data files
-        cols = [
-            c for c in META_COLS + (PAYLOAD_COLS if keep else [])
-            if c in names
-        ]
+        if not self.has_data:
+            return None
+        cols = META_COLS + (PAYLOAD_COLS if keep else [])
         by_bucket = self._listing()
         of_bucket: dict[int, list[str]] = {}
         for t in dict.fromkeys(terms):
@@ -424,12 +418,9 @@ class SegmentReader:
         ids, tfs = codecs.decode_chunk(payload, int(codec))
         dls = codecs.decode_lengths(dls_raw)
         ids = ids.astype(np.int64)
-        dels = self.deleted
-        if dels is not None and len(ids):
-            pos = np.clip(np.searchsorted(dels, ids), 0, len(dels) - 1)
-            keep = dels[pos] != ids
-            if not keep.all():
-                ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        keep = wand.tombstone_mask(ids, self.deleted)
+        if keep is not None:
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
         self.n_decoded += 1
         return ids, tfs, dls
 

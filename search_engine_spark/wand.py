@@ -189,3 +189,17 @@ def ids_in_intervals(
     idx = np.searchsorted(lo, ids, side="right") - 1
     safe = np.clip(idx, 0, None)
     return (idx >= 0) & (ids < hi[safe])
+
+
+def tombstone_mask(
+    ids: np.ndarray, deleted: np.ndarray | None
+) -> np.ndarray | None:
+    """Keep-mask of ``ids`` against the sorted int64 tombstone array
+    ``deleted``, or None when no id is deleted (no tombstones, or none
+    among ``ids``) and every id stays as it is."""
+    if deleted is None or not len(deleted) or not len(ids):
+        return None
+    ids64 = ids.astype(np.int64, copy=False)
+    pos = np.clip(np.searchsorted(deleted, ids64), 0, len(deleted) - 1)
+    keep = deleted[pos] != ids64
+    return None if keep.all() else keep

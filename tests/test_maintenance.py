@@ -595,7 +595,7 @@ def test_engine_close_releases_metadata_cache(
     spark, corpus, base_index, monkeypatch
 ):
     """close() unpersists the engine-pinned chunks-metadata projection
-    (META_CACHE) and the context-manager form forwards to it; a
+    (``_chunks_meta``) and the context-manager form forwards to it; a
     multi-segment engine closes every per-segment engine. Guards the
     churn case — LSM serving that reopens engines after delete/upsert
     must not accumulate pinned caches for the session lifetime. (On
@@ -609,7 +609,7 @@ def test_engine_close_releases_metadata_cache(
         _topk(eng.search(QUERY, mode="disjunctive", k=10))
         assert eng.last_plan_stats["pruner"] == "banded_wand"
         cached = eng._meta_df
-        if cached is not None:  # META_CACHE path materialized
+        if cached is not None:  # the planner pinned the projection
             assert cached.storageLevel.useMemory
     assert eng._meta_df is None
     if cached is not None:

@@ -1,7 +1,7 @@
 """Block-max WAND integration: pruning must actually skip chunks on a
 stop-word query (the north-star scenario: `the AND rare` should not
 decode every chunk of `the`) while staying rank-identical to the
-exhaustive path."""
+pure-Python oracle."""
 
 import shutil
 import tempfile
@@ -10,15 +10,16 @@ import pytest
 
 import search_engine_spark.query as query_mod
 from search_engine_spark.build import IndexBuilder
+from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
+from tests.test_query import assert_rank_identical
 
-@pytest.fixture(scope="module")
-def engine(spark):
-    """3000-doc synthetic corpus: every doc contains the stop word
+
+def wand_rows() -> list[tuple[int, str, str]]:
+    """3000 (doc_id, url, text) rows: every doc contains the stop word
     'the'; 10 docs in a NARROW doc-id band also contain the high-idf
     term 'rare' (the classic `the AND rare` block-skipping scenario)."""
-    index_dir = tempfile.mkdtemp(prefix="seidx_wand_")
     rows = []
     for i in range(3000):
         text = f"the filler{i} pad{i % 7} common words here"
@@ -27,20 +28,56 @@ def engine(spark):
         if i % 280 == 3:  # UNIFORMLY SPREAD sparse term (worst case for
             text += " sparse sparse"  # interval/bound granularity)
         rows.append((i, f"https://t/doc/{i}", text))
+    return rows
+
+
+def skewed_rows() -> list[tuple[int, str, str]]:
+    """2000 (doc_id, url, text) rows; 'hot' in docs 0-799 (df<N/2 ->
+    positive idf), with tf=10 in docs 0-639 and tf=1 in 640-799: the
+    first five 128-posting chunks carry a much higher attained bound
+    than the last two, so the k-th highest CHUNK bound alone already
+    separates the top-k."""
+    rows = []
+    for i in range(2000):
+        text = f"doc{i} misc words"
+        if i < 800:
+            text += " hot" * (10 if i < 640 else 1)
+        if 400 <= i < 1200:
+            text += " warm"
+        rows.append((i, f"https://t/doc/{i}", text))
+    return rows
+
+
+def build_engine(spark, rows, prefix: str, n_salts: int) -> QueryEngine:
+    index_dir = tempfile.mkdtemp(prefix=prefix)
     docs = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    IndexBuilder(spark, index_dir, n_salts=4, bucket_count=8).build(
+    IndexBuilder(spark, index_dir, n_salts=n_salts, bucket_count=8).build(
         docs, resume=False
     )
-    yield QueryEngine(spark, index_dir)
-    shutil.rmtree(index_dir, ignore_errors=True)
+    return QueryEngine(spark, index_dir)
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    eng = build_engine(spark, wand_rows(), "seidx_wand_", n_salts=4)
+    yield eng
+    shutil.rmtree(eng.index_dir, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    return OracleIndex([(d, text) for d, _url, text in wand_rows()])
+
+
+def search_rows(eng, query: str, **kw) -> list[tuple[int, float]]:
+    return [
+        (r["doc_id"], r["score"]) for r in eng.search(query, **kw).collect()
+    ]
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
-def test_spark_wand_prunes_and_matches_fallback(engine, mode, monkeypatch):
-    wand_rows = [
-        (r["doc_id"], round(r["score"], 4))
-        for r in engine.search("the rare", mode=mode, k=5).collect()
-    ]
+def test_spark_wand_prunes_and_matches_oracle(engine, oracle, mode):
+    rows = search_rows(engine, "the rare", mode=mode, k=5)
     stats = dict(engine.last_plan_stats)
     # disjunctive: score-bound sweep; conjunctive with a rare pivot:
     # posting-level nextGEQ refinement
@@ -48,25 +85,15 @@ def test_spark_wand_prunes_and_matches_fallback(engine, mode, monkeypatch):
     assert stats["pruner"] == expected, stats
     # the stop word's chunks must NOT all be decoded
     assert stats["chunks_kept"] < stats["chunks_total"], stats
-
-    # exhaustive fallback path (force the planner cap to 0 AND disable
-    # the distributed banded planner that now takes over above the cap)
-    monkeypatch.setattr(query_mod, "METADATA_CAP", 0)
-    monkeypatch.setattr(query_mod, "BANDED_PLANNER", False)
-    full_rows = [
-        (r["doc_id"], round(r["score"], 4))
-        for r in engine.search("the rare", mode=mode, k=5).collect()
-    ]
-    assert engine.last_plan_stats["pruner"] in ("intervals", "none")
-    assert wand_rows == full_rows
+    assert_rank_identical(rows, oracle.topk("the rare", mode=mode, k=5))
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
 def test_banded_planner_prunes_above_metadata_cap(engine, mode, monkeypatch):
     """Force METADATA_CAP below the stop word's chunk count: the
-    DISTRIBUTED banded planner must take over (pruner != 'intervals'),
-    still skip chunks by score bound, and stay rank-identical to the
-    driver-side WAND path."""
+    DISTRIBUTED banded planner must take over, still skip chunks by
+    score bound, and stay rank-identical to the driver-side WAND
+    path."""
     under_cap = [
         (r["doc_id"], round(r["score"], 4))
         for r in engine.search("the rare", mode=mode, k=5).collect()
@@ -160,39 +187,20 @@ def test_batch_search_prunes_shared_decode(engine, mode):
 
 @pytest.fixture(scope="module")
 def skewed_engine(spark):
-    """2000 docs; 'hot' in docs 0-799 (df<N/2 -> positive idf), with
-    tf=10 in docs 0-639 and tf=1 in 640-799: the first five 128-posting
-    chunks carry a much higher attained bound than the last two, so the
-    k-th highest CHUNK bound alone already separates the top-k."""
-    index_dir = tempfile.mkdtemp(prefix="seidx_meta_theta_")
-    rows = []
-    for i in range(2000):
-        text = f"doc{i} misc words"
-        if i < 800:
-            text += " hot" * (10 if i < 640 else 1)
-        if 400 <= i < 1200:
-            text += " warm"
-        rows.append((i, f"https://t/doc/{i}", text))
-    docs = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    IndexBuilder(spark, index_dir, n_salts=2, bucket_count=8).build(
-        docs, resume=False
-    )
-    yield QueryEngine(spark, index_dir)
-    shutil.rmtree(index_dir, ignore_errors=True)
+    eng = build_engine(spark, skewed_rows(), "seidx_meta_theta_", n_salts=2)
+    yield eng
+    shutil.rmtree(eng.index_dir, ignore_errors=True)
 
 
 @pytest.mark.parametrize("q", ["hot", "hot warm"])
-def test_meta_theta_skips_phase1_decode(skewed_engine, q, monkeypatch):
+def test_meta_theta_skips_phase1_decode(skewed_engine, q):
     """When the chunk-bound distribution separates cleanly, the k-th
     highest chunk bound is a valid theta WITHOUT any decode probe:
     search() must start no Spark job (the driver reads the metadata and
     scores the kept chunks), still prune, and stay rank-identical to
-    the exhaustive path."""
+    the oracle."""
     eng = skewed_engine
-    rows = [
-        (r["doc_id"], round(r["score"], 4))
-        for r in eng.search(q, mode="disjunctive", k=5).collect()
-    ]
+    rows = search_rows(eng, q, mode="disjunctive", k=5)
     stats = dict(eng.last_plan_stats)
     assert stats["pruner"] == "block_max_wand", stats
     assert "theta0" in stats, stats
@@ -201,18 +209,11 @@ def test_meta_theta_skips_phase1_decode(skewed_engine, q, monkeypatch):
     assert stats["chunks_kept"] < stats["chunks_total"], stats
     assert len(rows) == 5
     assert all(d < 640 for d, _s in rows), rows  # the tf=10 docs win
-
-    # exhaustive fallback must agree
-    monkeypatch.setattr(query_mod, "METADATA_CAP", 0)
-    monkeypatch.setattr(query_mod, "BANDED_PLANNER", False)
-    full = [
-        (r["doc_id"], round(r["score"], 4))
-        for r in eng.search(q, mode="disjunctive", k=5).collect()
-    ]
-    assert rows == full
+    oracle = OracleIndex([(d, text) for d, _url, text in skewed_rows()])
+    assert_rank_identical(rows, oracle.topk(q, mode="disjunctive", k=5))
 
 
-def test_local_wand_skips_chunk_decodes(engine):
+def test_local_wand_skips_chunk_decodes(engine, oracle):
     res = engine.search_local("the rare", mode="disjunctive", k=5)
     stats = engine.last_local_stats
     assert stats["chunks_decoded"] < stats["chunks_total"], stats
@@ -220,25 +221,7 @@ def test_local_wand_skips_chunk_decodes(engine):
     # top docs are the rare-term docs
     assert len(res) == 5
     assert all(2900 <= d < 2910 for d, _s in res)
-
-    # identical to the exhaustive local path
-    data_cols = [
-        "term", "salt", "chunk_seq", "first_doc_id", "last_doc_id",
-        "n", "codec", "payload", "dls",
-    ]
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(
-        f"{engine.index_dir}/chunks", format="parquet", partitioning="hive"
-    )
-    tbl = ds.to_table(
-        filter=pads.field("term").isin(["the", "rare"]), columns=data_cols
-    )
-    data = {c: tbl.column(c).to_pylist() for c in data_cols}
-    full = engine._search_local_full(data, "disjunctive", 5)
-    assert [(d, round(s, 5)) for d, s in res] == [
-        (d, round(s, 5)) for d, s in full
-    ]
+    assert_rank_identical(res, oracle.topk("the rare", k=5))
 
 
 def test_conjunctive_local_prunes(engine):
@@ -388,7 +371,9 @@ def test_local_theta_probe_matches_spark_probe(engine, mode, monkeypatch):
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
-def test_search_not_composes_with_banded_planner(engine, mode, monkeypatch):
+def test_search_not_composes_with_banded_planner(
+    engine, oracle, mode, monkeypatch
+):
     """Boolean NOT in the above-cap (banded-planner) regime: exclusion
     must anti-join at the same convergence point as the driver-WAND
     path, so both planners return the identical filtered ranking."""
@@ -408,20 +393,28 @@ def test_search_not_composes_with_banded_planner(engine, mode, monkeypatch):
         ).collect()
     ]
     assert banded == under_cap
-    # reference semantics: the exhaustive ranking minus excluded docs
-    monkeypatch.setattr(query_mod, "METADATA_CAP", 0)
-    monkeypatch.setattr(query_mod, "BANDED_PLANNER", False)
-    full = [
-        (r["doc_id"], round(r["score"], 5))
-        for r in engine.search(
-            "the rare", mode=mode, k=10**6, dtype=np.float64
-        ).collect()
-    ]
-    neg = {
-        r["doc_id"]
-        for r in engine.search(
-            "sparse", k=10**6, dtype=np.float64
-        ).collect()
-    }
+    # reference semantics: the oracle's ranking minus excluded docs
+    neg = {d for d, _tf in oracle.postings["sparse"]}
+    full = oracle.topk("the rare", mode=mode, k=10**6)
     want = [x for x in full if x[0] not in neg][:5]
-    assert banded == want
+    assert_rank_identical(banded, want)
+
+
+def test_boundless_index_rejected(spark, engine, tmp_path):
+    """An index whose chunk files lack the block-max bound columns (as
+    written before bounds were stored) is refused when an engine opens
+    it, with the rebuild message, instead of being served by a planner
+    that would need them."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    copy = str(tmp_path / "boundless")
+    shutil.copytree(engine.index_dir, copy)
+    paths = glob.glob(f"{copy}/chunks/**/*.parquet", recursive=True)
+    assert paths
+    for path in paths:
+        tbl = pq.ParquetFile(path).read()
+        pq.write_table(tbl.drop_columns(["max_ratio", "min_ratio"]), path)
+    with pytest.raises(ValueError, match="rebuild"):
+        QueryEngine(spark, copy)
