@@ -24,15 +24,17 @@ to exhaustive evaluation.
 
 Physical plan of ``search()``, below METADATA_CAP on the parquet
 layout — answered on the driver, ZERO Spark jobs:
-    SegmentReader (segment.py): the query terms' chunk metadata in one
-      pyarrow read (bucket-pruned, term filter pushed down) -> lexicon
-      stats + per-term block-max bounds, no lexicon job
+    SegmentReader (segment.py): the query terms' chunk metadata as
+      slices of its pinned, term-sorted bucket files (the same LRU
+      ``search_local`` reads) -> lexicon stats + per-term block-max
+      bounds, no lexicon job
     WAND sweep -> elementary segments; theta from the metadata alone
       when the chunk bounds separate, else the k-th best score of a
       phase-1 decode of the top-bound segments' chunks
       (conjunctive: the rare pivot's doc ids replace the sweep)
-    the surviving (term, salt, chunk_seq) keys, point-read and decoded
-      by the reader (tombstones masked), masked to the kept segments
+    the surviving (term, salt, chunk_seq) keys, picked from the same
+      pinned files and decoded by the reader (tombstones masked),
+      masked to the kept segments
       (or the pivot's candidates), scored and cut to the top k in numpy
       (``_score_local``, the one driver-side scorer; the phase-1 probe
       is the same call with the probe's keys)
@@ -171,6 +173,18 @@ def local_frame(spark, schema: str, columns: dict | None = None) -> DataFrame:
             schema=arrow_schema,
         )
     return spark.createDataFrame(tbl, st)
+
+
+MODES = ("disjunctive", "conjunctive")
+
+
+def check_k_mode(k, mode) -> None:
+    """Refuse, with ValueError, a ``k`` that is not an int >= 1 (a bool
+    is refused) or a ``mode`` other than ``MODES``."""
+    if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
+        raise ValueError(f"k must be an int >= 1, got {k!r}")
+    if not isinstance(mode, str) or mode not in MODES:
+        raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
 
 
 def kth_score(top: dict | None, k: int) -> float | None:
@@ -351,7 +365,7 @@ class QueryEngine:
         self._reader = (
             None if self.config.get("table_format") == "iceberg"
             else segment.SegmentReader(
-                index_dir, self.bucket_count, self._deleted
+                index_dir, self.bucket_count, self._deleted, METADATA_CAP
             )
         )
         # every planner reads the chunks' block-max bounds, so an index
@@ -803,9 +817,11 @@ class QueryEngine:
         metadata (segment.ChunkRows): ONE read serves both the planner
         and the lexicon (df = sum of chunk n), so a query needs no
         separate lexicon job. The parquet layout reads it through the
-        SegmentReader (no Spark job, at most METADATA_CAP rows plus one
-        record batch), Iceberg collects it with one Spark job; neither
-        reads payloads.
+        SegmentReader (no Spark job): slices of the files it pins, which
+        the payload decodes of this and later queries reuse, and at most
+        METADATA_CAP rows plus one record batch of a file too large to
+        pin. Iceberg collects it with one Spark job. The rows carry no
+        payloads.
         Returns None when the term set exceeds METADATA_CAP (callers
         fall back to the lexicon + the banded planner)."""
         if all(t in self._lex_raw_cache for t in terms):
@@ -821,7 +837,7 @@ class QueryEngine:
             if total > METADATA_CAP:
                 return None
         if self._reader is not None:
-            tbl = self._reader.table(terms, keep=False, cap=METADATA_CAP)
+            tbl = self._reader.table(terms, cap=METADATA_CAP)
             if tbl is None:
                 return None
         else:
@@ -1370,6 +1386,7 @@ class QueryEngine:
         (QueryExecution.cpp:459-498): ``doc_length`` plus a ``terms``
         array of (term, score, tf) per matched term.
         """
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         schema = "doc_id long, score " + (
             "double" if dtype is np.float64 else "float"
@@ -1539,6 +1556,7 @@ class QueryEngine:
         ranking. Unindexed excluded terms drop out (nothing to
         exclude), mirroring the openList skip on the positive side.
         """
+        check_k_mode(k, mode)
         neg = [t for t in tokenize_query(exclude) if t]
         lex_neg = self.lexicon_lookup(neg)
         neg_present = sorted(lex_neg)
@@ -1606,6 +1624,10 @@ class QueryEngine:
         """
         from pyspark.sql import Window
 
+        check_k_mode(k, mode)
+        qids = [qid for qid, _text in queries]
+        if len(set(qids)) < len(qids):
+            raise ValueError("batch_search query ids must be distinct")
         self._batch_thetas: dict[int, float] = {}
         qterms: list[tuple[int, str]] = []
         for qid, text in queries:
@@ -2351,6 +2373,7 @@ class QueryEngine:
         block-max WAND sweep — chunks are decoded lazily in descending
         segment-bound order and skipped entirely once they cannot reach
         the top-k threshold."""
+        check_k_mode(k, mode)
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(
                 "the driver-local fast path reads the parquet layout "
@@ -2364,9 +2387,9 @@ class QueryEngine:
         terms = tokenize_query(query)
         if not terms:
             return []
-        # a serving engine pins its posting files (SegmentReader LRU):
-        # repeated terms serve from memory, cold terms read through
-        tbl = self._reader.table(terms, keep=True)
+        # repeated terms serve from the reader's pinned files, cold
+        # terms read through
+        tbl = self._reader.table(terms)
         if tbl is None or not tbl.num_rows:
             return []
         cr = segment.ChunkRows(
@@ -3664,6 +3687,7 @@ class MultiIndexQueryEngine:
         dtype=np.float32,
     ) -> DataFrame:
         """Global top-k (doc_id, score) across all segments."""
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         out_t = "double" if dtype is np.float64 else "float"
         schema = f"doc_id long, score {out_t}"
@@ -3682,6 +3706,7 @@ class MultiIndexQueryEngine:
     ) -> list[tuple[int, float]]:
         """Driver-side serving twin: per-segment search_local under
         global stats, merged. The multi-segment low-latency path."""
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         if not terms:
             return []
@@ -3983,6 +4008,7 @@ class MultiIndexQueryEngine:
         exclude there — union-identical either way. Positive-side
         eligibility follows ``search`` (the conjunctive all-terms
         gate included)."""
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         if not terms:
             out_t = "double" if dtype is np.float64 else "float"

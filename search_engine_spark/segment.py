@@ -4,20 +4,27 @@ layout) — the pyarrow view every driver-side query path shares.
 The chunks stage is hive-partitioned by term bucket, and every file is
 sorted by (term, salt, chunk_seq): the build's sort key starts with
 ``bucket``, so Spark's partitioned writer keeps the order. A
-:class:`SegmentReader` lists the bucket files once, keeps projected
-files (one record batch each) in a byte-capped LRU, each with a
-:class:`TermRuns` index of where its terms' rows lie (a file written
-before the build sorted this way is sorted once, when it enters the
-LRU), decodes chunk payloads (tombstone-masked) into a count-capped
-cache, and point-reads exact chunk keys (term filter pushed down, exact
-keys picked after the read).
+:class:`SegmentReader` lists the bucket files once and keeps a
+byte-capped LRU of pinned files: each read whole, payloads included,
+as one record batch with a :class:`TermRuns` index of where its terms'
+rows lie, so a term's rows are a zero-copy slice. ``search_local``,
+the driver-planned ``search()``/``batch_search`` metadata read and
+their payload decodes (:meth:`SegmentReader.decode_keys`) all read
+through it. A pinned file is shared: readers over the same immutable
+file hold one copy per process (:func:`pinned`), which leaves memory
+when no reader's LRU holds it. A file written before the build sorted
+this way is sorted once, when it is pinned. Files with more rows than
+the planners' metadata cap are never pinned; they are streamed with the
+term filter pushed down. The reader also decodes chunk payloads
+(tombstone-masked, per reader) into a count-capped cache.
 :class:`ChunkRows` holds one term set's chunk rows together with the
 per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
 that ``search_local``, the driver-planned ``search()``/``batch_search``
 and the Spark-collected metadata fallback all plan from.
 
 The index an engine serves is immutable (mutations reopen the engine),
-so nothing cached here goes stale.
+so nothing cached here goes stale; a file rewritten in place has a new
+pinned-copy key.
 """
 
 from __future__ import annotations
@@ -25,6 +32,8 @@ from __future__ import annotations
 import glob
 import os
 import re
+import threading
+import weakref
 from collections import OrderedDict
 
 import numpy as np
@@ -253,25 +262,88 @@ class TermRuns:
         return [batch.slice(lo, hi - lo) for lo, hi in sorted(runs)]
 
 
+class PinnedFile:
+    """One chunk file read whole: its rows (payloads included) as one
+    term-sorted record batch, with their :class:`TermRuns` index."""
+
+    __slots__ = ("batch", "runs", "nbytes", "__weakref__")
+
+    def __init__(self, batch, runs: TermRuns):
+        self.batch = batch
+        self.runs = runs
+        self.nbytes = batch.nbytes + runs.nbytes
+
+
+# the one pinned copy of each chunk file in this process, keyed by the
+# file's identity (path, st_mtime_ns, st_size): readers over the same
+# immutable file share it, a file rewritten in place gets a new key, and
+# a copy leaves memory when no reader's LRU holds it any more
+_PINNED: "weakref.WeakValueDictionary[tuple, PinnedFile]" = (
+    weakref.WeakValueDictionary()
+)
+_PINNED_LOCK = threading.Lock()
+
+
+def read_pinned(path: str) -> PinnedFile:
+    """Read one chunk file whole. A file whose rows are not in term
+    order (written before the build kept that order) is sorted by
+    (term, salt, chunk_seq) here, once."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(path, columns=META_COLS + PAYLOAD_COLS)
+    term = tbl.column("term")
+    if len(term) > 1 and pc.any(pc.less(term[1:], term[:-1])).as_py():
+        tbl = tbl.sort_by(
+            [(c, "ascending") for c in ("term", "salt", "chunk_seq")]
+        )
+    batches = tbl.combine_chunks().to_batches()
+    batch = batches[0] if batches else pa.RecordBatch.from_pylist(
+        [], schema=tbl.schema
+    )
+    return PinnedFile(batch, TermRuns(batch.column("term")))
+
+
+def pinned(path: str) -> PinnedFile:
+    """The process's pinned copy of the chunk file ``path``, read
+    (:func:`read_pinned`) only when no live reader holds it. Two threads
+    missing at once may both read; one copy is kept."""
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    with _PINNED_LOCK:
+        got = _PINNED.get(key)
+    if got is None:
+        got = read_pinned(path)
+        with _PINNED_LOCK:
+            got = _PINNED.setdefault(key, got)
+    return got
+
+
 class SegmentReader:
     """The driver's pyarrow reader of one parquet segment's chunks: the
-    bucket file listing, a byte-capped LRU of projected files with
-    their term run indexes (``SE_LOCAL_CACHE_MB``, default 512), the
-    decoded-chunk cache and the tombstone mask (``deleted``: sorted
-    int64 doc ids, or None)."""
+    bucket file listing; a byte-capped LRU of pinned files
+    (``SE_LOCAL_CACHE_MB``, default 512, charged with the full size of
+    every file this reader holds, shared or not), admitting files of at
+    most ``pin_rows`` rows (the planners' METADATA_CAP) by their footer
+    row count; the decoded-chunk cache and the tombstone mask
+    (``deleted``: sorted int64 doc ids, or None), both this reader's
+    own, since decoded postings are masked by its engine's deletes."""
 
     def __init__(self, index_dir: str, bucket_count: int,
-                 deleted: np.ndarray | None):
+                 deleted: np.ndarray | None, pin_rows: int):
         self.index_dir = index_dir
         self.bucket_count = bucket_count
         self.deleted = deleted
+        self.pin_rows = pin_rows
         self.cap_bytes = int(os.environ.get("SE_LOCAL_CACHE_MB", "512")) << 20
         self._by_bucket: dict[int, list[str]] | None = None
         self._schema = None  # pyarrow schema of the data files
-        # one pyarrow dataset per data file, built on first read: a
+        self._n_rows: dict[str, int] = {}  # footer row count per file
+        # one pyarrow dataset per streamed file, built on first read: a
         # dataset re-discovers its file and footer when rebuilt
         self._datasets: dict = {}
-        self._tables: OrderedDict = OrderedDict()
+        self._tables: "OrderedDict[str, PinnedFile]" = OrderedDict()
         self._bytes = 0
         self.decoded: dict[tuple, tuple] = {}
         # decode calls (decoded-cache misses) since construction
@@ -314,30 +386,28 @@ class SegmentReader:
             paths += by_bucket.get(b, ())
         return paths
 
-    def table(self, terms: list[str], keep: bool, cap: int | None = None):
+    def table(self, terms: list[str], cap: int | None = None):
         """The chunk rows of ``terms`` as one pyarrow table (bucket by
         bucket, file by file, each file's rows in (term, salt, chunk_seq)
         order); None for an index without data files, or as soon as more
         than ``cap`` rows have been read — so an above-cap term set (a
         stop word owning ~10^8 chunks) costs the driver at most ``cap``
-        rows plus one record batch, never its whole metadata.
+        rows plus one record batch or one file of at most ``pin_rows``
+        rows, never its whole metadata.
 
-        A file in the LRU serves each term's run as a zero-copy slice
-        (its :class:`TermRuns` index), with no scan of its other rows.
-        With ``keep`` (the low-latency ``search_local`` path: a serving
-        engine pins its posting files) the rows carry payloads and files
-        are read whole into the LRU. Without it (the driver-planned
-        ``search()``, whose latency is its Spark job) the rows carry
-        metadata only and files outside the LRU are streamed with the
-        term filter pushed down and dropped after use, so a planning
-        engine pins nothing; the planner point-reads the few payloads it
-        decodes (:meth:`decode_keys`)."""
+        Every file of at most ``pin_rows`` rows is served from the LRU
+        (pinned on first use, :meth:`_pinned`): each term's run is a
+        zero-copy slice, with no scan of its other rows. A larger file
+        is streamed with the term filter pushed down and dropped after
+        use. Without ``cap`` the rows carry payloads; with it (the
+        planners' metadata read) they carry metadata only, so a streamed
+        above-cap read holds no payload bytes."""
         import pyarrow as pa
         import pyarrow.dataset as pa_ds
 
         if not self.has_data:
             return None
-        cols = META_COLS + (PAYLOAD_COLS if keep else [])
+        cols = META_COLS + (PAYLOAD_COLS if cap is None else [])
         by_bucket = self._listing()
         of_bucket: dict[int, list[str]] = {}
         for t in dict.fromkeys(terms):
@@ -347,15 +417,10 @@ class SegmentReader:
             bterms = of_bucket[b]
             keys = term_keys(bterms)
             for path in by_bucket.get(b, ()):
-                cached = self._tables.get(path)
-                if cached is None and keep:
-                    cached = self._load(path, cols)
-                if cached is not None:
-                    self._tables.move_to_end(path)
-                    batch, runs = cached
-                    parts = runs.slices(
-                        batch if keep else batch.select(cols), bterms, keys
-                    )
+                pf = self._pinned(path)
+                if pf is not None:
+                    batch = pf.batch if cap is None else pf.batch.select(cols)
+                    parts = pf.runs.slices(batch, bterms, keys)
                 else:
                     parts = self._read(
                         [path], cols, pa_ds.field("term").isin(bterms)
@@ -368,33 +433,28 @@ class SegmentReader:
         schema = pa.schema([self._schema.field(c) for c in cols])
         return pa.Table.from_batches(batches, schema)
 
-    def _load(self, path: str, cols: list[str]) -> tuple:
-        """Read one file whole into the LRU as one record batch with its
-        term run index, evicting least recently used files above the
-        byte cap. A file whose rows are not in term order (written
-        before the build kept that order) is sorted by (term, salt,
-        chunk_seq) here, once."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+    def _pinned(self, path: str) -> PinnedFile | None:
+        """The LRU's copy of ``path``, marked most recently used; a file
+        not in it joins it from :func:`pinned` when its footer counts at
+        most ``pin_rows`` rows, evicting least recently used files above
+        the byte cap; None for a larger file (never pinned)."""
+        pf = self._tables.get(path)
+        if pf is not None:
+            self._tables.move_to_end(path)
+            return pf
+        n = self._n_rows.get(path)
+        if n is None:
+            import pyarrow.parquet as pq
 
-        tbl = pq.read_table(path, columns=cols)
-        term = tbl.column("term")
-        if len(term) > 1 and pc.any(pc.less(term[1:], term[:-1])).as_py():
-            tbl = tbl.sort_by(
-                [(c, "ascending") for c in ("term", "salt", "chunk_seq")]
-            )
-        batches = tbl.combine_chunks().to_batches()
-        batch = batches[0] if batches else pa.RecordBatch.from_pylist(
-            [], schema=tbl.schema
-        )
-        runs = TermRuns(batch.column("term"))
-        self._tables[path] = (batch, runs)
-        self._bytes += batch.nbytes + runs.nbytes
+            n = self._n_rows[path] = pq.read_metadata(path).num_rows
+        if n > self.pin_rows:
+            return None
+        pf = self._tables[path] = pinned(path)
+        self._bytes += pf.nbytes
         while self._bytes > self.cap_bytes and len(self._tables) > 1:
-            _, (old, old_runs) = self._tables.popitem(last=False)
-            self._bytes -= old.nbytes + old_runs.nbytes
-        return batch, runs
+            _, old = self._tables.popitem(last=False)
+            self._bytes -= old.nbytes
+        return pf
 
     def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,
@@ -432,7 +492,7 @@ class SegmentReader:
 
     def chunk(self, cr: ChunkRows, row: int) -> tuple:
         """(doc_ids int64, tfs, doc_lengths) of one row of ``cr`` (read
-        with ``keep``, so carrying payloads), tombstoned ids masked."""
+        without a cap, so carrying payloads), tombstoned ids masked."""
         key = cr.key(row)
         got = self.decoded.get(key)
         if got is None:
@@ -446,18 +506,12 @@ class SegmentReader:
 
     def decode_keys(self, keys) -> dict:
         """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
-        found: from the decoded cache, else by a point read of the keys'
-        terms (bucket-pruned; the ``term`` filter is pushed down, and as
-        the files are term-sorted, a row group's term statistics skip
-        it unless its term range holds a wanted term) that decodes only
-        the requested keys; the read is
-        bounded by the terms' chunk count, which the planners hold to
-        METADATA_CAP. Pushing the exact keys down instead (a balanced OR
-        of per-(term, salt) ``chunk_seq`` lists) read 60 keys of a
-        7-file bucket in ~54 ms, the term filter alone in 5–9 ms
-        (pyarrow 16, 10k-doc index)."""
+        found: from the decoded cache, else picked from the rows of the
+        keys' terms (:meth:`table`: slices of pinned files, or a
+        streamed read of a file too large to pin) and decoded, only the
+        requested keys. The planners hold the terms' chunk count to
+        METADATA_CAP."""
         import pyarrow as pa
-        import pyarrow.dataset as pa_ds
 
         out: dict[tuple, tuple] = {}
         missing: set[tuple] = set()
@@ -470,32 +524,29 @@ class SegmentReader:
         if not missing or not self.has_data:
             return out
         terms = sorted({t for t, _s, _c in missing})
-        for part in self._read(
-            self._paths(terms),
-            ["term", "salt", "chunk_seq", *PAYLOAD_COLS],
-            pa_ds.field("term").isin(terms),
-        ):
-            found = [
-                (t, int(s), int(c)) for t, s, c in zip(
-                    part.column("term").to_pylist(),
-                    part.column("salt").to_pylist(),
-                    part.column("chunk_seq").to_pylist(),
-                )
-            ]
-            want = [key in missing for key in found]
-            if not any(want):
-                continue
-            part = part.filter(pa.array(want))
-            found = [key for key, w in zip(found, want) if w]
-            cols = {c: part.column(c).to_pylist() for c in PAYLOAD_COLS}
-            for i, key in enumerate(found):
-                out[key] = self._remember(key, self._decode(
-                    cols["payload"][i], cols["codec"][i], cols["dls"][i]
-                ))
-        # the read's transient buffers (every payload of the files read)
-        # go back to the OS now: left to jemalloc's lazy decay, their
-        # purge lands in the next Arrow allocations — measured as +11% to
-        # +29% on the search_local ops that follow a driver-scored
-        # search() (perfbench serve, 3 seeds, 4-core host)
-        pa.default_memory_pool().release_unused()
+        tbl = self.table(terms)
+        found = zip(
+            tbl.column("term").to_pylist(),
+            tbl.column("salt").to_pylist(),
+            tbl.column("chunk_seq").to_pylist(),
+        )
+        rows, picked = [], []
+        for i, key in enumerate(found):
+            if key in missing:
+                rows.append(i)
+                picked.append(key)
+        part = tbl.select(PAYLOAD_COLS).take(pa.array(rows, pa.int64()))
+        cols = {c: part.column(c).to_pylist() for c in PAYLOAD_COLS}
+        for i, key in enumerate(picked):
+            out[key] = self._remember(key, self._decode(
+                cols["payload"][i], cols["codec"][i], cols["dls"][i]
+            ))
+        if any(self._n_rows[p] > self.pin_rows for p in self._paths(terms)):
+            # a streamed read's transient buffers (every payload of the
+            # rows read) go back to the OS now: left to jemalloc's lazy
+            # decay, their purge lands in the next Arrow allocations —
+            # measured as +11% to +29% on the search_local ops that
+            # follow a driver-scored search() (perfbench serve, 3
+            # seeds, 4-core host)
+            pa.default_memory_pool().release_unused()
         return out

@@ -52,9 +52,17 @@ def tokenize_text(text: str) -> list[str]:
 
 
 def tokenize_query(query: str) -> list[str]:
-    """Query-side tokenizer + dedup, canonical sorted order."""
+    """Query-side tokenizer + dedup, canonical sorted order. A query
+    that is not valid Unicode (a lone surrogate, which no index term
+    can hold) raises ValueError."""
     if not query:
         return []
+    try:
+        query.encode("utf-8")
+    except UnicodeEncodeError as e:
+        raise ValueError(
+            f"query text holds a lone surrogate at index {e.start}"
+        ) from None
     return sorted({t for t in _QUERY_RE.split(query) if t})
 
 

@@ -31,3 +31,20 @@ def tmp_index_dir():
 
 
 SF_DIR = os.environ.get("SE_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def assert_rank_identical(got, want, tol=2e-4):
+    """Rank-identity with float tolerance: same doc ids in order, allowing
+    swaps of adjacent entries whose scores are within tol (fp reorder)."""
+    assert len(got) == len(want), (got, want)
+    for (gd, gs), (wd, ws) in zip(got, want):
+        assert abs(gs - ws) <= tol * max(1.0, abs(ws)), (got, want)
+    got_ids = [d for d, _ in got]
+    want_ids = [d for d, _ in want]
+    if got_ids != want_ids:
+        # permitted only when scores tie within tolerance
+        for i, (g, w) in enumerate(zip(got_ids, want_ids)):
+            if g != w:
+                gs = dict(got)[g]
+                ws = dict(want)[w]
+                assert abs(gs - ws) <= tol * max(1.0, abs(ws)), (got, want)

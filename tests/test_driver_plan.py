@@ -17,8 +17,9 @@ from search_engine_spark import maintenance, segment
 from search_engine_spark.build import IndexBuilder
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import MultiIndexQueryEngine, QueryEngine
+from search_engine_spark.tokenizer import tokenize_query
 
-from tests.test_query import assert_rank_identical
+from tests.conftest import assert_rank_identical
 
 SLASH = "x\\y"  # backslash: not a tokenizer delimiter on either side
 TRAIL = "z\\"  # a trailing backslash would end an unescaped SQL literal
@@ -313,10 +314,10 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     eng = QueryEngine(spark, idx)
     q = "w0 w1 w2"
     terms = q.split()
-    assert eng._reader.table(terms, keep=False, cap=cap) is None
+    assert eng._reader.table(terms, cap=cap) is None
     assert sum(meta_rows[:-1]) <= cap < sum(meta_rows)
     stopped_at = sum(meta_rows)
-    assert eng._reader.table(terms, keep=False).num_rows > stopped_at
+    assert eng._reader.table(terms).num_rows > stopped_at
 
     meta_rows.clear()
     for _ in range(2):
@@ -430,3 +431,73 @@ def test_many_group_key_predicate_batch(spark, tmp_path, monkeypatch):
     assert max(groups) >= 2000, (groups, st)
     for qid, q in queries:
         assert_rank_identical(got.get(qid, []), oracle.topk(q, k=10))
+
+
+def entry_points(spark, corpus, segments):
+    """Every public entry taking ``k`` and ``mode``, as name -> call."""
+    idx, _docs, _oracle = corpus
+    eng = QueryEngine(spark, idx)
+    multi = MultiIndexQueryEngine(spark, list(segments), offsets=[0, 0])
+    q = "w7 w20"
+    return {
+        "search": lambda **kw: eng.search(q, **kw),
+        "search_not": lambda **kw: eng.search_not(q, "w1", **kw),
+        "search_local": lambda **kw: eng.search_local(q, **kw),
+        "batch_search": lambda **kw: eng.batch_search([(0, q)], **kw),
+        "multi.search": lambda **kw: multi.search(q, **kw),
+        "multi.search_local": lambda **kw: multi.search_local(q, **kw),
+    }
+
+
+def assert_refused(calls, match, **kw):
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match=match):
+            call(**kw)
+            pytest.fail(f"{name} accepted {kw}")
+
+
+def test_negative_k_refused(spark, corpus, segments):
+    """``search(q, k=-1)`` used to return rows instead of failing."""
+    assert_refused(entry_points(spark, corpus, segments), "k must be", k=-1)
+
+
+def test_zero_k_refused(spark, corpus, segments):
+    """``search_local(q, k=0)`` used to raise IndexError."""
+    assert_refused(entry_points(spark, corpus, segments), "k must be", k=0)
+
+
+@pytest.mark.parametrize("k", [2.5, True, "10"])
+def test_non_int_k_refused(spark, corpus, segments, k):
+    """``k=2.5`` used to raise TypeError, ``k=True`` to run as 1."""
+    assert_refused(entry_points(spark, corpus, segments), "k must be", k=k)
+
+
+def test_unknown_mode_refused(spark, corpus, segments):
+    """``mode="bogus"`` used to run as disjunctive on both paths."""
+    assert_refused(
+        entry_points(spark, corpus, segments), "mode must be", mode="bogus"
+    )
+
+
+def test_duplicate_batch_ids_refused(spark, corpus):
+    """Two queries under one id used to be merged into one query."""
+    idx, _docs, _oracle = corpus
+    eng = QueryEngine(spark, idx)
+    with pytest.raises(ValueError, match="distinct"):
+        eng.batch_search([(1, "w7"), (1, "w20")], k=10)
+
+
+def test_lone_surrogate_refused(spark, corpus):
+    """Query text with a lone surrogate is refused by the tokenizer with
+    a plain ValueError on both paths (it used to surface as a raw
+    UnicodeEncodeError from deeper down)."""
+    idx, _docs, _oracle = corpus
+    eng = QueryEngine(spark, idx)
+    for call in (
+        lambda: tokenize_query("w7 \ud800"),
+        lambda: eng.search("w7 \ud800", k=10),
+        lambda: eng.search_local("\ud800", k=10),
+    ):
+        with pytest.raises(ValueError, match="lone surrogate") as got:
+            call()
+        assert got.type is ValueError

@@ -24,7 +24,7 @@ from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
 from tests.test_driver_plan import QUERIES, build, zipf_docs
-from tests.test_query import assert_rank_identical
+from tests.conftest import assert_rank_identical
 
 SORT_KEYS = {
     "chunks": ["term", "salt", "chunk_seq"],
@@ -175,8 +175,8 @@ def test_unsorted_chunk_files_serve_rank_identical(
         assert local_answers(eng_legacy, queries) == want
     for got, (q, mode) in zip(want, queries):
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
-    for tbl, _runs in eng_legacy._reader._tables.values():
-        terms = tbl.column("term")
+    for pinned in eng_legacy._reader._tables.values():
+        terms = pinned.batch.column("term")
         assert terms.equals(terms.sort())
 
     deleted = {

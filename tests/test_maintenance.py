@@ -25,6 +25,8 @@ from search_engine_spark.corpus import load_documents
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
+from tests.conftest import assert_rank_identical
+
 SF_DIR = "/root/testdata/sf0.001"
 QUERY = "spark query"
 CONJ_QUERY = "data table"
@@ -49,20 +51,6 @@ def corpus(spark):
         for r in docs_df.select("doc_id", "text").collect()
     )
     return docs_df, rows
-
-
-def assert_rank_identical(got, want, tol=2e-4):
-    """Same ids in order, tolerating swaps of score-tied neighbors."""
-    assert len(got) == len(want), (got, want)
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert abs(gs - ws) <= tol * max(1.0, abs(ws)), (got, want)
-    if [d for d, _ in got] != [d for d, _ in want]:
-        gm, wm = dict(got), dict(want)
-        for g, w in zip([d for d, _ in got], [d for d, _ in want]):
-            if g != w:
-                assert abs(gm[g] - wm[w]) <= tol * max(1.0, abs(wm[w])), (
-                    got, want,
-                )
 
 
 @pytest.fixture(scope="module")

@@ -10,6 +10,8 @@ from search_engine_spark.build import IndexBuilder
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
+from tests.conftest import assert_rank_identical
+
 SF_DIR = "/root/testdata/sf0.001"
 
 QUERIES = [
@@ -36,23 +38,6 @@ def engine(spark, tmp_path_factory):
         for r in docs_df.select("doc_id", "text").collect()
     ]
     return QueryEngine(spark, index_dir), OracleIndex(docs)
-
-
-def assert_rank_identical(got, want, tol=2e-4):
-    """Rank-identity with float tolerance: same doc ids in order, allowing
-    swaps of adjacent entries whose scores are within tol (fp reorder)."""
-    assert len(got) == len(want), (got, want)
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert abs(gs - ws) <= tol * max(1.0, abs(ws)), (got, want)
-    got_ids = [d for d, _ in got]
-    want_ids = [d for d, _ in want]
-    if got_ids != want_ids:
-        # permitted only when scores tie within tolerance
-        for i, (g, w) in enumerate(zip(got_ids, want_ids)):
-            if g != w:
-                gs = dict(got)[g]
-                ws = dict(want)[w]
-                assert abs(gs - ws) <= tol * max(1.0, abs(ws)), (got, want)
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])

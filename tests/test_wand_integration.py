@@ -13,7 +13,7 @@ from search_engine_spark.build import IndexBuilder
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
-from tests.test_query import assert_rank_identical
+from tests.conftest import assert_rank_identical
 
 
 def wand_rows() -> list[tuple[int, str, str]]:
@@ -124,8 +124,6 @@ def test_batch_search_prunes_shared_decode(engine, mode):
     query batch the union of per-query kept chunks is smaller than the
     full chunk set, while every query stays rank-identical to its
     single-query result."""
-    from tests.test_query import assert_rank_identical
-
     # NOTE: no "sparse" here — its single chunk spans the whole doc-id
     # space (uniform spread), which keeps every segment's bound above
     # theta; a batch containing it keeps all chunks (correctly — same
