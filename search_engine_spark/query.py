@@ -25,7 +25,7 @@ to exhaustive evaluation.
 Physical plan of ``search()``, below METADATA_CAP on the parquet
 layout — answered on the driver, ZERO Spark jobs:
     SegmentReader (segment.py): the query terms' chunk metadata as
-      slices of its pinned, term-sorted bucket files (the same LRU
+      slices of its pinned, term-sorted bucket files (the same files
       ``search_local`` reads) -> lexicon stats + per-term block-max
       bounds, no lexicon job
     WAND sweep -> elementary segments; theta from the metadata alone
@@ -818,9 +818,9 @@ class QueryEngine:
         and the lexicon (df = sum of chunk n), so a query needs no
         separate lexicon job. The parquet layout reads it through the
         SegmentReader (no Spark job): slices of the files it pins, which
-        the payload decodes of this and later queries reuse, and at most
-        METADATA_CAP rows plus one record batch of a file too large to
-        pin. Iceberg collects it with one Spark job. The rows carry no
+        the payload decodes of this and later queries reuse. It reads at
+        most METADATA_CAP rows of files it pins plus METADATA_CAP rows
+        and one record batch of files it streams. Iceberg collects it with one Spark job. The rows carry no
         payloads.
         Returns None when the term set exceeds METADATA_CAP (callers
         fall back to the lexicon + the banded planner)."""
@@ -837,7 +837,9 @@ class QueryEngine:
             if total > METADATA_CAP:
                 return None
         if self._reader is not None:
-            tbl = self._reader.table(terms, cap=METADATA_CAP)
+            tbl = self._reader.table(
+                terms, cap=METADATA_CAP, payloads=False
+            )
             if tbl is None:
                 return None
         else:
@@ -2369,10 +2371,10 @@ class QueryEngine:
     ) -> list[tuple[int, float]]:
         """Low-latency driver-side path: the query terms' chunk rows as
         slices of the SegmentReader's cached, term-sorted bucket files
-        (cold files are read whole into its LRU), then the sequential
-        block-max WAND sweep — chunks are decoded lazily in descending
-        segment-bound order and skipped entirely once they cannot reach
-        the top-k threshold."""
+        (cold files are pinned, up to the reader's byte cap), then the
+        sequential block-max WAND sweep — chunks are decoded lazily in
+        descending segment-bound order and skipped entirely once they
+        cannot reach the top-k threshold."""
         check_k_mode(k, mode)
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(

@@ -4,18 +4,20 @@ layout) — the pyarrow view every driver-side query path shares.
 The chunks stage is hive-partitioned by term bucket, and every file is
 sorted by (term, salt, chunk_seq): the build's sort key starts with
 ``bucket``, so Spark's partitioned writer keeps the order. A
-:class:`SegmentReader` lists the bucket files once and keeps a
-byte-capped LRU of pinned files: each read whole, payloads included,
-as one record batch with a :class:`TermRuns` index of where its terms'
-rows lie, so a term's rows are a zero-copy slice. ``search_local``,
-the driver-planned ``search()``/``batch_search`` metadata read and
-their payload decodes (:meth:`SegmentReader.decode_keys`) all read
-through it. A pinned file is shared: readers over the same immutable
-file hold one copy per process (:func:`pinned`), which leaves memory
-when no reader's LRU holds it. A file written before the build sorted
-this way is sorted once, when it is pinned. Files with more rows than
-the planners' metadata cap are never pinned; they are streamed with the
-term filter pushed down. The reader also decodes chunk payloads
+:class:`SegmentReader` lists the bucket files once and pins the files
+it reads, up to a byte cap: each read whole, payloads included, as one
+record batch with a :class:`TermRuns` index of where its terms' rows
+lie, so a term's rows are a zero-copy slice. ``search_local``, the
+driver-planned ``search()``/``batch_search`` metadata read and their
+payload decodes (:meth:`SegmentReader.decode_keys`) all read through
+it. A pinned file is shared: readers over the same immutable file hold
+one copy per process (:func:`pinned`), which leaves memory when no
+reader holds it. A file written before the build sorted this way is
+sorted once, when it is pinned. A reader evicts nothing: once it holds
+its byte cap, files it does not hold are streamed with the term filter
+pushed down, as are files with more rows than the planners' metadata
+cap and, in a capped read, files past the cap's worth of rows. The
+reader also decodes chunk payloads
 (tombstone-masked, per reader) into a count-capped cache.
 :class:`ChunkRows` holds one term set's chunk rows together with the
 per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
@@ -34,7 +36,6 @@ import os
 import re
 import threading
 import weakref
-from collections import OrderedDict
 
 import numpy as np
 
@@ -277,7 +278,7 @@ class PinnedFile:
 # the one pinned copy of each chunk file in this process, keyed by the
 # file's identity (path, st_mtime_ns, st_size): readers over the same
 # immutable file share it, a file rewritten in place gets a new key, and
-# a copy leaves memory when no reader's LRU holds it any more
+# a copy leaves memory when no reader holds it any more
 _PINNED: "weakref.WeakValueDictionary[tuple, PinnedFile]" = (
     weakref.WeakValueDictionary()
 )
@@ -322,11 +323,11 @@ def pinned(path: str) -> PinnedFile:
 
 class SegmentReader:
     """The driver's pyarrow reader of one parquet segment's chunks: the
-    bucket file listing; a byte-capped LRU of pinned files
-    (``SE_LOCAL_CACHE_MB``, default 512, charged with the full size of
-    every file this reader holds, shared or not), admitting files of at
-    most ``pin_rows`` rows (the planners' METADATA_CAP) by their footer
-    row count; the decoded-chunk cache and the tombstone mask
+    bucket file listing; the files it pins (:meth:`table`), held for the
+    reader's life and admitted while it holds less than
+    ``SE_LOCAL_CACHE_MB`` (default 512; charged with the full size of
+    every file it holds, shared or not), so the cap is passed by at most
+    one file; the decoded-chunk cache and the tombstone mask
     (``deleted``: sorted int64 doc ids, or None), both this reader's
     own, since decoded postings are masked by its engine's deletes."""
 
@@ -343,7 +344,7 @@ class SegmentReader:
         # one pyarrow dataset per streamed file, built on first read: a
         # dataset re-discovers its file and footer when rebuilt
         self._datasets: dict = {}
-        self._tables: "OrderedDict[str, PinnedFile]" = OrderedDict()
+        self._tables: dict[str, PinnedFile] = {}
         self._bytes = 0
         self.decoded: dict[tuple, tuple] = {}
         # decode calls (decoded-cache misses) since construction
@@ -386,40 +387,46 @@ class SegmentReader:
             paths += by_bucket.get(b, ())
         return paths
 
-    def table(self, terms: list[str], cap: int | None = None):
+    def table(self, terms: list[str], cap: int | None = None,
+              payloads: bool = True):
         """The chunk rows of ``terms`` as one pyarrow table (bucket by
         bucket, file by file, each file's rows in (term, salt, chunk_seq)
-        order); None for an index without data files, or as soon as more
-        than ``cap`` rows have been read — so an above-cap term set (a
-        stop word owning ~10^8 chunks) costs the driver at most ``cap``
-        rows plus one record batch or one file of at most ``pin_rows``
-        rows, never its whole metadata.
+        order), carrying the payload columns unless ``payloads`` is
+        False; None for an index without data files, or as soon as more
+        than ``cap`` rows have been read.
 
-        Every file of at most ``pin_rows`` rows is served from the LRU
-        (pinned on first use, :meth:`_pinned`): each term's run is a
-        zero-copy slice, with no scan of its other rows. A larger file
-        is streamed with the term filter pushed down and dropped after
-        use. Without ``cap`` the rows carry payloads; with it (the
-        planners' metadata read) they carry metadata only, so a streamed
-        above-cap read holds no payload bytes."""
+        A pinned file serves each term's run as a zero-copy slice (its
+        :class:`TermRuns` index), with no scan of its other rows. Another
+        file is pinned when :meth:`_admits` it, else streamed with the
+        term filter pushed down and dropped after use (re-reading whole
+        the files an evicting cache drops made ``search()`` ~1.75x
+        slower than streaming them: a 27 MB pinned index under a 2-8 MB
+        cap, 4-core host). So an above-cap term set (a stop word owning
+        ~10^8 chunks) costs the driver at most ``cap`` rows of files it
+        pins plus ``cap`` rows and one record batch streamed, never its
+        whole metadata."""
         import pyarrow as pa
         import pyarrow.dataset as pa_ds
 
         if not self.has_data:
             return None
-        cols = META_COLS + (PAYLOAD_COLS if cap is None else [])
+        cols = META_COLS + (PAYLOAD_COLS if payloads else [])
         by_bucket = self._listing()
         of_bucket: dict[int, list[str]] = {}
         for t in dict.fromkeys(terms):
             of_bucket.setdefault(term_bucket(t, self.bucket_count), []).append(t)
-        batches, n_rows = [], 0
+        batches, n_rows, pinned_rows = [], 0, 0
         for b in sorted(of_bucket):
             bterms = of_bucket[b]
             keys = term_keys(bterms)
             for path in by_bucket.get(b, ()):
-                pf = self._pinned(path)
+                pf = self._tables.get(path)
+                if pf is None and self._admits(path, cap, pinned_rows):
+                    pf = self._tables[path] = pinned(path)
+                    self._bytes += pf.nbytes
+                    pinned_rows += self.file_rows(path)
                 if pf is not None:
-                    batch = pf.batch if cap is None else pf.batch.select(cols)
+                    batch = pf.batch if payloads else pf.batch.select(cols)
                     parts = pf.runs.slices(batch, bterms, keys)
                 else:
                     parts = self._read(
@@ -433,28 +440,25 @@ class SegmentReader:
         schema = pa.schema([self._schema.field(c) for c in cols])
         return pa.Table.from_batches(batches, schema)
 
-    def _pinned(self, path: str) -> PinnedFile | None:
-        """The LRU's copy of ``path``, marked most recently used; a file
-        not in it joins it from :func:`pinned` when its footer counts at
-        most ``pin_rows`` rows, evicting least recently used files above
-        the byte cap; None for a larger file (never pinned)."""
-        pf = self._tables.get(path)
-        if pf is not None:
-            self._tables.move_to_end(path)
-            return pf
+    def file_rows(self, path: str) -> int:
+        """Row count of one data file, from its footer (read once)."""
         n = self._n_rows.get(path)
         if n is None:
             import pyarrow.parquet as pq
 
             n = self._n_rows[path] = pq.read_metadata(path).num_rows
-        if n > self.pin_rows:
-            return None
-        pf = self._tables[path] = pinned(path)
-        self._bytes += pf.nbytes
-        while self._bytes > self.cap_bytes and len(self._tables) > 1:
-            _, old = self._tables.popitem(last=False)
-            self._bytes -= old.nbytes
-        return pf
+        return n
+
+    def _admits(self, path: str, cap: int | None, pinned_rows: int) -> bool:
+        """Whether :meth:`table` pins ``path``: a file of at most
+        ``pin_rows`` rows, while this reader holds less than its byte
+        cap and, under the read's ``cap``, while the files the read has
+        pinned hold at most ``cap`` rows with it."""
+        n = self.file_rows(path)
+        return (
+            n <= self.pin_rows and self._bytes < self.cap_bytes
+            and (cap is None or pinned_rows + n <= cap)
+        )
 
     def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,
@@ -492,7 +496,7 @@ class SegmentReader:
 
     def chunk(self, cr: ChunkRows, row: int) -> tuple:
         """(doc_ids int64, tfs, doc_lengths) of one row of ``cr`` (read
-        without a cap, so carrying payloads), tombstoned ids masked."""
+        with payloads), tombstoned ids masked."""
         key = cr.key(row)
         got = self.decoded.get(key)
         if got is None:
@@ -524,24 +528,19 @@ class SegmentReader:
         if not missing or not self.has_data:
             return out
         terms = sorted({t for t, _s, _c in missing})
-        tbl = self.table(terms)
-        found = zip(
-            tbl.column("term").to_pylist(),
-            tbl.column("salt").to_pylist(),
-            tbl.column("chunk_seq").to_pylist(),
-        )
-        rows, picked = [], []
-        for i, key in enumerate(found):
-            if key in missing:
-                rows.append(i)
-                picked.append(key)
-        part = tbl.select(PAYLOAD_COLS).take(pa.array(rows, pa.int64()))
-        cols = {c: part.column(c).to_pylist() for c in PAYLOAD_COLS}
-        for i, key in enumerate(picked):
-            out[key] = self._remember(key, self._decode(
-                cols["payload"][i], cols["codec"][i], cols["dls"][i]
-            ))
-        if any(self._n_rows[p] > self.pin_rows for p in self._paths(terms)):
+        for batch in self.table(terms).to_batches():
+            codec, payload, dls = (batch.column(c) for c in PAYLOAD_COLS)
+            found = zip(
+                batch.column("term").to_pylist(),
+                batch.column("salt").to_pylist(),
+                batch.column("chunk_seq").to_pylist(),
+            )
+            for i, key in enumerate(found):
+                if key in missing:
+                    out[key] = self._remember(key, self._decode(
+                        payload[i].as_py(), codec[i].as_py(), dls[i].as_py()
+                    ))
+        if any(p not in self._tables for p in self._paths(terms)):
             # a streamed read's transient buffers (every payload of the
             # rows read) go back to the OS now: left to jemalloc's lazy
             # decay, their purge lands in the next Arrow allocations —

@@ -314,10 +314,10 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     eng = QueryEngine(spark, idx)
     q = "w0 w1 w2"
     terms = q.split()
-    assert eng._reader.table(terms, cap=cap) is None
+    assert eng._reader.table(terms, cap=cap, payloads=False) is None
     assert sum(meta_rows[:-1]) <= cap < sum(meta_rows)
     stopped_at = sum(meta_rows)
-    assert eng._reader.table(terms).num_rows > stopped_at
+    assert eng._reader.table(terms, payloads=False).num_rows > stopped_at
 
     meta_rows.clear()
     for _ in range(2):
@@ -325,6 +325,35 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
         assert eng.last_plan_stats["pruner"] == "banded_wand"
         assert_rank_identical(got, oracle.topk(q, k=10))
     assert sum(meta_rows) == stopped_at  # first query only
+
+
+def test_capped_read_pins_at_most_cap_rows(spark, corpus, monkeypatch):
+    """Under a cap far below ``pin_rows``, an above-cap term set spread
+    over several small files returns None having pinned files of at most
+    ``cap`` rows together; the files past that budget are streamed
+    (metadata only), not read whole."""
+    idx, _docs, _oracle = corpus
+    terms = ["w0", "w1", "w2"]
+    probe = QueryEngine(spark, idx)._reader
+    n_match = probe.table(terms, payloads=False).num_rows
+    sizes = [probe.file_rows(p) for p in probe._paths(terms)]
+    cap = n_match - 1
+    assert len(sizes) > 2 and min(sizes) <= cap < sum(sizes)
+    streamed = []
+    read = segment.SegmentReader._read
+
+    def spy(self, paths, cols, expr):
+        streamed.extend(paths)
+        assert "payload" not in cols
+        return read(self, paths, cols, expr)
+
+    monkeypatch.setattr(segment.SegmentReader, "_read", spy)
+    reader = QueryEngine(spark, idx)._reader
+    assert reader.pin_rows > cap
+    assert reader.table(terms, cap=cap, payloads=False) is None
+    held = [reader.file_rows(p) for p in reader._tables]
+    assert held and sum(held) <= cap
+    assert streamed and not set(streamed) & set(reader._tables)
 
 
 def test_driver_jobs_match_started_jobs(spark, corpus):
@@ -446,6 +475,11 @@ def entry_points(spark, corpus, segments):
         "batch_search": lambda **kw: eng.batch_search([(0, q)], **kw),
         "multi.search": lambda **kw: multi.search(q, **kw),
         "multi.search_local": lambda **kw: multi.search_local(q, **kw),
+        "multi.search_not": lambda **kw: multi.search_not(q, "w1", **kw),
+        # no segment holds the term: refused before any segment is asked
+        "multi.search_not[unindexed]": lambda **kw: multi.search_not(
+            "nosuchterm", "w1", **kw
+        ),
     }
 
 

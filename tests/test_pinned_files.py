@@ -1,7 +1,7 @@
-"""The driver paths' shared file LRU: ``search()``, ``batch_search`` and
-``search_local`` all read chunk rows through the engine's SegmentReader,
-whose LRU pins whole files, and engines over the same immutable file
-share one pinned copy of it. Deletes stay per engine: a pinned file
+"""The driver paths' shared pinned files: ``search()``, ``batch_search``
+and ``search_local`` all read chunk rows through the engine's
+SegmentReader, which pins whole files up to its byte cap, and engines
+over the same immutable file share one pinned copy of it. Deletes stay per engine: a pinned file
 holds encoded postings, each reader masks its own tombstones."""
 
 import gc
@@ -84,6 +84,27 @@ def test_warm_search_and_batch_read_no_file(spark, corpus, file_reads):
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
     for qid, q in BATCH:
         assert_rank_identical(warm[1].get(qid, []), oracle.topk(q, k=10))
+
+
+def test_full_reader_streams_without_evicting(spark, corpus, file_reads):
+    """A reader that holds its byte cap pins no further file and evicts
+    none: the files it does not hold are streamed, and every driver path
+    still matches the oracle."""
+    idx, _docs, oracle = corpus
+    eng = QueryEngine(spark, idx)
+    eng._reader.cap_bytes = 1  # the first file pinned fills it
+    got = [rows_of(eng.search(q, mode=mode, k=10)) for q, mode in QUERIES]
+    held = dict(eng._reader._tables)
+    assert len(held) == 1
+    local = [eng.search_local(q, mode=mode, k=10) for q, mode in QUERIES]
+    batch = batch_rows(eng.batch_search(BATCH, k=10))
+    assert eng._reader._tables == held
+    assert set(file_reads) - set(held)
+    for g, l, (q, mode) in zip(got, local, QUERIES):
+        assert_rank_identical(g, oracle.topk(q, mode=mode, k=10))
+        assert_rank_identical(l, oracle.topk(q, mode=mode, k=10))
+    for qid, q in BATCH:
+        assert_rank_identical(batch.get(qid, []), oracle.topk(q, k=10))
 
 
 def test_engines_share_one_copy(spark, corpus, file_reads):
