@@ -24,8 +24,12 @@ All integers little-endian. Values passed to Simple9 must fit in 28 bits;
 10^12-doc scale with sparse terms) — the codec id is stored out-of-band in
 the chunk table, so the common-case payload stays reference-identical.
 
-These run inside Arrow-batched pandas UDFs; per-chunk numpy keeps the work
-vectorized at the 128-posting granularity.
+* ``encode_chunk_batch`` / ``decode_chunk_batch`` — many chunks at once,
+  vectorized across chunks (the build's encode; the driver's pinned files
+  and the Spark decode UDF, one call per file or record batch).
+
+These run inside Arrow-batched UDFs and on the driver; numpy keeps the
+work vectorized per chunk, or across chunks for the batch codecs.
 """
 
 from __future__ import annotations
@@ -516,6 +520,198 @@ def encode_chunk_batch(
         payloads.append(bytes(head) + wbytes[wb[c] : wb[c + 1]] + tf_payloads[c])
     codec_ids = np.where(fallback, CODEC_VB_FALLBACK, CODEC_SIMPLE9)
     return codec_ids, payloads
+
+
+def _binary_rows(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(bytes zero-padded by 16, row starts, row ends) of an Arrow
+    binary column, read from its buffers (any array offset)."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    elif not isinstance(col, pa.Array):
+        col = pa.array(col, pa.binary())
+    n = len(col)
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(col.buffers()[1], odt)[col.offset:col.offset + n + 1]
+    offs = offs.astype(np.int64)
+    data = col.buffers()[2]
+    size = int(offs[-1]) if n else 0
+    buf = np.zeros(size + 16, dtype=np.uint8)
+    if size:
+        buf[:size] = np.frombuffer(data, np.uint8)[:size]
+    return buf, offs[:-1], offs[1:]
+
+
+def _unaligned(buf: np.ndarray, nbytes: int) -> np.ndarray:
+    """``buf`` read as a little-endian unsigned int of ``nbytes`` bytes
+    at every byte offset: a view, so a gather of ``m`` such ints reads
+    ``m`` items, not ``m * nbytes`` bytes (``buf`` ends in padding)."""
+    if nbytes == 1:
+        return buf
+    return np.ndarray(
+        (len(buf) - nbytes + 1,), f"<u{nbytes}", buf, strides=(1,)
+    )
+
+
+def _strided(view: np.ndarray, lo: np.ndarray, count: np.ndarray,
+             step: int) -> np.ndarray:
+    """``view[lo[r] + step * j]`` for ``j < count[r]``, row after row."""
+    head = np.cumsum(count) - count
+    return view[
+        np.repeat(lo - step * head, count)
+        + step * np.arange(int(count.sum()), dtype=np.int64)
+    ]
+
+
+def _var_bytes_at(
+    buf: np.ndarray, pos: np.ndarray, end: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """One varbyte int at each of ``pos`` (rows ending at ``end``):
+    (values, positions after them), one step per byte of the longest,
+    each over the rows still unfinished."""
+    vals = np.zeros(len(pos), dtype=np.uint64)
+    after = pos.copy()
+    live = np.arange(len(pos))
+    for i in range(10):  # a 64-bit value takes at most 10 bytes
+        b = buf[np.minimum(pos[live] + i, len(buf) - 1)]
+        vals[live] |= (b & 0x7F).astype(np.uint64) << np.uint64(7 * i)
+        stop = b >= 0x80
+        after[live[stop]] += i + 1
+        live = live[~stop]
+        if not len(live):
+            break
+    if len(live) or (after > end).any():
+        raise ValueError("corrupt chunk payload: varbyte past its row")
+    return vals, after
+
+
+# bytes per value of a bit_packing section, by its width byte, and the
+# mask that keeps that many low bytes of a little-endian uint64
+_WIDTH_BYTES = np.select(
+    [np.arange(256) <= 8, np.arange(256) <= 16, np.arange(256) <= 32],
+    [1, 2, 4], 8,
+)
+_BYTES_MASK = np.array(
+    [0, 0xFF, 0xFFFF, 0, 0xFFFFFFFF, 0, 0, 0, 2**64 - 1], dtype=np.uint64
+)
+
+
+def _bitpack_at(
+    buf: np.ndarray, pos: np.ndarray, end: np.ndarray, counts: np.ndarray
+) -> np.ndarray:
+    """The :func:`bit_packing` sections at ``pos`` (rows ending at
+    ``end``), each holding ``counts`` values, concatenated as uint64:
+    every value read as the uint64 at its address, masked to its row's
+    byte width."""
+    width = buf[pos]
+    n = np.where(width > 0, _unaligned(buf, 8)[pos + 1], 0).astype(np.int64)
+    if (n != counts).any():
+        raise ValueError("corrupt chunk payload: bit-packed count mismatch")
+    nb = _WIDTH_BYTES[width]
+    lo = pos + 9
+    if (lo + n * nb > end).any():
+        raise ValueError("bit-packed section truncated")
+    head = np.cumsum(n) - n
+    step = np.repeat(nb, n)
+    at = np.repeat(lo - nb * head, n) + step * np.arange(len(step))
+    return _unaligned(buf, 8)[at] & _BYTES_MASK[step]
+
+
+def decode_chunk_batch(
+    payload, codec, dls
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY chunks at once — the vectorized inverse of
+    :func:`encode_chunk_batch` plus :func:`encode_lengths`.
+
+    ``payload`` and ``dls`` are Arrow binary columns (any offset) of the
+    same rows, ``codec`` their codec ids. Returns (doc_ids, tfs,
+    doc_lengths, offsets): every row's postings concatenated in row
+    order, as uint64, row ``r`` spanning ``[offsets[r], offsets[r+1])``
+    — per row equal to :func:`decode_chunk` and :func:`decode_lengths`.
+
+    The varbyte headers are read for every row at once. The Simple9
+    words are read as one flat candidate array: a chunk of ``g`` gaps
+    spans at most ``g`` words, so its first ``g`` words (cut at its
+    row's end) are read and a per-chunk running sum of their capacities
+    says which are its own — a word whose selector is not a Simple9
+    class raises ValueError, as does a row too short for its postings.
+    The tf and doc-length sections are gathered by byte width. Rows of
+    the varbyte fallback codec go through :func:`decode_chunk`."""
+    buf, start, end = _binary_rows(payload)
+    codec = np.asarray(
+        codec.to_numpy(zero_copy_only=False)
+        if hasattr(codec, "to_numpy") else codec,
+        dtype=np.int64,
+    )
+    rows = len(start)
+    bad = (codec != CODEC_SIMPLE9) & (codec != CODEC_VB_FALLBACK)
+    if bad.any():
+        raise ValueError(f"unknown codec id {int(codec[bad][0])}")
+    base, pos = _var_bytes_at(buf, start, end)
+    ngaps, pos = _var_bytes_at(buf, pos, end)
+    if (ngaps >= (end - start).astype(np.uint64)).any():
+        # every posting takes at least one byte of the tf section
+        raise ValueError("corrupt chunk payload: posting count past its row")
+    ngaps = ngaps.astype(np.int64)
+    counts = ngaps + 1
+    offsets = np.zeros(rows + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    total = int(offsets[-1])
+
+    # Simple9 words: each row's first min(g, bytes left // 4) words
+    s9 = codec == CODEC_SIMPLE9
+    g = np.where(s9, ngaps, 0)
+    cand = np.minimum(g, np.maximum(end - pos, 0) // 4)
+    wfirst = np.zeros(rows + 1, dtype=np.int64)
+    np.cumsum(cand, out=wfirst[1:])
+    wrow = np.repeat(np.arange(rows), cand)
+    words = _strided(_unaligned(buf, 4), pos, cand, 4).astype(np.uint64)
+    sel = (words & np.uint64(0xF)).astype(np.int64)
+    cap = _SEL_NITEMS[np.minimum(sel, len(_SELECTORS) - 1)]
+    cum = np.cumsum(cap)
+    before = cum - cap - np.append(0, cum)[wfirst[:-1]][wrow]
+    own = before < g[wrow]
+    per_row = np.bincount(wrow[own], weights=cap[own], minlength=rows)
+    if (per_row < g).any():
+        raise ValueError("corrupt Simple9 payload: truncated")
+    if (sel[own] >= len(_SELECTORS)).any():
+        raise ValueError("corrupt Simple9 payload: invalid selector")
+    words, sel, before, wrow = words[own], sel[own], before[own], wrow[own]
+    take = np.minimum(_SEL_NITEMS[sel], g[wrow] - before)
+    vfirst = np.zeros(len(take) + 1, dtype=np.int64)
+    np.cumsum(take, out=vfirst[1:])
+    slot = np.arange(int(vfirst[-1]), dtype=np.int64) - np.repeat(
+        vfirst[:-1], take
+    )
+    nbits = np.repeat(_SEL_NBITS[sel], take).astype(np.uint64)
+    gaps = (
+        np.repeat(words >> np.uint64(4), take) >> (slot.astype(np.uint64) * nbits)
+    ) & ((np.uint64(1) << nbits) - np.uint64(1))
+
+    # doc ids: base, then gaps, summed per row (uint64 sums wrap, so the
+    # difference of two running sums is exact)
+    ids = np.zeros(total, dtype=np.uint64)
+    ids[offsets[:-1]] = base
+    ids[np.repeat(offsets[:-1][wrow] + 1 + before, take) + slot] = gaps
+    run = np.cumsum(ids)
+    head = offsets[:-1]
+    ids = run - np.repeat(run[head] - ids[head], counts)
+    pos = pos + 4 * np.bincount(wrow, minlength=rows)
+
+    tfs = np.empty(total, dtype=np.uint64)
+    tfs[np.repeat(s9, counts)] = _bitpack_at(
+        buf, pos[s9], end[s9], counts[s9]
+    )
+    for r in np.flatnonzero(~s9).tolist():
+        got, tf = decode_chunk(buf[start[r]:end[r]].tobytes(), int(codec[r]))
+        if not len(got) == len(tf) == counts[r]:
+            raise ValueError("corrupt chunk payload: posting count mismatch")
+        ids[offsets[r]:offsets[r + 1]] = got
+        tfs[offsets[r]:offsets[r + 1]] = tf
+    dbuf, dstart, dend = _binary_rows(dls)
+    lengths = _bitpack_at(dbuf, dstart, dend, counts)
+    return ids, tfs, lengths, offsets
 
 
 def encode_lengths(doc_lengths: np.ndarray) -> bytes:

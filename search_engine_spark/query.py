@@ -25,16 +25,17 @@ to exhaustive evaluation.
 Physical plan of ``search()``, below METADATA_CAP on the parquet
 layout — answered on the driver, ZERO Spark jobs:
     SegmentReader (segment.py): the query terms' chunk metadata as
-      slices of its pinned, term-sorted bucket files (the same files
-      ``search_local`` reads) -> lexicon stats + per-term block-max
-      bounds, no lexicon job
+      array slices of its pinned, term-sorted bucket files, each
+      decoded once when pinned (the same files ``search_local``
+      reads) -> lexicon stats + per-term block-max bounds, no lexicon
+      job
     WAND sweep -> elementary segments; theta from the metadata alone
       when the chunk bounds separate, else the k-th best score of a
       phase-1 decode of the top-bound segments' chunks
       (conjunctive: the rare pivot's doc ids replace the sweep)
-    the surviving (term, salt, chunk_seq) keys, picked from the same
-      pinned files and decoded by the reader (tombstones masked),
-      masked to the kept segments
+    the surviving (term, salt, chunk_seq) keys' postings, sliced from
+      the same pinned files (tombstones masked), masked to the kept
+      segments
       (or the pivot's candidates), scored and cut to the top k in numpy
       (``_score_local``, the one driver-side scorer; the phase-1 probe
       is the same call with the probe's keys)
@@ -178,13 +179,18 @@ def local_frame(spark, schema: str, columns: dict | None = None) -> DataFrame:
 MODES = ("disjunctive", "conjunctive")
 
 
-def check_k_mode(k, mode) -> None:
+def check_mode(mode) -> None:
+    """Refuse, with ValueError, a ``mode`` other than ``MODES``."""
+    if not isinstance(mode, str) or mode not in MODES:
+        raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
+
+
+def check_k_mode(k, mode: str = MODES[0]) -> None:
     """Refuse, with ValueError, a ``k`` that is not an int >= 1 (a bool
     is refused) or a ``mode`` other than ``MODES``."""
     if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
         raise ValueError(f"k must be an int >= 1, got {k!r}")
-    if not isinstance(mode, str) or mode not in MODES:
-        raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
+    check_mode(mode)
 
 
 def kth_score(top: dict | None, k: int) -> float | None:
@@ -706,16 +712,14 @@ class QueryEngine:
 
         def decode(batches):
             # Arrow-NATIVE decode (mapInArrow — same reasoning as the
-            # build's encode_partition): the pandas twin materialized a
-            # Python str PER POSTING via np.repeat(term, len(ids)) over
-            # object arrays and paid a pandas→Arrow conversion on ~10^7
-            # output rows per batch of queries. Here the only Python
-            # strings are the DISTINCT terms of the batch (dictionary-
-            # encoded in Arrow C++); the per-posting term column is a
-            # C++ dictionary gather, and every output column is a
-            # zero-copy numpy→Arrow array. Payload bytes still box per
-            # CHUNK (decode_chunk wants one buffer per chunk) — that is
-            # ~128x fewer objects than per-posting.
+            # build's encode_partition): one codecs.decode_chunk_batch
+            # call per record batch decodes every chunk into flat
+            # arrays, the tombstone, interval and candidate masks apply
+            # to those, and the postings are scored per distinct term.
+            # The only Python strings are the batch's DISTINCT terms
+            # (dictionary-encoded in Arrow C++); the per-posting term
+            # column is a C++ dictionary gather, and every output
+            # column is a zero-copy numpy→Arrow array.
             import pyarrow as pa
             import pyarrow.compute as pc
 
@@ -734,66 +738,48 @@ class QueryEngine:
                 denc = pc.dictionary_encode(
                     col["term"].cast(pa.string())
                 )
-                t_codes = denc.indices.to_numpy(zero_copy_only=False)
-                uniq = denc.dictionary.to_pylist()
-                udfs = [dfs[t] for t in uniq]
-                codec_np = col["codec"].to_numpy(zero_copy_only=False)
-                payloads = col["payload"].to_pylist()
-                dls_raw = col["dls"].to_pylist()
-                code_out, ids_out, tfs_out, dls_out, scores_out = (
-                    [],
-                    [],
-                    [],
-                    [],
-                    [],
+                ids, tfs, dl, offsets = codecs.decode_chunk_batch(
+                    col["payload"], col["codec"], col["dls"]
                 )
-                for i in range(rb.num_rows):
-                    ids, tfs = codecs.decode_chunk(
-                        payloads[i], int(codec_np[i])
+                ids = ids.view(np.int64)
+                code = np.repeat(
+                    denc.indices.to_numpy(zero_copy_only=False),
+                    np.diff(offsets),
+                )
+                keep = np.ones(len(ids), dtype=bool)
+                alive = wand.tombstone_mask(ids, deleted)
+                if alive is not None:
+                    keep &= alive
+                if lo_arr is not None:
+                    keep &= wand.ids_in_intervals(ids, lo_arr, hi_arr)
+                if candidates is not None and len(ids):
+                    pos = np.searchsorted(candidates, ids)
+                    pos_safe = np.clip(pos, 0, len(candidates) - 1)
+                    keep &= candidates[pos_safe] == ids
+                if not keep.all():
+                    ids, tfs, dl, code = (
+                        ids[keep], tfs[keep], dl[keep], code[keep]
                     )
-                    dl = codecs.decode_lengths(dls_raw[i])
-                    keep = wand.tombstone_mask(ids, deleted)
-                    if keep is not None:
-                        ids, tfs, dl = ids[keep], tfs[keep], dl[keep]
-                    if lo_arr is not None:
-                        keep = wand.ids_in_intervals(
-                            ids.astype(np.int64), lo_arr, hi_arr
-                        )
-                        if not keep.all():
-                            ids, tfs, dl = ids[keep], tfs[keep], dl[keep]
-                    if candidates is not None and len(ids):
-                        ids64 = ids.astype(np.int64)
-                        pos = np.searchsorted(candidates, ids64)
-                        pos_safe = np.clip(pos, 0, len(candidates) - 1)
-                        keep = candidates[pos_safe] == ids64
-                        if not keep.all():
-                            ids, tfs, dl = ids[keep], tfs[keep], dl[keep]
-                    if not len(ids):
-                        continue
-                    tc = int(t_codes[i])
-                    s = bm25_scores(
-                        tfs, dl, udfs[tc], n_docs, avgdl, dtype
-                    )
-                    code_out.append(
-                        np.full(len(ids), tc, dtype=np.int32)
-                    )
-                    ids_out.append(ids.astype(np.int64))
-                    tfs_out.append(tfs.astype(np.int64))
-                    dls_out.append(dl.astype(np.int64))
-                    scores_out.append(s)
-                if not ids_out:
+                if not len(ids):
                     continue
-                term_col = pc.take(
-                    denc.dictionary, pa.array(np.concatenate(code_out))
+                scores = np.empty(
+                    len(ids), np.float64 if dtype is np.float64
+                    else np.float32
                 )
+                for tc, t in enumerate(denc.dictionary.to_pylist()):
+                    sel = code == tc
+                    if sel.any():
+                        scores[sel] = bm25_scores(
+                            tfs[sel], dl[sel], dfs[t], n_docs, avgdl, dtype
+                        )
                 arrays = [
-                    term_col,
-                    pa.array(np.concatenate(ids_out)),
-                    pa.array(np.concatenate(tfs_out)),
-                    pa.array(np.concatenate(scores_out), type=score_type),
+                    pc.take(denc.dictionary, pa.array(code)),
+                    pa.array(ids),
+                    pa.array(tfs.astype(np.int64)),
+                    pa.array(scores, type=score_type),
                 ]
                 if with_dl:
-                    arrays.append(pa.array(np.concatenate(dls_out)))
+                    arrays.append(pa.array(dl.astype(np.int64)))
                 yield pa.RecordBatch.from_arrays(arrays, names)
 
         schema = f"term string, doc_id long, tf long, score {out_dtype}"
@@ -817,11 +803,12 @@ class QueryEngine:
         metadata (segment.ChunkRows): ONE read serves both the planner
         and the lexicon (df = sum of chunk n), so a query needs no
         separate lexicon job. The parquet layout reads it through the
-        SegmentReader (no Spark job): slices of the files it pins, which
-        the payload decodes of this and later queries reuse. It reads at
-        most METADATA_CAP rows of files it pins plus METADATA_CAP rows
-        and one record batch of files it streams. Iceberg collects it with one Spark job. The rows carry no
-        payloads.
+        SegmentReader (no Spark job): array slices of the decoded files
+        it pins, whose postings the driver scoring of this and later
+        queries slices. It reads at most METADATA_CAP rows of files it
+        pins plus METADATA_CAP rows and one record batch of files it
+        streams. Iceberg collects it with one Spark job. The rows carry
+        no postings.
         Returns None when the term set exceeds METADATA_CAP (callers
         fall back to the lexicon + the banded planner)."""
         if all(t in self._lex_raw_cache for t in terms):
@@ -837,10 +824,10 @@ class QueryEngine:
             if total > METADATA_CAP:
                 return None
         if self._reader is not None:
-            tbl = self._reader.table(
-                terms, cap=METADATA_CAP, payloads=False
+            cr = self._reader.rows(
+                terms, cap=METADATA_CAP, postings=False
             )
-            if tbl is None:
+            if cr is None:
                 return None
         else:
             import pyarrow as pa
@@ -852,20 +839,21 @@ class QueryEngine:
                 .limit(METADATA_CAP + 1)
                 .collect()
             )
-            tbl = pa.table({
-                c: pa.array(
+            if len(rows) > METADATA_CAP:
+                return None
+            batch = pa.record_batch([
+                pa.array(
                     [r[c] for r in rows],
                     pa.string() if c == "term"
                     else pa.float64() if c.endswith("_ratio")
                     else pa.int64(),
                 )
                 for c in segment.META_COLS
-            })
-        if tbl.num_rows > METADATA_CAP:
-            return None
-        cr = segment.ChunkRows(
-            tbl, self.n_docs, self._df_of, self._scale_max, self._scale_min
-        )
+            ], names=segment.META_COLS)
+            cr = segment.ChunkRows(
+                segment.FileRows(batch).parts(list(dict.fromkeys(terms)))
+            )
+        cr.plan(self.n_docs, self._df_of, self._scale_max, self._scale_min)
         for t, e in cr.lex.items():
             self._lex_cache_put(t, {**e, "df": cr.raw_df[t]})
         for t in terms:
@@ -2235,11 +2223,12 @@ class QueryEngine:
     ) -> dict[int, dict]:
         """The driver-side scorer, twin of the Spark decode + aggregate
         (:meth:`_keys_job`, ``batch_search``'s final job and
-        :meth:`_batch_theta`): decode exactly ``keys`` via the reader
-        (tombstones masked), score every posting once per term, and per
-        query ``qid`` of ``by_q`` (its sorted term list; a repeated term
-        counts once per occurrence, as the Spark fan-out join does) sum
-        over its terms and cut to the top ``k``.
+        :meth:`_batch_theta`): take the postings of exactly ``keys``,
+        sliced from the reader's decoded files (tombstones masked),
+        score every posting once per term, and per query ``qid`` of
+        ``by_q`` (its sorted term list; a repeated term counts once per
+        occurrence, as the Spark fan-out join does) sum over its terms
+        and cut to the top ``k``.
 
         ``ivals`` ({qid: (lo, hi)}, sorted disjoint half-open doc-id
         intervals) masks each query's postings to its own intervals —
@@ -2370,11 +2359,13 @@ class QueryEngine:
         self, query: str, mode: str = "disjunctive", k: int = 10
     ) -> list[tuple[int, float]]:
         """Low-latency driver-side path: the query terms' chunk rows as
-        slices of the SegmentReader's cached, term-sorted bucket files
+        slices of the SegmentReader's decoded, term-sorted bucket files
         (cold files are pinned, up to the reader's byte cap), then the
-        sequential block-max WAND sweep — chunks are decoded lazily in
+        sequential block-max WAND sweep — chunks' postings are read in
         descending segment-bound order and skipped entirely once they
-        cannot reach the top-k threshold."""
+        cannot reach the top-k threshold. ``last_local_stats``
+        ["chunks_decoded"] counts the distinct chunks whose postings the
+        query read."""
         check_k_mode(k, mode)
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(
@@ -2391,12 +2382,10 @@ class QueryEngine:
             return []
         # repeated terms serve from the reader's pinned files, cold
         # terms read through
-        tbl = self._reader.table(terms)
-        if tbl is None or not tbl.num_rows:
+        cr = self._reader.rows(terms)
+        if cr is None or not cr.n_rows:
             return []
-        cr = segment.ChunkRows(
-            tbl, self.n_docs, self._df_of, self._scale_max, self._scale_min
-        )
+        cr.plan(self.n_docs, self._df_of, self._scale_max, self._scale_min)
         # terms missing from the index were already dropped by the scan
         # filter (reference openList skip)
         metas = cr.metas
@@ -2410,18 +2399,18 @@ class QueryEngine:
             "segments_processed": 0,
         }
         self.last_local_stats = stats
-        reader = self._reader
-        n_decoded = reader.n_decoded
+        read: set[int] = set()
 
         def get_chunk(row: int):
-            # decoded-chunk cache hit, else decode (counted)
-            got = reader.chunk(cr, row)
-            stats["chunks_decoded"] = reader.n_decoded - n_decoded
-            return got
+            # a slice of the decoded postings; the distinct rows read
+            # are counted
+            read.add(row)
+            stats["chunks_decoded"] = len(read)
+            return cr.postings(row)
 
         if conj:
-            # posting-level nextGEQ (reference DAAT semantics): decode
-            # the rarest term fully, then for every other term decode
+            # posting-level nextGEQ (reference DAAT semantics): read
+            # the rarest term fully, then for every other term read
             # ONLY the chunks that contain a surviving candidate —
             # score-bound segments cannot express this granularity
             return self._local_conjunctive(
@@ -2527,7 +2516,7 @@ class QueryEngine:
         stats: dict,
     ) -> list[tuple[int, float]]:
         """Pivot-driven conjunctive DAAT: candidates = the rarest term's
-        postings; every other term (rarest first) decodes only chunks
+        postings; every other term (rarest first) reads only chunks
         containing a surviving candidate, shrinking the candidate set as
         it goes. Exact evaluation — no threshold needed."""
         by_df = sorted(present, key=lambda t: (dfs[t], t))
@@ -2604,6 +2593,7 @@ class QueryEngine:
         sum at output (documented deviation: no reference float32
         accumulation exists to mirror for phrases).
         """
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         seq = tokenize_text(phrase)
@@ -2645,6 +2635,7 @@ class QueryEngine:
         ``window=1`` degenerates to "single position", i.e. only
         single-term queries can match; ``window`` < 1 is an error.
         """
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         if window < 1:
@@ -2703,6 +2694,7 @@ class QueryEngine:
         the "no further occurrence" case). Scoring/top-k identical:
         distinct-term BM25, deterministic (score desc, doc_id asc).
         """
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         if window < 1:
@@ -2813,6 +2805,7 @@ class QueryEngine:
         metadata cap), so a short prefix over a web-scale vocabulary
         stays a bounded plan instead of a vocabulary-sized one.
         """
+        check_k_mode(k)
         plain, stems = parse_wildcard_query(query)
         terms: set[str] = set(plain)
         for stem in stems:
@@ -2860,6 +2853,7 @@ class QueryEngine:
         exact plan; tombstoned docs are masked inside the decode like
         every other query path.
         """
+        check_mode(mode)
         terms = tokenize_query(query)
         empty = self.spark.createDataFrame([], "facet string, n_docs long")
         if not terms:
@@ -2985,6 +2979,7 @@ class QueryEngine:
         O(max_terms)-bounded regardless of corpus size. Returns
         (doc_id, score) like ``search``.
         """
+        check_k_mode(k, mode)
         from .tokenizer import tokenize_text
 
         empty = self.spark.createDataFrame(
@@ -3091,6 +3086,7 @@ class QueryEngine:
         per-host reduction is one partial-aggregating shuffle keyed on
         the host (hosts << docs) and never materializes a global sort.
         """
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         out_t = "double" if dtype is np.float64 else "float"
         empty = self.spark.createDataFrame(
@@ -3273,6 +3269,7 @@ class QueryEngine:
         idf). Terms with an empty neighborhood drop, mirroring the
         openList skip on unindexed exact terms.
         """
+        check_k_mode(k)
         got = self._fuzzy_candidates(tokenize_query(query), max_expansions)
         terms = {c for lst in got.values() for c, _ in lst}
         if not terms:
@@ -3745,6 +3742,7 @@ class MultiIndexQueryEngine:
         segment missing a globally-indexed term would otherwise drop
         it locally and count docs that do not match the full query.
         Bloom-pruned, exact-lookup-gated, like ``search``."""
+        check_mode(mode)
 
         def _one(e):
             return [
@@ -3805,6 +3803,7 @@ class MultiIndexQueryEngine:
         a term whose global df clears the cut). The union of plain
         tokens and expansions then scores as one multi-segment
         disjunctive query under global stats."""
+        check_k_mode(k)
         plain, stems = parse_wildcard_query(query)
         terms: set[str] = set(plain)
         for stem in stems:
@@ -3860,6 +3859,7 @@ class MultiIndexQueryEngine:
         neighborhoods from the merged segment side tables
         (``_fuzzy_merged``), the union scored as one multi-segment
         disjunctive query — the single-engine rewrite, global."""
+        check_k_mode(k)
         got = self._fuzzy_merged(tokenize_query(query), max_expansions)
         terms = {c for lst in got.values() for c, _ in lst}
         if not terms:
@@ -3953,6 +3953,7 @@ class MultiIndexQueryEngine:
         scatter-gathered like ``search`` — rank-identical to a
         positional union index. Needs every segment built with
         ``store_positions=True``."""
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         flags = self._positional_flags(tokenize_text(phrase))
@@ -3967,6 +3968,7 @@ class MultiIndexQueryEngine:
         """Multi-segment NEAR-window query (see
         ``QueryEngine.proximity_search``); union-rank-identical via
         the same global-stats scatter-gather as ``phrase_search``."""
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         flags = self._positional_flags(tokenize_text(query))
@@ -3983,6 +3985,7 @@ class MultiIndexQueryEngine:
         """Multi-segment ordered-window (#odN) query (see
         ``QueryEngine.ordered_window_search``); same scatter-gather
         contract as the other positional operators."""
+        check_k_mode(k)
         from .tokenizer import tokenize_text
 
         flags = self._positional_flags(tokenize_text(query))
@@ -4044,6 +4047,7 @@ class MultiIndexQueryEngine:
         segment's per-host (max-score, min-id) winner is the global
         winner restricted to that segment. Same union-identity
         contract as ``search``; same conjunctive eligibility gate."""
+        check_k_mode(k, mode)
         terms = tokenize_query(query)
         out_t = "double" if dtype is np.float64 else "float"
         schema = f"doc_id long, host string, score {out_t}"
@@ -4160,6 +4164,7 @@ class MultiIndexQueryEngine:
         the top tf·idf terms run as a multi-segment query with the
         seed excluded. Same Lucene MLT semantics as the single
         engine, evaluated against the union vocabulary."""
+        check_k_mode(k, mode)
         from .tokenizer import tokenize_text
 
         empty = self.spark.createDataFrame(

@@ -1,28 +1,37 @@
 """Driver-side reader of one index segment's ``chunks`` stage (parquet
-layout) — the pyarrow view every driver-side query path shares.
+layout) — the numpy view every driver-side query path shares.
 
 The chunks stage is hive-partitioned by term bucket, and every file is
 sorted by (term, salt, chunk_seq): the build's sort key starts with
 ``bucket``, so Spark's partitioned writer keeps the order. A
 :class:`SegmentReader` lists the bucket files once and pins the files
-it reads, up to a byte cap: each read whole, payloads included, as one
-record batch with a :class:`TermRuns` index of where its terms' rows
-lie, so a term's rows are a zero-copy slice. ``search_local``, the
-driver-planned ``search()``/``batch_search`` metadata read and their
-payload decodes (:meth:`SegmentReader.decode_keys`) all read through
-it. A pinned file is shared: readers over the same immutable file hold
-one copy per process (:func:`pinned`), which leaves memory when no
-reader holds it. A file written before the build sorted this way is
-sorted once, when it is pinned. A reader evicts nothing: once it holds
-its byte cap, files it does not hold are streamed with the term filter
+it reads, up to a byte cap. A pinned file (:class:`FileRows`) is read
+whole and decoded once (:func:`codecs.decode_chunk_batch`): its
+metadata columns as numpy arrays, its postings as flat ``doc_ids``,
+``tfs`` and ``dls`` arrays with each row's bounds in them, and a
+:class:`TermRuns` index of where its terms' rows lie; the payload bytes
+are dropped. So a term's chunk rows are array slices, and a chunk's
+postings are slices too: nothing is decoded per query.
+
+Pinned files are shared: readers over the same immutable file hold one
+copy per process (:func:`pinned`), which leaves memory when no reader
+holds it. A file written before the build sorted this way is sorted
+once, when it is pinned. A reader evicts nothing: once it holds its
+byte cap, files it does not hold are streamed with the term filter
 pushed down, as are files with more rows than the planners' metadata
-cap and, in a capped read, files past the cap's worth of rows. The
-reader also decodes chunk payloads
-(tombstone-masked, per reader) into a count-capped cache.
-:class:`ChunkRows` holds one term set's chunk rows together with the
-per-term block-max metadata (``wand.TermChunks`` + lexicon stats)
-that ``search_local``, the driver-planned ``search()``/``batch_search``
-and the Spark-collected metadata fallback all plan from.
+cap and, in a capped read, files past the cap's worth of rows; the
+rows one read streams (only its terms' rows) are decoded together for
+that read and then dropped.
+
+:meth:`SegmentReader.rows` returns one term set's rows as
+:class:`ChunkRows`, which every driver path reads: ``search_local``,
+the driver-planned ``search()``/``batch_search`` metadata and their
+driver scoring (:meth:`SegmentReader.decode_keys`). It masks the
+postings it hands out with its reader's tombstones (per engine: the
+shared copy holds every posting), and :meth:`ChunkRows.plan` adds the
+per-term block-max metadata (``wand.TermChunks`` + lexicon stats) the
+planners work from, which the Spark-collected metadata of an Iceberg
+index feeds too.
 
 The index an engine serves is immutable (mutations reopen the engine),
 so nothing cached here goes stale; a file rewritten in place has a new
@@ -41,9 +50,6 @@ import numpy as np
 
 from . import codecs, wand
 from .build import term_bucket
-
-# shared decoded-chunk cache size (driver-side paths); epoch flush
-DECODED_CACHE_CAP = 131072
 
 META_COLS = [
     "term", "salt", "chunk_seq", "first_doc_id", "last_doc_id", "n",
@@ -98,84 +104,6 @@ def keys_sql(keys) -> str:
     )
 
 
-class ChunkRows:
-    """Chunk rows of one term set (a pyarrow table, one row per chunk)
-    plus what the planners read from them: ``metas`` (term ->
-    ``wand.TermChunks`` whose ``rows`` index this table), ``lex``
-    (term -> df under ``df_of``, n_chunks, doc-id span) and
-    ``raw_df`` (segment-local df).
-
-    ``scale_max``/``scale_min`` rescale the stored ratio bounds under a
-    foreign avgdl (see ``QueryEngine.__init__``)."""
-
-    def __init__(self, tbl, n_docs: int, df_of, scale_max: float,
-                 scale_min: float):
-        import pyarrow.compute as pc
-
-        self.table = tbl
-        self.n_rows = tbl.num_rows
-        enc = pc.dictionary_encode(tbl.column("term").combine_chunks())
-        codes = enc.indices.to_numpy(zero_copy_only=False)
-        self._dict = enc.dictionary.to_pylist()
-        self._codes = codes
-        self.salt = tbl.column("salt").to_numpy()
-        self.seq = tbl.column("chunk_seq").to_numpy()
-        self.metas: dict[str, wand.TermChunks] = {}
-        self.lex: dict[str, dict] = {}
-        self.raw_df: dict[str, int] = {}
-        if not self.n_rows:
-            return
-        col = {c: tbl.column(c).to_numpy() for c in (
-            "first_doc_id", "last_doc_id", "n", "max_ratio", "min_ratio",
-        )}
-        order = np.argsort(codes, kind="stable")
-        cuts = np.searchsorted(codes[order], np.arange(len(self._dict) + 1))
-        for i, t in enumerate(self._dict):
-            rows = order[cuts[i]:cuts[i + 1]]
-            if not len(rows):
-                continue
-            n = col["n"][rows]
-            raw = int(n.sum())
-            df = df_of(t, raw)
-            self.raw_df[t] = raw
-            self.lex[t] = {
-                "df": df,
-                "n_chunks": len(rows),
-                "min_doc_id": int(col["first_doc_id"][rows].min()),
-                "max_doc_id": int(col["last_doc_id"][rows].max()),
-            }
-            self.metas[t] = wand.TermChunks(
-                first=col["first_doc_id"][rows],
-                last=col["last_doc_id"][rows],
-                n=n,
-                bound=wand.term_chunk_bounds(
-                    wand.idf(df, n_docs),
-                    col["max_ratio"][rows] * scale_max,
-                    col["min_ratio"][rows] * scale_min,
-                ),
-                rows=rows,
-            )
-
-    def key(self, row: int) -> tuple[str, int, int]:
-        """(term, salt, chunk_seq) of one row."""
-        return (
-            self._dict[self._codes[row]], int(self.salt[row]),
-            int(self.seq[row]),
-        )
-
-    def cover_keys(self, terms: list[str], cover: np.ndarray) -> set[tuple]:
-        """Keys of every chunk covering any of the given segment rows
-        (``cover`` columns in ``terms`` order, as ``wand.sweep_segments``
-        returns them)."""
-        keys: set[tuple] = set()
-        for j, t in enumerate(terms):
-            rows = self.metas[t].rows
-            for ci in np.unique(cover[:, j]).tolist():
-                if ci >= 0:
-                    keys.add(self.key(rows[ci]))
-        return keys
-
-
 # width of a TermRuns key: longer terms keep a KEY_BYTES-byte prefix
 # (equal prefixes are told apart by the file's own term column), so one
 # long token cannot widen every key of its file
@@ -215,12 +143,12 @@ def term_keys(terms) -> np.ndarray:
 
 
 class TermRuns:
-    """Term run index of one file's rows, grouped by term: every
-    distinct term's key (:func:`term_keys`, in numpy order) with the
-    first and one-past-last row of its run, so a term's rows are found
-    by ``searchsorted`` and returned as a zero-copy slice instead of a
-    filter over every row. Arrays only: one Python object per term
-    raised the serving driver's resident memory by 8-10%."""
+    """Term run index of the rows of one file, grouped by term (its
+    ``term`` column): every distinct term's key (:func:`term_keys`, in
+    numpy order) with the first and one-past-last row of its run, so a
+    term's rows are found by ``searchsorted`` instead of a filter over
+    every row. Arrays only: one Python object per term raised the
+    serving driver's resident memory by 8-10%."""
 
     def __init__(self, term):
         import pyarrow.compute as pc
@@ -234,61 +162,271 @@ class TermRuns:
         end = np.append(start[1:], n)[: len(start)]
         keys = term_keys(term.take(start))
         order = np.argsort(keys, kind="stable")
+        self.term = term
         self.keys = keys[order]
         self.start = start[order]
         self.end = end[order]
         self.nbytes = self.keys.nbytes + self.start.nbytes + self.end.nbytes
 
-    def slices(self, batch, terms: list[str], keys: np.ndarray) -> list:
-        """The runs of the distinct ``terms`` (``keys`` their
-        :func:`term_keys`) in ``batch`` as zero-copy slices, in row
-        order; a term absent from the file has none. A query's terms are
-        spread over buckets, so a file is asked for one or two terms and
-        a scalar lookup per term is the cheapest."""
+    def find(self, terms: list[str], keys: np.ndarray) -> list:
+        """The runs ``(t, first row, end row)`` of the distinct ``terms``
+        (``keys`` their :func:`term_keys`), in row order; a term absent
+        from the file has none. A query's terms are spread over buckets,
+        so a file is asked for one or two terms and a scalar lookup per
+        term is the cheapest."""
         runs = []
         for t, key in zip(terms, keys):
             lo = int(self.keys.searchsorted(key))
             if lo == len(self.keys) or self.keys[lo] != key:
                 continue
             if key.endswith(b"\xff"):  # exact key: one run
-                runs.append((int(self.start[lo]), int(self.end[lo])))
+                runs.append((int(self.start[lo]), int(self.end[lo]), t))
                 continue
             hi = int(self.keys.searchsorted(key, side="right"))
-            term = batch.column("term")
             runs += [
-                (int(self.start[j]), int(self.end[j]))
+                (int(self.start[j]), int(self.end[j]), t)
                 for j in range(lo, hi)
-                if term[int(self.start[j])].as_py() == t
+                if self.term[int(self.start[j])].as_py() == t
             ]
-        return [batch.slice(lo, hi - lo) for lo, hi in sorted(runs)]
+        return [(t, lo, hi) for lo, hi, t in sorted(runs)]
 
 
-class PinnedFile:
-    """One chunk file read whole: its rows (payloads included) as one
-    term-sorted record batch, with their :class:`TermRuns` index."""
+def _narrow(vals: np.ndarray) -> np.ndarray:
+    """Non-negative counts in the narrowest unsigned type that holds
+    them all: tfs and doc lengths mostly fit 8 or 16 bits."""
+    top = int(vals.max()) if len(vals) else 0
+    for bits, dt in ((8, np.uint8), (16, np.uint16), (32, np.uint32)):
+        if top >> bits == 0:
+            return vals.astype(dt)
+    return vals
 
-    __slots__ = ("batch", "runs", "nbytes", "__weakref__")
 
-    def __init__(self, batch, runs: TermRuns):
-        self.batch = batch
+# rows of FileRows.ints: integer metadata, then each row's posting bounds
+INT_COLS = ["salt", "chunk_seq", "first_doc_id", "last_doc_id", "n"]
+RATIO_COLS = ["max_ratio", "min_ratio"]
+
+
+class FileRows:
+    """Chunk rows of one file, or of one streamed record batch of it,
+    as numpy arrays: ``term`` (the Arrow term column), ``ints`` (one
+    int64 row per :data:`INT_COLS` column, then the rows' posting
+    bounds ``starts`` and ``ends``), ``ratios`` (one float64 row per
+    :data:`RATIO_COLS` column) and, when read with the payload columns,
+    every row's decoded postings: flat ``doc_ids`` (int64), ``tfs`` and
+    ``dls`` (:func:`_narrow`) with row ``r`` at ``[starts[r], ends[r])``
+    (None, and bounds 0, otherwise). The payload bytes are not kept.
+    ``runs``: the :class:`TermRuns` index of a pinned file."""
+
+    __slots__ = (
+        "term", "ints", "ratios", "doc_ids", "tfs", "dls", "runs",
+        "nbytes", "__weakref__",
+    )
+
+    def __init__(self, batch, runs: TermRuns | None = None):
+        n = batch.num_rows
+        self.ints = np.zeros((len(INT_COLS) + 2, n), dtype=np.int64)
+        for i, c in enumerate(INT_COLS):
+            self.ints[i] = batch.column(c).to_numpy(zero_copy_only=False)
+        self.ratios = np.stack([
+            batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64)
+            for c in RATIO_COLS
+        ])
+        self.doc_ids = self.tfs = self.dls = None
+        if "payload" in batch.schema.names:
+            ids, tfs, dls, offsets = codecs.decode_chunk_batch(
+                batch.column("payload"), batch.column("codec"),
+                batch.column("dls"),
+            )
+            self.doc_ids = ids.view(np.int64)
+            self.tfs, self.dls = _narrow(tfs), _narrow(dls)
+            self.ints[-2], self.ints[-1] = offsets[:-1], offsets[1:]
+        self.term = batch.column("term")
         self.runs = runs
-        self.nbytes = batch.nbytes + runs.nbytes
+        self.nbytes = (
+            self.ints.nbytes + self.ratios.nbytes + self.term.nbytes
+            + (runs.nbytes if runs else 0)
+            + sum(a.nbytes for a in (self.doc_ids, self.tfs, self.dls)
+                  if a is not None)
+        )
+
+    def parts(self, terms: list[str]) -> list:
+        """These rows as :class:`Part` s of ``terms``, when they are rows
+        of those terms only (a read with the term filter pushed down)."""
+        import pyarrow.compute as pc
+
+        n = len(self.term)
+        if len(terms) == 1:
+            return [Part(terms[0], self, slice(0, n), n)] if n else []
+        out = []
+        for t in terms:
+            idx = np.flatnonzero(
+                pc.equal(self.term, t).to_numpy(zero_copy_only=False)
+            )
+            if len(idx):
+                out.append(Part(t, self, idx, len(idx)))
+        return out
+
+
+class Part:
+    """The rows ``sel`` (a slice or an index array, ``n`` rows) of one
+    term ``term`` in one :class:`FileRows` ``src``."""
+
+    __slots__ = ("term", "src", "sel", "n")
+
+    def __init__(self, term: str, src: FileRows, sel, n: int):
+        self.term = term
+        self.src = src
+        self.sel = sel
+        self.n = n
+
+
+class ChunkRows:
+    """The chunk rows of one term set, numbered term by term (in sorted
+    term order; ``span``: term -> its (first, end) rows), as numpy
+    arrays (``salt``, ``seq``, ``first``, ``last``, ``n``, ``max_ratio``,
+    ``min_ratio``) and, when every part was read with postings, each
+    row's postings (:meth:`postings`), masked with ``deleted`` (sorted
+    int64 doc ids, or None).
+
+    :meth:`plan` adds what the planners read: ``metas`` (term ->
+    ``wand.TermChunks`` whose ``rows`` index these rows), ``lex`` (term
+    -> df under ``df_of``, n_chunks, doc-id span) and ``raw_df``
+    (segment-local df)."""
+
+    def __init__(self, parts: list[Part], deleted: np.ndarray | None = None):
+        by_term: dict[str, list[Part]] = {}
+        for p in parts:
+            by_term.setdefault(p.term, []).append(p)
+        self.terms = sorted(by_term)
+        parts = [p for t in self.terms for p in by_term[t]]
+        self.deleted = deleted
+        sizes = [sum(p.n for p in by_term[t]) for t in self.terms]
+        ends = np.cumsum(sizes, dtype=np.int64)
+        self.n_rows = int(ends[-1]) if len(ends) else 0
+        self.span = {
+            t: (int(e - m), int(e)) for t, m, e in zip(self.terms, sizes, ends)
+        }
+        self._code = np.repeat(np.arange(len(self.terms)), sizes)
+        if len(parts) == 1:
+            ints = parts[0].src.ints[:, parts[0].sel]
+            ratios = parts[0].src.ratios[:, parts[0].sel]
+        elif parts:
+            ints = np.concatenate([p.src.ints[:, p.sel] for p in parts], 1)
+            ratios = np.concatenate(
+                [p.src.ratios[:, p.sel] for p in parts], 1
+            )
+        else:
+            ints = np.zeros((len(INT_COLS) + 2, 0), dtype=np.int64)
+            ratios = np.zeros((len(RATIO_COLS), 0))
+        (self.salt, self.seq, self.first, self.last, self.n, self._lo,
+         self._hi) = ints
+        self.max_ratio, self.min_ratio = ratios
+        self._srcs = None
+        if parts and all(p.src.doc_ids is not None for p in parts):
+            self._srcs = [p.src for p in parts]
+            self._part = np.repeat(np.arange(len(parts)), [p.n for p in parts])
+        self.metas: dict[str, wand.TermChunks] = {}
+        self.lex: dict[str, dict] = {}
+        self.raw_df: dict[str, int] = {}
+
+    def plan(self, n_docs: int, df_of, scale_max: float,
+             scale_min: float) -> "ChunkRows":
+        """Fill ``metas``, ``lex`` and ``raw_df``; ``scale_max``/
+        ``scale_min`` rescale the stored ratio bounds under a foreign
+        avgdl (see ``QueryEngine.__init__``). Returns self."""
+        for t in self.terms:
+            lo, hi = self.span[t]
+            n = self.n[lo:hi]
+            raw = int(n.sum())
+            df = df_of(t, raw)
+            first, last = self.first[lo:hi], self.last[lo:hi]
+            self.raw_df[t] = raw
+            self.lex[t] = {
+                "df": df,
+                "n_chunks": hi - lo,
+                "min_doc_id": int(first.min()),
+                "max_doc_id": int(last.max()),
+            }
+            self.metas[t] = wand.TermChunks(
+                first=first,
+                last=last,
+                n=n,
+                bound=wand.term_chunk_bounds(
+                    wand.idf(df, n_docs),
+                    self.max_ratio[lo:hi] * scale_max,
+                    self.min_ratio[lo:hi] * scale_min,
+                ),
+                rows=np.arange(lo, hi),
+            )
+        return self
+
+    def key(self, row: int) -> tuple[str, int, int]:
+        """(term, salt, chunk_seq) of one row."""
+        return (
+            self.terms[self._code[row]], int(self.salt[row]),
+            int(self.seq[row]),
+        )
+
+    def cover_keys(self, terms: list[str], cover: np.ndarray) -> set[tuple]:
+        """Keys of every chunk covering any of the given segment rows
+        (``cover`` columns in ``terms`` order, as ``wand.sweep_segments``
+        returns them)."""
+        keys: set[tuple] = set()
+        for j, t in enumerate(terms):
+            rows = self.metas[t].rows
+            for ci in np.unique(cover[:, j]).tolist():
+                if ci >= 0:
+                    keys.add(self.key(rows[ci]))
+        return keys
+
+    def find(self, keys) -> dict[tuple, int]:
+        """{key: row} of the (term, salt, chunk_seq) ``keys`` present."""
+        by_t: dict[str, list[tuple]] = {}
+        for key in keys:
+            by_t.setdefault(key[0], []).append(key)
+        out: dict[tuple, int] = {}
+        for t, ks in by_t.items():
+            if t not in self.span:
+                continue
+            lo, hi = self.span[t]
+            have = (self.salt[lo:hi] << 32) + self.seq[lo:hi]
+            order = np.argsort(have, kind="stable")
+            want = np.array(
+                [(int(s) << 32) + int(c) for _t, s, c in ks], np.int64
+            )
+            at = order[np.minimum(
+                np.searchsorted(have, want, sorter=order), hi - lo - 1
+            )]
+            for j in np.flatnonzero(have[at] == want).tolist():
+                out[ks[j]] = lo + int(at[j])
+        return out
+
+    def postings(self, row: int) -> tuple:
+        """(doc_ids int64, tfs, doc_lengths) of one row, as slices of its
+        file's decoded arrays; tombstoned ids masked (a copy then)."""
+        src = self._srcs[self._part[row]]
+        lo, hi = self._lo[row], self._hi[row]
+        ids, tfs, dls = src.doc_ids[lo:hi], src.tfs[lo:hi], src.dls[lo:hi]
+        keep = wand.tombstone_mask(ids, self.deleted)
+        if keep is not None:
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        return ids, tfs, dls
 
 
 # the one pinned copy of each chunk file in this process, keyed by the
 # file's identity (path, st_mtime_ns, st_size): readers over the same
 # immutable file share it, a file rewritten in place gets a new key, and
 # a copy leaves memory when no reader holds it any more
-_PINNED: "weakref.WeakValueDictionary[tuple, PinnedFile]" = (
+_PINNED: "weakref.WeakValueDictionary[tuple, FileRows]" = (
     weakref.WeakValueDictionary()
 )
 _PINNED_LOCK = threading.Lock()
 
 
-def read_pinned(path: str) -> PinnedFile:
-    """Read one chunk file whole. A file whose rows are not in term
-    order (written before the build kept that order) is sorted by
-    (term, salt, chunk_seq) here, once."""
+def read_pinned(path: str) -> FileRows:
+    """Read one chunk file whole and decode it. A file whose rows are
+    not in term order (written before the build kept that order) is
+    sorted by (term, salt, chunk_seq) here, once."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -303,10 +441,10 @@ def read_pinned(path: str) -> PinnedFile:
     batch = batches[0] if batches else pa.RecordBatch.from_pylist(
         [], schema=tbl.schema
     )
-    return PinnedFile(batch, TermRuns(batch.column("term")))
+    return FileRows(batch, TermRuns(batch.column("term")))
 
 
-def pinned(path: str) -> PinnedFile:
+def pinned(path: str) -> FileRows:
     """The process's pinned copy of the chunk file ``path``, read
     (:func:`read_pinned`) only when no live reader holds it. Two threads
     missing at once may both read; one copy is kept."""
@@ -322,14 +460,13 @@ def pinned(path: str) -> PinnedFile:
 
 
 class SegmentReader:
-    """The driver's pyarrow reader of one parquet segment's chunks: the
-    bucket file listing; the files it pins (:meth:`table`), held for the
+    """The driver's reader of one parquet segment's chunks: the bucket
+    file listing; the files it pins (:meth:`rows`), held for the
     reader's life and admitted while it holds less than
     ``SE_LOCAL_CACHE_MB`` (default 512; charged with the full size of
     every file it holds, shared or not), so the cap is passed by at most
-    one file; the decoded-chunk cache and the tombstone mask
-    (``deleted``: sorted int64 doc ids, or None), both this reader's
-    own, since decoded postings are masked by its engine's deletes."""
+    one file; and the tombstone mask (``deleted``: sorted int64 doc ids,
+    or None) its :class:`ChunkRows` apply, its engine's own."""
 
     def __init__(self, index_dir: str, bucket_count: int,
                  deleted: np.ndarray | None, pin_rows: int):
@@ -344,11 +481,8 @@ class SegmentReader:
         # one pyarrow dataset per streamed file, built on first read: a
         # dataset re-discovers its file and footer when rebuilt
         self._datasets: dict = {}
-        self._tables: dict[str, PinnedFile] = {}
+        self._tables: dict[str, FileRows] = {}  # path -> pinned file
         self._bytes = 0
-        self.decoded: dict[tuple, tuple] = {}
-        # decode calls (decoded-cache misses) since construction
-        self.n_decoded = 0
 
     def _listing(self) -> dict[int, list[str]]:
         if self._by_bucket is None:
@@ -387,35 +521,35 @@ class SegmentReader:
             paths += by_bucket.get(b, ())
         return paths
 
-    def table(self, terms: list[str], cap: int | None = None,
-              payloads: bool = True):
-        """The chunk rows of ``terms`` as one pyarrow table (bucket by
-        bucket, file by file, each file's rows in (term, salt, chunk_seq)
-        order), carrying the payload columns unless ``payloads`` is
-        False; None for an index without data files, or as soon as more
-        than ``cap`` rows have been read.
+    def rows(self, terms: list[str], cap: int | None = None,
+             postings: bool = True) -> ChunkRows | None:
+        """The chunk rows of ``terms`` (:class:`ChunkRows`, with their
+        postings unless ``postings`` is False); None for an index
+        without data files, or as soon as more than ``cap`` rows have
+        been read.
 
-        A pinned file serves each term's run as a zero-copy slice (its
-        :class:`TermRuns` index), with no scan of its other rows. Another
-        file is pinned when :meth:`_admits` it, else streamed with the
-        term filter pushed down and dropped after use (re-reading whole
-        the files an evicting cache drops made ``search()`` ~1.75x
-        slower than streaming them: a 27 MB pinned index under a 2-8 MB
-        cap, 4-core host). So an above-cap term set (a stop word owning
-        ~10^8 chunks) costs the driver at most ``cap`` rows of files it
-        pins plus ``cap`` rows and one record batch streamed, never its
-        whole metadata."""
+        A pinned file serves each term's run as array slices (its
+        :class:`TermRuns` index), with no scan of its other rows and no
+        decode. Another file is pinned when :meth:`_admits` it, else
+        streamed with the term filter pushed down; the rows one read
+        streams are decoded together (with ``postings``) and dropped
+        after use (re-reading whole the files an evicting cache drops
+        made ``search()`` ~1.75x slower than streaming them: a 27 MB
+        pinned index under a 2-8 MB cap, 4-core host). So an above-cap
+        term set (a stop word owning ~10^8 chunks) costs the driver at
+        most ``cap`` rows of files it pins plus ``cap`` rows and one
+        record batch streamed, never its whole metadata."""
         import pyarrow as pa
         import pyarrow.dataset as pa_ds
 
         if not self.has_data:
             return None
-        cols = META_COLS + (PAYLOAD_COLS if payloads else [])
+        cols = META_COLS + (PAYLOAD_COLS if postings else [])
         by_bucket = self._listing()
         of_bucket: dict[int, list[str]] = {}
         for t in dict.fromkeys(terms):
             of_bucket.setdefault(term_bucket(t, self.bucket_count), []).append(t)
-        batches, n_rows, pinned_rows = [], 0, 0
+        parts, streamed, n_rows, pinned_rows = [], [], 0, 0
         for b in sorted(of_bucket):
             bterms = of_bucket[b]
             keys = term_keys(bterms)
@@ -426,19 +560,30 @@ class SegmentReader:
                     self._bytes += pf.nbytes
                     pinned_rows += self.file_rows(path)
                 if pf is not None:
-                    batch = pf.batch if payloads else pf.batch.select(cols)
-                    parts = pf.runs.slices(batch, bterms, keys)
+                    found = [
+                        Part(t, pf, slice(lo, hi), hi - lo)
+                        for t, lo, hi in pf.runs.find(bterms, keys)
+                    ]
+                    parts += found
+                    n_rows += sum(p.n for p in found)
                 else:
-                    parts = self._read(
+                    for batch in self._read(
                         [path], cols, pa_ds.field("term").isin(bterms)
-                    )
-                for part in parts:
-                    n_rows += part.num_rows
-                    if cap is not None and n_rows > cap:
-                        return None
-                    batches.append(part)
-        schema = pa.schema([self._schema.field(c) for c in cols])
-        return pa.Table.from_batches(batches, schema)
+                    ):
+                        streamed.append(batch)
+                        n_rows += batch.num_rows
+                        if cap is not None and n_rows > cap:
+                            return None
+                if cap is not None and n_rows > cap:
+                    return None
+        if streamed:
+            # every streamed row in one decode: the batch decoder's
+            # fixed cost is paid once per read, not once per batch
+            tbl = pa.Table.from_batches(streamed).combine_chunks()
+            parts += FileRows(tbl.to_batches()[0]).parts(
+                list(dict.fromkeys(terms))
+            )
+        return ChunkRows(parts, self.deleted)
 
     def file_rows(self, path: str) -> int:
         """Row count of one data file, from its footer (read once)."""
@@ -450,7 +595,7 @@ class SegmentReader:
         return n
 
     def _admits(self, path: str, cap: int | None, pinned_rows: int) -> bool:
-        """Whether :meth:`table` pins ``path``: a file of at most
+        """Whether :meth:`rows` pins ``path``: a file of at most
         ``pin_rows`` rows, while this reader holds less than its byte
         cap and, under the read's ``cap``, while the files the read has
         pinned hold at most ``cap`` rows with it."""
@@ -478,68 +623,17 @@ class SegmentReader:
                 if batch.num_rows:
                     yield batch
 
-    def _decode(self, payload, codec, dls_raw) -> tuple:
-        ids, tfs = codecs.decode_chunk(payload, int(codec))
-        dls = codecs.decode_lengths(dls_raw)
-        ids = ids.astype(np.int64)
-        keep = wand.tombstone_mask(ids, self.deleted)
-        if keep is not None:
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        self.n_decoded += 1
-        return ids, tfs, dls
-
-    def _remember(self, key: tuple, got: tuple) -> tuple:
-        if len(self.decoded) >= DECODED_CACHE_CAP:
-            self.decoded.clear()  # simple epoch flush beats per-hit LRU
-        self.decoded[key] = got
-        return got
-
-    def chunk(self, cr: ChunkRows, row: int) -> tuple:
-        """(doc_ids int64, tfs, doc_lengths) of one row of ``cr`` (read
-        with payloads), tombstoned ids masked."""
-        key = cr.key(row)
-        got = self.decoded.get(key)
-        if got is None:
-            t = cr.table
-            got = self._remember(key, self._decode(
-                t.column("payload")[row].as_py(),
-                t.column("codec")[row].as_py(),
-                t.column("dls")[row].as_py(),
-            ))
-        return got
-
     def decode_keys(self, keys) -> dict:
         """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
-        found: from the decoded cache, else picked from the rows of the
-        keys' terms (:meth:`table`: slices of pinned files, or a
-        streamed read of a file too large to pin) and decoded, only the
-        requested keys. The planners hold the terms' chunk count to
-        METADATA_CAP."""
+        found, tombstoned ids masked: slices of the postings of the
+        keys' terms' rows (:meth:`rows`). The planners hold the terms'
+        chunk count to METADATA_CAP."""
         import pyarrow as pa
 
-        out: dict[tuple, tuple] = {}
-        missing: set[tuple] = set()
-        for key in keys:
-            got = self.decoded.get(key)
-            if got is not None:
-                out[key] = got
-            else:
-                missing.add(key)
-        if not missing or not self.has_data:
-            return out
-        terms = sorted({t for t, _s, _c in missing})
-        for batch in self.table(terms).to_batches():
-            codec, payload, dls = (batch.column(c) for c in PAYLOAD_COLS)
-            found = zip(
-                batch.column("term").to_pylist(),
-                batch.column("salt").to_pylist(),
-                batch.column("chunk_seq").to_pylist(),
-            )
-            for i, key in enumerate(found):
-                if key in missing:
-                    out[key] = self._remember(key, self._decode(
-                        payload[i].as_py(), codec[i].as_py(), dls[i].as_py()
-                    ))
+        if not keys or not self.has_data:
+            return {}
+        terms = sorted({t for t, _s, _c in keys})
+        cr = self.rows(terms)
         if any(p not in self._tables for p in self._paths(terms)):
             # a streamed read's transient buffers (every payload of the
             # rows read) go back to the OS now: left to jemalloc's lazy
@@ -548,4 +642,4 @@ class SegmentReader:
             # follow a driver-scored search() (perfbench serve, 3
             # seeds, 4-core host)
             pa.default_memory_pool().release_unused()
-        return out
+        return {key: cr.postings(row) for key, row in cr.find(keys).items()}

@@ -85,12 +85,15 @@ class TermChunks:
 
     def __init__(self, first, last, n, bound, rows):
         first = np.asarray(first, dtype=np.int64)
-        order = np.argsort(first, kind="stable")
-        self.first = first[order]
-        self.last = np.asarray(last, dtype=np.int64)[order]
-        self.n = np.asarray(n, dtype=np.int64)[order]
-        self.bound = np.asarray(bound, dtype=np.float64)[order]
-        self.rows = np.asarray(rows)[order]
+        arrays = (
+            first, np.asarray(last, dtype=np.int64),
+            np.asarray(n, dtype=np.int64),
+            np.asarray(bound, dtype=np.float64), np.asarray(rows),
+        )
+        if (first[1:] < first[:-1]).any():  # rows read in order need none
+            order = np.argsort(first, kind="stable")
+            arrays = tuple(a[order] for a in arrays)
+        self.first, self.last, self.n, self.bound, self.rows = arrays
 
     @property
     def df(self) -> int:

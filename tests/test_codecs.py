@@ -361,3 +361,103 @@ def test_corrupt_payloads_fail_fast():
     bad[1] = (bad[1] & 0xF0) | 0x0F  # selector nibble 15 in a real word
     with pytest.raises(ValueError, match="selector"):
         C.simple9_decode(bytes(bad), 0)
+
+
+def decode_each(payloads, codec, dls):
+    """Per-chunk decode_chunk/decode_lengths output, concatenated."""
+    ids, tfs, lengths, counts = [], [], [], []
+    for p, c, d in zip(payloads, codec, dls):
+        i, t = C.decode_chunk(p, int(c))
+        ids.append(i)
+        tfs.append(t)
+        lengths.append(C.decode_lengths(d))
+        counts.append(len(i))
+    cat = (lambda a: np.concatenate(a) if a else np.empty(0, np.uint64))
+    return cat(ids), cat(tfs), cat(lengths), counts
+
+
+# one chunk: (first doc id, gaps, tfs, doc lengths); the gap range
+# reaches past 2^28, so some chunks take the varbyte fallback
+chunk = st.integers(min_value=1, max_value=C.CHUNK_LENGTH).flatmap(
+    lambda n: st.tuples(
+        st.integers(min_value=0, max_value=2**40),
+        st.lists(
+            st.one_of(
+                st.integers(min_value=1, max_value=8),
+                st.integers(min_value=1, max_value=2**20),
+                st.integers(min_value=C.SIMPLE9_MAX + 1, max_value=2**30),
+            ),
+            min_size=n - 1, max_size=n - 1,
+        ),
+        st.lists(st.integers(min_value=1, max_value=70000),
+                 min_size=n, max_size=n),
+        st.lists(st.integers(min_value=1, max_value=2**33),
+                 min_size=n, max_size=n),
+    )
+)
+
+
+@given(st.lists(chunk, max_size=12), st.integers(min_value=0, max_value=3))
+@settings(max_examples=120, deadline=None)
+def test_decode_chunk_batch_matches_per_chunk(chunks, cut):
+    """decode_chunk_batch of encode_chunk_batch output equals the
+    per-chunk decoders, on 1-posting chunks, fallback chunks mixed in,
+    empty input and an Arrow slice with a non-zero offset."""
+    import pyarrow as pa
+
+    ids = [
+        np.cumsum([base] + gaps).astype(np.uint64)
+        for base, gaps, _t, _d in chunks
+    ]
+    tfs = [np.array(t, np.uint64) for _b, _g, t, _d in chunks]
+    starts = np.cumsum([0] + [len(i) for i in ids])[:-1]
+    codec, payloads = C.encode_chunk_batch(
+        np.concatenate(ids) if ids else np.empty(0, np.uint64),
+        np.concatenate(tfs) if tfs else np.empty(0, np.uint64),
+        starts,
+    )
+    dls = [C.encode_lengths(d) for _b, _g, _t, d in chunks]
+    pad = [b"junk"] * cut  # rows the slice below skips
+    pay_a = pa.array(pad + payloads, pa.binary()).slice(cut)
+    dls_a = pa.array(pad + dls, pa.binary()).slice(cut)
+    got_ids, got_tfs, got_dls, offsets = C.decode_chunk_batch(
+        pay_a, codec, dls_a
+    )
+    want_ids, want_tfs, want_dls, counts = decode_each(payloads, codec, dls)
+    assert offsets.tolist() == np.cumsum([0] + counts).tolist()
+    assert got_ids.tolist() == want_ids.tolist()
+    assert got_tfs.tolist() == want_tfs.tolist()
+    assert got_dls.tolist() == want_dls.tolist()
+
+
+def test_decode_chunk_batch_refuses_corrupt_rows():
+    """A Simple9 word with a selector outside the 9 classes, a row cut
+    short and an unknown codec id raise ValueError, as decode_chunk
+    does."""
+    import pyarrow as pa
+
+    ids = np.arange(100, dtype=np.uint64) * 7 + 3
+    codec, payload = C.encode_chunk(ids, np.ones(100, np.uint64))
+    dls = C.encode_lengths(np.full(100, 9))
+    good = (
+        pa.array([payload, payload], pa.binary()),
+        np.array([codec, codec]),
+        pa.array([dls, dls], pa.binary()),
+    )
+    assert len(C.decode_chunk_batch(*good)[0]) == 200
+    bad = bytearray(payload)
+    # the first Simple9 word follows the base and the gap count (one
+    # varbyte each): its low nibble is the selector
+    bad[2] = (bad[2] & 0xF0) | 0x0F
+    with pytest.raises(ValueError, match="selector"):
+        C.decode_chunk(bytes(bad), codec)
+    with pytest.raises(ValueError, match="selector"):
+        C.decode_chunk_batch(
+            pa.array([payload, bytes(bad)], pa.binary()), *good[1:]
+        )
+    with pytest.raises(ValueError, match="truncated"):
+        C.decode_chunk_batch(
+            pa.array([payload, payload[:-3]], pa.binary()), *good[1:]
+        )
+    with pytest.raises(ValueError, match="codec"):
+        C.decode_chunk_batch(good[0], np.array([codec, 7]), good[2])

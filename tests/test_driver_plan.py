@@ -314,10 +314,10 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     eng = QueryEngine(spark, idx)
     q = "w0 w1 w2"
     terms = q.split()
-    assert eng._reader.table(terms, cap=cap, payloads=False) is None
+    assert eng._reader.rows(terms, cap=cap, postings=False) is None
     assert sum(meta_rows[:-1]) <= cap < sum(meta_rows)
     stopped_at = sum(meta_rows)
-    assert eng._reader.table(terms, payloads=False).num_rows > stopped_at
+    assert eng._reader.rows(terms, postings=False).n_rows > stopped_at
 
     meta_rows.clear()
     for _ in range(2):
@@ -335,7 +335,7 @@ def test_capped_read_pins_at_most_cap_rows(spark, corpus, monkeypatch):
     idx, _docs, _oracle = corpus
     terms = ["w0", "w1", "w2"]
     probe = QueryEngine(spark, idx)._reader
-    n_match = probe.table(terms, payloads=False).num_rows
+    n_match = probe.rows(terms, postings=False).n_rows
     sizes = [probe.file_rows(p) for p in probe._paths(terms)]
     cap = n_match - 1
     assert len(sizes) > 2 and min(sizes) <= cap < sum(sizes)
@@ -350,7 +350,7 @@ def test_capped_read_pins_at_most_cap_rows(spark, corpus, monkeypatch):
     monkeypatch.setattr(segment.SegmentReader, "_read", spy)
     reader = QueryEngine(spark, idx)._reader
     assert reader.pin_rows > cap
-    assert reader.table(terms, cap=cap, payloads=False) is None
+    assert reader.rows(terms, cap=cap, postings=False) is None
     held = [reader.file_rows(p) for p in reader._tables]
     assert held and sum(held) <= cap
     assert streamed and not set(streamed) & set(reader._tables)
@@ -535,3 +535,45 @@ def test_lone_surrogate_refused(spark, corpus):
         with pytest.raises(ValueError, match="lone surrogate") as got:
             call()
         assert got.type is ValueError
+
+
+# the other public methods taking ``k`` and/or ``mode``: name -> (call
+# on an engine, takes k, takes mode)
+GUARDED = {
+    "search_collapsed": (
+        lambda e, **kw: e.search_collapsed("w7 w20", **kw), True, True
+    ),
+    "prefix_search": (lambda e, **kw: e.prefix_search("w7*", **kw), True, False),
+    "fuzzy_search": (lambda e, **kw: e.fuzzy_search("w7", **kw), True, False),
+    "phrase_search": (lambda e, **kw: e.phrase_search("w7 w20", **kw), True, False),
+    "proximity_search": (
+        lambda e, **kw: e.proximity_search("w7 w20", 3, **kw), True, False
+    ),
+    "ordered_window_search": (
+        lambda e, **kw: e.ordered_window_search("w7 w20", 3, **kw), True, False
+    ),
+    "more_like_this": (lambda e, **kw: e.more_like_this(7, **kw), True, True),
+    "facet_counts": (lambda e, **kw: e.facet_counts("w7 w20", **kw), False, True),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GUARDED))
+def test_other_entries_refuse_bad_k_and_mode(spark, corpus, segments, name):
+    """Every other public method taking ``k`` or ``mode``, on one engine
+    and on a segment stack, refuses a bad one with ValueError before any
+    work (``k=0`` used to return an empty frame or fail later with
+    another error, an unknown mode to run as disjunctive)."""
+    idx, _docs, _oracle = corpus
+    call, takes_k, takes_mode = GUARDED[name]
+    engines = {
+        "single": QueryEngine(spark, idx),
+        "multi": MultiIndexQueryEngine(spark, list(segments), offsets=[0, 0]),
+    }
+    bad = ([{"k": 0}, {"k": True}] if takes_k else []) + (
+        [{"mode": "bogus"}] if takes_mode else []
+    )
+    for kind, eng in engines.items():
+        for kw in bad:
+            with pytest.raises(ValueError, match="k must be|mode must be"):
+                call(eng, **kw)
+                pytest.fail(f"{kind} {name} accepted {kw}")

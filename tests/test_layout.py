@@ -176,7 +176,7 @@ def test_unsorted_chunk_files_serve_rank_identical(
     for got, (q, mode) in zip(want, queries):
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
     for pinned in eng_legacy._reader._tables.values():
-        terms = pinned.batch.column("term")
+        terms = pinned.term
         assert terms.equals(terms.sort())
 
     deleted = {
@@ -213,8 +213,9 @@ def test_term_runs_exact_match():
 
     def rows(*ask):
         ask = list(ask)
-        parts = runs.slices(batch, ask, segment.term_keys(ask))
-        return [r for p in parts for r in p.column("row").to_pylist()]
+        found = runs.find(ask, segment.term_keys(ask))
+        assert all(batch.column("term")[lo].as_py() == t for t, lo, _ in found)
+        return [r for _t, lo, hi in found for r in range(lo, hi)]
 
     assert rows("ab") == [1, 2]
     assert rows("ab\x00") == [3, 4]
@@ -224,4 +225,4 @@ def test_term_runs_exact_match():
     assert rows(long + "3", long[:-1]) == []
     assert rows("zz", "zzz", "abc", "") == [11]
     empty = segment.TermRuns(pa.array([], pa.string()))
-    assert empty.slices(batch, ["a"], segment.term_keys(["a"])) == []
+    assert empty.find(["a"], segment.term_keys(["a"])) == []

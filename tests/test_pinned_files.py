@@ -1,8 +1,9 @@
 """The driver paths' shared pinned files: ``search()``, ``batch_search``
 and ``search_local`` all read chunk rows through the engine's
 SegmentReader, which pins whole files up to its byte cap, and engines
-over the same immutable file share one pinned copy of it. Deletes stay per engine: a pinned file
-holds encoded postings, each reader masks its own tombstones."""
+over the same immutable file share one pinned copy of it, decoded once.
+Deletes stay per engine: a pinned file holds every posting, each
+reader masks its own tombstones."""
 
 import gc
 import shutil
@@ -14,7 +15,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from search_engine_spark import maintenance, segment
+from search_engine_spark import codecs, maintenance, segment
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
@@ -136,20 +137,20 @@ def test_rewritten_file_is_reread(spark, corpus, tmp_path, file_reads):
     shutil.copytree(idx, copy)
     term = "w7"
     a = QueryEngine(spark, copy)
-    before = a._reader.table([term]).num_rows
+    before = a._reader.rows([term]).n_rows
     path = next(
         p for p, pf in a._reader._tables.items()
-        if term in pf.batch.column("term").to_pylist()
+        if term in pf.term.to_pylist()
     )
     tbl = pq.read_table(path)
     pq.write_table(tbl.filter(pc.not_equal(tbl.column("term"), term)), path)
     file_reads.clear()
 
     b = QueryEngine(spark, copy)
-    assert b._reader.table([term]).num_rows < before
+    assert b._reader.rows([term]).n_rows < before
     assert path in file_reads
     assert b._reader._tables[path] is not a._reader._tables[path]
-    assert a._reader.table([term]).num_rows == before
+    assert a._reader.rows([term]).n_rows == before
 
 
 def test_deletes_stay_per_engine(spark, corpus, tmp_path):
@@ -182,6 +183,83 @@ def test_deletes_stay_per_engine(spark, corpus, tmp_path):
     ] == local_a
 
 
+def alive_topk(oracle, q, mode, dead, k=10):
+    """The oracle's top ``k`` with the ``dead`` docs dropped."""
+    return [
+        (d, s) for d, s in oracle.topk(q, mode=mode, k=10**6)
+        if d not in dead
+    ][:k]
+
+
+def test_second_engine_decodes_nothing(spark, corpus, monkeypatch):
+    """A pinned file is decoded once: a second engine over the same
+    files answers ``search_local``, ``search()`` and ``batch_search``
+    from the first one's decoded copy, calling no decoder."""
+    idx, _docs, oracle = corpus
+    first = QueryEngine(spark, idx)
+    for q, mode in QUERIES:
+        first.search_local(q, mode=mode, k=10)
+        rows_of(first.search(q, mode=mode, k=10))
+    batch_rows(first.batch_search(BATCH, k=10))
+    calls = []
+
+    def spy(name):
+        real = getattr(codecs, name)
+
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+        return wrapped
+
+    for name in ("decode_chunk_batch", "decode_chunk", "decode_lengths"):
+        monkeypatch.setattr(codecs, name, spy(name))
+    second = QueryEngine(spark, idx)
+    local = [second.search_local(q, mode=mode, k=10) for q, mode in QUERIES]
+    single = [rows_of(second.search(q, mode=mode, k=10)) for q, mode in QUERIES]
+    batch = batch_rows(second.batch_search(BATCH, k=10))
+    assert calls == []
+    assert set(second._reader._tables) <= set(first._reader._tables)
+    for got_l, got_s, (q, mode) in zip(local, single, QUERIES):
+        assert_rank_identical(got_l, oracle.topk(q, mode=mode, k=10))
+        assert_rank_identical(got_s, oracle.topk(q, mode=mode, k=10))
+    for qid, q in BATCH:
+        assert_rank_identical(batch.get(qid, []), oracle.topk(q, k=10))
+
+
+def test_engines_with_different_deletes_share_one_copy(
+    spark, corpus, tmp_path
+):
+    """Two engines whose indexes carry different tombstones share every
+    decoded file they both read, and each answers ``search_local``,
+    ``search()`` and ``batch_search`` like the oracle without its own
+    deleted docs."""
+    idx, _docs, oracle = corpus
+    copy = str(tmp_path / "idx")
+    shutil.copytree(idx, copy)
+    tops = [
+        [d for d, _ in oracle.topk(q, mode=mode, k=3)] for q, mode in QUERIES
+    ]
+    once = {d for top in tops[::2] for d in top}
+    twice = once | {d for top in tops[1::2] for d in top}
+    maintenance.delete_docs(spark, copy, sorted(once))
+    b = QueryEngine(spark, copy)
+    maintenance.delete_docs(spark, copy, sorted(twice - once))
+    c = QueryEngine(spark, copy)
+    for eng, dead in ((b, once), (c, twice)):
+        for q, mode in QUERIES:
+            want = alive_topk(oracle, q, mode, dead)
+            assert_rank_identical(eng.search_local(q, mode=mode, k=10), want)
+            assert_rank_identical(rows_of(eng.search(q, mode=mode, k=10)), want)
+        batch = batch_rows(eng.batch_search(BATCH, k=10))
+        for qid, q in BATCH:
+            assert_rank_identical(
+                batch.get(qid, []), alive_topk(oracle, q, "disjunctive", dead)
+            )
+    shared = set(b._reader._tables) & set(c._reader._tables)
+    assert shared
+    assert all(b._reader._tables[p] is c._reader._tables[p] for p in shared)
+
+
 def test_concurrent_loads_keep_one_copy(tmp_path):
     """Threads (more than cores) missing the same files at once all get
     the one copy the registry keeps, whichever thread read it."""
@@ -199,8 +277,10 @@ def test_concurrent_loads_keep_one_copy(tmp_path):
             "max_ratio": [0.5] * n,
             "min_ratio": [0.5] * n,
             "codec": pa.array([0] * n, pa.int32()),
-            "payload": [bytes([i, j]) for j in range(n)],
-            "dls": [b"x"] * n,
+            "payload": [
+                codecs.encode_chunk([i * n + j], [1])[1] for j in range(n)
+            ],
+            "dls": [codecs.encode_lengths([5])] * n,
         }), path)
         paths.append(path)
     n_threads = 16
