@@ -534,12 +534,12 @@ def _binary_rows(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     n = len(col)
     odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
     offs = np.frombuffer(col.buffers()[1], odt)[col.offset:col.offset + n + 1]
-    offs = offs.astype(np.int64)
-    data = col.buffers()[2]
+    lo = int(offs[0]) if n else 0
+    offs = offs.astype(np.int64) - lo  # a slice's bytes only
     size = int(offs[-1]) if n else 0
     buf = np.zeros(size + 16, dtype=np.uint8)
     if size:
-        buf[:size] = np.frombuffer(data, np.uint8)[:size]
+        buf[:size] = np.frombuffer(col.buffers()[2], np.uint8)[lo:lo + size]
     return buf, offs[:-1], offs[1:]
 
 

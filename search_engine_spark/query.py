@@ -25,17 +25,16 @@ to exhaustive evaluation.
 Physical plan of ``search()``, below METADATA_CAP on the parquet
 layout — answered on the driver, ZERO Spark jobs:
     SegmentReader (segment.py): the query terms' chunk metadata as
-      array slices of its pinned, term-sorted bucket files, each
-      decoded once when pinned (the same files ``search_local``
-      reads) -> lexicon stats + per-term block-max bounds, no lexicon
-      job
+      array slices of its pinned, term-sorted bucket files (the same
+      files ``search_local`` reads) -> lexicon stats + per-term
+      block-max bounds, no lexicon job
     WAND sweep -> elementary segments; theta from the metadata alone
       when the chunk bounds separate, else the k-th best score of a
       phase-1 decode of the top-bound segments' chunks
       (conjunctive: the rare pivot's doc ids replace the sweep)
-    the surviving (term, salt, chunk_seq) keys' postings, sliced from
-      the same pinned files (tombstones masked), masked to the kept
-      segments
+    the surviving (term, salt, chunk_seq) keys' postings from the
+      same pinned files (slices of a file decoded whole, else decoded
+      for this read; tombstones masked), masked to the kept segments
       (or the pivot's candidates), scored and cut to the top k in numpy
       (``_score_local``, the one driver-side scorer; the phase-1 probe
       is the same call with the probe's keys)
@@ -766,9 +765,16 @@ class QueryEngine:
                     len(ids), np.float64 if dtype is np.float64
                     else np.float32
                 )
-                for tc, t in enumerate(denc.dictionary.to_pylist()):
-                    sel = code == tc
-                    if sel.any():
+                # one stable sort groups the postings by term, so each
+                # posting is scored once whatever the batch's term count
+                order = np.argsort(code, kind="stable")
+                uniq = denc.dictionary.to_pylist()
+                bounds = np.searchsorted(
+                    code[order], np.arange(len(uniq) + 1)
+                )
+                for tc, t in enumerate(uniq):
+                    sel = order[bounds[tc]:bounds[tc + 1]]
+                    if len(sel):
                         scores[sel] = bm25_scores(
                             tfs[sel], dl[sel], dfs[t], n_docs, avgdl, dtype
                         )
@@ -803,9 +809,9 @@ class QueryEngine:
         metadata (segment.ChunkRows): ONE read serves both the planner
         and the lexicon (df = sum of chunk n), so a query needs no
         separate lexicon job. The parquet layout reads it through the
-        SegmentReader (no Spark job): array slices of the decoded files
-        it pins, whose postings the driver scoring of this and later
-        queries slices. It reads at most METADATA_CAP rows of files it
+        SegmentReader (no Spark job): array slices of the files it pins,
+        whose postings the driver scoring of this and later queries
+        reads. It reads at most METADATA_CAP rows of files it
         pins plus METADATA_CAP rows and one record batch of files it
         streams. Iceberg collects it with one Spark job. The rows carry
         no postings.
@@ -2223,8 +2229,9 @@ class QueryEngine:
     ) -> dict[int, dict]:
         """The driver-side scorer, twin of the Spark decode + aggregate
         (:meth:`_keys_job`, ``batch_search``'s final job and
-        :meth:`_batch_theta`): take the postings of exactly ``keys``,
-        sliced from the reader's decoded files (tombstones masked),
+        :meth:`_batch_theta`): take the postings of exactly ``keys``
+        from the reader (:meth:`segment.SegmentReader.decode_keys`,
+        tombstones masked),
         score every posting once per term, and per query ``qid`` of
         ``by_q`` (its sorted term list; a repeated term counts once per
         occurrence, as the Spark fan-out join does) sum over its terms
@@ -2359,8 +2366,8 @@ class QueryEngine:
         self, query: str, mode: str = "disjunctive", k: int = 10
     ) -> list[tuple[int, float]]:
         """Low-latency driver-side path: the query terms' chunk rows as
-        slices of the SegmentReader's decoded, term-sorted bucket files
-        (cold files are pinned, up to the reader's byte cap), then the
+        slices of the SegmentReader's term-sorted bucket files (cold
+        files are pinned, up to the reader's byte cap), then the
         sequential block-max WAND sweep — chunks' postings are read in
         descending segment-bound order and skipped entirely once they
         cannot reach the top-k threshold. ``last_local_stats``
@@ -2402,8 +2409,8 @@ class QueryEngine:
         read: set[int] = set()
 
         def get_chunk(row: int):
-            # a slice of the decoded postings; the distinct rows read
-            # are counted
+            # the row's postings (see ChunkRows.postings); the
+            # distinct rows read are counted
             read.add(row)
             stats["chunks_decoded"] = len(read)
             return cr.postings(row)

@@ -6,22 +6,28 @@ sorted by (term, salt, chunk_seq): the build's sort key starts with
 ``bucket``, so Spark's partitioned writer keeps the order. A
 :class:`SegmentReader` lists the bucket files once and pins the files
 it reads, up to a byte cap. A pinned file (:class:`FileRows`) is read
-whole and decoded once (:func:`codecs.decode_chunk_batch`): its
-metadata columns as numpy arrays, its postings as flat ``doc_ids``,
-``tfs`` and ``dls`` arrays with each row's bounds in them, and a
-:class:`TermRuns` index of where its terms' rows lie; the payload bytes
-are dropped. So a term's chunk rows are array slices, and a chunk's
-postings are slices too: nothing is decoded per query.
+whole: its metadata columns as numpy arrays and a :class:`TermRuns`
+index of where its terms' rows lie, so a term's chunk rows are array
+slices. Its postings are decoded on demand: the rows one read asks
+for, chunk by chunk or, for many rows, in one
+:func:`codecs.decode_chunk_batch` call per file, until the work spent
+that way reaches the work of decoding the whole file; then the whole
+file is decoded once into flat ``doc_ids``, ``tfs`` and ``dls`` arrays
+and its payload bytes are dropped. From then on a chunk's postings are
+array slices, decoded by no query. So a file read often is decoded
+whole, and a cold query (a fresh process, or files read rarely)
+decodes only the chunks it reads. The rows one read streams are
+decoded the same way, for that read only.
 
 Pinned files are shared: readers over the same immutable file hold one
-copy per process (:func:`pinned`), which leaves memory when no reader
-holds it. A file written before the build sorted this way is sorted
-once, when it is pinned. A reader evicts nothing: once it holds its
-byte cap, files it does not hold are streamed with the term filter
-pushed down, as are files with more rows than the planners' metadata
-cap and, in a capped read, files past the cap's worth of rows; the
-rows one read streams (only its terms' rows) are decoded together for
-that read and then dropped.
+copy per process (:func:`pinned`), decoded or not, which leaves memory
+when no reader holds it. A file written before the build sorted this
+way is sorted once, when it is pinned. A reader evicts nothing: once it
+holds its byte cap (counting a decoded file at its decoded size), files
+it does not hold are streamed with the term filter pushed down, as are
+files with more rows than the planners' metadata cap and, in a capped
+read, files past the cap's worth of rows; the rows one read streams
+(only its terms' rows) are dropped after it.
 
 :meth:`SegmentReader.rows` returns one term set's rows as
 :class:`ChunkRows`, which every driver path reads: ``search_local``,
@@ -45,6 +51,7 @@ import os
 import re
 import threading
 import weakref
+from typing import NamedTuple
 
 import numpy as np
 
@@ -201,53 +208,125 @@ def _narrow(vals: np.ndarray) -> np.ndarray:
     return vals
 
 
-# rows of FileRows.ints: integer metadata, then each row's posting bounds
+# decode work, in per-chunk decodes (codecs.decode_chunk plus
+# decode_lengths of one full 128-posting chunk, ~70 us on a 4-core
+# host): one codecs.decode_chunk_batch call costs about BATCH_CALL of
+# them, plus one per BATCH_ROWS rows it decodes (~0.4 ms, and ~1.6 ms
+# for a file of 1,647 chunks, on that host)
+BATCH_CALL, BATCH_ROWS = 6, 100
+
+
+def decode_cost(rows: int) -> float:
+    """The work of decoding ``rows`` chunks the cheaper way."""
+    return min(rows, BATCH_CALL + rows / BATCH_ROWS)
+
+
+class Coded(NamedTuple):
+    """Postings of a file's rows as stored: its Arrow ``payload``,
+    ``codec`` and ``dls`` columns."""
+    payload: object
+    codec: object
+    dls: object
+
+    def rows(self, idx: np.ndarray) -> "Decoded":
+        """The rows ``idx`` (sorted, distinct) decoded, one chunk at a
+        time when that is the cheaper way (:func:`decode_cost`), else in
+        one batch."""
+        import pyarrow as pa
+
+        if decode_cost(len(idx)) < len(idx):
+            cols = self
+            if len(idx) < len(self.payload):
+                take = pa.array(idx)
+                cols = [c.take(take) for c in self]
+            ids, tfs, dls, offsets = codecs.decode_chunk_batch(*cols)
+        else:
+            got = [
+                codecs.decode_chunk(
+                    self.payload[r].as_py(), self.codec[r].as_py()
+                ) + (codecs.decode_lengths(self.dls[r].as_py()),)
+                for r in idx.tolist()
+            ]
+            offsets = np.zeros(len(got) + 1, dtype=np.int64)
+            np.cumsum([len(g[0]) for g in got], out=offsets[1:])
+            ids, tfs, dls = (
+                np.concatenate([g[i] for g in got]) if got
+                else np.zeros(0, np.uint64)
+                for i in range(3)
+            )
+        return Decoded(
+            ids.view(np.int64), _narrow(tfs), _narrow(dls), offsets
+        )
+
+
+class Decoded(NamedTuple):
+    """Postings of a file's rows decoded: flat ``doc_ids`` (int64),
+    ``tfs`` and ``dls`` (:func:`_narrow`), row ``r`` at ``[offsets[r],
+    offsets[r + 1])``."""
+    doc_ids: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
+    offsets: np.ndarray
+
+    def row(self, r: int) -> tuple:
+        """Row ``r``'s (doc_ids, tfs, dls), as slices."""
+        lo, hi = self.offsets[r], self.offsets[r + 1]
+        return self.doc_ids[lo:hi], self.tfs[lo:hi], self.dls[lo:hi]
+
+
+# rows of FileRows.ints
 INT_COLS = ["salt", "chunk_seq", "first_doc_id", "last_doc_id", "n"]
 RATIO_COLS = ["max_ratio", "min_ratio"]
 
 
 class FileRows:
-    """Chunk rows of one file, or of one streamed record batch of it,
-    as numpy arrays: ``term`` (the Arrow term column), ``ints`` (one
-    int64 row per :data:`INT_COLS` column, then the rows' posting
-    bounds ``starts`` and ``ends``), ``ratios`` (one float64 row per
-    :data:`RATIO_COLS` column) and, when read with the payload columns,
-    every row's decoded postings: flat ``doc_ids`` (int64), ``tfs`` and
-    ``dls`` (:func:`_narrow`) with row ``r`` at ``[starts[r], ends[r])``
-    (None, and bounds 0, otherwise). The payload bytes are not kept.
-    ``runs``: the :class:`TermRuns` index of a pinned file."""
+    """Chunk rows of one file, or of one streamed read of it, as numpy
+    arrays: ``term`` (the Arrow term column), ``ints`` (one int64 row
+    per :data:`INT_COLS` column),
+    ``ratios`` (one float64 row per :data:`RATIO_COLS` column) and,
+    when read with the payload columns, ``post``: the rows' postings,
+    :class:`Coded` until :meth:`decode` makes them :class:`Decoded` and
+    drops the payload bytes (None without payload columns). ``runs``:
+    the :class:`TermRuns` index of a pinned file; ``spent``: the decode
+    work :meth:`ChunkRows.fetch` has spent on its rows piecemeal."""
 
     __slots__ = (
-        "term", "ints", "ratios", "doc_ids", "tfs", "dls", "runs",
-        "nbytes", "__weakref__",
+        "term", "ints", "ratios", "post", "runs", "spent", "__weakref__",
     )
 
     def __init__(self, batch, runs: TermRuns | None = None):
         n = batch.num_rows
-        self.ints = np.zeros((len(INT_COLS) + 2, n), dtype=np.int64)
+        self.ints = np.zeros((len(INT_COLS), n), dtype=np.int64)
         for i, c in enumerate(INT_COLS):
             self.ints[i] = batch.column(c).to_numpy(zero_copy_only=False)
         self.ratios = np.stack([
             batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64)
             for c in RATIO_COLS
         ])
-        self.doc_ids = self.tfs = self.dls = None
+        self.post = None
         if "payload" in batch.schema.names:
-            ids, tfs, dls, offsets = codecs.decode_chunk_batch(
-                batch.column("payload"), batch.column("codec"),
-                batch.column("dls"),
-            )
-            self.doc_ids = ids.view(np.int64)
-            self.tfs, self.dls = _narrow(tfs), _narrow(dls)
-            self.ints[-2], self.ints[-1] = offsets[:-1], offsets[1:]
+            self.post = Coded(*(
+                batch.column(c) for c in ("payload", "codec", "dls")
+            ))
         self.term = batch.column("term")
         self.runs = runs
-        self.nbytes = (
-            self.ints.nbytes + self.ratios.nbytes + self.term.nbytes
-            + (runs.nbytes if runs else 0)
-            + sum(a.nbytes for a in (self.doc_ids, self.tfs, self.dls)
-                  if a is not None)
+        self.spent = 0
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes held now (they change once when :meth:`decode` runs)."""
+        arrays = (self.ints, self.ratios, self.term) + tuple(self.post or ())
+        return sum(a.nbytes for a in arrays) + (
+            self.runs.nbytes if self.runs else 0
         )
+
+    def decode(self) -> None:
+        """Decode every row's postings at once and drop the payloads.
+        ``post`` is replaced whole, so a concurrent reader sees either
+        state; two threads decoding at once both get the same answer."""
+        post = self.post
+        if isinstance(post, Coded):
+            self.post = post.rows(np.arange(len(self.term)))
 
     def parts(self, terms: list[str]) -> list:
         """These rows as :class:`Part` s of ``terms``, when they are rows
@@ -316,15 +395,24 @@ class ChunkRows:
                 [p.src.ratios[:, p.sel] for p in parts], 1
             )
         else:
-            ints = np.zeros((len(INT_COLS) + 2, 0), dtype=np.int64)
+            ints = np.zeros((len(INT_COLS), 0), dtype=np.int64)
             ratios = np.zeros((len(RATIO_COLS), 0))
-        (self.salt, self.seq, self.first, self.last, self.n, self._lo,
-         self._hi) = ints
+        self.salt, self.seq, self.first, self.last, self.n = ints
         self.max_ratio, self.min_ratio = ratios
         self._srcs = None
-        if parts and all(p.src.doc_ids is not None for p in parts):
+        if parts and all(p.src.post is not None for p in parts):
             self._srcs = [p.src for p in parts]
             self._part = np.repeat(np.arange(len(parts)), [p.n for p in parts])
+            # each row's row in its FileRows
+            firsts = np.cumsum([0] + [p.n for p in parts[:-1]])
+            self._srow = np.arange(self.n_rows) + np.repeat([
+                p.sel.start - f if isinstance(p.sel, slice) else 0
+                for p, f in zip(parts, firsts.tolist())
+            ], [p.n for p in parts])
+            for p, f in zip(parts, firsts.tolist()):
+                if not isinstance(p.sel, slice):
+                    self._srow[f:f + p.n] = p.sel
+        self._coded: dict[int, tuple] = {}  # row -> postings decoded here
         self.metas: dict[str, wand.TermChunks] = {}
         self.lex: dict[str, dict] = {}
         self.raw_df: dict[str, int] = {}
@@ -401,12 +489,49 @@ class ChunkRows:
                 out[ks[j]] = lo + int(at[j])
         return out
 
+    def fetch(self, rows) -> None:
+        """Decode the postings of those of ``rows`` whose file is not
+        decoded, one batch per file, for :meth:`postings` to serve."""
+        by_src: dict[FileRows, list[int]] = {}
+        for row in dict.fromkeys(int(r) for r in rows):
+            src = self._srcs[self._part[row]]
+            if isinstance(src.post, Coded) and row not in self._coded:
+                by_src.setdefault(src, []).append(row)
+        for src, want in by_src.items():
+            # the work of decoding rows piecemeal is charged to their
+            # FileRows (a pinned file, or this read's streamed rows);
+            # once it reaches the work of decoding them all, that is
+            # done instead (ski rental: at most about twice the work of
+            # the better of the two)
+            src.spent += decode_cost(len(want))
+            if src.spent >= decode_cost(len(src.term)):
+                src.decode()
+            post = src.post
+            if not isinstance(post, Coded):
+                continue  # decoded whole
+            srows = self._srow[want]
+            order = np.argsort(srows)
+            got = post.rows(srows[order])
+            for j, i in enumerate(order.tolist()):
+                self._coded[want[i]] = got.row(j)
+
     def postings(self, row: int) -> tuple:
-        """(doc_ids int64, tfs, doc_lengths) of one row, as slices of its
-        file's decoded arrays; tombstoned ids masked (a copy then)."""
+        """(doc_ids int64, tfs, doc_lengths) of one row: slices of its
+        file's decoded arrays, or of the rows :meth:`fetch` decoded for
+        this read when the file is not decoded; tombstoned ids masked (a
+        copy then)."""
         src = self._srcs[self._part[row]]
-        lo, hi = self._lo[row], self._hi[row]
-        ids, tfs, dls = src.doc_ids[lo:hi], src.tfs[lo:hi], src.dls[lo:hi]
+        post = src.post
+        if isinstance(post, Decoded):
+            got = post.row(self._srow[row])
+        else:
+            got = self._coded.get(row)
+            if got is None:
+                self.fetch([row])
+                got = self._coded.get(row)
+            if got is None:  # the fetch decoded the whole file
+                got = src.post.row(self._srow[row])
+        ids, tfs, dls = got
         keep = wand.tombstone_mask(ids, self.deleted)
         if keep is not None:
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -424,9 +549,10 @@ _PINNED_LOCK = threading.Lock()
 
 
 def read_pinned(path: str) -> FileRows:
-    """Read one chunk file whole and decode it. A file whose rows are
-    not in term order (written before the build kept that order) is
-    sorted by (term, salt, chunk_seq) here, once."""
+    """Read one chunk file whole, its postings still encoded (see
+    :meth:`ChunkRows.fetch`). A file whose rows are not in term order
+    (written before the build kept that order) is sorted by (term, salt,
+    chunk_seq) here, once."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -529,10 +655,9 @@ class SegmentReader:
         been read.
 
         A pinned file serves each term's run as array slices (its
-        :class:`TermRuns` index), with no scan of its other rows and no
-        decode. Another file is pinned when :meth:`_admits` it, else
-        streamed with the term filter pushed down; the rows one read
-        streams are decoded together (with ``postings``) and dropped
+        :class:`TermRuns` index), with no scan of its other rows. Another
+        file is pinned when :meth:`_admits` it, else streamed with the
+        term filter pushed down; the rows one read streams are dropped
         after use (re-reading whole the files an evicting cache drops
         made ``search()`` ~1.75x slower than streaming them: a 27 MB
         pinned index under a 2-8 MB cap, 4-core host). So an above-cap
@@ -577,8 +702,6 @@ class SegmentReader:
                 if cap is not None and n_rows > cap:
                     return None
         if streamed:
-            # every streamed row in one decode: the batch decoder's
-            # fixed cost is paid once per read, not once per batch
             tbl = pa.Table.from_batches(streamed).combine_chunks()
             parts += FileRows(tbl.to_batches()[0]).parts(
                 list(dict.fromkeys(terms))
@@ -600,10 +723,13 @@ class SegmentReader:
         cap and, under the read's ``cap``, while the files the read has
         pinned hold at most ``cap`` rows with it."""
         n = self.file_rows(path)
-        return (
-            n <= self.pin_rows and self._bytes < self.cap_bytes
-            and (cap is None or pinned_rows + n <= cap)
-        )
+        if n > self.pin_rows or (cap is not None and pinned_rows + n > cap):
+            return False
+        if self._bytes < self.cap_bytes:
+            # a file grows when it is decoded: recount while below the
+            # cap (a count at or past it only grows)
+            self._bytes = sum(pf.nbytes for pf in self._tables.values())
+        return self._bytes < self.cap_bytes
 
     def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,
@@ -625,8 +751,9 @@ class SegmentReader:
 
     def decode_keys(self, keys) -> dict:
         """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
-        found, tombstoned ids masked: slices of the postings of the
-        keys' terms' rows (:meth:`rows`). The planners hold the terms'
+        found, tombstoned ids masked: the postings of the keys' rows
+        among their terms' rows (:meth:`rows`), those of files not yet
+        decoded in one batch per file. The planners hold the terms'
         chunk count to METADATA_CAP."""
         import pyarrow as pa
 
@@ -642,4 +769,6 @@ class SegmentReader:
             # follow a driver-scored search() (perfbench serve, 3
             # seeds, 4-core host)
             pa.default_memory_pool().release_unused()
-        return {key: cr.postings(row) for key, row in cr.find(keys).items()}
+        found = cr.find(keys)
+        cr.fetch(found.values())
+        return {key: cr.postings(row) for key, row in found.items()}

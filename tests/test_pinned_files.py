@@ -10,6 +10,7 @@ import shutil
 import sys
 import threading
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -191,39 +192,124 @@ def alive_topk(oracle, q, mode, dead, k=10):
     ][:k]
 
 
-def test_second_engine_decodes_nothing(spark, corpus, monkeypatch):
-    """A pinned file is decoded once: a second engine over the same
-    files answers ``search_local``, ``search()`` and ``batch_search``
-    from the first one's decoded copy, calling no decoder."""
-    idx, _docs, oracle = corpus
-    first = QueryEngine(spark, idx)
-    for q, mode in QUERIES:
-        first.search_local(q, mode=mode, k=10)
-        rows_of(first.search(q, mode=mode, k=10))
-    batch_rows(first.batch_search(BATCH, k=10))
+@pytest.fixture()
+def decoded_rows(monkeypatch):
+    """One entry per call to any chunk decoder from here on: the rows
+    it decodes (0 for ``decode_lengths``, which pairs with
+    ``decode_chunk``)."""
     calls = []
 
-    def spy(name):
+    def spy(name, rows):
         real = getattr(codecs, name)
 
         def wrapped(*args, **kwargs):
-            calls.append(name)
+            calls.append(rows(*args))
             return real(*args, **kwargs)
         return wrapped
 
-    for name in ("decode_chunk_batch", "decode_chunk", "decode_lengths"):
-        monkeypatch.setattr(codecs, name, spy(name))
+    for name, rows in (
+        ("decode_chunk_batch", lambda payload, *_: len(payload)),
+        ("decode_chunk", lambda *_: 1),
+        ("decode_lengths", lambda *_: 0),
+    ):
+        monkeypatch.setattr(codecs, name, spy(name, rows))
+    return calls
+
+
+def test_files_read_often_are_decoded_once_and_shared(
+    spark, corpus, decoded_rows
+):
+    """A pinned file read often is decoded whole, once: after enough
+    repeats of the same queries every file they read is decoded, and a
+    second engine over the same files answers ``search_local``,
+    ``search()`` and ``batch_search`` from the first one's decoded
+    copies, calling no decoder."""
+    idx, _docs, oracle = corpus
+    first = QueryEngine(spark, idx)
+    rows_of(first.search(*QUERIES[0], k=10))  # pins, reads postings
+    # every read of a file charges it at least two rows' worth, and a
+    # file is decoded whole once its charge reaches its row count
+    repeats = max(len(pf.term) for pf in first._reader._tables.values())
+    for _ in range(repeats // 2 + 1):
+        for q, mode in QUERIES:
+            first.search_local(q, mode=mode, k=10)
+            rows_of(first.search(q, mode=mode, k=10))
+        batch_rows(first.batch_search(BATCH, k=10))
+    assert any(
+        isinstance(pf.post, segment.Decoded)
+        for pf in first._reader._tables.values()
+    )
+    decoded_rows.clear()
     second = QueryEngine(spark, idx)
     local = [second.search_local(q, mode=mode, k=10) for q, mode in QUERIES]
     single = [rows_of(second.search(q, mode=mode, k=10)) for q, mode in QUERIES]
     batch = batch_rows(second.batch_search(BATCH, k=10))
-    assert calls == []
+    assert decoded_rows == []
     assert set(second._reader._tables) <= set(first._reader._tables)
     for got_l, got_s, (q, mode) in zip(local, single, QUERIES):
         assert_rank_identical(got_l, oracle.topk(q, mode=mode, k=10))
         assert_rank_identical(got_s, oracle.topk(q, mode=mode, k=10))
     for qid, q in BATCH:
         assert_rank_identical(batch.get(qid, []), oracle.topk(q, k=10))
+
+
+def test_cold_read_decodes_only_the_rows_it_asks_for(
+    spark, corpus, tmp_path, decoded_rows
+):
+    """A file's first postings read decodes the rows it asks for, not
+    the file: one key of a freshly pinned file decodes one row and
+    leaves the file encoded, and its postings equal the whole file's
+    decode."""
+    idx, _docs, _oracle = corpus
+    copy = str(tmp_path / "idx")  # files no other test's engine pinned
+    shutil.copytree(idx, copy)
+    eng = QueryEngine(spark, copy)
+    term = "w0"
+    cr = eng._reader.rows([term], postings=False)
+    assert cr.n_rows >= 2
+    key = cr.key(1)
+    decoded_rows.clear()
+    got = eng._reader.decode_keys([key])[key]
+    assert decoded_rows and sum(decoded_rows) == 1
+    assert eng._reader._tables
+    for pf in eng._reader._tables.values():
+        assert isinstance(pf.post, segment.Coded)
+        pf.decode()
+    want = eng._reader.rows([term])
+    row = want.find([key])[key]
+    for a, b in zip(got, want.postings(row)):
+        assert a.tolist() == b.tolist()
+
+
+def test_streamed_rows_decode_only_the_chunks_read(
+    spark, corpus, decoded_rows
+):
+    """A reader that pins nothing streams every file. A ``search_local``
+    decodes exactly the chunks it reads
+    (``last_local_stats["chunks_decoded"]``) until that work would reach
+    the work of decoding all the rows it streamed; then it decodes
+    those at once, so it never decodes more than the chunks it read
+    plus the rows it streamed."""
+    idx, _docs, oracle = corpus
+    eng = QueryEngine(spark, idx)
+    eng._reader.cap_bytes = 0
+    piecemeal = 0
+    # the top 1 of a rare term is in the first of its chunks read
+    for q, mode, k in [(q, mode, 10) for q, mode in QUERIES] + [
+        ("w150", "disjunctive", 1)
+    ]:
+        decoded_rows.clear()
+        got = eng.search_local(q, mode=mode, k=k)
+        assert_rank_identical(got, oracle.topk(q, mode=mode, k=k))
+        read = eng.last_local_stats["chunks_decoded"]
+        streamed = eng._reader.rows(q.split()).n_rows
+        if read < segment.decode_cost(streamed):
+            assert sum(decoded_rows) == read
+            piecemeal += 1
+        else:
+            assert sum(decoded_rows) <= read + streamed
+    assert piecemeal
+    assert eng._reader._tables == {}
 
 
 def test_engines_with_different_deletes_share_one_copy(
@@ -306,3 +392,58 @@ def test_concurrent_loads_keep_one_copy(tmp_path):
     for path in paths:
         assert len(got[path]) == n_threads
         assert all(pf is got[path][0] for pf in got[path])
+
+
+def test_piecemeal_and_whole_decodes_agree(tmp_path):
+    """A pinned file's rows decoded one chunk at a time, in one batch
+    (a subset or all of them, varbyte-fallback chunks among them) and by
+    the whole-file :meth:`FileRows.decode` give the same postings, with
+    int64 doc ids, as ``decode_chunk``/``decode_lengths``."""
+    rng = np.random.default_rng(5)
+    n = 60
+    want, payload, codec, dls = [], [], [], []
+    for j in range(n):
+        size = int(rng.integers(1, 129))
+        gap_top = 2**30 if j % 7 == 3 else 50  # some need the fallback
+        ids = np.cumsum(rng.integers(1, gap_top, size)) + j
+        tfs = rng.integers(1, 300, size)
+        lens = rng.integers(1, 70_000, size)
+        c, p = codecs.encode_chunk(ids, tfs)
+        want.append((ids, tfs, lens))
+        codec.append(c)
+        payload.append(p)
+        dls.append(codecs.encode_lengths(lens))
+    assert codecs.CODEC_VB_FALLBACK in codec
+    path = str(tmp_path / "part-0.parquet")
+    pq.write_table(pa.table({
+        "term": [f"t{j:03d}" for j in range(n)],
+        "salt": pa.array([0] * n, pa.int32()),
+        "chunk_seq": pa.array([0] * n, pa.int32()),
+        "first_doc_id": [int(w[0][0]) for w in want],
+        "last_doc_id": [int(w[0][-1]) for w in want],
+        "n": pa.array([len(w[0]) for w in want], pa.int32()),
+        "max_ratio": [0.5] * n,
+        "min_ratio": [0.5] * n,
+        "codec": pa.array(codec, pa.int32()),
+        "payload": payload,
+        "dls": dls,
+    }), path)
+    pf = segment.read_pinned(path)
+
+    def check(post, rows):
+        for j, r in enumerate(rows):
+            got = post.row(j)
+            assert got[0].dtype == np.int64
+            for a, b in zip(got, want[r]):
+                assert a.tolist() == b.tolist()
+
+    subsets = ([7], [0, 3, 10, 59], list(range(2, n, 2)), list(range(n)))
+    # both ways: one chunk at a time and one batch
+    assert {
+        segment.decode_cost(len(rows)) < len(rows) for rows in subsets
+    } == {False, True}
+    for rows in subsets:
+        check(pf.post.rows(np.array(rows)), rows)
+    pf.decode()
+    assert isinstance(pf.post, segment.Decoded)
+    check(pf.post, range(n))
