@@ -274,35 +274,36 @@ class Decoded(NamedTuple):
         return self.doc_ids[lo:hi], self.tfs[lo:hi], self.dls[lo:hi]
 
 
-# rows of FileRows.ints
-INT_COLS = ["salt", "chunk_seq", "first_doc_id", "last_doc_id", "n"]
-RATIO_COLS = ["max_ratio", "min_ratio"]
+# FileRows.mats: the metadata columns, one matrix per on-disk type
+MAT_COLS = (
+    (("first_doc_id", "last_doc_id"), np.int64),
+    (("salt", "chunk_seq", "n"), np.int32),
+    (("max_ratio", "min_ratio"), np.float64),
+)
 
 
 class FileRows:
     """Chunk rows of one file, or of one streamed read of it, as numpy
-    arrays: ``term`` (the Arrow term column), ``ints`` (one int64 row
-    per :data:`INT_COLS` column),
-    ``ratios`` (one float64 row per :data:`RATIO_COLS` column) and,
-    when read with the payload columns, ``post``: the rows' postings,
+    arrays: ``term`` (the Arrow term column), ``mats`` (one matrix per
+    :data:`MAT_COLS` group, one row per column) and, when read with
+    the payload columns, ``post``: the rows' postings,
     :class:`Coded` until :meth:`decode` makes them :class:`Decoded` and
     drops the payload bytes (None without payload columns). ``runs``:
     the :class:`TermRuns` index of a pinned file; ``spent``: the decode
     work :meth:`ChunkRows.fetch` has spent on its rows piecemeal."""
 
     __slots__ = (
-        "term", "ints", "ratios", "post", "runs", "spent", "__weakref__",
+        "term", "mats", "post", "runs", "spent", "__weakref__",
     )
 
     def __init__(self, batch, runs: TermRuns | None = None):
         n = batch.num_rows
-        self.ints = np.zeros((len(INT_COLS), n), dtype=np.int64)
-        for i, c in enumerate(INT_COLS):
-            self.ints[i] = batch.column(c).to_numpy(zero_copy_only=False)
-        self.ratios = np.stack([
-            batch.column(c).to_numpy(zero_copy_only=False).astype(np.float64)
-            for c in RATIO_COLS
-        ])
+        self.mats = []
+        for cols, dtype in MAT_COLS:
+            mat = np.zeros((len(cols), n), dtype=dtype)
+            for i, c in enumerate(cols):
+                mat[i] = batch.column(c).to_numpy(zero_copy_only=False)
+            self.mats.append(mat)
         self.post = None
         if "payload" in batch.schema.names:
             self.post = Coded(*(
@@ -315,7 +316,7 @@ class FileRows:
     @property
     def nbytes(self) -> int:
         """Bytes held now (they change once when :meth:`decode` runs)."""
-        arrays = (self.ints, self.ratios, self.term) + tuple(self.post or ())
+        arrays = (*self.mats, self.term, *(self.post or ()))
         return sum(a.nbytes for a in arrays) + (
             self.runs.nbytes if self.runs else 0
         )
@@ -387,18 +388,16 @@ class ChunkRows:
         }
         self._code = np.repeat(np.arange(len(self.terms)), sizes)
         if len(parts) == 1:
-            ints = parts[0].src.ints[:, parts[0].sel]
-            ratios = parts[0].src.ratios[:, parts[0].sel]
+            mats = [m[:, parts[0].sel] for m in parts[0].src.mats]
         elif parts:
-            ints = np.concatenate([p.src.ints[:, p.sel] for p in parts], 1)
-            ratios = np.concatenate(
-                [p.src.ratios[:, p.sel] for p in parts], 1
-            )
+            mats = [
+                np.concatenate([p.src.mats[g][:, p.sel] for p in parts], 1)
+                for g in range(len(MAT_COLS))
+            ]
         else:
-            ints = np.zeros((len(INT_COLS), 0), dtype=np.int64)
-            ratios = np.zeros((len(RATIO_COLS), 0))
-        self.salt, self.seq, self.first, self.last, self.n = ints
-        self.max_ratio, self.min_ratio = ratios
+            mats = [np.zeros((len(c), 0), dt) for c, dt in MAT_COLS]
+        ((self.first, self.last), (self.salt, self.seq, self.n),
+         (self.max_ratio, self.min_ratio)) = mats
         self._srcs = None
         if parts and all(p.src.post is not None for p in parts):
             self._srcs = [p.src for p in parts]
@@ -412,7 +411,7 @@ class ChunkRows:
             for p, f in zip(parts, firsts.tolist()):
                 if not isinstance(p.sel, slice):
                     self._srow[f:f + p.n] = p.sel
-        self._coded: dict[int, tuple] = {}  # row -> postings decoded here
+        self._fetched: dict[int, tuple] = {}  # row -> postings fetch() decoded
         self.metas: dict[str, wand.TermChunks] = {}
         self.lex: dict[str, dict] = {}
         self.raw_df: dict[str, int] = {}
@@ -477,7 +476,7 @@ class ChunkRows:
             if t not in self.span:
                 continue
             lo, hi = self.span[t]
-            have = (self.salt[lo:hi] << 32) + self.seq[lo:hi]
+            have = (self.salt[lo:hi].astype(np.int64) << 32) + self.seq[lo:hi]
             order = np.argsort(have, kind="stable")
             want = np.array(
                 [(int(s) << 32) + int(c) for _t, s, c in ks], np.int64
@@ -491,11 +490,12 @@ class ChunkRows:
 
     def fetch(self, rows) -> None:
         """Decode the postings of those of ``rows`` whose file is not
-        decoded, one batch per file, for :meth:`postings` to serve."""
+        decoded, together per file (:meth:`Coded.rows`), for
+        :meth:`postings` to serve during this read."""
         by_src: dict[FileRows, list[int]] = {}
         for row in dict.fromkeys(int(r) for r in rows):
             src = self._srcs[self._part[row]]
-            if isinstance(src.post, Coded) and row not in self._coded:
+            if isinstance(src.post, Coded) and row not in self._fetched:
                 by_src.setdefault(src, []).append(row)
         for src, want in by_src.items():
             # the work of decoding rows piecemeal is charged to their
@@ -513,7 +513,7 @@ class ChunkRows:
             order = np.argsort(srows)
             got = post.rows(srows[order])
             for j, i in enumerate(order.tolist()):
-                self._coded[want[i]] = got.row(j)
+                self._fetched[want[i]] = got.row(j)
 
     def postings(self, row: int) -> tuple:
         """(doc_ids int64, tfs, doc_lengths) of one row: slices of its
@@ -525,10 +525,10 @@ class ChunkRows:
         if isinstance(post, Decoded):
             got = post.row(self._srow[row])
         else:
-            got = self._coded.get(row)
+            got = self._fetched.get(row)
             if got is None:
                 self.fetch([row])
-                got = self._coded.get(row)
+                got = self._fetched.get(row)
             if got is None:  # the fetch decoded the whole file
                 got = src.post.row(self._srow[row])
         ids, tfs, dls = got
