@@ -51,6 +51,7 @@ import time
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 from . import codecs, wand
@@ -1085,15 +1086,26 @@ class IndexBuilder:
                     avgdl=avgdl,
                 )
                 chunk_inputs = ["tokens", "stats"]
+            # the encode's tasks each hold one salt range of every term;
+            # range-partitioning its output on (bucket, term) puts each
+            # term's rows in one task, so a term is one run of one file
+            # and each task writes only the few buckets its range spans
+            # (~n_salts + bucket_count files, not n_salts per bucket).
+            # These rows are encoded chunks, ~128x fewer than postings.
+            # They are persisted first: the range partitioner's sampling
+            # job would otherwise run the encode a second time.
             chunks = chunks.withColumn(
                 "bucket", term_bucket_col(F.col("term"), self.bucket_count)
-            )
-            self._write(
-                chunks,
-                "chunks",
-                partition_by=["bucket"],
-                sort_cols=["term", "salt", "chunk_seq"],
-            )
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                self._write(
+                    chunks.repartitionByRange(n_salts, "bucket", "term"),
+                    "chunks",
+                    partition_by=["bucket"],
+                    sort_cols=["term", "salt", "chunk_seq"],
+                )
+            finally:
+                chunks.unpersist()
             self._record_stage(
                 manifest, "chunks", time.time() - t0, chunk_inputs
             )

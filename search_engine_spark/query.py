@@ -59,7 +59,6 @@ the interactive "REPL" parity path with ~ms latency, no Spark job.
 from __future__ import annotations
 
 import functools
-import heapq
 import os
 
 import numpy as np
@@ -198,6 +197,17 @@ def kth_score(top: dict | None, k: int) -> float | None:
     if top is None or len(top["score"]) < k:
         return None
     return float(top["score"][k - 1])
+
+
+def topk_order(docs: np.ndarray, score: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the top ``k`` of ``score``, ordered score desc, doc id
+    asc: ``np.partition`` finds the k-th best score, and only the
+    candidates at or above it (ties included) are sorted."""
+    sel = np.arange(len(score))
+    if len(score) > k:
+        sel = np.flatnonzero(score >= np.partition(score, len(score) - k)[-k])
+    order = np.lexsort((docs[sel], -score[sel].astype(np.float64)))
+    return sel[order[:k]]
 
 
 def bm25_scores(
@@ -944,9 +954,15 @@ class QueryEngine:
         return self._agg_topk(scored, mode, len(present), k, explain, dtype)
 
     def _meta_theta(
-        self, present: list[str], metas: dict[str, wand.TermChunks], k: int
+        self,
+        present: list[str],
+        metas: dict[str, wand.TermChunks],
+        lex: dict[str, dict],
+        k: int,
     ) -> float | None:
-        """Score threshold from chunk metadata ALONE (no decode job).
+        """Score threshold of a disjunctive (or one-term) query from
+        chunk metadata ALONE (no decode job); None where it is not valid
+        or no term has k chunks.
 
         A chunk's bound is ATTAINED: ``max_ratio`` is the exact maximum
         tf/(K+tf) over its postings, so some doc scores exactly
@@ -957,9 +973,22 @@ class QueryEngine:
         (other terms only add). Hence max over terms of the k-th
         highest chunk bound is a true lower bound of the k-th best
         total score. Invalid for conjunctive (the attaining doc need
-        not contain the other terms) and with negative idf anywhere
-        (another term could subtract) — callers gate on both.
+        not contain the other terms: callers gate on it) and with
+        negative idf anywhere (another term could subtract). The
+        bounds must be attained by live docs, so it is off while
+        deletes exist (a tombstoned doc may be the attainer), under a
+        stats override (rescaled bounds are no longer attained) and
+        with a NOT clause (an excluded doc may be the attainer).
         """
+        if (
+            self.has_deletes
+            or self.has_stats_override
+            or self._exclude_df is not None
+            or any(
+                wand.idf(lex[t]["df"], self.n_docs) < 0 for t in present
+            )
+        ):
+            return None
         theta0 = None
         for t in present:
             b = metas[t].bound
@@ -1449,30 +1478,13 @@ class QueryEngine:
             # segments, not one segment's low-scoring tail
             n_p1 = min(max(n_p1, 16), len(order))
             theta = None
-            # metadata-only threshold (gated: disjunctive semantics,
-            # all-nonnegative idf — see _meta_theta); when its bound
-            # distribution separates cleanly, the phase-1 probe is
-            # skipped entirely
+            # metadata-only threshold (gated: see _meta_theta; a
+            # decode-probe theta stays valid under deletes, the probe
+            # masks deleted ids); when its bound distribution separates
+            # cleanly, the phase-1 probe is skipped entirely
             theta0 = None
-            # _meta_theta's validity rests on chunk bounds being
-            # ATTAINED — a tombstoned doc may be the attainer, so the
-            # fast path is off while deletes exist (decode-probe thetas
-            # remain valid: the probe masks deleted ids)
-            if (
-                (not conj or len(present) == 1)
-                and not self.has_deletes
-                # rescaled override bounds are no longer attained
-                and not self.has_stats_override
-                # an excluded doc may be the bound's attainer: a
-                # metadata-only theta could then exceed the surviving
-                # k-th best and prune surviving docs' segments
-                and self._exclude_df is None
-                and all(
-                    wand.idf(lex[t]["df"], self.n_docs) >= 0
-                    for t in present
-                )
-            ):
-                theta0 = self._meta_theta(present, metas, k)
+            if not conj or len(present) == 1:
+                theta0 = self._meta_theta(present, metas, lex, k)
             run_p1 = n_p1 < len(order)
             if theta0 is not None:
                 self.last_plan_stats["theta0"] = theta0
@@ -2302,7 +2314,7 @@ class QueryEngine:
             if floors is not None and qid in floors:
                 sel &= score >= floors[qid]
             cand, score = cand[sel], score[sel]
-            top = np.lexsort((cand, -score.astype(np.float64)))[:k]
+            top = topk_order(cand, score, k)
             if not len(top):
                 continue
             row = {"doc_id": cand[top], "score": score[top]}
@@ -2367,12 +2379,13 @@ class QueryEngine:
     ) -> list[tuple[int, float]]:
         """Low-latency driver-side path: the query terms' chunk rows as
         slices of the SegmentReader's term-sorted bucket files (cold
-        files are pinned, up to the reader's byte cap), then the
-        sequential block-max WAND sweep — chunks' postings are read in
-        descending segment-bound order and skipped entirely once they
-        cannot reach the top-k threshold. ``last_local_stats``
+        files are pinned, up to the reader's byte cap), then a
+        block-max WAND sweep in two vectorised passes over the segments
+        (see below): chunks covering no segment that can reach the
+        top-k threshold are never read. ``last_local_stats``
         ["chunks_decoded"] counts the distinct chunks whose postings the
-        query read."""
+        query read; ``["theta0"]`` is the metadata threshold, when one
+        applied."""
         check_k_mode(k, mode)
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(
@@ -2398,7 +2411,6 @@ class QueryEngine:
         metas = cr.metas
         present = sorted(metas)
         dfs = {t: cr.lex[t]["df"] for t in present}
-        conj = mode == "conjunctive" and len(present) > 1
         stats = {
             "chunks_total": cr.n_rows,
             "chunks_decoded": 0,
@@ -2406,152 +2418,127 @@ class QueryEngine:
             "segments_processed": 0,
         }
         self.last_local_stats = stats
-        read: set[int] = set()
-
-        def get_chunk(row: int):
-            # the row's postings (see ChunkRows.postings); the
-            # distinct rows read are counted
-            read.add(row)
-            stats["chunks_decoded"] = len(read)
-            return cr.postings(row)
-
-        if conj:
+        if mode == "conjunctive" and len(present) > 1:
             # posting-level nextGEQ (reference DAAT semantics): read
             # the rarest term fully, then for every other term read
             # ONLY the chunks that contain a surviving candidate —
             # score-bound segments cannot express this granularity
-            return self._local_conjunctive(
-                metas, dfs, present, k, get_chunk, stats
-            )
+            return self._local_conjunctive(cr, dfs, present, k, stats)
 
-        # conjunctive multi-term queries returned above, so everything
-        # below is the DISJUNCTIVE sweep — the former per-branch conj
-        # handling here was unreachable
         seg_lo, seg_hi, bound, cover = wand.sweep_segments(
             metas, conjunctive=False
         )
         stats["segments_total"] = len(seg_lo)
         if len(seg_lo) == 0:
             return []
-
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-        def score_candidates(per_term: dict):
-            """(cand, total) over one candidate region, float32 sums in
-            canonical sorted-term order (rank-identity with the oracle)."""
-            cand = np.unique(
-                np.concatenate([v[0] for v in per_term.values()])
+        # pass 1: the segments whose bound reaches the metadata
+        # threshold (they hold every doc that attains it, so their k-th
+        # best score is at least that high), else the 16 top-bound
+        # segments; pass 2: every other segment whose bound reaches
+        # pass 1's k-th best score. Segments are disjoint, so no doc is
+        # scored twice.
+        theta0 = self._meta_theta(present, metas, cr.lex, k)
+        if theta0 is not None:
+            stats["theta0"] = theta0
+            first = bound >= theta0
+        else:
+            first = np.zeros(len(bound), dtype=bool)
+            first[np.argsort(-bound, kind="stable")[:16]] = True
+        read: list[np.ndarray] = []
+        cand, score = self._score_segments(
+            cr, present, dfs, seg_lo, seg_hi, cover, first, read
+        )
+        theta = -np.inf
+        if len(score) >= k:
+            theta = float(np.partition(score, len(score) - k)[-k])
+        second = ~first & (bound >= theta)
+        if second.any():
+            cand2, score2 = self._score_segments(
+                cr, present, dfs, seg_lo, seg_hi, cover, second, read
             )
-            total = np.zeros(len(cand), dtype=np.float32)
-            for t in present:
-                if t not in per_term:
-                    continue
-                ids_t, tfs_t, dls_t = per_term[t]
-                pos = np.searchsorted(cand, ids_t)
-                s = bm25_scores(
-                    tfs_t, dls_t, dfs[t], self.n_docs, self.avgdl
-                )
-                total[pos] = (total[pos] + s).astype(np.float32)
-            return cand, total
+            cand = np.concatenate([cand, cand2])
+            score = np.concatenate([score, score2])
+        stats["segments_processed"] = int(first.sum() + second.sum())
+        if read:
+            stats["chunks_decoded"] = len(np.unique(np.concatenate(read)))
+        return [
+            (int(cand[i]), float(score[i]))
+            for i in topk_order(cand, score, k).tolist()
+        ]
 
-        def push_topk(cand, total):
-            best = np.lexsort((cand, -total.astype(np.float64)))[:k]
-            for i in best.tolist():
-                item = (float(total[i]), -int(cand[i]))
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-
-        order = np.argsort(-bound, kind="stable")
-        # phase 1: sequential sweep of the top-bound segments — raises
-        # the threshold fast and stops as soon as bounds fall below it
-        n_p1 = min(16, len(order))
-        for si in order[:n_p1].tolist():
-            if len(heap) == k and bound[si] < heap[0][0]:
-                break
-            stats["segments_processed"] += 1
-            lo, hi = int(seg_lo[si]), int(seg_hi[si])
-            per_term = {}
-            for j, t in enumerate(present):
-                ci = cover[si, j]
-                if ci < 0:
-                    continue
-                ids, tfs, dls = get_chunk(int(metas[t].rows[ci]))
-                l = np.searchsorted(ids, lo, side="left")
-                r = np.searchsorted(ids, hi, side="left")
-                if l < r:
-                    per_term[t] = (ids[l:r], tfs[l:r], dls[l:r])
-            if not per_term:
+    def _score_segments(
+        self,
+        cr: segment.ChunkRows,
+        present: list[str],
+        dfs: dict[str, int],
+        seg_lo: np.ndarray,
+        seg_hi: np.ndarray,
+        cover: np.ndarray,
+        sel: np.ndarray,
+        read: list,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(doc ids, float32 scores) of every doc in the segments
+        ``sel`` (a mask over ``wand.sweep_segments``' output): per term,
+        one :meth:`segment.ChunkRows.gather` of the chunks covering
+        them, masked to their merged intervals, scored and summed in
+        sorted-term order (rank identity with the oracle). The rows read
+        are appended to ``read``."""
+        lo, hi = wand.merge_intervals(seg_lo[sel], seg_hi[sel])
+        scored = []
+        for j, t in enumerate(present):
+            cis = np.unique(cover[sel, j])
+            rows = cr.metas[t].rows[cis[cis >= 0]]
+            if not len(rows):
                 continue
-            push_topk(*score_candidates(per_term))
-        theta = heap[0][0] if len(heap) == k else -np.inf
-        # phase 2: every surviving segment in ONE vectorized pass (the
-        # common no-pruning query costs the same as exhaustive scoring;
-        # segments are disjoint, so no doc is scored twice)
-        rest = order[n_p1:]
-        rest = rest[bound[rest] >= theta]
-        if len(rest):
-            stats["segments_processed"] += len(rest)
-            mlo, mhi = wand.merge_intervals(seg_lo[rest], seg_hi[rest])
-            per_term = {}
-            for j, t in enumerate(present):
-                cis = np.unique(cover[rest, j])
-                cis = cis[cis >= 0]
-                if not len(cis):
-                    continue
-                parts = [
-                    get_chunk(int(metas[t].rows[ci])) for ci in cis.tolist()
-                ]
-                ids = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts])
-                dls = np.concatenate([p[2] for p in parts])
-                keep = wand.ids_in_intervals(ids, mlo, mhi)
-                if keep.any():
-                    per_term[t] = (ids[keep], tfs[keep], dls[keep])
-            if per_term:
-                push_topk(*score_candidates(per_term))
-        return [(-nd, s) for s, nd in sorted(heap, reverse=True)]
+            read.append(rows)
+            ids, tfs, dls = cr.gather(rows)
+            keep = wand.ids_in_intervals(ids, lo, hi)
+            ids = ids[keep]
+            if len(ids):
+                scored.append((ids, bm25_scores(
+                    tfs[keep], dls[keep], dfs[t], self.n_docs, self.avgdl
+                )))
+        if len(scored) < 2:
+            return scored[0] if scored else (
+                np.zeros(0, np.int64), np.zeros(0, np.float32)
+            )
+        cand = np.unique(np.concatenate([ids for ids, _s in scored]))
+        total = np.zeros(len(cand), dtype=np.float32)
+        for ids, sc in scored:
+            pos = np.searchsorted(cand, ids)
+            total[pos] = (total[pos] + sc).astype(np.float32)
+        return cand, total
 
     def _local_conjunctive(
         self,
-        metas: dict[str, wand.TermChunks],
+        cr: segment.ChunkRows,
         dfs: dict[str, int],
         present: list[str],
         k: int,
-        get_chunk,
         stats: dict,
     ) -> list[tuple[int, float]]:
         """Pivot-driven conjunctive DAAT: candidates = the rarest term's
         postings; every other term (rarest first) reads only chunks
         containing a surviving candidate, shrinking the candidate set as
-        it goes. Exact evaluation — no threshold needed."""
+        it goes, each term's chunks in one
+        :meth:`segment.ChunkRows.gather`. Exact evaluation — no
+        threshold needed."""
         by_df = sorted(present, key=lambda t: (dfs[t], t))
-        pivot = by_df[0]
-        m = metas[pivot]
-        parts = [get_chunk(int(r)) for r in m.rows.tolist()]
-        cand = np.concatenate([p[0] for p in parts])
-        lists: dict[str, tuple] = {
-            pivot: (
-                cand,
-                np.concatenate([p[1] for p in parts]),
-                np.concatenate([p[2] for p in parts]),
-            )
-        }
+        rows = cr.metas[by_df[0]].rows
+        stats["chunks_decoded"] = len(rows)
+        lists = {by_df[0]: cr.gather(rows)}
+        cand = lists[by_df[0]][0]
         for t in by_df[1:]:
-            m = metas[t]
+            m = cr.metas[t]
             idx = np.searchsorted(m.first, cand, side="right") - 1
             safe = np.clip(idx, 0, None)
             hit = (idx >= 0) & (m.last[safe] >= cand)
             need = np.unique(idx[hit])
             if not len(need):
                 return []
-            parts = [get_chunk(int(m.rows[ci])) for ci in need.tolist()]
-            ids_t = np.concatenate([p[0] for p in parts])
-            tfs_t = np.concatenate([p[1] for p in parts])
-            dls_t = np.concatenate([p[2] for p in parts])
-            lists[t] = (ids_t, tfs_t, dls_t)
-            cand = np.intersect1d(cand, ids_t, assume_unique=True)
+            stats["chunks_decoded"] += len(need)
+            lists[t] = cr.gather(m.rows[need])
+            cand = np.intersect1d(cand, lists[t][0], assume_unique=True)
             if not len(cand):
                 return []
         total = np.zeros(len(cand), dtype=np.float32)
@@ -2562,8 +2549,10 @@ class QueryEngine:
                 tfs_t[pos], dls_t[pos], dfs[t], self.n_docs, self.avgdl
             )
             total = (total + s).astype(np.float32)
-        order = np.lexsort((cand, -total.astype(np.float64)))[:k]
-        return [(int(cand[i]), float(total[i])) for i in order]
+        return [
+            (int(cand[i]), float(total[i]))
+            for i in topk_order(cand, total, k).tolist()
+        ]
 
     # ----------------------------------------------------------- snippets
 

@@ -1,28 +1,35 @@
 """Driver-side reader of one index segment's ``chunks`` stage (parquet
 layout) — the numpy view every driver-side query path shares.
 
-The chunks stage is hive-partitioned by term bucket, and every file is
-sorted by (term, salt, chunk_seq): the build's sort key starts with
-``bucket``, so Spark's partitioned writer keeps the order. A
-:class:`SegmentReader` lists the bucket files once and pins the files
+The chunks stage is hive-partitioned by term bucket. A build keeps each
+term's rows in one file, as one run sorted by (salt, chunk_seq), which
+is doc-id order: it range-partitions the encoded rows on (bucket, term)
+before the write, and the write's sort key starts with ``bucket``, so
+Spark's partitioned writer keeps the order. An index written before
+that (one file per salt range, each holding every term of its bucket),
+or merged map-only from several sources, spreads a term over several
+files; the reader serves it the same way, one part per file.
+
+A :class:`SegmentReader` lists the bucket files once and pins the files
 it reads, up to a byte cap. A pinned file (:class:`FileRows`) is read
 whole: its metadata columns as numpy arrays and a :class:`TermRuns`
-index of where its terms' rows lie, so a term's chunk rows are array
+index of where its terms' runs lie, so a term's chunk rows are array
 slices. Its postings are decoded on demand: the rows one read asks
 for, chunk by chunk or, for many rows, in one
 :func:`codecs.decode_chunk_batch` call per file, until the work spent
 that way reaches the work of decoding the whole file; then the whole
 file is decoded once into flat ``doc_ids``, ``tfs`` and ``dls`` arrays
-and its payload bytes are dropped. From then on a chunk's postings are
-array slices, decoded by no query. So a file read often is decoded
-whole, and a cold query (a fresh process, or files read rarely)
-decodes only the chunks it reads. The rows one read streams are
-decoded the same way, for that read only.
+and its payload bytes are dropped. From then on a term's postings are
+one slice of those arrays (or one gather, for a subset of its chunks),
+decoded by no query. So a file read often is decoded whole, and a cold
+query (a fresh process, or files read rarely) decodes only the chunks
+it reads. The rows one read streams are decoded the same way, for that
+read only.
 
 Pinned files are shared: readers over the same immutable file hold one
 copy per process (:func:`pinned`), decoded or not, which leaves memory
-when no reader holds it. A file written before the build sorted this
-way is sorted once, when it is pinned. A reader evicts nothing: once it
+when no reader holds it. A file written before the build sorted by term
+is sorted once, when it is pinned. A reader evicts nothing: once it
 holds its byte cap (counting a decoded file at its decoded size), files
 it does not hold are streamed with the term filter pushed down, as are
 files with more rows than the planners' metadata cap and, in a capped
@@ -32,9 +39,10 @@ read, files past the cap's worth of rows; the rows one read streams
 :meth:`SegmentReader.rows` returns one term set's rows as
 :class:`ChunkRows`, which every driver path reads: ``search_local``,
 the driver-planned ``search()``/``batch_search`` metadata and their
-driver scoring (:meth:`SegmentReader.decode_keys`). It masks the
-postings it hands out with its reader's tombstones (per engine: the
-shared copy holds every posting), and :meth:`ChunkRows.plan` adds the
+driver scoring (:meth:`SegmentReader.decode_keys`).
+:meth:`ChunkRows.gather` hands out one term's postings for many rows
+at once, masked with its reader's tombstones (per engine: the shared
+copy holds every posting), and :meth:`ChunkRows.plan` adds the
 per-term block-max metadata (``wand.TermChunks`` + lexicon stats) the
 planners work from, which the Spark-collected metadata of an Iceberg
 index feeds too.
@@ -273,6 +281,20 @@ class Decoded(NamedTuple):
         lo, hi = self.offsets[r], self.offsets[r + 1]
         return self.doc_ids[lo:hi], self.tfs[lo:hi], self.dls[lo:hi]
 
+    def take(self, rows: np.ndarray) -> tuple:
+        """The (doc_ids, tfs, dls) of ``rows`` concatenated in their
+        order: one slice when they are adjacent rows in ascending order,
+        else one gather."""
+        lo = self.offsets[rows]
+        hi = self.offsets[rows + 1]
+        if (np.diff(rows) == 1).all():
+            sel = slice(lo[0], hi[-1])
+        else:
+            lens = hi - lo
+            ends = np.cumsum(lens)
+            sel = np.repeat(lo - ends + lens, lens) + np.arange(ends[-1])
+        return self.doc_ids[sel], self.tfs[sel], self.dls[sel]
+
 
 # FileRows.mats: the metadata columns, one matrix per on-disk type
 MAT_COLS = (
@@ -290,10 +312,12 @@ class FileRows:
     :class:`Coded` until :meth:`decode` makes them :class:`Decoded` and
     drops the payload bytes (None without payload columns). ``runs``:
     the :class:`TermRuns` index of a pinned file; ``spent``: the decode
-    work :meth:`ChunkRows.fetch` has spent on its rows piecemeal."""
+    work :meth:`ChunkRows.fetch` has spent on its rows piecemeal;
+    ``readers``: the :class:`SegmentReader` s that hold it, whose byte
+    counts :meth:`decode` updates."""
 
     __slots__ = (
-        "term", "mats", "post", "runs", "spent", "__weakref__",
+        "term", "mats", "post", "runs", "spent", "readers", "__weakref__",
     )
 
     def __init__(self, batch, runs: TermRuns | None = None):
@@ -312,6 +336,7 @@ class FileRows:
         self.term = batch.column("term")
         self.runs = runs
         self.spent = 0
+        self.readers = weakref.WeakSet()
 
     @property
     def nbytes(self) -> int:
@@ -322,12 +347,20 @@ class FileRows:
         )
 
     def decode(self) -> None:
-        """Decode every row's postings at once and drop the payloads.
+        """Decode every row's postings at once, drop the payloads and add
+        the change in :attr:`nbytes` to every reader holding this file.
         ``post`` is replaced whole, so a concurrent reader sees either
         state; two threads decoding at once both get the same answer."""
         post = self.post
         if isinstance(post, Coded):
-            self.post = post.rows(np.arange(len(self.term)))
+            got = post.rows(np.arange(len(self.term)))
+            if self.post is not post:
+                return  # another thread decoded it meanwhile
+            before = self.nbytes
+            self.post = got
+            grown = self.nbytes - before
+            for reader in list(self.readers):
+                reader.held_bytes += grown
 
     def parts(self, terms: list[str]) -> list:
         """These rows as :class:`Part` s of ``terms``, when they are rows
@@ -491,7 +524,7 @@ class ChunkRows:
     def fetch(self, rows) -> None:
         """Decode the postings of those of ``rows`` whose file is not
         decoded, together per file (:meth:`Coded.rows`), for
-        :meth:`postings` to serve during this read."""
+        :meth:`gather` to serve during this read."""
         by_src: dict[FileRows, list[int]] = {}
         for row in dict.fromkeys(int(r) for r in rows):
             src = self._srcs[self._part[row]]
@@ -515,23 +548,48 @@ class ChunkRows:
             for j, i in enumerate(order.tolist()):
                 self._fetched[want[i]] = got.row(j)
 
+    def gather(self, rows) -> tuple:
+        """(doc_ids int64, tfs, doc_lengths) of ``rows`` (at least one)
+        concatenated in their order (one term's rows in doc-id order
+        give its postings in doc-id order), tombstoned ids masked once.
+        Rows of files not yet decoded are decoded first, together per
+        file (:meth:`fetch`); then each run of rows in one part is one
+        slice or one gather of its file's decoded arrays."""
+        rows = np.asarray(rows, dtype=np.int64)
+        part = self._part[rows]
+        cuts = np.flatnonzero(part[1:] != part[:-1]) + 1
+        coded = [
+            p for p in part[np.append(0, cuts)].tolist()
+            if isinstance(self._srcs[p].post, Coded)
+        ]
+        if coded:
+            self.fetch(rows[np.isin(part, coded)])
+        got = []
+        for run in np.split(rows, cuts):
+            post = self._srcs[self._part[run[0]]].post
+            if isinstance(post, Decoded):
+                got.append(post.take(self._srow[run]))
+            else:  # rows fetch() decoded for this read
+                got += [self._fetched[r] for r in run.tolist()]
+        ids, tfs, dls = got[0] if len(got) == 1 else (
+            np.concatenate([g[i] for g in got]) for i in range(3)
+        )
+        keep = wand.tombstone_mask(ids, self.deleted)
+        if keep is not None:
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+        return ids, tfs, dls
+
     def postings(self, row: int) -> tuple:
-        """(doc_ids int64, tfs, doc_lengths) of one row: slices of its
-        file's decoded arrays, or of the rows :meth:`fetch` decoded for
-        this read when the file is not decoded; tombstoned ids masked (a
-        copy then)."""
+        """(doc_ids int64, tfs, doc_lengths) of one row, as
+        :meth:`gather` gives them, without its per-call array work."""
         src = self._srcs[self._part[row]]
+        if isinstance(src.post, Coded) and row not in self._fetched:
+            self.fetch([row])
         post = src.post
-        if isinstance(post, Decoded):
-            got = post.row(self._srow[row])
-        else:
-            got = self._fetched.get(row)
-            if got is None:
-                self.fetch([row])
-                got = self._fetched.get(row)
-            if got is None:  # the fetch decoded the whole file
-                got = src.post.row(self._srow[row])
-        ids, tfs, dls = got
+        ids, tfs, dls = (
+            post.row(self._srow[row]) if isinstance(post, Decoded)
+            else self._fetched[row]
+        )
         keep = wand.tombstone_mask(ids, self.deleted)
         if keep is not None:
             ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -608,7 +666,7 @@ class SegmentReader:
         # dataset re-discovers its file and footer when rebuilt
         self._datasets: dict = {}
         self._tables: dict[str, FileRows] = {}  # path -> pinned file
-        self._bytes = 0
+        self.held_bytes = 0  # of the files held, kept by FileRows.decode
 
     def _listing(self) -> dict[int, list[str]]:
         if self._by_bucket is None:
@@ -682,7 +740,8 @@ class SegmentReader:
                 pf = self._tables.get(path)
                 if pf is None and self._admits(path, cap, pinned_rows):
                     pf = self._tables[path] = pinned(path)
-                    self._bytes += pf.nbytes
+                    pf.readers.add(self)
+                    self.held_bytes += pf.nbytes
                     pinned_rows += self.file_rows(path)
                 if pf is not None:
                     found = [
@@ -725,11 +784,7 @@ class SegmentReader:
         n = self.file_rows(path)
         if n > self.pin_rows or (cap is not None and pinned_rows + n > cap):
             return False
-        if self._bytes < self.cap_bytes:
-            # a file grows when it is decoded: recount while below the
-            # cap (a count at or past it only grows)
-            self._bytes = sum(pf.nbytes for pf in self._tables.values())
-        return self._bytes < self.cap_bytes
+        return self.held_bytes < self.cap_bytes
 
     def _read(self, paths: list[str], cols: list[str], expr):
         """Rows of ``paths`` matching the pyarrow filter ``expr``,

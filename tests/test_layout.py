@@ -1,6 +1,11 @@
 """On-disk order of the bucket-partitioned stages, and the driver
 reader's use of it.
 
+A build keeps each term's chunk rows in one file, as one run; an index
+written before that (one file per salt range, each holding every term
+of its bucket), or merged map-only from several sources, spreads a
+term over several files and still answers exactly.
+
 Every ``chunks``, ``lexicon``, ``postings`` and ``fuzzy`` file must be
 sorted by its stage's sort key after a build, a compaction and an
 upsert: a partitioned Spark write re-sorts each task's rows by the
@@ -10,11 +15,13 @@ sorts a file written before that order held once when it loads it,
 so such an index answers exactly like a freshly built one."""
 
 import glob
+import json
 import os
 import shutil
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -23,7 +30,9 @@ from search_engine_spark.build import build_fuzzy_index, term_bucket
 from search_engine_spark.oracle import OracleIndex
 from search_engine_spark.query import QueryEngine
 
-from tests.test_driver_plan import QUERIES, build, zipf_docs
+from tests.test_driver_plan import (
+    QUERIES, batch_rows, build, rows_of, zipf_docs,
+)
 from tests.conftest import assert_rank_identical
 
 SORT_KEYS = {
@@ -130,6 +139,69 @@ def test_stage_files_sorted_after_build_compact_upsert(
     upserted = str(tmp_path / "upserted")
     maintenance.upsert_docs(spark, compacted, wave, upserted)
     assert_sorted(upserted, ["chunks", "lexicon"])
+
+
+def files_of_terms(index_dir: str) -> dict[str, set[str]]:
+    """{term: the chunk files holding its rows}."""
+    out: dict[str, set[str]] = {}
+    for path in stage_files(index_dir, "chunks"):
+        terms = pq.read_table(path, columns=["term"]).column("term")
+        for t in pc.unique(terms).to_pylist():
+            out.setdefault(t, set()).add(path)
+    return out
+
+
+def test_each_term_lies_in_one_chunk_file(layout_corpus):
+    """After a build, no term's rows appear in two chunk files, every
+    file stays sorted by (term, salt, chunk_seq), and each build task
+    writes only the buckets its (bucket, term) range spans."""
+    idx, _docs, _oracle = layout_corpus
+    assert_sorted(idx, ["chunks"])
+    spread = {
+        t: paths for t, paths in files_of_terms(idx).items()
+        if len(paths) > 1
+    }
+    assert not spread, spread
+    with open(os.path.join(idx, "_manifest.json")) as f:
+        n_salts = json.load(f)["config"]["n_salts"]
+    assert len(stage_files(idx, "chunks")) <= n_salts + BUCKETS - 1
+
+
+def split_chunk_files_by_salt(index_dir: str) -> None:
+    """Rewrite every chunk file as one file per salt: the layout of an
+    index built before a term's rows were kept in one file (one file
+    per salt-range task, each holding every term of its bucket)."""
+    for path in stage_files(index_dir, "chunks"):
+        tbl = pq.read_table(path)
+        for s in pc.unique(tbl.column("salt")).to_pylist():
+            pq.write_table(
+                tbl.filter(pc.equal(tbl.column("salt"), s)),
+                path.replace(".parquet", f"-salt{s}.parquet"),
+            )
+        os.remove(path)
+
+
+def test_terms_spread_over_files_serve_rank_identical(
+    spark, layout_corpus, tmp_path
+):
+    """An index in the older layout, where a term's rows lie in several
+    files, answers ``search_local``, ``search()`` and ``batch_search``
+    rank-identically to the oracle."""
+    idx, _docs, oracle = layout_corpus
+    legacy = str(tmp_path / "per_salt")
+    shutil.copytree(idx, legacy)
+    split_chunk_files_by_salt(legacy)
+    assert max(len(p) for p in files_of_terms(legacy).values()) > 1
+    eng = QueryEngine(spark, legacy)
+    queries = QUERIES + EXTRA_QUERIES
+    for q, mode in queries:
+        want = oracle.topk(q, mode=mode, k=10)
+        assert_rank_identical(eng.search_local(q, mode=mode, k=10), want)
+        assert_rank_identical(rows_of(eng.search(q, mode=mode, k=10)), want)
+    batch = [(i, q) for i, (q, _mode) in enumerate(queries)]
+    got = batch_rows(eng.batch_search(batch, k=10))
+    for qid, q in batch:
+        assert_rank_identical(got.get(qid, []), oracle.topk(q, k=10))
 
 
 def shuffle_chunk_files(index_dir: str, seed: int = 5) -> None:

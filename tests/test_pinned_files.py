@@ -109,6 +109,37 @@ def test_full_reader_streams_without_evicting(spark, corpus, file_reads):
         assert_rank_identical(batch.get(qid, []), oracle.topk(q, k=10))
 
 
+def test_reader_counts_held_bytes_once_per_file(spark, corpus, monkeypatch):
+    """A fresh reader counts each file's bytes when it pins it and again
+    only when the file is decoded, by whichever reader: pinning N files
+    computes ``FileRows.nbytes`` O(N) times, not once per held file on
+    every admission, and each reader's count stays exact."""
+    idx, _docs, _oracle = corpus
+    real = segment.FileRows.nbytes
+    calls = []
+
+    def counted(pf):
+        calls.append(1)
+        return real.fget(pf)
+
+    monkeypatch.setattr(segment.FileRows, "nbytes", property(counted))
+    gc.collect()  # drop readers earlier tests left unreferenced
+    a, b = QueryEngine(spark, idx), QueryEngine(spark, idx)
+    terms = [f"w{i}" for i in range(120)]
+    for eng in (a, b):
+        for i in range(0, len(terms), 3):
+            eng.search_local(" ".join(terms[i:i + 3]), k=10)
+    held = a._reader._tables
+    assert len(held) >= 8 and set(held) == set(b._reader._tables)
+    for pf in held.values():
+        pf.decode()  # grows both readers' counts once
+    assert len(calls) <= 3 * 2 * len(held)
+    for eng in (a, b):
+        assert eng._reader.held_bytes == sum(
+            real.fget(pf) for pf in eng._reader._tables.values()
+        )
+
+
 def test_engines_share_one_copy(spark, corpus, file_reads):
     """Two engines over one index read each file once and hold the same
     pinned object; once both are gone the registry forgets the files."""
