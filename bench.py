@@ -182,10 +182,10 @@ def run_suite() -> dict:
             20 / timings["local_path_20q"], 1
         )
 
-        # The above-METADATA_CAP web-scale planners (_spark_banded /
-        # _batch_banded): force the cap to 4 so the sf0.1 index takes
-        # the distributed banded path — these are the plans that run at
-        # 10^12 docs, and rounds 1-3 never timed them.
+        # The above-METADATA_CAP web-scale planner (_batch_banded, for
+        # search() and batch_search): force the cap to 4 so the sf0.1
+        # index takes the distributed banded path — these are the plans
+        # that run at 10^12 docs, and rounds 1-3 never timed them.
         cap_prev = query_mod.METADATA_CAP
         query_mod.METADATA_CAP = 4
         try:

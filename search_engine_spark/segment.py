@@ -39,13 +39,12 @@ read, files past the cap's worth of rows; the rows one read streams
 :meth:`SegmentReader.rows` returns one term set's rows as
 :class:`ChunkRows`, which every driver path reads: ``search_local``,
 the driver-planned ``search()``/``batch_search`` metadata and their
-driver scoring (:meth:`SegmentReader.decode_keys`).
-:meth:`ChunkRows.gather` hands out one term's postings for many rows
-at once, masked with its reader's tombstones (per engine: the shared
-copy holds every posting), and :meth:`ChunkRows.plan` adds the
-per-term block-max metadata (``wand.TermChunks`` + lexicon stats) the
-planners work from, which the Spark-collected metadata of an Iceberg
-index feeds too.
+driver scoring. :meth:`ChunkRows.gather` hands out one term's postings
+for many rows at once, masked with its reader's tombstones (per
+engine: the shared copy holds every posting), and
+:meth:`ChunkRows.plan` adds the per-term block-max metadata
+(``wand.TermChunks`` + lexicon stats) the planners work from, which the
+Spark-collected metadata of an Iceberg index feeds too.
 
 The index an engine serves is immutable (mutations reopen the engine),
 so nothing cached here goes stale; a file rewritten in place has a new
@@ -397,9 +396,9 @@ class ChunkRows:
     """The chunk rows of one term set, numbered term by term (in sorted
     term order; ``span``: term -> its (first, end) rows), as numpy
     arrays (``salt``, ``seq``, ``first``, ``last``, ``n``, ``max_ratio``,
-    ``min_ratio``) and, when every part was read with postings, each
-    row's postings (:meth:`postings`), masked with ``deleted`` (sorted
-    int64 doc ids, or None).
+    ``min_ratio``) and, when every part was read with postings
+    (:attr:`has_postings`), their postings (:meth:`gather`), masked
+    with ``deleted`` (sorted int64 doc ids, or None).
 
     :meth:`plan` adds what the planners read: ``metas`` (term ->
     ``wand.TermChunks`` whose ``rows`` index these rows), ``lex`` (term
@@ -499,27 +498,33 @@ class ChunkRows:
                     keys.add(self.key(rows[ci]))
         return keys
 
-    def find(self, keys) -> dict[tuple, int]:
-        """{key: row} of the (term, salt, chunk_seq) ``keys`` present."""
-        by_t: dict[str, list[tuple]] = {}
-        for key in keys:
-            by_t.setdefault(key[0], []).append(key)
-        out: dict[tuple, int] = {}
-        for t, ks in by_t.items():
-            if t not in self.span:
+    @property
+    def has_postings(self) -> bool:
+        """Whether every row was read with its postings."""
+        return self._srcs is not None
+
+    def find(self, keys) -> np.ndarray:
+        """The rows of the (term, salt, chunk_seq) ``keys`` present,
+        term by term (in term order) and each term's in doc-id order, so
+        one term's run of them is a :meth:`gather` in doc-id order."""
+        by_t: dict[str, list[int]] = {}
+        for t, s, c in keys:
+            by_t.setdefault(t, []).append((int(s) << 32) + int(c))
+        out = []
+        for t in self.terms:
+            if t not in by_t:
                 continue
             lo, hi = self.span[t]
             have = (self.salt[lo:hi].astype(np.int64) << 32) + self.seq[lo:hi]
             order = np.argsort(have, kind="stable")
-            want = np.array(
-                [(int(s) << 32) + int(c) for _t, s, c in ks], np.int64
-            )
+            want = np.array(by_t[t], np.int64)
             at = order[np.minimum(
                 np.searchsorted(have, want, sorter=order), hi - lo - 1
             )]
-            for j in np.flatnonzero(have[at] == want).tolist():
-                out[ks[j]] = lo + int(at[j])
-        return out
+            rows = lo + np.unique(at[have[at] == want])
+            # a term's chunks hold disjoint doc-id ranges
+            out.append(rows[np.argsort(self.first[rows], kind="stable")])
+        return np.concatenate(out) if out else np.zeros(0, np.int64)
 
     def fetch(self, rows) -> None:
         """Decode the postings of those of ``rows`` whose file is not
@@ -573,22 +578,6 @@ class ChunkRows:
                 got += [self._fetched[r] for r in run.tolist()]
         ids, tfs, dls = got[0] if len(got) == 1 else (
             np.concatenate([g[i] for g in got]) for i in range(3)
-        )
-        keep = wand.tombstone_mask(ids, self.deleted)
-        if keep is not None:
-            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-        return ids, tfs, dls
-
-    def postings(self, row: int) -> tuple:
-        """(doc_ids int64, tfs, doc_lengths) of one row, as
-        :meth:`gather` gives them, without its per-call array work."""
-        src = self._srcs[self._part[row]]
-        if isinstance(src.post, Coded) and row not in self._fetched:
-            self.fetch([row])
-        post = src.post
-        ids, tfs, dls = (
-            post.row(self._srow[row]) if isinstance(post, Decoded)
-            else self._fetched[row]
         )
         keep = wand.tombstone_mask(ids, self.deleted)
         if keep is not None:
@@ -705,6 +694,11 @@ class SegmentReader:
             paths += by_bucket.get(b, ())
         return paths
 
+    def streams(self, terms: list[str]) -> bool:
+        """Whether a read of ``terms`` streams a file this reader does
+        not hold."""
+        return any(p not in self._tables for p in self._paths(terms))
+
     def rows(self, terms: list[str], cap: int | None = None,
              postings: bool = True) -> ChunkRows | None:
         """The chunk rows of ``terms`` (:class:`ChunkRows`, with their
@@ -803,27 +797,3 @@ class SegmentReader:
             for batch in ds.to_batches(columns=cols, filter=expr):
                 if batch.num_rows:
                     yield batch
-
-    def decode_keys(self, keys) -> dict:
-        """{key: (doc_ids, tfs, doc_lengths)} for the exact chunk keys
-        found, tombstoned ids masked: the postings of the keys' rows
-        among their terms' rows (:meth:`rows`), those of files not yet
-        decoded in one batch per file. The planners hold the terms'
-        chunk count to METADATA_CAP."""
-        import pyarrow as pa
-
-        if not keys or not self.has_data:
-            return {}
-        terms = sorted({t for t, _s, _c in keys})
-        cr = self.rows(terms)
-        if any(p not in self._tables for p in self._paths(terms)):
-            # a streamed read's transient buffers (every payload of the
-            # rows read) go back to the OS now: left to jemalloc's lazy
-            # decay, their purge lands in the next Arrow allocations —
-            # measured as +11% to +29% on the search_local ops that
-            # follow a driver-scored search() (perfbench serve, 3
-            # seeds, 4-core host)
-            pa.default_memory_pool().release_unused()
-        found = cr.find(keys)
-        cr.fetch(found.values())
-        return {key: cr.postings(row) for key, row in found.items()}

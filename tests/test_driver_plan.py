@@ -1,10 +1,10 @@
 """search() and batch_search answered on the driver: below METADATA_CAP
-on the parquet layout the chunk metadata, the phase-1 theta probe, the
-conjunctive pivot ids and the final scoring all come from the engine's
-SegmentReader, and the result frame collects without a Spark job.
-Answers must stay rank-identical to the pure-Python oracle and to the
-Spark final job (``LOCAL_THETA=False``) in every mode and option, and
-the key filters must survive terms that need escaping."""
+on the parquet layout the chunk metadata, the phase-1 theta probe and
+the final scoring all come from the engine's SegmentReader, and the
+result frame collects without a Spark job. Answers must stay
+rank-identical to the pure-Python oracle and to the Spark final job
+(``LOCAL_THETA=False``) in every mode and option, and the key filters
+must survive terms that need escaping."""
 
 import itertools
 import shutil
@@ -147,10 +147,87 @@ def count_jobs(spark, fn):
     return out, len(tracker.getJobIdsForGroup(group)) + len(ungrouped)
 
 
+@pytest.fixture(scope="module")
+def deleted_corpus(spark, corpus, tmp_path_factory):
+    """A copy of the corpus index with the top 3 docs of every QUERIES
+    entry, in both modes, tombstoned: (index dir, deleted doc ids)."""
+    idx, _docs, oracle = corpus
+    copy = str(tmp_path_factory.mktemp("dplan_del") / "idx")
+    shutil.copytree(idx, copy)
+    deleted = set()
+    for q, _mode in QUERIES:
+        for mode in query_mod.MODES:
+            deleted |= {d for d, _ in oracle.topk(q, mode=mode, k=3)}
+    maintenance.delete_docs(spark, copy, sorted(deleted))
+    return copy, deleted
+
+
+EXCLUDE = "w5"  # search_not's excluded term in the differential test
+
+
+@pytest.mark.parametrize("opt", ["explain", "float64"])
+@pytest.mark.parametrize("mode", query_mod.MODES)
+@pytest.mark.parametrize("case", ["plain", "deleted", "not"])
+@pytest.mark.parametrize("path", ["driver", "spark", "banded"])
+def test_search_differential(
+    spark, corpus, deleted_corpus, path, case, mode, opt, monkeypatch
+):
+    """Every QUERIES entry, in both modes, through ``search()`` (or
+    ``search_not``) is rank-identical to the oracle on each planner
+    path: scored on the driver, by the Spark jobs (``LOCAL_THETA``
+    off), and planned above ``METADATA_CAP`` (the distributed banded
+    planner); on the plain index, after ``delete_docs`` and with a NOT
+    clause. ``explain`` rows also carry the oracle's doc lengths and
+    per-term tfs."""
+    idx, _docs, oracle = corpus
+    drop: set[int] = set()
+    if case == "deleted":
+        idx, drop = deleted_corpus
+    if path == "spark":
+        monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
+    elif path == "banded":
+        monkeypatch.setattr(query_mod, "METADATA_CAP", 1)
+    explain = opt == "explain"
+    dtype = np.float64 if opt == "float64" else np.float32
+    if case == "not":
+        drop = {d for d, _tf in oracle.postings[EXCLUDE]}
+    with QueryEngine(spark, idx) as eng:
+        for q, _mode in QUERIES:
+            if case == "not":
+                df = eng.search_not(q, EXCLUDE, mode=mode, k=10,
+                                    explain=explain, dtype=dtype)
+            else:
+                df = eng.search(q, mode=mode, k=10, explain=explain,
+                                dtype=dtype)
+            rows = df.collect()
+            want = [
+                (d, s) for d, s in oracle.topk(q, mode=mode, k=10**6)
+                if d not in drop
+            ][:10]
+            assert_rank_identical(
+                [(r["doc_id"], float(r["score"])) for r in rows], want
+            )
+            for r in rows if explain else ():
+                d = r["doc_id"]
+                assert r["doc_length"] == oracle.doc_lengths[d], (q, d)
+                assert [t["term"] for t in r["terms"]] == sorted(
+                    t["term"] for t in r["terms"]
+                )
+                assert abs(sum(t["score"] for t in r["terms"])
+                           - r["score"]) < 1e-4, (q, d)
+                assert {t["term"]: t["tf"] for t in r["terms"]} == {
+                    t: tf for t in tokenize_query(q)
+                    for doc, tf in oracle.postings.get(t, ()) if doc == d
+                }, (q, d)
+
+
 @pytest.mark.parametrize("explain", [False, True])
 @pytest.mark.parametrize("dtype", [np.float32, np.float64])
-def test_driver_plan_rank_identity(spark, corpus, explain, dtype):
+def test_driver_plan_rank_identity(spark, corpus, explain, dtype,
+                                   monkeypatch):
     idx, _docs, oracle = corpus
+    # the corpus is far below BATCH_PRUNE_FLOOR; the probe must run
+    monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", 0)
     eng = QueryEngine(spark, idx)
     probes = set()
     for q, mode in QUERIES:
@@ -160,7 +237,7 @@ def test_driver_plan_rank_identity(spark, corpus, explain, dtype):
         )
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
         st = eng.last_plan_stats
-        assert st["pruner"] in ("block_max_wand", "pivot_nextgeq"), st
+        assert st["pruner"] == "batch_wand", st
         assert st["scorer"] == "local", st
         assert st["driver_jobs"] == 0, st  # nothing left for Spark
         probes.add(st.get("theta_probe"))
@@ -192,47 +269,6 @@ def test_driver_scorer_matches_spark_job(
             assert explain_of(local) == explain_of(spark_job)
 
 
-def test_driver_plan_conjunctive_without_pivot(spark, corpus, monkeypatch):
-    """Conjunctive through the segment sweep (no pivot refinement)."""
-    idx, _docs, oracle = corpus
-    monkeypatch.setattr(query_mod, "PIVOT_DOC_CAP", 0)
-    eng = QueryEngine(spark, idx)
-    for q in ("w0 w3 w12", "w1 w2", f"{SLASH} w4"):
-        (local, l_st), (spark_job, s_st) = both_scorers(
-            monkeypatch, eng,
-            lambda: rows_of(eng.search(q, mode="conjunctive", k=10)),
-        )
-        assert l_st["pruner"] == s_st["pruner"] == "block_max_wand"
-        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
-        assert_rank_identical(local, spark_job, tol=1e-6)
-        assert_rank_identical(local, oracle.topk(q, mode="conjunctive", k=10))
-
-
-def test_driver_plan_after_delete_docs(spark, corpus, tmp_path, monkeypatch):
-    """Tombstones mask the reader's probe, pivot and final decodes like
-    the Spark job's: survivors keep their (stale-stats) scores."""
-    idx, _docs, oracle = corpus
-    copy = str(tmp_path / "deleted")
-    shutil.copytree(idx, copy)
-    deleted = set()
-    for q, mode in QUERIES:
-        deleted |= {d for d, _ in oracle.topk(q, mode=mode, k=3)}
-    maintenance.delete_docs(spark, copy, sorted(deleted))
-    eng = QueryEngine(spark, copy)
-    for q, mode in QUERIES:
-        want = [
-            (d, s) for d, s in oracle.topk(q, mode=mode, k=10**6)
-            if d not in deleted
-        ][:10]
-        (local, l_st), (spark_job, s_st) = both_scorers(
-            monkeypatch, eng, lambda: rows_of(eng.search(q, mode=mode, k=10))
-        )
-        assert l_st["pruner"] in ("block_max_wand", "pivot_nextgeq")
-        assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
-        assert_rank_identical(local, want)
-        assert_rank_identical(local, spark_job, tol=1e-6)
-
-
 def test_driver_plan_multi_segment(spark, corpus, segments, monkeypatch):
     """Two disjoint segments served with global stats (each segment
     engine plans under a stats override) equal one build of the union,
@@ -253,16 +289,15 @@ def test_driver_plan_multi_segment(spark, corpus, segments, monkeypatch):
 def test_batch_search_driver_scorer(spark, corpus, mode, monkeypatch):
     """batch_search's final scoring runs on the driver below the cap and
     matches the Spark job and the oracle query by query — with the
-    shared phase-1 probe (prune_floor=0) and without it."""
+    shared phase-1 probe (``BATCH_PRUNE_FLOOR`` 0) and without it."""
     idx, _docs, oracle = corpus
     eng = QueryEngine(spark, idx)
     queries = list(enumerate(q for q, _mode in QUERIES))
-    for floor in (0, None):
+    for floor in (0, query_mod.BATCH_PRUNE_FLOOR):
+        monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", floor)
         (local, l_st), (spark_job, s_st) = both_scorers(
             monkeypatch, eng,
-            lambda: batch_rows(
-                eng.batch_search(queries, mode=mode, k=10, prune_floor=floor)
-            ),
+            lambda: batch_rows(eng.batch_search(queries, mode=mode, k=10)),
         )
         assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
         assert l_st["driver_jobs"] == 0, l_st
@@ -322,7 +357,7 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     meta_rows.clear()
     for _ in range(2):
         got = rows_of(eng.search(q, k=10))
-        assert eng.last_plan_stats["pruner"] == "banded_wand"
+        assert eng.last_plan_stats["pruner"] == "batch_banded_wand"
         assert_rank_identical(got, oracle.topk(q, k=10))
     assert sum(meta_rows) == stopped_at  # first query only
 
@@ -385,6 +420,29 @@ def test_empty_result_frame_starts_no_job(spark, corpus):
         assert n == 0, q
 
 
+def test_unindexed_query_resets_stats(spark, corpus):
+    """A query with no indexed term (or no term at all) leaves stats of
+    its own: ``search()``, ``batch_search`` and ``search_local`` used
+    to return early and leave the previous query's stats in
+    ``last_plan_stats``/``last_local_stats``."""
+    idx, _docs, _oracle = corpus
+    eng = QueryEngine(spark, idx)
+    for run in (
+        lambda q: eng.search(q, k=10).collect(),
+        lambda q: eng.batch_search([(0, q)], k=10).collect(),
+    ):
+        run("w1 w20 w45")
+        assert eng.last_plan_stats["chunks_total"] > 0
+        for q in ("nosuchterm", ""):
+            run(q)
+            assert eng.last_plan_stats["chunks_total"] == 0, q
+    for q in ("nosuchterm", ""):
+        eng.search_local("w1 w20 w45", k=10)
+        assert eng.last_local_stats["chunks_total"] > 0
+        eng.search_local(q, k=10)
+        assert eng.last_local_stats["chunks_total"] == 0, q
+
+
 def test_multi_segment_search_starts_no_job(spark, corpus, segments):
     """A warm two-segment engine answers a below-cap search() — the
     per-segment driver scoring and the merged top-k frame — without a
@@ -402,7 +460,8 @@ def test_multi_segment_search_starts_no_job(spark, corpus, segments):
 
 def test_backslash_terms_round_trip_key_filters(spark, corpus):
     """The one-call Spark key predicate (escaped SQL literals) and the
-    pyarrow point read select exactly the requested chunk keys."""
+    driver's rows of a key set (``ChunkRows.find``, read by
+    ``ChunkRows.gather``) select exactly the requested chunk keys."""
     idx, _docs, _oracle = corpus
     eng = QueryEngine(spark, idx)
     terms = sorted([SLASH, TRAIL, "w30"])
@@ -422,9 +481,13 @@ def test_backslash_terms_round_trip_key_filters(spark, corpus):
         .collect()
     )
     assert spark_side == sorted(want)
-    arrow_side = eng._reader.decode_keys(want)
-    assert sorted(arrow_side) == sorted(want)
-    assert all(len(v[0]) for v in arrow_side.values())
+    cr = eng._reader.rows(terms)
+    rows = cr.find(want)
+    assert sorted(cr.key(r) for r in rows.tolist()) == sorted(want)
+    for t in terms:
+        mine = [r for r in rows.tolist() if cr.key(r)[0] == t]
+        ids = cr.gather(mine)[0]
+        assert len(ids) and (np.diff(ids) > 0).all(), t
 
 
 def test_many_group_key_predicate_batch(spark, tmp_path, monkeypatch):

@@ -595,7 +595,7 @@ def test_engine_close_releases_metadata_cache(
     monkeypatch.setattr(query_mod, "METADATA_CAP", 1)
     with QueryEngine(spark, base_index) as eng:
         _topk(eng.search(QUERY, mode="disjunctive", k=10))
-        assert eng.last_plan_stats["pruner"] == "banded_wand"
+        assert eng.last_plan_stats["pruner"] == "batch_banded_wand"
         cached = eng._meta_df
         if cached is not None:  # the planner pinned the projection
             assert cached.storageLevel.useMemory

@@ -288,27 +288,25 @@ def test_cold_read_decodes_only_the_rows_it_asks_for(
     spark, corpus, tmp_path, decoded_rows
 ):
     """A file's first postings read decodes the rows it asks for, not
-    the file: one key of a freshly pinned file decodes one row and
-    leaves the file encoded, and its postings equal the whole file's
-    decode."""
+    the file: a ``gather`` of one row of a freshly pinned file decodes
+    that row and leaves the file encoded, and its postings equal the
+    whole file's decode."""
     idx, _docs, _oracle = corpus
     copy = str(tmp_path / "idx")  # files no other test's engine pinned
     shutil.copytree(idx, copy)
     eng = QueryEngine(spark, copy)
     term = "w0"
-    cr = eng._reader.rows([term], postings=False)
+    cr = eng._reader.rows([term])
     assert cr.n_rows >= 2
-    key = cr.key(1)
     decoded_rows.clear()
-    got = eng._reader.decode_keys([key])[key]
+    got = cr.gather([1])
     assert decoded_rows and sum(decoded_rows) == 1
     assert eng._reader._tables
     for pf in eng._reader._tables.values():
         assert isinstance(pf.post, segment.Coded)
         pf.decode()
-    want = eng._reader.rows([term])
-    row = want.find([key])[key]
-    for a, b in zip(got, want.postings(row)):
+    want = eng._reader.rows([term]).gather([1])
+    for a, b in zip(got, want):
         assert a.tolist() == b.tolist()
 
 
