@@ -23,44 +23,45 @@ are never decoded. Pruning is margin-safe: results stay rank-identical
 to exhaustive evaluation.
 
 Physical plan of ``search()``, ``search_not()`` and ``batch_search`` —
-one planner (``_answer``); ``search()`` is a batch of one. Below
+one entry (``_answer``); ``search()`` is a batch of one. Below
 METADATA_CAP on the parquet layout it answers on the driver, ZERO Spark
-jobs:
-    SegmentReader (segment.py): the batch's terms' chunk metadata as
-      array slices of its pinned, term-sorted bucket files (the same
-      files ``search_local`` reads) -> lexicon stats + per-term
-      block-max bounds, no lexicon job
-    per query, WAND sweep -> elementary segments (conjunctive: only the
-      segments every term covers); theta from the metadata alone when
-      the chunk bounds separate, else, for a batch whose terms own at
-      least BATCH_PRUNE_FLOOR chunks, the k-th best score of ONE shared
-      phase-1 decode of every query's top-bound segments' chunks
-    the union of the surviving (term, salt, chunk_seq) keys' postings
-      from the same pinned files (one ``ChunkRows.gather`` per term:
-      slices of a file decoded whole, else decoded for this read;
-      tombstones masked), scored and cut to each query's top k in numpy
-      (``_score_local``, the one driver-side scorer; the phase-1 probe
-      is the same call with the probe's keys, masked to its segments)
+jobs, with the one driver-side top-k (``_local_topk``) that
+``search_local`` runs too:
+    SegmentReader (segment.py): ONE read of the batch's terms' chunk
+      rows with their postings, as array slices of its pinned,
+      term-sorted bucket files -> lexicon stats + per-term block-max
+      bounds, no lexicon job
+    per query: a conjunctive query of 2+ terms runs the pivot (the
+      rarest term's postings, then only the other terms' chunks holding
+      a candidate); any other sweeps its terms' chunk intervals into
+      elementary segments and scores them in two vectorised passes —
+      the segments reaching the metadata threshold (else the 16
+      top-bound ones), then every other segment whose bound reaches the
+      first pass's k-th best score (one ``ChunkRows.gather`` per term
+      and pass: slices of a file decoded whole, else decoded for this
+      read; tombstones masked)
     result rows -> a DataFrame over a pyarrow table (``local_frame``),
       whose collect starts no Spark job
-The final decode stays a Spark job — chunks scan filtered to the
-surviving keys by one pushed-down predicate, mapInArrow decode + score,
-a broadcast (query_id, term) fan-out, groupBy(query_id, doc_id) agg,
-top k per query (``_spark_topk``) — for Iceberg indexes, NOT clauses,
-tombstone sets too large for the driver, kept sets above
-KEYS_COLLECT_CAP and, above METADATA_CAP (where the reader stops), the
-distributed sweep (``_batch_banded``). The first three also probe theta
-with a Spark job, and Iceberg indexes collect metadata with one.
-
-A driver-local fast path (``search_local``) reads the same rows through
-the same reader and runs the block-max sweep sequentially in numpy —
-the interactive "REPL" parity path with ~ms latency, no Spark job.
+Spark answers the rest — Iceberg indexes, NOT clauses, tombstone sets
+too large for the driver, ``LOCAL_THETA`` off and, above METADATA_CAP
+(where the reader stops), the distributed sweep (``_batch_banded``):
+the batch planner (``_batch_plan``) sweeps each query's segments over
+the chunk metadata, takes theta from the metadata alone when the chunk
+bounds separate, else, for a batch whose terms own at least
+BATCH_PRUNE_FLOOR chunks, from ONE shared phase-1 Spark probe of every
+query's top-bound segments' chunks; the final job then scans the chunks
+filtered to the surviving keys (a pushed-down predicate up to
+KEYS_COLLECT_CAP keys, else a leftsemi join), decodes and scores them
+with mapInArrow, fans them out by a broadcast (query_id, term) map,
+aggregates per (query_id, doc_id) and keeps each query's top k
+(``_spark_topk``). Iceberg indexes collect metadata with one more job.
 """
 
 from __future__ import annotations
 
 import functools
 import os
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -97,16 +98,14 @@ N_BANDS_MIN, N_BANDS_MAX = 32, 65536
 # broadcast the surviving-keys side of the decode join below this count
 KEYS_BROADCAST_CAP = 100_000
 
-# the largest surviving chunk-key set the driver handles itself: at
-# most this many keys are point-read and scored on the driver
-# (_score_local, no Spark job) where the layout allows, else they
-# become an exact (term, salt, chunk_seq) PREDICATE on the Spark decode
-# scan — In filters reach the parquet reader (row-group stats +
-# dictionary pruning), so the decode does point reads instead of
-# scanning every queried term's payload bytes and discarding them
-# post-join. Above the cap the predicate would bloat the plan; the
-# leftsemi join (broadcast under KEYS_BROADCAST_CAP) remains the
-# at-scale shape.
+# the Spark route's choice between a predicate and a join: a surviving
+# chunk-key set of at most this many keys becomes an exact (term, salt,
+# chunk_seq) PREDICATE on the Spark decode scan — In filters reach the
+# parquet reader (row-group stats + dictionary pruning), so the decode
+# does point reads instead of scanning every queried term's payload
+# bytes and discarding them post-join. Above the cap the predicate
+# would bloat the plan; the leftsemi join (broadcast under
+# KEYS_BROADCAST_CAP) remains the at-scale shape.
 KEYS_COLLECT_CAP = 8192
 
 # sentinel: a batch plan proved every query returns no rows
@@ -124,24 +123,23 @@ EMPTY_BATCH = object()
 # the first.
 _META_COLS = ["bucket", *segment.META_COLS]
 
-# driver-side scoring (_score_local) of the phase-1 theta probe and of
-# a final kept set of at most KEYS_COLLECT_CAP chunks, for search() and
-# batch_search alike: an IR engine answers a point-read sized key set
-# from storage directly instead of scheduling a distributed job per
-# query (measured at 4M docs: the Spark probe cost 5.7-7.4 s of fixed
-# scheduling + scan tasks per batch, the pyarrow point read tens of ms;
-# on a 10k-doc index a search() + collect took 1.20 s with the Spark
-# final job, 0.17 s scored on the driver, medians on a 4-core host).
-# Tests set it False to force the Spark probe AND the Spark final job.
+# search() and batch_search answered on the driver (_local_topk, the
+# top-k search_local runs) below METADATA_CAP on the parquet layout: an
+# IR engine answers a query from storage directly instead of scheduling
+# a distributed job per query (on a 10k-doc index a search() + collect
+# took 1.20 s with the Spark final job, 0.17 s scored on the driver,
+# medians on a 4-core host). Tests set it False to force the Spark
+# route: the batch planner, its phase-1 probe and the final job.
 LOCAL_THETA = True
 
-# the phase-1 threshold probe runs only when the batch's terms (one
-# search()'s, or a batch_search's) own at least this many chunks —
-# below it, decoding every kept chunk (~0.5M postings at the floor)
-# costs no more than the probe's extra decode pass; at web scale, where
-# a single stop word owns orders of magnitude more chunks, the floor is
-# noise. The metadata-only threshold (_meta_theta) costs no decode and
-# applies below it too.
+# the Spark route's phase-1 threshold probe runs only when the batch's
+# terms (one search()'s, or a batch_search's) own at least this many
+# chunks — below it, decoding every kept chunk (~0.5M postings at the
+# floor) costs no more than the probe's extra Spark job; at web scale,
+# where a single stop word owns orders of magnitude more chunks, the
+# floor is noise. The metadata-only threshold (_meta_theta) costs no
+# decode and applies below it too. The driver's top-k needs no floor:
+# its first pass is its probe.
 BATCH_PRUNE_FLOOR = 4096
 
 
@@ -173,6 +171,16 @@ def local_frame(spark, schema: str, columns: dict | None = None) -> DataFrame:
     return spark.createDataFrame(tbl, st)
 
 
+def _unpersist(frames: dict, *names: str) -> None:
+    """Unpersist and drop the frames ``names`` of ``frames`` (all of
+    them without ``names``); a stopped session has released its frames
+    already."""
+    for name in names or list(frames):
+        df = frames.pop(name, None)
+        if df is not None and df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
+
+
 MODES = ("disjunctive", "conjunctive")
 
 
@@ -188,14 +196,6 @@ def check_k_mode(k, mode: str = MODES[0]) -> None:
     if isinstance(k, bool) or not isinstance(k, (int, np.integer)) or k < 1:
         raise ValueError(f"k must be an int >= 1, got {k!r}")
     check_mode(mode)
-
-
-def kth_score(top: dict | None, k: int) -> float | None:
-    """The k-th best score of one query's :meth:`QueryEngine._score_local`
-    rows, None below k rows."""
-    if top is None or len(top["score"]) < k:
-        return None
-    return float(top["score"][k - 1])
 
 
 def topk_order(docs: np.ndarray, score: np.ndarray, k: int) -> np.ndarray:
@@ -346,14 +346,16 @@ class QueryEngine:
         self._lex_cache_cap = int(
             os.environ.get("SE_LEX_CACHE_TERMS", str(1 << 20))
         )
-        # pinned metadata projection (see _META_COLS); built lazily on
-        # the first planning read, unpersisted by close()
-        self._meta_df: DataFrame | None = None
-        # persisted excluded-doc frame of the most recent search_not:
-        # released on the next search_not call or close() (persist
-        # keeps lineage, so an older result re-collected after release
-        # recomputes its exclusion set instead of failing)
-        self._not_cached: DataFrame | None = None
+        # the frames this engine persists, unpersisted by close() or,
+        # for an engine dropped without it, when it is collected (the
+        # finalizer holds the dict, not the engine): "meta", the pinned
+        # metadata projection (see _META_COLS), built lazily on the
+        # first planning read; "exclusion", the excluded-doc frame of
+        # the most recent search_not, released on the next search_not
+        # call (persist keeps lineage, so an older result re-collected
+        # after release recomputes its exclusion set instead of failing)
+        self._persisted: dict[str, DataFrame] = {}
+        weakref.finalize(self, _unpersist, self._persisted).atexit = False
         # lazily-built broadcast frame of the driver-side tombstone
         # array (see _alive_df)
         self._deleted_bcast_df: DataFrame | None = None
@@ -541,28 +543,24 @@ class QueryEngine:
         planning, served from the engine-pinned persisted projection
         (see the ``_META_COLS`` comment). The index an engine serves is
         immutable, so the pinned frame never goes stale."""
-        if self._meta_df is None:
+        meta = self._persisted.get("meta")
+        if meta is None:
             from pyspark import StorageLevel
 
-            self._meta_df = (
+            meta = self._persisted["meta"] = (
                 self._stage_df("chunks")
                 .select(_META_COLS)
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-        return self._meta_df.where(
+        return meta.where(
             F.col("bucket").isin(self._buckets(terms))
         ).where(F.col("term").isin(terms))
 
     def close(self) -> None:
         """Release engine-pinned executor memory (the metadata cache
-        and the last NOT-clause doc set). Optional — Spark reclaims
-        both when the session ends."""
-        if self._meta_df is not None:
-            self._meta_df.unpersist()
-            self._meta_df = None
-        if self._not_cached is not None:
-            self._not_cached.unpersist()
-            self._not_cached = None
+        and the last NOT-clause doc set) now, instead of when the engine
+        is collected."""
+        _unpersist(self._persisted)
 
     def _term_bloom(self):
         """Lazy driver-side term Bloom filter (build.build_term_bloom
@@ -790,17 +788,18 @@ class QueryEngine:
     def _empty(self, schema: str) -> DataFrame:
         return local_frame(self.spark, schema)
 
-    def _term_meta(self, terms: list[str]) -> segment.ChunkRows | None:
+    def _term_meta(
+        self, terms: list[str], postings: bool = False
+    ) -> segment.ChunkRows | None:
         """Chunk rows of ``terms`` with their lexicon stats and WAND
         metadata (segment.ChunkRows): ONE read serves both the planner
         and the lexicon (df = sum of chunk n), so a query needs no
         separate lexicon job. The parquet layout reads it through the
         SegmentReader (no Spark job): array slices of the files it pins,
-        whose postings the driver scoring of this and later queries
-        reads. It reads at most METADATA_CAP rows of files it
-        pins plus METADATA_CAP rows and one record batch of files it
-        streams. Iceberg collects it with one Spark job. The rows carry
-        no postings.
+        with their postings when ``postings``. It reads at most
+        METADATA_CAP rows of files it pins plus METADATA_CAP rows and
+        one record batch of files it streams. Iceberg collects it with
+        one Spark job, without postings.
         Returns None when the term set exceeds METADATA_CAP (callers
         fall back to the lexicon + the banded planner)."""
         if all(t in self._lex_raw_cache for t in terms):
@@ -817,7 +816,7 @@ class QueryEngine:
                 return None
         if self._reader is not None:
             cr = self._reader.rows(
-                terms, cap=METADATA_CAP, postings=False
+                terms, cap=METADATA_CAP, postings=postings
             )
             if cr is None:
                 return None
@@ -1014,9 +1013,8 @@ class QueryEngine:
             .persist()
         )
         neg_ids.count()
-        if self._not_cached is not None:
-            self._not_cached.unpersist()
-        self._not_cached = neg_ids
+        _unpersist(self._persisted, "exclusion")
+        self._persisted["exclusion"] = neg_ids
         return self._answer(
             [(0, query)], mode, k, dtype, explain, exclude=neg_ids,
             single=True,
@@ -1053,21 +1051,23 @@ class QueryEngine:
         doc_length, terms]) in rank order. ``exclude`` is a NOT clause's
         doc-id frame.
 
-        Distinct terms are read and scored once for the whole batch.
-        WAND pruning composes with the shared decode: one metadata
-        read feeds a segment sweep per query (:meth:`_batch_plan`;
-        above METADATA_CAP the distributed :meth:`_batch_banded`), ONE
-        shared phase-1 probe yields the probed queries' thresholds, and
-        the UNION of surviving chunk keys prunes the decode (a chunk is
-        decoded iff at least one query still needs it — per-query
-        thresholds never prune another query's chunks, they only stop
-        paying for chunks NO query needs).
+        A query is answered on the driver where :meth:`_local_ok`
+        holds and the batch's terms own at most METADATA_CAP chunks: ONE
+        read of their chunk rows with postings, then per query the same
+        top-k as ``search_local`` (:meth:`_local_topk`), and a result
+        frame that collects without a Spark job.
 
-        Where :meth:`_local_ok` admits the surviving key set (below
-        METADATA_CAP on the parquet layout) the probe and the final
-        scoring both run on the driver (:meth:`_score_local`) and the
-        result frame collects without a Spark job; the frames the
-        Spark jobs fan out through are built only when one runs."""
+        Otherwise Spark scores it, and distinct terms are read and
+        scored once for the whole batch. WAND pruning composes with the
+        shared decode: one metadata read feeds a segment sweep per
+        query (:meth:`_batch_plan`; above METADATA_CAP the distributed
+        :meth:`_batch_banded`), ONE shared phase-1 probe yields the
+        probed queries' thresholds, and the UNION of surviving chunk
+        keys prunes the decode (a chunk is decoded iff at least one
+        query still needs it — per-query thresholds never prune another
+        query's chunks, they only stop paying for chunks NO query
+        needs). The frames the Spark jobs fan out through are built
+        only when one runs."""
         score_t = "double" if dtype is np.float64 else "float"
         if not single:
             schema = f"query_id int, doc_id long, score {score_t}, rank int"
@@ -1086,9 +1086,11 @@ class QueryEngine:
         all_terms = sorted({t for ts in by_q.values() for t in ts})
         if not all_terms:
             return self._empty(schema)
-        # one metadata read yields lexicon stats AND the WAND plan; the
-        # separate lexicon lookup only runs above METADATA_CAP
-        cr = self._term_meta(all_terms)
+        # one read yields lexicon stats AND the WAND plan (with the
+        # postings, where the driver answers); the separate lexicon
+        # lookup only runs above METADATA_CAP
+        local = self._local_ok(exclude)
+        cr = self._term_meta(all_terms, postings=local)
         lex = cr.lex if cr is not None else self.lexicon_lookup(all_terms)
         # terms missing from the lexicon drop (reference openList skip)
         by_q = {q: [t for t in ts if t in lex] for q, ts in by_q.items()}
@@ -1098,12 +1100,60 @@ class QueryEngine:
         total = sum(e["n_chunks"] for e in lex.values())
         self.last_plan_stats.update(chunks_total=total, chunks_kept=total)
         conj = mode == "conjunctive"
+        if local and cr is not None:
+            tops: dict[int, dict] = {}
+            read: list[np.ndarray] = []
+            segs = kept = theta0 = 0
+            for qid, tq in by_q.items():
+                top, rows, info = self._local_topk(
+                    cr, tq, conj, k, dtype, explain
+                )
+                if len(top["doc_id"]):
+                    tops[qid] = top
+                read += rows
+                segs += info["segments_total"]
+                kept += info["segments_processed"]
+                theta0 += "theta0" in info
+            if self._reader.streams(all_terms):
+                import pyarrow as pa
+
+                # a streamed read's transient buffers (every payload of
+                # the rows read) go back to the OS now: left to
+                # jemalloc's lazy decay, their purge lands in the next
+                # Arrow allocations — measured as +11% to +29% on the
+                # search_local ops that follow a driver-scored search()
+                # (perfbench serve, 3 seeds, 4-core host)
+                pa.default_memory_pool().release_unused()
+            self.last_plan_stats.update({
+                "pruner": "local_wand",
+                "scorer": "local",
+                "driver_jobs": self._plan_jobs,
+                "chunks_kept": len(np.unique(np.concatenate(read))),
+                "segments": segs,
+                "segments_kept": kept,
+            })
+            if theta0:
+                self.last_plan_stats["theta0"] = theta0
+            if single:
+                return local_frame(
+                    self.spark, schema, tops.get(queries[0][0])
+                )
+            if not tops:
+                return self._empty(schema)
+            qids = sorted(tops)
+            n = [len(tops[q]["doc_id"]) for q in qids]
+            return local_frame(self.spark, schema, {
+                "query_id": np.repeat(np.array(qids, np.int32), n),
+                "doc_id": np.concatenate([tops[q]["doc_id"] for q in qids]),
+                "score": np.concatenate([tops[q]["score"] for q in qids]),
+                "rank": np.concatenate(
+                    [np.arange(1, m + 1, dtype=np.int32) for m in n]
+                ),
+            })
         if cr is not None:
             keys, thetas = self._batch_plan(
                 by_q, cr, lex, conj, k, dtype, exclude
             )
-            if keys is None and cr.n_rows <= KEYS_COLLECT_CAP:
-                keys = [cr.key(r) for r in range(cr.n_rows)]
         else:
             # above METADATA_CAP: the distributed banded planner —
             # score-bounded skipping must not turn off for exactly the
@@ -1130,39 +1180,16 @@ class QueryEngine:
         }
         if floors:
             self.last_plan_stats["theta_filter"] = len(floors)
-        local = isinstance(keys, list) and self._local_ok(len(keys), exclude)
-        self.last_plan_stats["scorer"] = "local" if local else "spark"
+        self.last_plan_stats["scorer"] = "spark"
         if cr is not None:
             # the Spark jobs a driver-planned query starts: its planning
-            # actions plus the final job when Spark scores it (0 on the
-            # driver path). A Spark action counts once, though AQE may
-            # run it as several jobs.
-            self.last_plan_stats["driver_jobs"] = self._plan_jobs + int(
-                not local
-            )
-        if not local:
-            return self._spark_topk(
-                keys, lex, by_q, conj, k, dtype, explain, exclude, floors,
-                single,
-            )
-        tops = self._score_local(
-            keys, lex, by_q, k, conj, floors=floors, explain=explain,
-            dtype=dtype, cr=cr,
+            # actions plus the final job. A Spark action counts once,
+            # though AQE may run it as several jobs.
+            self.last_plan_stats["driver_jobs"] = self._plan_jobs + 1
+        return self._spark_topk(
+            keys, lex, by_q, conj, k, dtype, explain, exclude, floors,
+            single,
         )
-        if single:
-            return local_frame(self.spark, schema, tops.get(queries[0][0]))
-        if not tops:
-            return self._empty(schema)
-        qids = sorted(tops)
-        n = [len(tops[q]["doc_id"]) for q in qids]
-        return local_frame(self.spark, schema, {
-            "query_id": np.repeat(np.array(qids, np.int32), n),
-            "doc_id": np.concatenate([tops[q]["doc_id"] for q in qids]),
-            "score": np.concatenate([tops[q]["score"] for q in qids]),
-            "rank": np.concatenate(
-                [np.arange(1, m + 1, dtype=np.int32) for m in n]
-            ),
-        })
 
     def _per_query(
         self,
@@ -1326,15 +1353,7 @@ class QueryEngine:
             order = np.argsort(-bound, kind="stable")
             # phase 1: enough top-bound segments to (heuristically)
             # cover >= 4k candidate docs
-            est = np.zeros(len(seg_lo), dtype=np.int64)
-            for j, t in enumerate(tq):
-                cj = cover[:, j]
-                nn = np.where(cj >= 0, sub[t].n[np.clip(cj, 0, None)], 0)
-                est = (
-                    np.minimum(est, nn)
-                    if conj_q and j
-                    else (nn if conj_q else est + nn)
-                )
+            est = wand.segment_docs(sub, cover, conj_q)
             cum = np.cumsum(est[order])
             n_p1 = int(np.searchsorted(cum, 4 * k) + 1)
             # breadth matters more than depth for theta quality: the
@@ -1370,7 +1389,7 @@ class QueryEngine:
             # ONE shared phase-1 decode for every probed query
             probed = self._batch_theta(
                 sorted(p1_keys), p1_ivals, lex, conj, k, dtype,
-                {qid: p[0] for qid, p in plans.items()}, exclude, cr,
+                {qid: p[0] for qid, p in plans.items()}, exclude,
             )
             self.last_plan_stats["thetas"] = len(probed)
             for qid, th in probed.items():
@@ -1401,39 +1420,16 @@ class QueryEngine:
         dtype,
         by_q: dict[int, list[str]],
         exclude: DataFrame | None = None,
-        cr: segment.ChunkRows | None = None,
     ) -> dict[int, float]:
-        """The shared phase-1 threshold probe: decode exactly
-        ``p1_keys``, mask each query's postings to its own probe
+        """The shared phase-1 threshold probe, one Spark job: decode
+        exactly ``p1_keys``, mask each query's postings to its own probe
         intervals (mask => exact scores, so each k-th best is a true
         theta lower bound), and return {query_id: k-th best score} for
-        every query that produced >= k masked results.
-
-        The probe set is planner-bounded, so when :meth:`_local_ok`
-        admits it the probe is a driver point read
-        (:meth:`_score_local`); the Spark job remains the path for
-        Iceberg layouts, above-cap tombstone sets and NOT clauses (it
-        anti-joins ``exclude``, so the k-th best is one of surviving
-        docs)."""
+        every query that produced >= k masked results. It anti-joins a
+        NOT clause's ``exclude``, so the k-th best is one of the
+        surviving docs."""
         from pyspark.sql import Window
 
-        if self._local_ok(len(p1_keys), exclude):
-            self.last_plan_stats["theta_probe"] = "local"
-            ivals: dict[int, tuple[list, list]] = {}
-            for qid, lo, hi in p1_ivals:
-                iv = ivals.setdefault(qid, ([], []))
-                iv[0].append(lo)
-                iv[1].append(hi)
-            tops = self._score_local(
-                p1_keys, lex, by_q, k, conj, dtype=dtype, cr=cr,
-                ivals={
-                    q: (np.array(lo, np.int64), np.array(hi, np.int64))
-                    for q, (lo, hi) in ivals.items()
-                },
-            )
-            thetas = {q: kth_score(top, k) for q, top in tops.items()}
-            return {q: th for q, th in thetas.items() if th is not None}
-        self.last_plan_stats["theta_probe"] = "spark"
         self._plan_jobs += 1
         p1_terms = sorted({t for t, _s, _c in p1_keys})
         kept1 = self._apply_keys(self._chunks(p1_terms), p1_keys)
@@ -1546,15 +1542,7 @@ class QueryEngine:
             seg_lo, seg_hi, bound, cover = wand.sweep_segments(metas, conj_q)
             if len(seg_lo) == 0:
                 return empty
-            est = np.zeros(len(seg_lo), dtype=np.int64)
-            for j, t in enumerate(terms_sorted):
-                cj = cover[:, j]
-                nn = np.where(cj >= 0, metas[t].n[np.clip(cj, 0, None)], 0)
-                est = (
-                    np.minimum(est, nn)
-                    if conj_q and j
-                    else (nn if conj_q else est + nn)
-                )
+            est = wand.segment_docs(metas, cover, conj_q)
             # band-local rank of each segment by (bound desc, seg_lo
             # asc) — sweep_segments emits seg_lo ascending, so a stable
             # argsort on -bound breaks ties exactly like the global
@@ -1736,164 +1724,30 @@ class QueryEngine:
 
     # ------------------------------------------------- driver-local path
 
-    def _local_ok(
-        self, n_keys: int, exclude: DataFrame | None = None
-    ) -> bool:
-        """Whether ``n_keys`` chunks are scored on the driver
-        (:meth:`_score_local`): on the parquet layout, while every
+    def _local_ok(self, exclude: DataFrame | None = None) -> bool:
+        """Whether a query is answered on the driver
+        (:meth:`_local_topk`): on the parquet layout, while every
         tombstone fits the reader's mask and without a NOT clause's
         ``exclude`` (the Spark jobs apply both exclusions by
-        anti-join), for a point-read sized key set."""
+        anti-join)."""
         return (
             LOCAL_THETA
-            and n_keys <= KEYS_COLLECT_CAP
             and self._reader is not None
             and self._deleted_df is None
             and exclude is None
         )
-
-    def _score_local(
-        self,
-        keys: list[tuple],
-        lex: dict[str, dict],
-        by_q: dict[int, list[str]],
-        k: int,
-        conj: bool,
-        ivals: dict[int, tuple[np.ndarray, np.ndarray]] | None = None,
-        floors: dict[int, float] | None = None,
-        explain: bool = False,
-        dtype=np.float32,
-        cr: segment.ChunkRows | None = None,
-    ) -> dict[int, dict]:
-        """The driver-side scorer, twin of the Spark decode + aggregate
-        (:meth:`_spark_topk` and :meth:`_batch_theta`'s job): take the
-        postings of exactly ``keys`` (:meth:`_key_postings`, tombstones
-        masked), score every posting once per term, and per query
-        ``qid`` of ``by_q`` (its sorted term list) sum over its terms
-        and cut to the top ``k``.
-
-        ``ivals`` ({qid: (lo, hi)}, sorted disjoint half-open doc-id
-        intervals) masks each query's postings to its own intervals —
-        a query without an entry is skipped; ``conj`` keeps only docs
-        that matched every term of their query; ``floors`` ({qid:
-        score}) drops a query's docs scoring below its floor.
-
-        Returns {qid: {"doc_id", "score"[, "doc_length", "terms"]}}
-        ordered score desc, doc_id asc, for every query with a row.
-        Scores follow the Spark job's arithmetic: per-posting
-        ``bm25_scores`` in ``dtype``, float64 doc sums (in sorted-term
-        order) cast to ``dtype``; ``explain`` adds each doc's length and
-        its (term, score, tf) entries sorted like
-        ``sort_array(collect_list(struct(term, score, tf)))``. As the
-        phase-1 probe (k-th best over masked postings) it yields a true
-        lower bound of the k-th best final score: within a mask
-        interval every posting of a doc is decoded, so its masked score
-        is exact."""
-        per_term: dict[str, tuple] = {}
-        for t, (ids, tfs, dls) in self._key_postings(keys, cr).items():
-            if len(ids):
-                per_term[t] = (ids, tfs, dls, bm25_scores(
-                    tfs, dls, lex[t]["df"], self.n_docs, self.avgdl, dtype
-                ))
-        out: dict[int, dict] = {}
-        for qid, terms in by_q.items():
-            iv = None
-            if ivals is not None:
-                iv = ivals.get(qid)
-                if iv is None:
-                    continue
-            parts = []
-            for t in terms:
-                p = per_term.get(t)
-                if p is not None and iv is not None:
-                    keep = wand.ids_in_intervals(p[0], *iv)
-                    p = tuple(a[keep] for a in p) if keep.any() else None
-                if p is not None:
-                    parts.append((t, p))
-            if not parts or (conj and len(parts) < len(terms)):
-                continue
-            cand = np.unique(np.concatenate([p[0] for _t, p in parts]))
-            total = np.zeros(len(cand), dtype=np.float64)
-            nt = np.zeros(len(cand), dtype=np.int32)
-            for _t, (ids, _tfs, _dls, sc) in parts:
-                pos = np.searchsorted(cand, ids)
-                total[pos] += sc
-                nt[pos] += 1
-            score = total.astype(dtype)
-            sel = nt == len(terms) if conj else np.ones(len(cand), bool)
-            if floors is not None and qid in floors:
-                sel &= score >= floors[qid]
-            cand, score = cand[sel], score[sel]
-            top = topk_order(cand, score, k)
-            if not len(top):
-                continue
-            row = {"doc_id": cand[top], "score": score[top]}
-            if explain:
-                row.update(self._explain_rows(row["doc_id"], parts))
-            out[qid] = row
-        return out
-
-    @staticmethod
-    def _explain_rows(docs: np.ndarray, parts: list[tuple]) -> dict:
-        """``doc_length`` and ``terms`` (one [{term, score, tf}] list per
-        doc, in term order) of the top ``docs`` over one query's scored
-        per-term postings ``parts`` (sorted by term)."""
-        doc_length = np.zeros(len(docs), dtype=np.int64)
-        terms: list[list[dict]] = [[] for _ in range(len(docs))]
-        for t, (ids, tfs, dls, sc) in parts:
-            pos = np.clip(np.searchsorted(ids, docs), 0, len(ids) - 1)
-            for i in np.flatnonzero(ids[pos] == docs).tolist():
-                j = pos[i]
-                doc_length[i] = dls[j]
-                terms[i].append(
-                    {"term": t, "score": float(sc[j]), "tf": int(tfs[j])}
-                )
-        return {"doc_length": doc_length, "terms": terms}
-
-    def _key_postings(
-        self, keys: list[tuple], cr: segment.ChunkRows | None = None
-    ) -> dict[str, tuple]:
-        """{term: (doc_ids, tfs, doc_lengths)} of exactly the chunk
-        ``keys``, in doc-id order, tombstoned ids masked: one
-        :meth:`segment.ChunkRows.gather` per term of its rows among
-        ``cr`` (the plan's rows) when they hold postings, else among a
-        read of the keys' terms with postings (the plan streamed a file
-        without them)."""
-        if not keys:
-            return {}
-        if cr is None or not cr.has_postings:
-            terms = sorted({t for t, _s, _c in keys})
-            cr = self._reader.rows(terms)
-            if self._reader.streams(terms):
-                import pyarrow as pa
-
-                # a streamed read's transient buffers (every payload of
-                # the rows read) go back to the OS now: left to
-                # jemalloc's lazy decay, their purge lands in the next
-                # Arrow allocations — measured as +11% to +29% on the
-                # search_local ops that follow a driver-scored search()
-                # (perfbench serve, 3 seeds, 4-core host)
-                pa.default_memory_pool().release_unused()
-        rows = cr.find(keys)
-        out = {}
-        for t, (lo, hi) in cr.span.items():
-            mine = rows[(rows >= lo) & (rows < hi)]
-            if len(mine):
-                out[t] = cr.gather(mine)
-        return out
 
     def search_local(
         self, query: str, mode: str = "disjunctive", k: int = 10
     ) -> list[tuple[int, float]]:
         """Low-latency driver-side path: the query terms' chunk rows as
         slices of the SegmentReader's term-sorted bucket files (cold
-        files are pinned, up to the reader's byte cap), then a
-        block-max WAND sweep in two vectorised passes over the segments
-        (see below): chunks covering no segment that can reach the
-        top-k threshold are never read. ``last_local_stats``
-        ["chunks_decoded"] counts the distinct chunks whose postings the
-        query read; ``["theta0"]`` is the metadata threshold, when one
-        applied."""
+        files are pinned, up to the reader's byte cap), then the
+        driver's top-k (:meth:`_local_topk`), which never reads a chunk
+        covering no segment that can reach the top-k threshold.
+        ``last_local_stats``["chunks_decoded"] counts the distinct
+        chunks whose postings the query read; ``["theta0"]`` is the
+        metadata threshold, when one applied."""
         check_k_mode(k, mode)
         if self.config.get("table_format") == "iceberg":
             raise NotImplementedError(
@@ -1921,77 +1775,96 @@ class QueryEngine:
         if cr is None or not cr.n_rows:
             return []
         cr.plan(self.n_docs, self._df_of, self._scale_max, self._scale_min)
+        stats["chunks_total"] = cr.n_rows
         # terms missing from the index were already dropped by the scan
         # filter (reference openList skip)
-        metas = cr.metas
-        present = sorted(metas)
-        dfs = {t: cr.lex[t]["df"] for t in present}
-        stats["chunks_total"] = cr.n_rows
-        if mode == "conjunctive" and len(present) > 1:
-            # posting-level nextGEQ (reference DAAT semantics): read
-            # the rarest term fully, then for every other term read
-            # ONLY the chunks that contain a surviving candidate —
-            # score-bound segments cannot express this granularity
-            return self._local_conjunctive(cr, dfs, present, k, stats)
-
-        seg_lo, seg_hi, bound, cover = wand.sweep_segments(
-            metas, conjunctive=False
+        top, read, info = self._local_topk(
+            cr, cr.terms, mode == "conjunctive", k
         )
-        stats["segments_total"] = len(seg_lo)
-        if len(seg_lo) == 0:
-            return []
-        # pass 1: the segments whose bound reaches the metadata
-        # threshold (they hold every doc that attains it, so their k-th
-        # best score is at least that high), else the 16 top-bound
-        # segments; pass 2: every other segment whose bound reaches
-        # pass 1's k-th best score. Segments are disjoint, so no doc is
-        # scored twice.
-        theta0 = self._meta_theta(present, metas, cr.lex, k)
-        if theta0 is not None:
-            stats["theta0"] = theta0
-            first = bound >= theta0
-        else:
-            first = np.zeros(len(bound), dtype=bool)
-            first[np.argsort(-bound, kind="stable")[:16]] = True
-        read: list[np.ndarray] = []
-        cand, score = self._score_segments(
-            cr, present, dfs, seg_lo, seg_hi, cover, first, read
-        )
-        theta = -np.inf
-        if len(score) >= k:
-            theta = float(np.partition(score, len(score) - k)[-k])
-        second = ~first & (bound >= theta)
-        if second.any():
-            cand2, score2 = self._score_segments(
-                cr, present, dfs, seg_lo, seg_hi, cover, second, read
-            )
-            cand = np.concatenate([cand, cand2])
-            score = np.concatenate([score, score2])
-        stats["segments_processed"] = int(first.sum() + second.sum())
+        stats.update(info)
         if read:
             stats["chunks_decoded"] = len(np.unique(np.concatenate(read)))
-        return [
-            (int(cand[i]), float(score[i]))
-            for i in topk_order(cand, score, k).tolist()
-        ]
+        return list(zip(top["doc_id"].tolist(), top["score"].tolist()))
 
-    def _score_segments(
+    def _local_topk(
         self,
         cr: segment.ChunkRows,
         present: list[str],
-        dfs: dict[str, int],
+        conj: bool,
+        k: int,
+        dtype=np.float32,
+        explain: bool = False,
+    ) -> tuple[dict, list, dict]:
+        """The driver's top ``k`` of one query over ``cr`` (chunk rows
+        read with postings and planned) and ``present`` (the query's
+        terms among them, sorted): ({"doc_id", "score"[, "doc_length",
+        "terms"]} ordered score desc, doc id asc; the arrays of rows
+        whose postings it read; {"segments_total",
+        "segments_processed"[, "theta0"]}).
+
+        A conjunctive query of 2+ terms runs the pivot
+        (:meth:`_local_conjunctive`). Any other runs a block-max WAND
+        sweep in two vectorised passes: pass 1 scores the segments whose
+        bound reaches the metadata threshold (they hold every doc that
+        attains it, so their k-th best score is at least that high),
+        else the 16 top-bound segments; pass 2 every other segment whose
+        bound reaches pass 1's k-th best score. Segments are disjoint,
+        so no doc is scored twice.
+
+        Scores follow the Spark job's arithmetic: per-posting
+        ``bm25_scores`` in ``dtype``, float64 doc sums in sorted-term
+        order, cast to ``dtype``. ``explain`` adds each doc's length and
+        its (term, score, tf) entries in term order, as
+        ``sort_array(collect_list(struct(term, score, tf)))`` does."""
+        read: list[np.ndarray] = []
+        info = {"segments_total": 0, "segments_processed": 0}
+        if conj and len(present) > 1:
+            cand, score = self._local_conjunctive(cr, present, read, dtype)
+        else:
+            seg_lo, seg_hi, bound, cover = wand.sweep_segments(
+                {t: cr.metas[t] for t in present}, conjunctive=False
+            )
+            info["segments_total"] = len(seg_lo)
+            theta0 = self._meta_theta(present, cr.metas, cr.lex, k)
+            if theta0 is not None:
+                info["theta0"] = theta0
+                first = bound >= theta0
+            else:
+                first = np.zeros(len(bound), dtype=bool)
+                first[np.argsort(-bound, kind="stable")[:16]] = True
+            segs = (cr, present, seg_lo, seg_hi, cover, read, dtype)
+            cand, score = self._score_segments(first, *segs)
+            theta = -np.inf
+            if len(score) >= k:
+                theta = float(np.partition(score, len(score) - k)[-k])
+            second = ~first & (bound >= theta)
+            if second.any():
+                cand2, score2 = self._score_segments(second, *segs)
+                cand = np.concatenate([cand, cand2])
+                score = np.concatenate([score, score2])
+            info["segments_processed"] = int(first.sum() + second.sum())
+        top = topk_order(cand, score, k)
+        row = {"doc_id": cand[top], "score": score[top]}
+        if explain:
+            row.update(self._explain_rows(cr, present, row["doc_id"], dtype))
+        return row, read, info
+
+    def _score_segments(
+        self,
+        sel: np.ndarray,
+        cr: segment.ChunkRows,
+        present: list[str],
         seg_lo: np.ndarray,
         seg_hi: np.ndarray,
         cover: np.ndarray,
-        sel: np.ndarray,
         read: list,
+        dtype,
     ) -> tuple[np.ndarray, np.ndarray]:
-        """(doc ids, float32 scores) of every doc in the segments
-        ``sel`` (a mask over ``wand.sweep_segments``' output): per term,
-        one :meth:`segment.ChunkRows.gather` of the chunks covering
-        them, masked to their merged intervals, scored and summed in
-        sorted-term order (rank identity with the oracle). The rows read
-        are appended to ``read``."""
+        """(doc ids, scores) of every doc in the segments ``sel`` (a mask
+        over ``wand.sweep_segments``' output): per term, one
+        :meth:`segment.ChunkRows.gather` of the chunks covering them,
+        masked to their merged intervals and scored; the rows read are
+        appended to ``read``."""
         lo, hi = wand.merge_intervals(seg_lo[sel], seg_hi[sel])
         scored = []
         for j, t in enumerate(present):
@@ -2002,66 +1875,90 @@ class QueryEngine:
             read.append(rows)
             ids, tfs, dls = cr.gather(rows)
             keep = wand.ids_in_intervals(ids, lo, hi)
-            ids = ids[keep]
-            if len(ids):
-                scored.append((ids, bm25_scores(
-                    tfs[keep], dls[keep], dfs[t], self.n_docs, self.avgdl
+            if keep.any():
+                scored.append((ids[keep], bm25_scores(
+                    tfs[keep], dls[keep], cr.lex[t]["df"], self.n_docs,
+                    self.avgdl, dtype,
                 )))
         if len(scored) < 2:
             return scored[0] if scored else (
-                np.zeros(0, np.int64), np.zeros(0, np.float32)
+                np.zeros(0, np.int64), np.zeros(0, dtype)
             )
         cand = np.unique(np.concatenate([ids for ids, _s in scored]))
-        total = np.zeros(len(cand), dtype=np.float32)
+        total = np.zeros(len(cand))
         for ids, sc in scored:
-            pos = np.searchsorted(cand, ids)
-            total[pos] = (total[pos] + sc).astype(np.float32)
-        return cand, total
+            total[np.searchsorted(cand, ids)] += sc
+        return cand, total.astype(dtype)
 
     def _local_conjunctive(
         self,
         cr: segment.ChunkRows,
-        dfs: dict[str, int],
         present: list[str],
-        k: int,
-        stats: dict,
-    ) -> list[tuple[int, float]]:
-        """Pivot-driven conjunctive DAAT: candidates = the rarest term's
+        read: list,
+        dtype,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Pivot-driven conjunctive DAAT, (doc ids, scores) of every doc
+        holding all of ``present``: candidates = the rarest term's
         postings; every other term (rarest first) reads only chunks
         containing a surviving candidate, shrinking the candidate set as
         it goes, each term's chunks in one
-        :meth:`segment.ChunkRows.gather`. Exact evaluation — no
-        threshold needed."""
-        by_df = sorted(present, key=lambda t: (dfs[t], t))
+        :meth:`segment.ChunkRows.gather` (the rows read are appended to
+        ``read``). Exact evaluation — no threshold needed."""
+        none = (np.zeros(0, np.int64), np.zeros(0, dtype))
+        by_df = sorted(present, key=lambda t: (cr.lex[t]["df"], t))
         rows = cr.metas[by_df[0]].rows
-        stats["chunks_decoded"] = len(rows)
+        read.append(rows)
         lists = {by_df[0]: cr.gather(rows)}
         cand = lists[by_df[0]][0]
         for t in by_df[1:]:
             m = cr.metas[t]
-            idx = np.searchsorted(m.first, cand, side="right") - 1
-            safe = np.clip(idx, 0, None)
-            hit = (idx >= 0) & (m.last[safe] >= cand)
-            need = np.unique(idx[hit])
+            need = m.covering(cand)
             if not len(need):
-                return []
-            stats["chunks_decoded"] += len(need)
+                return none
+            read.append(m.rows[need])
             lists[t] = cr.gather(m.rows[need])
             cand = np.intersect1d(cand, lists[t][0], assume_unique=True)
             if not len(cand):
-                return []
-        total = np.zeros(len(cand), dtype=np.float32)
+                return none
+        total = np.zeros(len(cand))
         for t in present:  # canonical accumulation order
             ids_t, tfs_t, dls_t = lists[t]
             pos = np.searchsorted(ids_t, cand)
-            s = bm25_scores(
-                tfs_t[pos], dls_t[pos], dfs[t], self.n_docs, self.avgdl
+            total += bm25_scores(
+                tfs_t[pos], dls_t[pos], cr.lex[t]["df"], self.n_docs,
+                self.avgdl, dtype,
             )
-            total = (total + s).astype(np.float32)
-        return [
-            (int(cand[i]), float(total[i]))
-            for i in topk_order(cand, total, k).tolist()
-        ]
+        return cand, total.astype(dtype)
+
+    def _explain_rows(
+        self,
+        cr: segment.ChunkRows,
+        present: list[str],
+        docs: np.ndarray,
+        dtype,
+    ) -> dict:
+        """``doc_length`` and ``terms`` (one [{term, score, tf}] list per
+        doc, in term order) of the distinct ``docs``, from each term's
+        chunks holding them."""
+        doc_length = np.zeros(len(docs), dtype=np.int64)
+        terms: list[list[dict]] = [[] for _ in range(len(docs))]
+        for t in present:
+            m = cr.metas[t]
+            need = m.covering(docs)
+            if not len(need):
+                continue
+            ids, tfs, dls = cr.gather(m.rows[need])
+            _, at, pos = np.intersect1d(
+                docs, ids, assume_unique=True, return_indices=True
+            )
+            sc = bm25_scores(
+                tfs[pos], dls[pos], cr.lex[t]["df"], self.n_docs,
+                self.avgdl, dtype,
+            )
+            for i, j, s in zip(at.tolist(), pos.tolist(), sc.tolist()):
+                doc_length[i] = dls[j]
+                terms[i].append({"term": t, "score": s, "tf": int(tfs[j])})
+        return {"doc_length": doc_length, "terms": terms}
 
     # ----------------------------------------------------------- snippets
 

@@ -37,12 +37,12 @@ read, files past the cap's worth of rows; the rows one read streams
 (only its terms' rows) are dropped after it.
 
 :meth:`SegmentReader.rows` returns one term set's rows as
-:class:`ChunkRows`, which every driver path reads: ``search_local``,
-the driver-planned ``search()``/``batch_search`` metadata and their
-driver scoring. :meth:`ChunkRows.gather` hands out one term's postings
-for many rows at once, masked with its reader's tombstones (per
-engine: the shared copy holds every posting), and
-:meth:`ChunkRows.plan` adds the per-term block-max metadata
+:class:`ChunkRows`, which every driver path reads: the driver's top-k
+of ``search_local``, ``search()`` and ``batch_search``, and the Spark
+route's batch planner (metadata only). :meth:`ChunkRows.gather` hands
+out one term's postings for many rows at once, masked with its
+reader's tombstones (per engine: the shared copy holds every posting),
+and :meth:`ChunkRows.plan` adds the per-term block-max metadata
 (``wand.TermChunks`` + lexicon stats) the planners work from, which the
 Spark-collected metadata of an Iceberg index feeds too.
 
@@ -396,14 +396,17 @@ class ChunkRows:
     """The chunk rows of one term set, numbered term by term (in sorted
     term order; ``span``: term -> its (first, end) rows), as numpy
     arrays (``salt``, ``seq``, ``first``, ``last``, ``n``, ``max_ratio``,
-    ``min_ratio``) and, when every part was read with postings
-    (:attr:`has_postings`), their postings (:meth:`gather`), masked
-    with ``deleted`` (sorted int64 doc ids, or None).
+    ``min_ratio``) and, when read with postings, their postings
+    (:meth:`gather`), masked with ``deleted`` (sorted int64 doc ids, or
+    None). The driver's top-k (``QueryEngine._local_topk``) reads
+    postings by :meth:`gather` of a term's chunk rows, which
+    ``wand.TermChunks.rows`` hold.
 
     :meth:`plan` adds what the planners read: ``metas`` (term ->
     ``wand.TermChunks`` whose ``rows`` index these rows), ``lex`` (term
     -> df under ``df_of``, n_chunks, doc-id span) and ``raw_df``
-    (segment-local df)."""
+    (segment-local df); the Spark route's batch planner turns rows into
+    (term, salt, chunk_seq) keys (:meth:`cover_keys`)."""
 
     def __init__(self, parts: list[Part], deleted: np.ndarray | None = None):
         by_term: dict[str, list[Part]] = {}
@@ -497,34 +500,6 @@ class ChunkRows:
                 if ci >= 0:
                     keys.add(self.key(rows[ci]))
         return keys
-
-    @property
-    def has_postings(self) -> bool:
-        """Whether every row was read with its postings."""
-        return self._srcs is not None
-
-    def find(self, keys) -> np.ndarray:
-        """The rows of the (term, salt, chunk_seq) ``keys`` present,
-        term by term (in term order) and each term's in doc-id order, so
-        one term's run of them is a :meth:`gather` in doc-id order."""
-        by_t: dict[str, list[int]] = {}
-        for t, s, c in keys:
-            by_t.setdefault(t, []).append((int(s) << 32) + int(c))
-        out = []
-        for t in self.terms:
-            if t not in by_t:
-                continue
-            lo, hi = self.span[t]
-            have = (self.salt[lo:hi].astype(np.int64) << 32) + self.seq[lo:hi]
-            order = np.argsort(have, kind="stable")
-            want = np.array(by_t[t], np.int64)
-            at = order[np.minimum(
-                np.searchsorted(have, want, sorter=order), hi - lo - 1
-            )]
-            rows = lo + np.unique(at[have[at] == want])
-            # a term's chunks hold disjoint doc-id ranges
-            out.append(rows[np.argsort(self.first[rows], kind="stable")])
-        return np.concatenate(out) if out else np.zeros(0, np.int64)
 
     def fetch(self, rows) -> None:
         """Decode the postings of those of ``rows`` whose file is not

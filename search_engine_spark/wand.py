@@ -99,6 +99,13 @@ class TermChunks:
     def df(self) -> int:
         return int(self.n.sum())
 
+    def covering(self, ids: np.ndarray) -> np.ndarray:
+        """Indices (sorted, distinct) of the chunks whose doc-id span
+        holds any of ``ids``."""
+        idx = np.searchsorted(self.first, ids, side="right") - 1
+        safe = np.clip(idx, 0, None)
+        return np.unique(idx[(idx >= 0) & (self.last[safe] >= ids)])
+
 
 def sweep_segments(
     metas: dict[str, TermChunks], conjunctive: bool
@@ -162,6 +169,20 @@ def sweep_segments(
     # this is byte-identical to the old net-relative inflation.
     bound = bound + BOUND_MARGIN * gross + 1e-9
     return seg_lo, seg_hi, bound, cover
+
+
+def segment_docs(
+    metas: dict[str, TermChunks], cover: np.ndarray, conjunctive: bool
+) -> np.ndarray:
+    """Per segment of :func:`sweep_segments` (``cover`` as it returns
+    it), an estimate of the docs it holds: the sum of its covering
+    chunks' posting counts, or for a conjunctive sweep the least of
+    them."""
+    ns = []
+    for j, t in enumerate(sorted(metas)):
+        cj = cover[:, j]
+        ns.append(np.where(cj >= 0, metas[t].n[np.clip(cj, 0, None)], 0))
+    return np.minimum.reduce(ns) if conjunctive else np.sum(ns, axis=0)
 
 
 def merge_intervals(

@@ -6,6 +6,7 @@ rank-identical to the pure-Python oracle and to the Spark final job
 (``LOCAL_THETA=False``) in every mode and option, and the key filters
 must survive terms that need escaping."""
 
+import gc
 import itertools
 import shutil
 
@@ -221,15 +222,74 @@ def test_search_differential(
                 }, (q, d)
 
 
+@pytest.mark.parametrize("mode", query_mod.MODES)
+@pytest.mark.parametrize("case", ["plain", "deleted"])
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_batch_differential(
+    spark, corpus, deleted_corpus, path, case, mode, monkeypatch
+):
+    """``batch_search`` over the QUERIES texts in batches of 1, 3 and
+    all 7, and ``search_local`` on each text, are rank-identical to the
+    oracle in both modes: scored on the driver and by the Spark jobs
+    (``LOCAL_THETA`` off), on the plain index and after
+    ``delete_docs``."""
+    idx, _docs, oracle = corpus
+    drop: set[int] = set()
+    if case == "deleted":
+        idx, drop = deleted_corpus
+    if path == "spark":
+        monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
+    texts = list(enumerate(q for q, _mode in QUERIES))
+    want = {
+        qid: [
+            (d, s) for d, s in oracle.topk(q, mode=mode, k=10**6)
+            if d not in drop
+        ][:10]
+        for qid, q in texts
+    }
+    with QueryEngine(spark, idx) as eng:
+        for size in (1, 3, len(texts)):
+            for lo in range(0, len(texts), size):
+                batch = texts[lo:lo + size]
+                got = batch_rows(eng.batch_search(batch, mode=mode, k=10))
+                assert set(got) <= {qid for qid, _q in batch}, (size, got)
+                for qid, _q in batch:
+                    assert_rank_identical(got.get(qid, []), want[qid])
+        if path == "driver":
+            for qid, q in texts:
+                assert_rank_identical(
+                    eng.search_local(q, mode=mode, k=10), want[qid]
+                )
+
+
+def test_dropped_engine_releases_persisted_frames(
+    spark, corpus, monkeypatch
+):
+    """An engine dropped without close() releases the frames it
+    persisted (the banded planner's metadata projection and the last
+    search_not exclusion); they used to stay cached until the session
+    ended."""
+    idx, _docs, _oracle = corpus
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    gc.collect()
+    before = rdds().size()
+    monkeypatch.setattr(query_mod, "METADATA_CAP", 1)
+    eng = QueryEngine(spark, idx)
+    eng.search("w250", k=10).collect()
+    assert eng.last_plan_stats["pruner"] == "batch_banded_wand"
+    eng.search_not("w280", EXCLUDE, k=10).collect()
+    assert rdds().size() == before + 2
+    del eng
+    gc.collect()
+    assert rdds().size() == before
+
+
 @pytest.mark.parametrize("explain", [False, True])
 @pytest.mark.parametrize("dtype", [np.float32, np.float64])
-def test_driver_plan_rank_identity(spark, corpus, explain, dtype,
-                                   monkeypatch):
+def test_driver_plan_rank_identity(spark, corpus, explain, dtype):
     idx, _docs, oracle = corpus
-    # the corpus is far below BATCH_PRUNE_FLOOR; the probe must run
-    monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", 0)
     eng = QueryEngine(spark, idx)
-    probes = set()
+    pruned = 0
     for q, mode in QUERIES:
         got = rows_of(
             eng.search(q, mode=mode, k=10, explain=explain, dtype=dtype),
@@ -237,11 +297,11 @@ def test_driver_plan_rank_identity(spark, corpus, explain, dtype,
         )
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
         st = eng.last_plan_stats
-        assert st["pruner"] == "batch_wand", st
+        assert st["pruner"] == "local_wand", st
         assert st["scorer"] == "local", st
         assert st["driver_jobs"] == 0, st  # nothing left for Spark
-        probes.add(st.get("theta_probe"))
-    assert "local" in probes  # the driver-side phase-1 probe ran
+        pruned += st["chunks_kept"] < st["chunks_total"]
+    assert pruned  # the driver's top-k skipped chunks
 
 
 @pytest.mark.parametrize("explain", [False, True])
@@ -261,7 +321,7 @@ def test_driver_scorer_matches_spark_job(
                                dtype=dtype),
         )
         assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
-        assert l_st["pruner"] == s_st["pruner"]
+        assert (l_st["pruner"], s_st["pruner"]) == ("local_wand", "batch_wand")
         got = rows_of(local, explain)
         assert_rank_identical(got, rows_of(spark_job, explain), tol=1e-6)
         assert_rank_identical(got, oracle.topk(q, mode=mode, k=10))
@@ -287,9 +347,10 @@ def test_driver_plan_multi_segment(spark, corpus, segments, monkeypatch):
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
 def test_batch_search_driver_scorer(spark, corpus, mode, monkeypatch):
-    """batch_search's final scoring runs on the driver below the cap and
-    matches the Spark job and the oracle query by query — with the
-    shared phase-1 probe (``BATCH_PRUNE_FLOOR`` 0) and without it."""
+    """batch_search is answered on the driver below the cap, with no
+    phase-1 probe, and matches the Spark job and the oracle query by
+    query — the Spark route with its shared phase-1 probe
+    (``BATCH_PRUNE_FLOOR`` 0) and without it."""
     idx, _docs, oracle = corpus
     eng = QueryEngine(spark, idx)
     queries = list(enumerate(q for q, _mode in QUERIES))
@@ -301,7 +362,7 @@ def test_batch_search_driver_scorer(spark, corpus, mode, monkeypatch):
         )
         assert (l_st["scorer"], s_st["scorer"]) == ("local", "spark")
         assert l_st["driver_jobs"] == 0, l_st
-        assert l_st.get("thetas") == s_st.get("thetas")
+        assert "thetas" not in l_st, l_st
         for qid, q in queries:
             want = oracle.topk(q, mode=mode, k=10)
             assert_rank_identical(local.get(qid, []), want)
@@ -310,29 +371,12 @@ def test_batch_search_driver_scorer(spark, corpus, mode, monkeypatch):
             )
 
 
-def test_kept_set_above_keys_cap_runs_spark_job(spark, corpus, monkeypatch):
-    """A kept set above KEYS_COLLECT_CAP is not scored on the driver:
-    the Spark final job runs and returns the same ranking."""
-    idx, _docs, oracle = corpus
-    eng = QueryEngine(spark, idx)
-    q = "w0 w2 w9 w33"
-    local = rows_of(eng.search(q, k=10))
-    assert eng.last_plan_stats["scorer"] == "local"
-    kept = eng.last_plan_stats["chunks_kept"]
-    monkeypatch.setattr(query_mod, "KEYS_COLLECT_CAP", kept - 1)
-    over = rows_of(eng.search(q, k=10))
-    st = eng.last_plan_stats
-    assert st["chunks_kept"] == kept and st["scorer"] == "spark", st
-    assert st["driver_jobs"] >= 1, st
-    assert_rank_identical(over, local, tol=1e-6)
-    assert_rank_identical(over, oracle.topk(q, k=10))
-
-
 def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
     """The reader stops at the record batch that crosses METADATA_CAP
-    (the driver never holds an above-cap term set's whole metadata),
-    search() then plans with the distributed banded planner, and the
-    lexicon-cached chunk counts skip the doomed read on a repeat."""
+    (the driver never holds an above-cap term set's whole metadata, nor
+    its postings), search() then plans with the distributed banded
+    planner, and the lexicon-cached chunk counts skip the doomed read on
+    a repeat."""
     idx, _docs, oracle = corpus
     cap = 5
     monkeypatch.setattr(query_mod, "METADATA_CAP", cap)
@@ -341,8 +385,7 @@ def test_above_cap_metadata_read_stops_early(spark, corpus, monkeypatch):
 
     def spy(self, paths, cols, expr):
         for part in read(self, paths, cols, expr):
-            if "payload" not in cols:
-                meta_rows.append(part.num_rows)
+            meta_rows.append(part.num_rows)
             yield part
 
     monkeypatch.setattr(segment.SegmentReader, "_read", spy)
@@ -459,9 +502,10 @@ def test_multi_segment_search_starts_no_job(spark, corpus, segments):
 
 
 def test_backslash_terms_round_trip_key_filters(spark, corpus):
-    """The one-call Spark key predicate (escaped SQL literals) and the
-    driver's rows of a key set (``ChunkRows.find``, read by
-    ``ChunkRows.gather``) select exactly the requested chunk keys."""
+    """The one-call Spark key predicate (escaped SQL literals) selects
+    exactly the requested chunk keys, and the driver's read of the same
+    terms holds exactly their chunks, each term's gathered in doc-id
+    order."""
     idx, _docs, _oracle = corpus
     eng = QueryEngine(spark, idx)
     terms = sorted([SLASH, TRAIL, "w30"])
@@ -481,12 +525,10 @@ def test_backslash_terms_round_trip_key_filters(spark, corpus):
         .collect()
     )
     assert spark_side == sorted(want)
-    cr = eng._reader.rows(terms)
-    rows = cr.find(want)
-    assert sorted(cr.key(r) for r in rows.tolist()) == sorted(want)
+    cr = eng._reader.rows(terms).plan(eng.n_docs, eng._df_of, 1.0, 1.0)
+    assert sorted(cr.key(r) for r in range(cr.n_rows)) == every
     for t in terms:
-        mine = [r for r in rows.tolist() if cr.key(r)[0] == t]
-        ids = cr.gather(mine)[0]
+        ids = cr.gather(cr.metas[t].rows)[0]
         assert len(ids) and (np.diff(ids) > 0).all(), t
 
 

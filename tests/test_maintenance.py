@@ -596,17 +596,17 @@ def test_engine_close_releases_metadata_cache(
     with QueryEngine(spark, base_index) as eng:
         _topk(eng.search(QUERY, mode="disjunctive", k=10))
         assert eng.last_plan_stats["pruner"] == "batch_banded_wand"
-        cached = eng._meta_df
+        cached = eng._persisted.get("meta")
         if cached is not None:  # the planner pinned the projection
             assert cached.storageLevel.useMemory
-    assert eng._meta_df is None
+    assert "meta" not in eng._persisted
     if cached is not None:
         assert not cached.storageLevel.useMemory  # actually unpersisted
 
     with MultiIndexQueryEngine(spark, [base_index]) as mqe:
         _topk(mqe.search(QUERY, "disjunctive"))
         segs = list(mqe.engines)
-    assert all(e._meta_df is None for e in segs)
+    assert all("meta" not in e._persisted for e in segs)
     # closed engines still re-open lazily on next use (close is not a
     # poison pill — the cache re-pins on demand)
     reopened = QueryEngine(spark, base_index)

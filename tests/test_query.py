@@ -961,12 +961,12 @@ def test_search_not_releases_previous_exclusion(engine, spark):
         assert qe.search_not("spark query", ex, dtype=np.float64).count() >= 0
     # three more NOT queries added zero NET persisted RDDs
     assert n_persisted() <= base
-    assert qe._not_cached is not None
+    assert "exclusion" in qe._persisted
     # the first result's frame was released two calls ago: recompute,
     # don't crash
     assert first.count() >= 0
     qe.close()
-    assert qe._not_cached is None
+    assert "exclusion" not in qe._persisted
     # engine remains serviceable after close (meta cache is lazy)
     assert qe.search("spark", k=3).count() == 3
 

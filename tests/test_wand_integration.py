@@ -79,10 +79,12 @@ def search_rows(eng, query: str, **kw) -> list[tuple[int, float]]:
 def test_spark_wand_prunes_and_matches_oracle(
     engine, oracle, mode, monkeypatch
 ):
-    # disjunctive: the stop word's negative idf turns the metadata
-    # threshold off, so pruning needs the phase-1 probe, which this
-    # corpus (far below BATCH_PRUNE_FLOOR) only gets with the floor at
-    # 0; conjunctive: segments covered by both terms only
+    # the Spark route's batch planner (the driver answers with its own
+    # top-k otherwise). Disjunctive: the stop word's negative idf turns
+    # the metadata threshold off, so pruning needs the phase-1 probe,
+    # which this corpus (far below BATCH_PRUNE_FLOOR) only gets with the
+    # floor at 0; conjunctive: segments covered by both terms only
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
     monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", 0)
     rows = search_rows(engine, "the rare", mode=mode, k=5)
     stats = dict(engine.last_plan_stats)
@@ -90,6 +92,20 @@ def test_spark_wand_prunes_and_matches_oracle(
     # the stop word's chunks must NOT all be decoded
     assert stats["chunks_kept"] < stats["chunks_total"], stats
     assert_rank_identical(rows, oracle.topk("the rare", mode=mode, k=5))
+
+
+def test_negative_idf_query_prunes_below_floor(engine, oracle):
+    """A driver-answered disjunctive search() whose stop word has a
+    negative idf reads fewer chunks than its terms own, on a corpus
+    below BATCH_PRUNE_FLOOR: the batch planner skipped its phase-1
+    probe there and the metadata threshold is off for negative idf, so
+    it kept every chunk."""
+    rows = search_rows(engine, "the rare", k=5)
+    stats = dict(engine.last_plan_stats)
+    assert stats["chunks_total"] < query_mod.BATCH_PRUNE_FLOOR, stats
+    assert stats["scorer"] == "local" and stats["segments"] > 16, stats
+    assert stats["chunks_kept"] < stats["chunks_total"], stats
+    assert_rank_identical(rows, oracle.topk("the rare", k=5))
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
@@ -140,8 +156,10 @@ def test_batch_search_prunes_shared_decode(engine, mode, monkeypatch):
         ]
         for qid, q in queries
     }
-    # this corpus is far below BATCH_PRUNE_FLOOR, and the test
-    # exercises the threshold probe itself
+    # the Spark route's shared decode; this corpus is far below
+    # BATCH_PRUNE_FLOOR, and the test exercises the threshold probe
+    # itself
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
     monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", 0)
     rows = engine.batch_search(queries, mode=mode, k=5).collect()
     stats = dict(engine.last_plan_stats)
@@ -191,16 +209,16 @@ def skewed_engine(spark):
 def test_meta_theta_skips_phase1_decode(skewed_engine, q):
     """When the chunk-bound distribution separates cleanly, the k-th
     highest chunk bound is a valid theta WITHOUT any decode probe:
-    search() must start no Spark job (the driver reads the metadata and
-    scores the kept chunks), still prune, and stay rank-identical to
-    the oracle."""
+    search() must start no Spark job (the driver reads the chunk rows
+    and scores the segments reaching it first), still prune, and stay
+    rank-identical to the oracle."""
     eng = skewed_engine
     rows = search_rows(eng, q, mode="disjunctive", k=5)
     stats = dict(eng.last_plan_stats)
-    assert stats["pruner"] == "batch_wand", stats
+    assert stats["pruner"] == "local_wand", stats
     assert "theta0" in stats, stats
     assert stats["driver_jobs"] == 0, stats
-    assert "theta_probe" not in stats, stats
+    assert "thetas" not in stats, stats
     assert stats["chunks_kept"] < stats["chunks_total"], stats
     assert len(rows) == 5
     assert all(d < 640 for d, _s in rows), rows  # the tf=10 docs win
@@ -272,11 +290,13 @@ def test_explain_per_term_detail(engine):
 def test_batch_prune_floor_skips_probe_on_small_batches(
     engine, monkeypatch
 ):
-    """Below BATCH_PRUNE_FLOOR total chunks, the phase-1 threshold job
-    must not run (one extra Spark job costs more than decoding the
-    whole sub-4k-chunk set); results must match the probed plan."""
+    """Below BATCH_PRUNE_FLOOR total chunks, the Spark route's phase-1
+    threshold job must not run (one extra Spark job costs more than
+    decoding the whole sub-4k-chunk set); results must match the probed
+    plan."""
     queries = [(0, "the rare"), (1, "rare pad3")]
     floor = query_mod.BATCH_PRUNE_FLOOR
+    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
     monkeypatch.setattr(query_mod, "BATCH_PRUNE_FLOOR", 0)
     probed = sorted(
         (r["query_id"], r["rank"], r["doc_id"], r["score"])
@@ -327,13 +347,11 @@ def test_batch_banded_planner_above_metadata_cap(engine, mode, monkeypatch):
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
 def test_local_theta_probe_matches_spark_probe(engine, mode, monkeypatch):
-    """The phase-1 threshold probe is planner-bounded (<= 64 top
-    segments' covering chunks), so on a parquet layout it runs as a
-    DRIVER point read (_score_local) instead of a Spark job — per
-    serve pass that deletes a fixed multi-second scheduling + scan
-    cost. Both probes must leave the banded planner rank-identical,
-    and the stats must show which one ran."""
-    monkeypatch.setattr(query_mod, "METADATA_CAP", 4)
+    """Above METADATA_CAP the banded planner's phase-1 threshold probe
+    is a Spark job whatever ``LOCAL_THETA`` says (the driver answers
+    whole queries below the cap, and probes nothing), and search() and
+    batch_search then answer exactly as the driver's top-k does below
+    the cap."""
     queries = [(0, "the rare"), (1, "rare pad3"), (2, "the sparse")]
 
     def snap():
@@ -349,21 +367,20 @@ def test_local_theta_probe_matches_spark_probe(engine, mode, monkeypatch):
         b_stats = dict(engine.last_plan_stats)
         return single, s_stats, batch, b_stats
 
-    monkeypatch.setattr(query_mod, "LOCAL_THETA", True)
-    l_single, l_sstats, l_batch, l_bstats = snap()
-    monkeypatch.setattr(query_mod, "LOCAL_THETA", False)
     d_single, d_sstats, d_batch, d_bstats = snap()
-
-    assert l_single == d_single
-    assert l_batch == d_batch
-    if mode == "disjunctive":
-        # disjunctive over the stop word always probes (many segments)
-        assert l_sstats.get("theta_probe") == "local", l_sstats
-        assert d_sstats.get("theta_probe") == "spark", d_sstats
-        assert l_bstats.get("theta_probe") == "local", l_bstats
-        assert d_bstats.get("theta_probe") == "spark", d_bstats
-        assert l_sstats.get("thetas", 0) >= 1, l_sstats
-        assert d_sstats.get("thetas", 0) >= 1, d_sstats
+    assert d_sstats["scorer"] == d_bstats["scorer"] == "local"
+    monkeypatch.setattr(query_mod, "METADATA_CAP", 4)
+    for local in (True, False):
+        monkeypatch.setattr(query_mod, "LOCAL_THETA", local)
+        single, s_stats, batch, b_stats = snap()
+        assert single == d_single
+        assert batch == d_batch
+        for st in (s_stats, b_stats):
+            assert st["pruner"] == "batch_banded_wand", st
+            assert st["scorer"] == "spark", st
+            if mode == "disjunctive":
+                # disjunctive over the stop word always probes
+                assert st.get("thetas", 0) >= 1, st
 
 
 @pytest.mark.parametrize("mode", ["disjunctive", "conjunctive"])
